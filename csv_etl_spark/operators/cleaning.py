@@ -42,14 +42,6 @@ PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def scrub_pii_column(col: Column) -> Column:
-    """The scrubbed text: sequential redaction chain over ``col``."""
-    out = col
-    for pattern, token in PII_PATTERNS:
-        out = F.regexp_replace(out, pattern, token)
-    return out
-
-
 def scrub_pii(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

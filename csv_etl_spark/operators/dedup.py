@@ -75,14 +75,6 @@ def token_shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(k >= n, shingles).otherwise(F.array().cast("array<string>")))
 
 
-def hashed_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct shingles as 64-bit hashes.  All pair-generation joins and
-    verifies run on 8-byte longs instead of ~20-byte strings — less shuffle
-    payload, cheaper equality — at a 64-bit collision risk that is
-    negligible for any realistic shingle population."""
-    return F.transform(token_shingles(col, n), lambda s: F.xxhash64(s))
-
-
 # ---------------------------------------------------------------------------
 # Portable (engine-agnostic) hashing — the correctness-oracle path
 # ---------------------------------------------------------------------------
@@ -146,12 +138,6 @@ _MAX_HOT_BUCKETS = 100_000
 # literal SQL text's parse/analyze cost beats the 32-task Python stage
 # createDataFrame pays — see csv_etl_spark.local._MAX_INLINE_ROWS
 _MAX_INLINE_HOT_BUCKETS = 2_000
-
-
-def clear_shingle_cache() -> None:
-    """Invalidation hook: call after rewriting a corpus in place (same
-    path, same plan shape — semantic hashing cannot detect new bytes)."""
-    _SHINGLE_CACHE.invalidate()
 
 
 def _shingle_docs(
@@ -563,10 +549,6 @@ def simhash(
     return sig
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -578,16 +560,41 @@ def resolve_duplicate_clusters(
     generator (jaccard/LSH/embedding): pairs say "these two match", but
     dedup needs CLUSTERS (keep one doc per component, drop the rest).
 
-    Iterative min-label propagation as DataFrame joins: each round every
-    vertex takes the min of its own label and its neighbors' labels;
-    converges in O(component diameter) rounds — near-dup components are
-    shallow (dup clusters are cliques or short chains), so a handful of
-    rounds in practice, ``max_iterations`` as the safety cap.  Each round
-    is one shuffle join + one aggregation, fully parallel; labels persist
-    per round and the previous round unpersists, so lineage and memory
-    stay bounded (the standard large-graph CC shape minus GraphX).
+    Iterative min-label propagation, one eager ``localCheckpoint`` per
+    round; converges in O(component diameter) rounds — near-dup
+    components are shallow (dup clusters are cliques or short chains), so
+    a handful of rounds in practice.
+
+    * Round 1 (seed) needs no labels frame and no join: every vertex
+      starts labelled with its own id, so it is one ``groupBy(u)`` over
+      the symmetric edge list, ``label = least(u, min(v))``.
+    * Later rounds are ONE union-aggregate: neighbour offers
+      (``edges ⋈ labels`` on v) unioned with each vertex's own label,
+      grouped by id → the new label (min) and the old one.  No join back
+      onto the previous labels.
+    * The edge list is not deduplicated: min-propagation is idempotent
+      under duplicate edges, so a ``distinct`` would only add a shuffle.
+    * The change count rides on the checkpoint job itself (an
+      ``Observation``), so convergence costs no probe job.
+
+    A NULL id stays one ``(NULL, NULL)`` row and takes no part in the
+    propagation: its partner is labelled as if the pair were absent.
+
+    Raises ``RuntimeError`` if labels still change in round
+    ``max_iterations``: a component whose diameter exceeds the cap would
+    otherwise come back split across several cluster_ids.
     """
+    from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
+
+    def checkpoint(frame: DataFrame) -> tuple[DataFrame, int]:
+        # localCheckpoint, not persist: it truncates the lineage, which
+        # would otherwise GROW each round until plan analysis overflows
+        # the JVM stack on long chains.  The Observation is filled by the
+        # same job, so the changed-label count costs nothing extra.
+        obs = Observation()
+        ck = frame.observe(obs, F.count_if("_ch").alias("changed")).localCheckpoint(eager=True)
+        return ck.select("id", "label"), obs.get["changed"]
 
     # one-pass symmetric edge build: explode [(a,b),(b,a)] per pair row.
     # The previous union-of-two-selects spelling scanned `pairs` TWICE
@@ -606,66 +613,43 @@ def resolve_duplicate_clusters(
             ).alias("e")
         )
         .select("e.u", "e.v")
-        .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged = False
     try:
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges.join(labels, edges.v == labels.id)
-                .groupBy("u")
-                .agg(F.min("label").alias("nmin"))
+        # min() skips NULL partners; least() would skip a NULL u, so the
+        # NULL vertex's label is kept NULL explicitly
+        labels, changed = checkpoint(
+            edges.groupBy("u").agg(F.min("v").alias("nmin")).select(
+                F.col("u").alias("id"),
+                F.when(F.col("u").isNotNull(), F.least("u", "nmin")).alias("label"),
+                (F.col("nmin") < F.col("u")).alias("_ch"),
             )
-            # localCheckpoint, not persist: persist caches data but keeps
-            # the full lineage, which GROWS each round (round k's plan
-            # contains rounds 1..k-1) until plan analysis overflows the JVM
-            # stack on long chains.  Checkpointing truncates lineage so
-            # every round starts from materialized data.
-            #
-            # Convergence flag rides INSIDE the checkpointed row (r16): a
-            # label changes iff a neighbor min undercuts it, which is known
-            # at update time — the previous spelling re-joined new labels
-            # against old labels on id (one full shuffle of both sides per
-            # round) just to detect what `nmin < label` already said.  The
-            # flag is materialized by the checkpoint, so the convergence
-            # probe is a map-only limit-1 scan of checkpointed partitions.
-            ck = (
-                labels.join(neighbor_min, labels.id == neighbor_min.u, "left")
+        )
+        for _ in range(max_iterations - 1):
+            if not changed:
+                break
+            offers = edges.join(labels, edges.v == labels.id).select(
+                F.col("u").alias("id"), "label", F.lit(None).alias("old")
+            )
+            own = labels.select("id", "label", F.col("label").alias("old"))
+            labels, changed = checkpoint(
+                offers.unionByName(own)
+                .groupBy("id")
+                .agg(F.min("label").alias("nmin"), F.max("old").alias("old"))
                 .select(
                     "id",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                    (F.col("nmin") < F.col("label")).alias("_ch"),
+                    # only own rows carry `old`, so it is NULL exactly for
+                    # the NULL vertex, which must not take its partner's label
+                    F.when(F.col("old").isNotNull(), F.col("nmin")).alias("label"),
+                    (F.col("nmin") < F.col("old")).alias("_ch"),
                 )
-                .localCheckpoint(eager=True)
             )
-            changed = ck.filter(F.col("_ch")).limit(1).count()
-            new_labels = ck.select("id", "label")
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            # a component with diameter > max_iterations would silently get
-            # MULTIPLE cluster_ids for one true component — surface it
-            import warnings
-
-            warnings.warn(
-                f"resolve_duplicate_clusters: label propagation did not "
-                f"converge within max_iterations={max_iterations}; some "
-                f"components may be split across cluster_ids. Raise "
-                f"max_iterations (rounds needed ≈ component diameter).",
-                RuntimeWarning,
-                stacklevel=2,
+        if changed:
+            raise RuntimeError(
+                f"resolve_duplicate_clusters: label propagation did not converge "
+                f"within max_iterations={max_iterations}; a component's diameter "
+                f"exceeds the cap, so it would be split across cluster_ids. Raise "
+                f"max_iterations (rounds needed ≈ component diameter + 1)."
             )
         return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
     finally:

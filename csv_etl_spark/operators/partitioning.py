@@ -20,7 +20,7 @@ skew salting.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -108,16 +108,3 @@ def salted_agg(
         *[merge[fn](a).alias(a) for _, fn, a in aggs]
     )
     return phase2
-
-
-def salted_broadcast_left(
-    skewed: DataFrame, small: DataFrame, on: str, n_salts: int = 16
-) -> Column:
-    """Not needed: a skewed key joining a SMALL table should simply
-    broadcast the small side (no shuffle of the skewed side at all).
-    Kept as executable documentation."""
-    raise NotImplementedError(
-        "broadcast(small) eliminates the shuffle entirely; salting a "
-        "broadcast join is pure overhead. For fact-fact skew, enable AQE "
-        "skew-join (on by default in this engine's session)."
-    )

@@ -19,9 +19,11 @@ def get_spark(app_name: str = "csv-etl-spark", shuffle_partitions: int | None = 
     """Build (or reuse) a SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
-    scale this would be set from input size / target partition bytes, and
-    AQE coalesces the excess at runtime either way.
+    ``shuffle_partitions`` defaults to 32 on any host, whatever its core
+    count; AQE starts every exchange 8× wider (256 by default,
+    ``SPARK_GRAFT_INITIAL_PARTITIONS`` overrides) and coalesces the excess
+    at runtime.  At cluster scale it would be set from input size / target
+    partition bytes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:

@@ -4,6 +4,8 @@ multimodal plumbing — on small controlled data + the sf0.001 testdata."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from csv_etl_spark.operators import dedup, similarity, text
@@ -496,6 +498,84 @@ def test_resolve_clusters_long_chain(spark):
            for r in dedup.resolve_duplicate_clusters(pairs).collect()}
     assert set(out.values()) == {100}
     assert len(out) == 13
+
+
+def _union_find_clusters(pairs):
+    """Reference CC: (id, min id of its component) per non-NULL endpoint,
+    plus one (None, None) row when any endpoint is NULL — a NULL id takes
+    no part in the graph, its partner stays as if the pair were absent."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    rows = sorted((x, find(x)) for x in parent)
+    if any(x is None for pair in pairs for x in pair):
+        rows.append((None, None))
+    return rows
+
+
+_cc_id = st.one_of(st.integers(0, 15), st.none())
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+@given(st.lists(st.tuples(_cc_id, _cc_id), max_size=14))
+@example([])
+@example([(1, 2), (2, 1), (1, 2), (3, 3), (4, None), (None, 5), (None, None)])
+def test_resolve_clusters_matches_union_find(spark, pairs):
+    """Random small pair graphs — self-pairs, duplicate and reversed pairs,
+    NULL ids, the empty frame — against a Python union-find."""
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = sorted(
+        ((r["id"], r["cluster_id"])
+         for r in dedup.resolve_duplicate_clusters(df).collect()),
+        key=lambda t: (t[0] is None, t),
+    )
+    assert got == _union_find_clusters(pairs)
+
+
+def test_resolve_clusters_raises_when_not_converged(spark):
+    """A 25-hop chain needs 26 rounds: a cap of 20 raises instead of
+    returning the chain split across cluster_ids; a cap of 30 converges."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(25)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="max_iterations=20.*diameter"):
+        dedup.resolve_duplicate_clusters(pairs, max_iterations=20)
+    out = dedup.resolve_duplicate_clusters(pairs, max_iterations=30).collect()
+    assert sorted((r["id"], r["cluster_id"]) for r in out) == [(i, 0) for i in range(26)]
+
+
+def test_resolve_clusters_job_budget(spark):
+    """Eager Spark jobs the resolver launches on the 4-pair fixture (three
+    rounds, three jobs each): a per-round probe job or a ``distinct`` on
+    the edge list would push it past the pin.  Read from the status
+    store, which works with the UI off."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def newest_job():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 21)], ["id_a", "id_b"]
+    )
+    pairs.collect()
+    before = newest_job()
+    dedup.resolve_duplicate_clusters(pairs)
+    assert newest_job() - before <= 9
 
 
 def test_corpus_curation_composition(spark):
