@@ -301,6 +301,10 @@ def main() -> None:
         _classify._FEAT_CACHE.invalidate(blocking=True)
         # r9 addition: pagerank's persisted link table
         _graph._LINKS_CACHE.invalidate(blocking=True)
+        # compiled mappings (driver-side memo): every pass compiles afresh
+        from csv_etl_spark import compiler as _compiler
+
+        _compiler._COMPILE_MEMO.invalidate()
         # r13 addition (ADVICE r12): knn_join_sharded codebook broadcasts
         # otherwise accumulate ~128 MB/call across bench passes; destroy=True
         # is safe here — every returned frame was consumed by the timed pass

@@ -44,16 +44,16 @@ from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
 # unbounded.
 DEFAULT_ERROR_CAP = 50
 DEFAULT_PREVIEW_ROWS = 500
+CONVERT_ERROR_CAP = 20  # errors a failed convert reports
 
 
-def _error_entries(result, cap: int | None = None) -> list[dict]:
-    """Errors DF → reference JSON shape (line/field/message/value).
-    ``cap=None`` applies DEFAULT_ERROR_CAP — collects are always bounded."""
-    df = result.errors
-    rows = df.limit(cap if cap is not None else DEFAULT_ERROR_CAP).collect()
+def _error_entries(result) -> list[dict]:
+    """First errors → reference JSON shape (line/field/message/value).
+    Read from ``result.error_sample``, which the transform bounded by the
+    cap its caller passed (DEFAULT_ERROR_CAP, CONVERT_ERROR_CAP) — the
+    collect is always bounded."""
     out = []
-    for r in rows:
-        d = r.asDict()
+    for d in result.error_sample:
         out.append(
             {
                 "line": d.get(LINE_COL),
@@ -308,13 +308,14 @@ def create_app(
         source, path, err = _source_file(source_id, filename)
         if err:
             return err
-        df = with_line_numbers(read_spec_csv(spark, str(path), source))
-        columns = [c for c in df.columns if c != LINE_COL]
         # bounded collect: first N lines (override with ?limit=), full count
         # reported separately — a preview must never materialize a 100 GB
         # file on the driver
         row_cap = request.args.get("limit", type=int) or DEFAULT_PREVIEW_ROWS
-        total = df.count()
+        if row_cap < 0:
+            return jsonify({"error": "limit must not be negative"}), 400
+        df = with_line_numbers(read_spec_csv(spark, str(path), source))
+        columns = [c for c in df.columns if c != LINE_COL]
         rows = [
             {"_line": r[LINE_COL], **{c: r[c] for c in columns}}
             for r in df.orderBy(LINE_COL).limit(row_cap).collect()
@@ -323,20 +324,23 @@ def create_app(
         errors_by_line: dict[int, list[dict]] = {}
         validation = None
         mapping_id = request.args.get("mapping_id")
-        if mapping_id:
-            mapping = store.get_mapping(mapping_id)
-            if mapping:
-                result = validate(df, mapping, line_col=LINE_COL)
-                validation = {
-                    "success_count": result.success_count,
-                    "skipped_count": result.skipped_count,
-                    "error_count": result.error_count,
-                    "logs": result.log_messages[-50:],
-                }
-                for e in _error_entries(result):
-                    errors_by_line.setdefault(e["line"], []).append(
-                        {k: e[k] for k in ("field", "message", "value")}
-                    )
+        mapping = store.get_mapping(mapping_id) if mapping_id else None
+        if mapping:
+            # the validation pass counts the input rows on its way
+            result = validate(df, mapping, line_col=LINE_COL, error_sample=DEFAULT_ERROR_CAP)
+            total = result.input_count
+            validation = {
+                "success_count": result.success_count,
+                "skipped_count": result.skipped_count,
+                "error_count": result.error_count,
+                "logs": result.log_messages[-50:],
+            }
+            for e in _error_entries(result):
+                errors_by_line.setdefault(e["line"], []).append(
+                    {k: e[k] for k in ("field", "message", "value")}
+                )
+        else:
+            total = df.count()
 
         return jsonify(
             {
@@ -359,7 +363,16 @@ def create_app(
         line, row = data.get("line"), data.get("row")
         if not line or not row:
             return jsonify({"error": "Missing line number or row data"}), 400
-        update_csv_row(spark, str(path), int(line), row, spec=source)
+        try:
+            line = int(line)
+        except (TypeError, ValueError):
+            return jsonify({"error": f"Invalid line number: {line!r}"}), 400
+        if not isinstance(row, dict):
+            return jsonify({"error": "Row data must be an object"}), 400
+        try:
+            update_csv_row(spark, str(path), line, row, spec=source)
+        except ValueError as exc:  # unknown column names
+            return jsonify({"error": str(exc)}), 400
         return jsonify({"success": True, "message": f"Row {line} updated"})
 
     # -- single-file convert (app.py:625-677) --------------------------------
@@ -388,6 +401,7 @@ def create_app(
             fail_on_error=True,
             line_col=LINE_COL,
             write=lambda out: write_single_csv_file(out, str(out_file)),
+            error_sample=CONVERT_ERROR_CAP,
         )
         if result.error_count > 0:
             return (
@@ -397,7 +411,7 @@ def create_app(
                         "message": f"Conversion failed with {result.error_count} errors",
                         "errors": [
                             {k: e[k] for k in ("line", "field", "message")}
-                            for e in _error_entries(result, cap=20)
+                            for e in _error_entries(result)
                         ],
                         "logs": result.log_messages,
                     }

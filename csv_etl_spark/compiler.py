@@ -17,13 +17,16 @@ source values compare as Python would, and every field can emit a
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+import json
+from dataclasses import dataclass, field as dc_field, replace
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from csv_etl_spark.conditions import compile_condition
 from csv_etl_spark.datefmt import strptime_to_java
+from csv_etl_spark.driver_memo import BoundedDriverMemo
 from csv_etl_spark.formula import FormulaError, compile_formula
 from csv_etl_spark.specs import ETLMapping, FieldMapping, TransformType
 
@@ -300,11 +303,20 @@ class CompiledMapping:
     has_filters: bool
     source_columns: list[str] = dc_field(default_factory=list)
     lookup_joins: list[LookupJoin] = dc_field(default_factory=list)
+    # derived Columns built on first use; shared by every copy that
+    # compile_mapping hands out for one memo entry
+    _derived: dict = dc_field(default_factory=dict, repr=False, compare=False)
 
-    def errors_column(self, line_col: str | None = None) -> Column:
-        """Array<struct<field,message,source_value[,line]>> of this row's
-        field errors (V1).  Compiled as a literal array + runtime filter on
-        non-null messages — stays inside codegen, no UDF."""
+    def errors_column(self) -> Column:
+        """Array<struct<field,message,source_value>> of this row's field
+        errors (V1).  Compiled as a literal array + runtime filter on
+        non-null messages — stays inside codegen, no UDF.  Built once per
+        compiled mapping: each ``F.*`` call is a py4j round trip."""
+        if "errors" not in self._derived:
+            self._derived["errors"] = self._build_errors_column()
+        return self._derived["errors"]
+
+    def _build_errors_column(self) -> Column:
         entries = []
         for f in self.fields:
             if f.error is None:
@@ -433,9 +445,46 @@ class CompiledMapping:
         return projected.agg(*exprs)
 
 
+# Compiled mappings per (session, mapping JSON, source columns).  A
+# dashboard session re-runs one mapping over one file layout request after
+# request; compiling it is ~100 py4j round trips.  Column expressions are
+# unresolved and immutable, so one compile serves every later plan.
+_COMPILE_MEMO = BoundedDriverMemo(max_entries=32)
+
+
+def _memo_key(mapping: ETLMapping, source_columns: list[str]) -> tuple | None:
+    """(applicationId, canonical mapping JSON, source columns), or None
+    when the mapping does not survive a JSON round trip unchanged (non-str
+    dict keys, tuples, objects): two such mappings could share a text
+    while compiling differently, so they are not memoized."""
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    d = mapping.to_dict()
+    try:
+        text = json.dumps(d, sort_keys=True)
+    except (TypeError, ValueError):
+        return None
+    if json.loads(text) != d:
+        return None
+    return (sc.applicationId, text, tuple(source_columns))
+
+
 def compile_mapping(mapping: ETLMapping | dict, source_columns: list[str]) -> CompiledMapping:
+    """Compile ``mapping`` against ``source_columns``, memoized per
+    session.  The returned object carries the caller's ``mapping``;
+    saving a changed mapping changes its JSON and so its key."""
     if isinstance(mapping, dict):
         mapping = ETLMapping.from_dict(mapping)
+    key = _memo_key(mapping, source_columns)
+    cached = _COMPILE_MEMO.get(key)
+    if cached is None:
+        cached = _compile(mapping, source_columns)
+        _COMPILE_MEMO.put(key, cached)
+    return replace(cached, mapping=mapping)
+
+
+def _compile(mapping: ETLMapping, source_columns: list[str]) -> CompiledMapping:
     keep = compile_filter(mapping.filter_rules, source_columns)
     fields = [compile_field(fm, source_columns) for fm in mapping.field_mappings]
     lookup_joins = [

@@ -1,0 +1,73 @@
+"""Session-aware bounded memo for small driver-side values.
+
+Plain Python (a lock and a dict) so that the mapping compiler and the
+operator caches can share one keying rule without the compiler importing
+the operator families.  Keys start with the SparkContext's
+applicationId: entries from a stopped or recreated session are dropped
+on the next access.
+"""
+
+from __future__ import annotations
+
+import threading
+
+from pyspark.sql import DataFrame
+
+
+def plan_key(df: DataFrame, *extra) -> tuple | None:
+    """(applicationId, semanticHash, *extra) — None when the plan
+    cannot be semantically hashed (caller should then skip caching
+    AND skip persisting, so nothing leaks untracked)."""
+    try:
+        app_id = df.sparkSession.sparkContext.applicationId
+        return (app_id, df.semanticHash(), *extra)
+    except Exception:
+        return None
+
+
+class BoundedDriverMemo:
+    """Session-aware bounded memo for SMALL driver-side values (r17: the
+    BPE merge table — k rows, the merge table IS the model; the
+    compiled mappings of ``compiler.compile_mapping``).  Same keying
+    discipline as ``operators._cache.BoundedPersistCache`` —
+    (applicationId, ...), entries from stopped sessions evicted on
+    access, FIFO-bounded — but values are plain Python objects, so
+    eviction has nothing to unpersist.  ``invalidate(blocking=...)``
+    matches the persist cache's signature so bench harnesses clear
+    every cache uniformly.  A lock guards the entries: the
+    compiled-mapping memo is shared by the dashboard's request
+    threads."""
+
+    def __init__(self, max_entries: int = 8) -> None:
+        self._entries: dict[tuple, object] = {}
+        self._max = max_entries
+        self._lock = threading.Lock()
+
+    key_for = staticmethod(plan_key)
+
+    def get(self, key: tuple | None):
+        if key is None:
+            return None
+        with self._lock:
+            self._evict_other_sessions(key[0])
+            return self._entries.get(key)
+
+    def put(self, key: tuple | None, value) -> None:
+        if key is None:
+            return
+        with self._lock:
+            self._evict_other_sessions(key[0])
+            while len(self._entries) >= self._max:
+                self._entries.pop(next(iter(self._entries)))
+            self._entries[key] = value
+
+    def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
+        with self._lock:
+            if key is not None:
+                self._entries.pop(key, None)
+                return
+            self._entries.clear()
+
+    def _evict_other_sessions(self, app_id: str) -> None:
+        for k in [k for k in self._entries if k[0] != app_id]:
+            self._entries.pop(k, None)

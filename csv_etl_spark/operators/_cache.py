@@ -19,22 +19,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from csv_etl_spark.driver_memo import BoundedDriverMemo, plan_key
+
+__all__ = ["BoundedDriverMemo", "BoundedPersistCache"]
+
 
 class BoundedPersistCache:
     def __init__(self, max_entries: int = 8) -> None:
         self._entries: dict[tuple, DataFrame] = {}
         self._max = max_entries
 
-    @staticmethod
-    def key_for(df: DataFrame, *extra) -> tuple | None:
-        """(applicationId, semanticHash, *extra) — None when the plan
-        cannot be semantically hashed (caller should then skip caching
-        AND skip persisting, so nothing leaks untracked)."""
-        try:
-            app_id = df.sparkSession.sparkContext.applicationId
-            return (app_id, df.semanticHash(), *extra)
-        except Exception:
-            return None
+    key_for = staticmethod(plan_key)
 
     def get_or_persist(self, df: DataFrame, *tags) -> DataFrame:
         """The get-or-persist idiom every multi-consumer projection uses,
@@ -97,44 +92,3 @@ class BoundedPersistCache:
                 df.unpersist(blocking=blocking)
             except Exception:
                 pass
-
-
-class BoundedDriverMemo:
-    """Session-aware bounded memo for SMALL driver-side values derived
-    from a DataFrame plan (r17: the BPE merge table — k rows, the merge
-    table IS the model).  Same keying discipline as BoundedPersistCache
-    — (applicationId, semanticHash, *extra), entries from stopped
-    sessions evicted on access, FIFO-bounded — but values are plain
-    Python objects, so eviction has nothing to unpersist.
-    ``invalidate(blocking=...)`` matches the persist cache's signature
-    so bench harnesses clear every operator cache uniformly."""
-
-    def __init__(self, max_entries: int = 8) -> None:
-        self._entries: dict[tuple, object] = {}
-        self._max = max_entries
-
-    key_for = staticmethod(BoundedPersistCache.key_for)
-
-    def get(self, key: tuple | None):
-        if key is None:
-            return None
-        self._evict_other_sessions(key[0])
-        return self._entries.get(key)
-
-    def put(self, key: tuple | None, value) -> None:
-        if key is None:
-            return
-        self._evict_other_sessions(key[0])
-        while len(self._entries) >= self._max:
-            self._entries.pop(next(iter(self._entries)))
-        self._entries[key] = value
-
-    def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
-        if key is not None:
-            self._entries.pop(key, None)
-            return
-        self._entries.clear()
-
-    def _evict_other_sessions(self, app_id: str) -> None:
-        for k in [k for k in self._entries if k[0] != app_id]:
-            self._entries.pop(k, None)

@@ -70,22 +70,21 @@ def process_source(
             fail_on_error=fail_on_error,
             line_col=LINE_COL,
             write=lambda out, p=str(out_file): write_single_csv_file(out, p),
+            error_sample=error_cap - len(all_errors),
         )
         totals["success_count"] += result.success_count
         totals["skipped_count"] += result.skipped_count
         totals["error_count"] += result.error_count
-        if len(all_errors) < error_cap:
-            for r in result.errors.limit(error_cap - len(all_errors)).collect():
-                d = r.asDict()
-                all_errors.append(
-                    {
-                        "file": csv_file.name,
-                        "line": d.get(LINE_COL),
-                        "field": d.get("field"),
-                        "message": d.get("message"),
-                        "value": str(d["source_value"]) if d.get("source_value") else "",
-                    }
-                )
+        for d in result.error_sample:
+            all_errors.append(
+                {
+                    "file": csv_file.name,
+                    "line": d.get(LINE_COL),
+                    "field": d.get("field"),
+                    "message": d.get("message"),
+                    "value": str(d["source_value"]) if d.get("source_value") else "",
+                }
+            )
         all_logs.extend(f"[{csv_file.name}] {m}" for m in result.log_messages)
 
     return {

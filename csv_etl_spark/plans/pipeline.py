@@ -11,8 +11,10 @@ fail-on-error gate needs the error count before writing anyway — the
 reference buffers the whole output in RAM for the same reason; we persist
 to executor storage instead).  Per-row log lines (V6) are deliberately NOT
 replicated — at 100 TB that's a driver OOM; the errors DF + counters carry
-the same information, and ``errors.limit(n)`` reproduces every UI view the
-reference builds from its error list.
+the same information.  The UI views the reference builds from its error
+list need only the first few errors: ``transform(error_sample=n)``
+collects them into ``TransformResult.error_sample`` from the cached pass,
+so they are served without re-reading the source.
 """
 
 from __future__ import annotations
@@ -39,8 +41,11 @@ class TransformResult:
     skipped_count: int = 0
     error_count: int = 0
     error_row_count: int = 0
+    input_count: int = 0  # rows read, before the skip rules
     output: DataFrame | None = None  # destination fields only
     errors: DataFrame | None = None  # field, message, source_value [, _line]
+    # first errors as row dicts, collected during the cached pass
+    error_sample: list[dict] = field(default_factory=list)
     output_written: bool = False
     log_messages: list[str] = field(default_factory=list)
 
@@ -104,6 +109,7 @@ def transform(
     dry_run: bool = False,
     line_col: str | None = None,
     write=None,
+    error_sample: int = 0,
 ) -> TransformResult:
     """Reference ``transform_file``/``validate_file`` semantics
     (``dynamic.py:267-348``) over a DataFrame.
@@ -115,6 +121,11 @@ def transform(
     separate ``df.count()`` was a full extra pass.  ``write`` is an optional
     callable ``(DataFrame) -> None`` that replaces the default CSV write —
     lets callers target parquet/Delta without changing gate semantics.
+
+    ``error_sample`` > 0 collects that many first errors into
+    ``result.error_sample`` from the persisted pass, and only when there
+    are errors.  ``result.errors`` and ``result.output`` stay lazy: read
+    after return, they recompute from the source.
     """
     from pyspark.sql import Observation
 
@@ -150,6 +161,7 @@ def transform(
         ).collect()[0]
         kept, error_count, error_rows = agg["kept"], int(agg["errors"]), int(agg["error_rows"])
         total = int(obs.get["total"])
+        result.input_count = total
 
         if not mapping.field_mappings:
             # `{}` is falsy: every row counts as skipped, nothing is written
@@ -171,6 +183,8 @@ def transform(
             F.col("error.source_value").alias("source_value"),
         )
         result.errors = errors_df
+        if error_sample > 0 and error_count > 0:
+            result.error_sample = [r.asDict() for r in errors_df.limit(error_sample).collect()]
         output_df = projected.drop(ERRORS_COL, *( [line_col] if line_col else [] ))
         result.output = output_df
 
@@ -196,20 +210,27 @@ def transform(
         )
         return result
     finally:
-        # Unpersist before returning: counters and the gated write all ran
-        # against the cached data above.  Leaving it cached poisons later
-        # reads — CacheManager matches on the PLAN, so re-reading a file
-        # that was edited in between (the preview → fix-row → convert loop)
-        # would silently serve the stale pre-edit rows.  result.errors /
-        # result.output stay valid and recompute from source on access;
-        # callers wanting them hot can persist them explicitly.
+        # Unpersist before returning: counters, the error sample and the
+        # gated write all ran against the cached data above.  Leaving it
+        # cached poisons later reads — CacheManager matches on the PLAN, so
+        # re-reading a file that was edited in between (the preview →
+        # fix-row → convert loop) would silently serve the stale pre-edit
+        # rows.  result.error_sample already holds the errors a UI shows;
+        # result.errors / result.output stay valid and recompute from
+        # source on access, so callers wanting more than the sample pay a
+        # rescan.
         projected.unpersist()
 
 
-def validate(df: DataFrame, mapping: ETLMapping | dict, line_col: str | None = None) -> TransformResult:
+def validate(
+    df: DataFrame,
+    mapping: ETLMapping | dict,
+    line_col: str | None = None,
+    error_sample: int = 0,
+) -> TransformResult:
     """V3: dry-run — full transform pass, metrics + errors, no write
     (reference ``validate_file``, dynamic.py:259-265)."""
-    return transform(df, mapping, dry_run=True, line_col=line_col)
+    return transform(df, mapping, dry_run=True, line_col=line_col, error_sample=error_sample)
 
 
 def errors_by_line(errors_df: DataFrame, line_col: str = "_line") -> DataFrame:

@@ -14,13 +14,52 @@ reference's own typed path + UI treat them as real.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from csv_etl_spark.specs import FileSpec
 
 LINE_COL = "_line"
 FILE_COL = "_file"
+
+_MAX_HEADER_BYTES = 1 << 20
+_GLOB_CHARS = re.compile(r"[*?\[\]{}\\]")
+
+
+def _plain_header(path: str, sep: str) -> list[str] | None:
+    """The column names of a single local UTF-8 CSV file whose first line
+    Spark would parse to exactly ``line.split(sep)``; None when Spark must
+    read the header itself.  Spark renames empty names (``_c<i>``) and
+    case-insensitive duplicates (``Date0``, ``date1``), parses quotes and
+    escapes, treats a leading NUL as a comment, and keeps a BOM or a lone
+    ``\r`` in the name — any of those takes the slow path."""
+    if (
+        len(sep) != 1
+        or sep in '"\\\r\n'
+        or not path.endswith(".csv")
+        or _GLOB_CHARS.search(path)
+        or not os.path.isfile(path)
+    ):
+        return None
+    with open(path, "rb") as fh:
+        raw = fh.readline(_MAX_HEADER_BYTES)
+    if raw.startswith(b"\xef\xbb\xbf") or not raw.endswith(b"\n"):
+        return None
+    try:
+        line = raw.decode("utf-8").removesuffix("\n").removesuffix("\r")
+    except UnicodeDecodeError:
+        return None
+    if any(ch in line for ch in '"\\\r\x00'):
+        return None
+    names = line.split(sep)
+    # casefold merges at least what Spark's lower-casing merges
+    if "" in names or len({n.casefold() for n in names}) != len(names):
+        return None
+    return names
 
 
 def read_spec_csv(
@@ -32,19 +71,30 @@ def read_spec_csv(
     """S1/S2/S3: header-keyed all-string CSV scan over a file, directory or
     glob.  All columns are StringType — typing happens inside compiled
     transforms, exactly like the reference (SURVEY §1.2).
+
+    Spark learns a header by running a job over the first line.  For one
+    local UTF-8 file with a plain header line (see ``_plain_header``) the
+    line is read here instead, and ``enforceSchema=false`` makes the scan
+    check every file's header against those names, failing on a mismatch.
     """
+    has_header = spec.has_header if spec else True
+    sep = spec.delimiter if spec else ","
+    encoding = spec.encoding if spec else "utf-8"
     reader = (
-        spark.read.option("header", str(spec.has_header if spec else True).lower())
-        .option("sep", spec.delimiter if spec else ",")
-        .option("encoding", spec.encoding if spec else "utf-8")
+        spark.read.option("header", str(has_header).lower())
+        .option("sep", sep)
+        .option("encoding", encoding)
         .option("inferSchema", "false")  # strings end-to-end
         .option("pathGlobFilter", "*.csv")
         .option("recursiveFileLookup", "false")
     )
-    if spec is not None and not spec.has_header:
+    if not has_header:
         # no header: names come from the spec, positionally
         schema = spec.spark_schema(all_string=True)
         df = reader.schema(schema).csv(path)
+    elif encoding.lower() in ("utf-8", "utf8") and (names := _plain_header(path, sep)):
+        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+        df = reader.schema(schema).option("enforceSchema", "false").csv(path)
     else:
         df = reader.csv(path)
     if line_numbers:

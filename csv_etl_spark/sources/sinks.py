@@ -34,20 +34,15 @@ def write_spec_csv(
     path: str,
     spec: FileSpec | None = None,
     single_file: bool = False,
-    order_by: str | None = None,
 ) -> None:
     """S5: write CSV with header.  Column order comes from the DataFrame
     (mapping order — reference uses the first result row's key order, which
-    is mapping order).  ``order_by`` (e.g. the line column) restores input
-    order before a single-file write, matching the reference's stable
-    pass-through ordering."""
+    is mapping order)."""
     out = df
     if spec is not None:
         ordered = [c for c in spec.column_names() if c in df.columns]
         ordered += [c for c in df.columns if c not in ordered]
         out = df.select(*ordered)
-    if order_by and order_by in out.columns:
-        out = out.orderBy(order_by).drop(order_by)
     writer = out.coalesce(1) if single_file else out
     writer.write.mode("overwrite").option("header", "true").csv(path)
 
@@ -55,9 +50,15 @@ def write_spec_csv(
 def write_single_csv_file(df: DataFrame, file_path: str, order_by: str | None = None) -> None:
     """Write exactly one CSV file at ``file_path`` (reference emits one
     output file per input file).  Spark writes a directory; we promote the
-    part file.  Golden-parity path only."""
+    part file.  Golden-parity path only.  ``order_by`` (e.g. the line
+    column) restores input order, matching the reference's stable
+    pass-through ordering; the one partition is sorted locally, since a
+    global ``orderBy`` would add a sampling job for range bounds that one
+    partition does not need."""
+    if order_by and order_by in df.columns:
+        df = df.repartition(1).sortWithinPartitions(order_by).drop(order_by)
     tmp = file_path + ".spark-tmp"
-    write_spec_csv(df, tmp, single_file=True, order_by=order_by)
+    write_spec_csv(df, tmp, single_file=True)
     part = next(Path(tmp).glob("part-*.csv"))
     Path(file_path).parent.mkdir(parents=True, exist_ok=True)
     shutil.move(str(part), file_path)

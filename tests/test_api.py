@@ -377,3 +377,72 @@ def test_upload_refuses_escaping_source_directory(env, tmp_path):
     )
     assert r.status_code == 400
     assert not (tmp_path / "evil").exists()
+
+
+def test_bad_client_input_is_400(env):
+    """Malformed request values are the client's fault: a JSON 400, not a
+    Spark error or an HTML 500."""
+    client, tmp_path, _ = env
+    before = (tmp_path / "in" / "s1" / "a.csv").read_text()
+    r = client.get("/api/preview/src1/a.csv?limit=-1")
+    assert r.status_code == 400 and "error" in r.get_json()
+    r = client.post("/api/preview/src1/a.csv/update", json={"line": "x", "row": {"Date": "d"}})
+    assert r.status_code == 400 and "error" in r.get_json()
+    r = client.post("/api/preview/src1/a.csv/update", json={"line": 3, "row": {"Nope": "d"}})
+    assert r.status_code == 400 and "Nope" in r.get_json()["error"]
+    assert (tmp_path / "in" / "s1" / "a.csv").read_text() == before
+
+
+def test_saved_mapping_recompiles_between_previews(env):
+    """Compiled mappings are memoized by the mapping's JSON: saving a
+    changed mapping must change what the next preview validates."""
+    client, _, _ = env
+    url = "/api/preview/src1/a.csv?mapping_id=m1"
+    v = client.get(url).get_json()["validation"]
+    assert (v["success_count"], v["error_count"]) == (1, 1)
+    direct = [{"destination_field": "symbol", "source_field": "Ticker",
+               "transform_type": "direct", "transform_config": {}}]
+    r = client.post("/api/mappings/m1/save", json={"field_mappings": direct})
+    assert r.status_code == 200
+    body = client.get(url).get_json()
+    assert (body["validation"]["success_count"], body["validation"]["error_count"]) == (2, 0)
+    assert body["errors_by_line"] == {}
+
+
+def _newest_job(spark) -> int:
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    return jobs.head().jobId() if jobs.nonEmpty() else -1  # newest first
+
+
+def test_request_job_budget(spark, env):
+    """Spark jobs per dashboard request, read from the status store (UI
+    off).  A per-request header job, a separate preview count(), an error
+    rescan or a sampling sort for the single-file write would break a pin.
+    Each status is pinned too, so every count is of a request that did
+    the full work: the edit leaves line 3's bad date in place, so the
+    convert runs its gate and reports that one error."""
+    client, _, _ = env
+
+    def jobs(call, status: int):
+        before = _newest_job(spark)
+        r = call()
+        assert r.status_code == status, r.get_data(as_text=True)[:300]
+        return _newest_job(spark) - before, r.get_json()
+
+    preview, body = jobs(lambda: client.get("/api/preview/src1/a.csv?mapping_id=m1"), 200)
+    assert body["validation"]["error_count"] == 1 and body["total"] == 3
+    process, body = jobs(lambda: client.post("/api/process/src1", json={"mapping_id": "m1"}), 200)
+    assert body["error_count"] == 1 and len(body["errors"]) == 1
+    edit, _ = jobs(lambda: client.post(
+        "/api/preview/src1/a.csv/update", json={"line": 2, "row": {"Date": "2024-01-14"}}
+    ), 200)
+    convert, body = jobs(
+        lambda: client.post("/api/preview/src1/a.csv/convert", json={"mapping_id": "m1"}), 400
+    )
+    assert body["message"] == "Conversion failed with 1 errors"
+    assert [e["line"] for e in body["errors"]] == [3]
+    counts = (preview, process, edit, convert)
+    assert all(n <= cap for n, cap in zip(counts, (6, 4, 3, 4))), counts

@@ -71,6 +71,32 @@ def test_update_csv_row(spark, tmp_path):
     assert content.splitlines() == ["a,b", "1,x", "2,EDITED", "3,z"]
 
 
+def test_single_file_line_ordered_write_is_byte_identical(spark, tmp_path):
+    """The single-file write sorts its one partition locally instead of a
+    global orderBy + coalesce(1); the file must not change by a byte."""
+    from pathlib import Path
+
+    from csv_etl_spark.sources.sinks import write_single_csv_file
+
+    df = (
+        spark.range(500)
+        .select(
+            (F.col("id") + 2).alias(LINE_COL),
+            F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+            (F.col("id") % 7).cast("string").alias("w"),
+        )
+        .repartition(6, F.rand(seed=3))
+    )
+    assert df.rdd.getNumPartitions() == 6
+    new_file = str(tmp_path / "new.csv")
+    write_single_csv_file(df, new_file, order_by=LINE_COL)
+    old_dir = str(tmp_path / "old")
+    df.orderBy(LINE_COL).drop(LINE_COL).coalesce(1).write.option("header", "true").csv(old_dir)
+    old_file = next(Path(old_dir).glob("part-*.csv"))
+    assert Path(new_file).read_bytes() == old_file.read_bytes()
+    assert Path(new_file).read_text().splitlines()[:3] == ["v,w", "v0,0", "v1,1"]
+
+
 def test_template_dataframe(spark):
     spec = FileSpec(
         id="t", name="t",

@@ -99,3 +99,24 @@ def test_headerless_spec(spark, tmp_path):
     df = read_spec_csv(spark, str(d), spec)
     assert df.columns == ["num", "val"]
     assert df.count() == 2
+
+
+def test_compile_memo_keys_on_mapping_and_columns(spark):
+    """compile_mapping is memoized per (mapping JSON, source columns): a
+    repeat compile reuses the Columns but carries the caller's mapping,
+    and the same mapping under another column list compiles separately
+    (a column the file lacks resolves to null)."""
+    from csv_etl_spark.compiler import compile_mapping
+    from csv_etl_spark.specs import ETLMapping
+
+    m1, m2 = ETLMapping.from_dict(MAPPING), ETLMapping.from_dict(MAPPING)
+    full = compile_mapping(m1, ["Date", "Ticker", "Type"])
+    again = compile_mapping(m2, ["Date", "Ticker", "Type"])
+    assert again.fields is full.fields and again.mapping is m2
+    assert again.errors_column() is full.errors_column()
+
+    no_type = compile_mapping(m1, ["Date", "Ticker"])
+    assert no_type.fields is not full.fields
+    df = spark.createDataFrame([("2024-01-15T10:30:00", "AAPL", "BUY")], ["Date", "Ticker", "Type"])
+    assert full.apply(df, with_errors=False).collect()[0]["type"] == "BUY"
+    assert no_type.apply(df, with_errors=False).collect()[0]["type"] is None
