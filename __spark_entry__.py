@@ -1761,18 +1761,16 @@ def q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level IVF (similarity.ivf_two_level_topk) at exhaustive
-    routing (nprobe_coarse = nprobe_fine = None): the coarse codebook is
-    a broadcast literal, the fine codebook a broadcast-joined TABLE —
-    the codebook tier past kmeans_centroids' 4096-literal cap — and with
-    every bucket routed the result must EQUAL brute force, so it shares
-    the brute-force oracle (the ann_ivf_exact discipline; the >4096-cell
-    scale claim itself is pinned by test_ivf_two_level_past_literal_cap)."""
+    """Auto-sized IVF (similarity.ivf_two_level_sharded, the name kept
+    from the r10 two-level index) at exhaustive routing (nprobe=None):
+    with every cell routed the result must EQUAL brute force, so it
+    shares the brute-force oracle (the ann_ivf_exact discipline; routing
+    past the 4096-literal cap is pinned by
+    test_ivf_two_level_past_literal_cap)."""
     e = _t(spark, sf_dir, "embeddings")
     probes = similarity.make_probes(e, n=10)
-    return similarity.ivf_two_level_topk(
-        e, probes, k=5, n_coarse=4, n_fine_per_cell=4,
-        nprobe_coarse=None, nprobe_fine=None,
+    return similarity.ivf_two_level_sharded(
+        e, probes, k=5, nprobe=None, n_coarse=4
     ).select("probe_id", "neighbor_id", "cosine", "rank")
 
 
@@ -2003,12 +2001,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_assign_sharded_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r15 >4096-cell assignment tier
-    (similarity.assign_to_centroids_sharded) in its SQL-replayable
-    spelling: ``m_super=None`` makes routing the EXACT flat argmax
-    (sim desc, centroid_id asc on ties — bit-faithful selection via the
-    matmul + risky-gap refold kernel), so the torrent-broadcast router
-    is value-hash-checked against a plain SQL argmax.  Codebook = the
+    """The torrent-broadcast codebook router's assignment
+    (similarity.assign_to_centroids) in its SQL-replayable spelling:
+    ``m_super=None`` makes routing the EXACT flat argmax (sim desc,
+    centroid_id asc on ties — bit-faithful selection via the matmul +
+    risky-gap refold kernel), so the router is value-hash-checked
+    against a plain SQL argmax.  Codebook = the
     deterministic first-64 vectors (the contract convention); the
     hierarchical m_super default and the genuinely-above-cap regime are
     covered by the real-5000-cell unit tests and the r15 semantic
@@ -2024,7 +2022,7 @@ def q_assign_sharded_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("centroid_vec"),
         )
     )
-    return similarity.assign_to_centroids_sharded(
+    return similarity.assign_to_centroids(
         e, cents, m_super=None
     ).select("vec_id", "cluster")
 
@@ -5716,11 +5714,10 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN GRAPH over the whole embeddings table via similarity.knn_join
     — the co-partitioned ANN path where the probe side IS the corpus
     (SemDeDup ε-graphs, kNN-LM retrieval sets), so NEITHER side is
-    broadcast: right vectors hash to their nearest cell (map-only literal
-    argmax), every probe routes to its nprobe=2 nearest cells via an
-    in-row array_sort/slice (no window, no shuffle), and one cell-keyed
-    equijoin co-partitions both big sides before the two-stage per-probe
-    top-3.  The codebook SCALES WITH THE CORPUS — n_centroids =
+    broadcast: one codebook router sends right vectors to their nearest
+    cell and every probe to its nprobe=2 nearest cells (map-only, no
+    window), and one cell-keyed shuffle co-partitions both big sides
+    before the two-stage per-probe top-3.  The codebook SCALES WITH THE CORPUS — n_centroids =
     max(8, min(4096, floor(sqrt(N)))), the IVF discipline
     similarity.knn_join's docstring prescribes: with a constant codebook
     the pair-score cost |N|²·nprobe/n_cells is quadratic in N (the r9
@@ -5741,7 +5738,7 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <=512 (3906 cells at 2M) made the decade 2.5x WORSE (530 s vs
     # 213 s, BENCHNOTES_r11_knn2) because routing flops N*cells then
     # dominate.  Past ~16M vectors the right tier is IMPLEMENTED (r12):
-    # similarity.knn_join_sharded — bounded cells with hierarchical
+    # similarity.knn_join(m_super=4) — bounded cells with hierarchical
     # k-means+spill routing (linear scan, ~N^1.25 routing; measured
     # alpha 0.99 and recall@5 1.000 at the 2M decade vs this query's
     # 1.17 — BENCHNOTES_r12_knn_sharded, RECALL.md).  This flat-codebook
@@ -5842,8 +5839,8 @@ def q_knn_graph_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_graph_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN GRAPH on the BOUNDED-CELL tier (similarity.knn_join_sharded,
-    r11 verdict ask #1 — the ≥16M-vector regime's answer to the flat
+    """k-NN GRAPH on the BOUNDED-CELL tier (similarity.knn_join over a
+    bounded codebook, r11 verdict ask #1 — the ≥16M-vector regime's answer to the flat
     √N-cell design's measured N^1.5 asymptote).  Codebook = the first
     max(⌊√N⌋, ⌈N/512⌉) vectors by id: below the ~262k-vector crossover
     that is exactly the flat √N discipline; above it, cells stay at
@@ -5871,7 +5868,7 @@ def q_knn_graph_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = e.select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
-    return similarity.knn_join_sharded(
+    return similarity.knn_join(
         probes, e, cents, k=3, nprobe=2, m_super=None, exclude_same_id=True
     ).select("probe_id", "neighbor_id", "cosine", "rank")
 
@@ -6607,17 +6604,18 @@ TIER_ROWS_ONLY = "rows-only"         # estimate-valued; driver row carries
 # √N-cell kNN graph's total work is N^1.5 BY DESIGN (routing N·√N +
 # scanning N·nprobe·√N — measured α 1.17 at the 2M decade,
 # BENCHNOTES_r11_knn2.json), so past ~16M vectors the bounded-cell
-# ``knn_join_sharded`` tier (linear scan term, ~N^1.25 routing,
+# ``knn_join(m_super=4)`` tier (linear scan term, ~N^1.25 routing,
 # SCALE.md-measured α 0.99) is the plan a 100-TB user needs.  The
 # registry previously carried this switch only in docstrings.
 _TIER_BOUNDS = {
     "knn_graph": {
         "recommended_max_n": 16_000_000,   # vectors on the corpus side
-        "successor": "knn_join_sharded",   # operator (similarity.py)
+        "successor": "knn_join_auto",   # operator (similarity.py)
         "successor_query": "knn_graph_sharded",  # its contract spelling
         "why": "flat sqrt(N)-cell IVF graph is N^1.5 past the bound; "
-               "knn_join_sharded bounds cells at max(isqrt(N), N/512) "
-               "for a linear scan term (SCALE.md alpha 0.99 at 2M)",
+               "knn_join_auto then runs knn_join(m_super=4) over "
+               "max(isqrt(N), N/512) cells for a linear scan term "
+               "(SCALE.md alpha 0.99 at 2M)",
     },
 }
 
@@ -6640,11 +6638,11 @@ _NON_SCALE_TIERS = {
     # sibling: ann_ivf_approx
     "ann_ivf_exact": TIER_TWIN,
     # m_super=None flat routing over the bounded codebook (N·C flops) —
-    # scale sibling: knn_join_sharded(m_super=4), recall/ladder-measured
-    # in RECALL.md / SCALE.md
+    # scale sibling: knn_join(m_super=4), recall/ladder-measured in
+    # RECALL.md / SCALE.md
     "knn_graph_sharded": TIER_TWIN,
-    # nprobe_coarse/fine=None exact two-level routing — scale sibling:
-    # ivf_two_level_sharded
+    # nprobe=None route-every-cell IVF (= brute force) — scale sibling:
+    # ivf_two_level_sharded at a finite nprobe
     "ann_ivf_two_level": TIER_TWIN,
     # HLL++ estimate — exact twin: distinct_users
     "distinct_users_approx": TIER_ROWS_ONLY,

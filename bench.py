@@ -278,36 +278,16 @@ def main() -> None:
         # concurrently with the next pass's timed queries and contend for
         # the block manager (the suspected cause of r5's driver-run passes
         # getting SLOWER on exactly the cached operators).
-        from csv_etl_spark.operators import classify as _classify
-        from csv_etl_spark.operators import dedup as _dedup
-        from csv_etl_spark.operators import graph as _graph
-        from csv_etl_spark.operators import multimodal as _mm
-        from csv_etl_spark.operators import packing as _pack
+        from csv_etl_spark import driver_memo
         from csv_etl_spark.operators import similarity as _sim
-        from csv_etl_spark.operators import text as _text
 
-        _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-        _sim._BUCKET_CACHE.invalidate(blocking=True)
-        _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-        _mm._DHASH_CACHE.invalidate(blocking=True)
-        _text._TF_CACHE.invalidate(blocking=True)
-        # r17: learned BPE merge tables (driver-side memo)
-        _text._MERGE_MEMO.invalidate(blocking=True)
-        # r7 fix: the prefix-sum cache was NOT cleared in r5/r6 benches, so
-        # pack_sequences / corpus_shuffle passes 2+ timed a persisted range
-        # shuffle instead of the operator — their honest medians rise a bit
-        _pack._CUMSUM_CACHE.invalidate(blocking=True)
-        # r8 addition: the classifier's (doc, feature) pair cache
-        _classify._FEAT_CACHE.invalidate(blocking=True)
-        # r9 addition: pagerank's persisted link table
-        _graph._LINKS_CACHE.invalidate(blocking=True)
-        # compiled mappings (driver-side memo): every pass compiles afresh
-        from csv_etl_spark import compiler as _compiler
-
-        _compiler._COMPILE_MEMO.invalidate()
-        # r13 addition (ADVICE r12): knn_join_sharded codebook broadcasts
-        # otherwise accumulate ~128 MB/call across bench passes; destroy=True
-        # is safe here — every returned frame was consumed by the timed pass
+        # every BoundedPersistCache/BoundedDriverMemo registered itself on
+        # construction (shingle/LSH/assignment projections, prefix sums,
+        # feature pairs, link tables, BPE merges, compiled mappings)
+        driver_memo.clear_all(blocking=True)
+        # codebook router broadcasts otherwise accumulate (up to ~128 MB
+        # per routing call) across bench passes; destroy=True is safe
+        # here — every returned frame was consumed by the timed pass
         _sim.release_sharded_broadcasts(destroy=True)
 
     env_start = _env_stamp()

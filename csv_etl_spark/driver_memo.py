@@ -1,17 +1,39 @@
-"""Session-aware bounded memo for small driver-side values.
+"""Session-aware bounded memo for small driver-side values, and the
+registry of every cache.
 
 Plain Python (a lock and a dict) so that the mapping compiler and the
 operator caches can share one keying rule without the compiler importing
 the operator families.  Keys start with the SparkContext's
 applicationId: entries from a stopped or recreated session are dropped
 on the next access.
+
+Every ``BoundedDriverMemo`` and ``operators._cache.BoundedPersistCache``
+registers itself here when constructed, so ``clear_all`` empties every
+cache without a hand-kept list (a forgotten cache once made a bench time
+a cache hit instead of the operator).
 """
 
 from __future__ import annotations
 
 import threading
+import weakref
 
 from pyspark.sql import DataFrame
+
+_REGISTRY: weakref.WeakSet = weakref.WeakSet()
+
+
+def register(cache) -> None:
+    """Track ``cache`` for ``clear_all`` (weakly: a dropped cache goes)."""
+    _REGISTRY.add(cache)
+
+
+def clear_all(blocking: bool = True) -> None:
+    """``invalidate(blocking=...)`` every registered cache.
+    ``blocking=True`` lets a benchmark harness finish the unpersists
+    before it times the next pass."""
+    for cache in list(_REGISTRY):
+        cache.invalidate(blocking=blocking)
 
 
 def plan_key(df: DataFrame, *extra) -> tuple | None:
@@ -42,6 +64,7 @@ class BoundedDriverMemo:
         self._entries: dict[tuple, object] = {}
         self._max = max_entries
         self._lock = threading.Lock()
+        register(self)
 
     key_for = staticmethod(plan_key)
 

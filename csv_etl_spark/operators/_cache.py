@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from csv_etl_spark.driver_memo import BoundedDriverMemo, plan_key
+from csv_etl_spark.driver_memo import BoundedDriverMemo, plan_key, register
 
 __all__ = ["BoundedDriverMemo", "BoundedPersistCache"]
 
@@ -28,6 +28,7 @@ class BoundedPersistCache:
     def __init__(self, max_entries: int = 8) -> None:
         self._entries: dict[tuple, DataFrame] = {}
         self._max = max_entries
+        register(self)
 
     key_for = staticmethod(plan_key)
 

@@ -75,30 +75,31 @@ def dot_arrow(a: Column, b: Column) -> Column:
     return _fold(a, b)
 
 
-# the Catalyst-literal / plain-collect codebook cap: assignments over
-# codebooks at or under this many cells go through _codebook_arrays and
-# the broadcast struct-array spelling; past it, callers must take the
-# torrent-broadcast sharded path (assign_to_centroids_sharded).
-_ASSIGN_LITERAL_CELLS = 4096
+# driver-collect cap for a routing codebook: 2^18 cells × 64 dims × 8 B
+# = 128 MB of numpy, shipped to executors as ONE torrent broadcast (never
+# a Catalyst literal, never a task-closure pickle).  At 512 members/cell
+# this covers a ~134M-vector corpus; past that, raise members_per_cell
+# (cells shrink proportionally) — the loud error below says so.
+_CODEBOOK_CAP = 1 << 18
 
 
-def _codebook_arrays(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Collect a centroid table to (ids, matrix) sorted by centroid_id —
-    driver-side and BOUNDED: every caller enforces the 4096-cell literal
-    cap (kmeans_centroids raises above it; knn codebooks clamp at
-    min(4096, √N)), so this is the same ≤4096-row collect the broadcast
-    struct-array spelling already does.  The bound is also ENFORCED
-    here at the collect site: a caller that slipped an unbounded frame
-    through would otherwise silently pull it all onto the driver."""
+def _codebook_arrays(
+    centroids: DataFrame, max_cells: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Collect a centroid table to (ids, matrix) sorted by centroid_id.
+    The bound is ENFORCED here at the collect site: a caller that slipped
+    an unbounded frame through would otherwise silently pull it all onto
+    the driver."""
     rows = (
         centroids.select("centroid_id", "centroid_vec")
-        .limit(_ASSIGN_LITERAL_CELLS + 1)
+        .limit(int(max_cells) + 1)
         .collect()
     )
-    if len(rows) > _ASSIGN_LITERAL_CELLS:
+    if len(rows) > max_cells:
         raise ValueError(
-            "_codebook_arrays: centroid frame exceeds the 4096-cell "
-            "driver-collect cap; shard the codebook or raise k-means k"
+            f"_codebook_arrays: centroid frame exceeds the {max_cells}-cell "
+            "driver-collect cap; raise members_per_cell so the codebook "
+            "shrinks (cells = N / members_per_cell)"
         )
     rows.sort(key=lambda r: int(r["centroid_id"]))
     ids = np.array([int(r["centroid_id"]) for r in rows], dtype="int64")
@@ -151,16 +152,46 @@ def _sims_matmul(V: np.ndarray, C: np.ndarray) -> np.ndarray:
 _SELECT_MARGIN = 1e-9
 
 
+def _ranked_cells(V: np.ndarray, mat: np.ndarray, n_take: int) -> np.ndarray:
+    """Row indices of ``mat`` ranked for each row of ``V``: the
+    ``n_take`` most cosine-similar, best first, in EXACTLY the pure-Column
+    order (sim desc, then index asc; ``mat`` is sorted by centroid_id, so
+    index asc is centroid_id asc) — position j is route rank j + 1.
+
+    Selection runs on the matmul: an O(C) argpartition of the top
+    n_take + 1 (a full per-row argsort is O(C log C) and measured 10-40×
+    the partition cost at C~4k), then a stable sort of that slice, whose
+    candidates are pre-sorted ascending so ties resolve to the lowest
+    index.  A row with ANY adjacent gap in the sorted slice inside
+    ``_SELECT_MARGIN`` — which also covers every exact tie, including one
+    across the n_take cut — is re-ranked on the fold-exact sims, so both
+    the routed set and its order equal the crossJoin + row_number
+    spelling's."""
+    sims = _sims_matmul(V, mat)
+    C = sims.shape[1]
+    k1 = min(n_take + 1, C)
+    part = np.sort(np.argpartition(-sims, k1 - 1, axis=1)[:, :k1], axis=1)
+    pvals = np.take_along_axis(sims, part, axis=1)
+    loc = np.argsort(-pvals, axis=1, kind="stable")
+    order = np.take_along_axis(part, loc, axis=1)
+    srt = np.take_along_axis(pvals, loc, axis=1)
+    risky = (srt[:, :-1] - srt[:, 1:] < _SELECT_MARGIN).any(axis=1)
+    if risky.any():
+        order[risky] = np.argsort(
+            -_fold_sims(V[risky], mat), axis=1, kind="stable"
+        )[:, :k1]
+    return order[:, :n_take]
+
+
 def cosine_with_norms_arrow(
     a: Column, b: Column, na: Column, nb: Column
 ) -> Column:
     """``cosine_with_norms`` with the dot on the Arrow kernel — the
     default for the PAIR-SCORING selects of the heavy embedding
     operators (where millions of dots flow through one projection).
-    Bit-identical to the builtin spelling; routing/assignment argmaxes
-    keep the pure-Column form (they run inside HOF lambdas over
-    broadcast codebooks, where a UDF cannot appear and volumes are
-    n_rows x n_cells, not pairs)."""
+    Bit-identical to the builtin spelling; routing and assignment run
+    on the codebook router's own Arrow kernel
+    (``_sharded_router_factory``)."""
     denom = na * nb
     return F.when(denom > 0, dot_arrow(a, b) / denom).otherwise(F.lit(0.0))
 
@@ -521,18 +552,17 @@ def kmeans_centroids(
     collecting the n_centroids × dim model and re-broadcasting it as a
     literal expression tree.  That tree has O(n_centroids × dim) nodes,
     so very large codebooks would blow up Catalyst analysis long before
-    the driver's memory — ``n_centroids`` is capped at 4096 (a 100 TB
-    IVF index wants ~√N partitions ≲ thousands; for genuinely larger
-    codebooks use hierarchical/two-level IVF, i.e. run this per
-    top-level cell)."""
+    the driver's memory — ``n_centroids`` is capped at 4096; larger
+    codebooks (up to the router's 2^18 cells) are fitted as a table by
+    ``kmeans_codebook_table``."""
     from csv_etl_spark.operators.sampling import hash_sample
 
     if n_centroids > 4096:
         raise ValueError(
             f"n_centroids={n_centroids} exceeds 4096: the broadcast-literal "
             "centroid array is an O(n_centroids x dim) expression tree; use "
-            "ivf_two_level_topk (coarse literal + fine broadcast TABLE) for "
-            "larger codebooks"
+            "kmeans_codebook_table (table Lloyd, torrent-broadcast routing) "
+            "for larger codebooks"
         )
 
     sample = vectors.select(F.col(id_col), F.col(vec_col))
@@ -644,10 +674,9 @@ def kmeans_codebook_table(
     element-wise means rounded to ``round_digits``, empty clusters keep
     their previous centroid — but every step stays a TABLE:
 
-    * assignment goes through ``assign_to_centroids_sharded`` (one
-      torrent broadcast of the codebook instead of an O(k × dim)
-      Catalyst literal tree): EXACT flat routing (``m_super=None``,
-      bit-faithful to ``assign_to_centroids``) up to
+    * assignment goes through ``assign_to_centroids`` (one torrent
+      broadcast of the codebook instead of an O(k × dim) Catalyst
+      literal tree): EXACT flat routing (``m_super=None``) up to
       ``_KMEANS_LITERAL_MAX`` (256) cells — the range where the parity
       test pins this fitter element-wise equal to the literal one —
       hierarchical m_super routing past it (approximate
@@ -657,19 +686,19 @@ def kmeans_codebook_table(
       points below a flat literal fit at equal cell count);
     * means are one (cluster, pos) aggregation of the sample — never
       collected as rows: the codebook is never materialized as a
-      Catalyst literal tree; per iteration the sharded router does
-      collect the codebook arrays driver-side to fit supers and
-      torrent-broadcast them, so driver traffic is bounded by the 2^18-
+      Catalyst literal tree; per iteration the router does collect the
+      codebook arrays driver-side (and fits supers past 256 cells) and
+      torrent-broadcasts them, so driver traffic is bounded by the 2^18-
       cell broadcast cap (~128 MB) per iteration, and the fit scales to
       ~2^18 cells.
 
     Per-iteration cost = one routing pass + one bounded aggregation over
     the SAMPLE (pass ``sample_fraction`` ≪ 1 at scale), i.e. the same
     assignment pass the downstream consumer (``semantic_dedup``,
-    ``knn_join_sharded``) pays once anyway.  Deterministic: no RNG, and
+    ``knn_join``) pays once anyway.  Deterministic: no RNG, and
     the mean rounding collapses distributed summation-order drift
     run-to-run exactly as in ``kmeans_centroids``.  NOT SQL-replicable
-    (the sharded router is the production spelling) — contract queries
+    (the torrent-broadcast router is the production spelling) — contract queries
     keep the deterministic first-k convention.  Returns
     ``(centroid_id int, centroid_vec array<double>)`` — drop-in wherever
     a codebook table is accepted."""
@@ -704,7 +733,7 @@ def kmeans_codebook_table(
 
     for _ in range(int(kmeans_iters)):
         _bc_mark = len(_SHARDED_BROADCASTS)
-        assigned = assign_to_centroids_sharded(
+        assigned = assign_to_centroids(
             sample, codebook, id_col=id_col, vec_col=vec_col, m_super=m_super
         )
         means = (
@@ -736,10 +765,206 @@ def kmeans_codebook_table(
         )
         # scoped: only the broadcasts THIS iteration's router shipped —
         # broadcasts backing still-live frames from unrelated earlier
-        # knn_join_sharded calls stay persisted (ADVICE r15)
+        # routing calls stay persisted (ADVICE r15)
         release_sharded_broadcasts_since(_bc_mark)
 
     return codebook
+
+
+# live codebook broadcasts shipped by the router in this Spark session — see
+# release_sharded_broadcasts() below
+_SHARDED_BROADCASTS: list = []
+
+
+def release_sharded_broadcasts(blocking: bool = True, destroy: bool = False) -> int:
+    """Release every codebook broadcast shipped by prior routing calls
+    (ADVICE r12: each call torrent-broadcasts up to ~128 MB and
+    bench/recall loops would otherwise accumulate them for the session
+    lifetime).
+
+    ``unpersist`` drops executor-side copies (a later re-execution of a
+    returned frame refetches from the driver, so it is always safe);
+    ``destroy=True`` additionally frees the driver-side copy but makes
+    any still-unconsumed returned DataFrame unusable — bench's
+    clear_operator_caches uses it between passes where nothing is live.
+    Returns the number of broadcasts released."""
+    n = len(_SHARDED_BROADCASTS)
+    for bc in _SHARDED_BROADCASTS:
+        try:
+            if destroy:
+                bc.destroy()
+            else:
+                bc.unpersist(blocking=blocking)
+        except Exception:
+            pass  # session already stopped — nothing to free
+    _SHARDED_BROADCASTS.clear()
+    return n
+
+
+def release_sharded_broadcasts_since(mark: int, blocking: bool = True) -> int:
+    """Release ONLY the codebook broadcasts registered after ``mark`` (a
+    prior ``len(_SHARDED_BROADCASTS)`` snapshot) — the scoped spelling
+    for callers that spawn router broadcasts inside a loop
+    (``kmeans_codebook_table``'s Lloyd iterations) without touching
+    broadcasts backing still-live frames from unrelated earlier routing
+    calls (ADVICE r15: the global release inside the fit loop silently
+    degraded concurrent consumers — safe, since executors refetch from
+    the driver, but a surprising side effect).  Returns the number
+    released."""
+    released = _SHARDED_BROADCASTS[mark:]
+    for bc in released:
+        try:
+            bc.unpersist(blocking=blocking)
+        except Exception:
+            pass  # session already stopped — nothing to free
+    del _SHARDED_BROADCASTS[mark:]
+    return len(released)
+
+
+# Shape of the m_super hierarchy: _N_SUPER super-centroids (None = ⌈√C⌉),
+# fitted by _SUPER_ITERS rounds of driver-side spherical k-means, with
+# every centroid SPILLED into its _SPILL nearest supers.
+_N_SUPER: int | None = None
+_SPILL = 2
+_SUPER_ITERS = 3
+
+
+def _sharded_router_factory(
+    centroids: DataFrame, m_super: int | None = None, caller: str = "router"
+):
+    """The module's ONE Arrow routing kernel: every assignment and every
+    probe routing goes through it.  Collects the codebook once under the
+    2^18-cell cap, ships it as ONE torrent broadcast (registered for
+    ``release_sharded_broadcasts``), and returns ``(mk_router, n_cells)``.
+    ``mk_router(n_take)`` is a pandas UDF mapping a vector column to
+    ``struct<cells: array<centroid_id>, norm: double>`` — the row's
+    ``n_take`` nearest cells, best first (position j is route rank
+    j + 1), and its L2 norm folded per dimension in ``l2_norm``'s order,
+    so the two are bit-identical.  Members route with ``n_take=1``.
+
+    ``m_super=None``: EXACT flat routing — every row ranks all C
+    centroids (``_ranked_cells``), so cell lists equal the crossJoin +
+    row_number (sim desc, centroid_id asc) spelling and the SQL oracles
+    replay them.  Cost: C sims per row.
+
+    ``m_super=m``: hierarchical routing for bounded-cell codebooks.  Rows
+    rank the ``⌈√C⌉`` SUPER-centroids first, then exactly the centroids
+    belonging to their ``m`` nearest supers, with each centroid SPILLED
+    into its ``_SPILL`` nearest supers so a true cell on a super boundary
+    stays reachable from either side (raw first-√C supers without spill
+    measured recall 0.72-0.80 — the RECALL.md finding-4 pruning trap;
+    k-means supers + spill close it).  Cost: √C·(1+spill·m) sims per row
+    instead of C — ~560 vs 3906 at 2M vectors, and total routing ~N^1.25
+    (two levels carry to ~10⁹ vectors before routing re-dominates).  The
+    supers are fitted once, driver-side (C×√C sims per round)."""
+    ids, mat = _codebook_arrays(centroids, _CODEBOOK_CAP)
+    n_cells = len(ids)
+    if n_cells == 0:
+        raise ValueError(f"{caller}: empty centroid frame")
+    cid_sql = centroids.schema["centroid_id"].dataType.simpleString()
+    np_dtype = {"int": "int32", "bigint": "int64"}.get(cid_sql, "int64")
+    payload = {"ids": ids.astype(np_dtype), "mat": mat}
+    m_val = None
+    if m_super is not None:
+        n_super = _N_SUPER
+        if n_super is None:
+            n_super = math.isqrt(n_cells - 1) + 1 if n_cells > 1 else 1
+        n_super = min(int(n_super), n_cells)
+        m_val = min(int(m_super), n_super)
+        # driver-side spherical k-means over the CODEBOOK (init = first
+        # rows, deterministic given the codebook).  Membership only
+        # steers which centroids stage 2 CONSIDERS, so matmul precision
+        # is sufficient throughout.
+        smat = mat[:n_super].copy()
+        _chunk = 65536
+        for _ in range(int(_SUPER_ITERS)):
+            assign1 = np.empty(n_cells, dtype="int64")
+            for off in range(0, n_cells, _chunk):
+                assign1[off : off + _chunk] = np.argmax(
+                    _sims_matmul(mat[off : off + _chunk], smat), axis=1
+                )
+            for s in range(n_super):
+                sel = assign1 == s
+                if sel.any():
+                    smat[s] = mat[sel].mean(axis=0)
+        n_spill = max(1, min(int(_SPILL), n_super))
+        spill_assign = np.empty((n_cells, n_spill), dtype="int64")
+        for off in range(0, n_cells, _chunk):
+            sims_c = _sims_matmul(mat[off : off + _chunk], smat)
+            spill_assign[off : off + _chunk] = np.argsort(
+                -sims_c, axis=1, kind="stable"
+            )[:, :n_spill]
+        payload["smat"] = smat
+        payload["members"] = [
+            np.nonzero((spill_assign == s).any(axis=1))[0] for s in range(n_super)
+        ]
+    bc = centroids.sparkSession.sparkContext.broadcast(payload)
+    _SHARDED_BROADCASTS.append(bc)
+
+    def _mk_router(n_take: int):
+        from pyspark.sql.pandas.functions import pandas_udf
+
+        @pandas_udf(f"cells array<{cid_sql}>, norm double")
+        def _route(vs: pd.Series) -> pd.DataFrame:
+            if not len(vs):
+                return pd.DataFrame(
+                    {
+                        "cells": pd.Series([], dtype=object),
+                        "norm": pd.Series([], dtype="float64"),
+                    }
+                )
+            cb = bc.value
+            _ids, _mat = cb["ids"], cb["mat"]
+            V = np.vstack(vs.to_numpy()).astype("float64")
+            vn = np.zeros(len(V), dtype="float64")
+            for j in range(V.shape[1]):
+                vn += V[:, j] * V[:, j]
+            if m_val is None:
+                cells = [
+                    _ids[row].tolist() for row in _ranked_cells(V, _mat, n_take)
+                ]
+                return pd.DataFrame({"cells": cells, "norm": np.sqrt(vn)})
+            # stage 1: the m_val nearest supers.  Stage 2 ranks the
+            # centroids of those supers GROUPED BY SUPER-COMBINATION: rows
+            # sharing a super set share one candidate list, so each group
+            # is one dense matmul (a clustered 10k-row batch collapses to
+            # a handful of combos; the r12 per-row padded gather this
+            # replaced measured 169 s at the 2M-graph decade).
+            top_s = np.sort(_ranked_cells(V, cb["smat"], m_val), axis=1)
+            uq, inv = np.unique(top_s, axis=0, return_inverse=True)
+            cells = [None] * len(V)
+            for g in range(len(uq)):
+                rows_idx = np.nonzero(inv.ravel() == g)[0]
+                cands = np.unique(
+                    np.concatenate([cb["members"][s] for s in uq[g]])
+                )
+                if not len(cands):
+                    # every routed super is memberless (possible on tiny
+                    # or degenerate codebooks): rank the whole codebook
+                    # rather than silently dropping the rows
+                    cands = np.arange(len(_mat), dtype="int64")
+                picked = cands[_ranked_cells(V[rows_idx], _mat[cands], n_take)]
+                for j, i in enumerate(rows_idx):
+                    cells[i] = _ids[picked[j]].tolist()
+            return pd.DataFrame({"cells": cells, "norm": np.sqrt(vn)})
+
+        return _route
+
+    return _mk_router, n_cells
+
+
+def _assign_cells(
+    vectors: DataFrame, route, id_col: str, vec_col: str, keep_norm: bool = False
+) -> DataFrame:
+    """(id_col, vec_col[, _vnorm], cluster) from a router UDF built with
+    ``n_take=1``."""
+    routed = vectors.withColumn("_r", route(F.col(vec_col)))
+    return routed.select(
+        F.col(id_col),
+        F.col(vec_col),
+        *([F.col("_r.norm").alias("_vnorm")] if keep_norm else []),
+        F.element_at(F.col("_r.cells"), 1).alias("cluster"),
+    )
 
 
 def assign_to_centroids(
@@ -749,71 +974,45 @@ def assign_to_centroids(
     vec_col: str = "embedding",
     keep_norm: bool = False,
     kernel: str = "arrow",
+    m_super: int | None = None,
 ) -> DataFrame:
     """Assign every vector to its most-cosine-similar centroid — MAP-ONLY
     (never a row_number() over Window.partitionBy(vec_id), which would
     shuffle N × n_centroids rows — the one scale-killer here at 100 TB).
 
-    ``kernel="arrow"`` (default): one Arrow-batched UDF computes the
-    full similarity matrix per batch with the EXACT fold op order of the
-    builtin spelling (``_fold_sims``) and takes np.argmax — first max
-    over the centroid_id-sorted codebook, the identical tie rule — so
-    cluster assignments are bit-faithful while running ~20x faster than
+    ``kernel="arrow"`` (default): the codebook router with one cell per
+    row (``_sharded_router_factory``).  With ``m_super=None`` routing is
+    the exact flat argmax — matmul selection, fold-exact re-decision
+    inside the margin, ties to the lowest centroid_id — so clusters are
+    bit-faithful to the builtin spelling while running ~20x faster than
     the interpreted HOF transform (r10 thread dumps showed the argmax
-    lambda dominating the kNN ladder).  The codebook collect is bounded
-    by the 4096-cell literal cap all callers enforce.
+    lambda dominating the kNN ladder).  The codebook ships as one torrent
+    broadcast under the 2^18-cell cap.  ``m_super=m`` routes through the
+    super-centroid hierarchy: √C·(1+spill·m) sims per vector instead of C
+    (~2.9k vs 100k at C=100k), and a boundary vector may land in its
+    second-nearest cell — for the partition-shaped callers
+    (``semantic_dedup``, ``kmeans_codebook_table``) the same fail-open
+    trade as semantic_dedup's cluster-size cap.
 
     ``kernel="builtin"``: the pure-Column spelling — broadcast the
     centroid set as one array-of-structs row, similarities via
     transform, argmax via array_position (first max after array_sort on
-    centroid_id ⇒ lowest-id tie break).  Kept as the parity reference
-    (test_assign_kernels_agree) and for plans that must stay UDF-free.
+    centroid_id ⇒ lowest-id tie break).  Flat only; kept as the parity
+    reference (test_assign_kernels_agree) and for plans that must stay
+    UDF-free.
 
     Returns (id_col, vec_col, cluster); with ``keep_norm=True`` also
     ``_vnorm`` (the row's L2 norm, same fold order both kernels) so
     downstream pair scoring reuses it instead of recomputing per pair."""
     if kernel == "arrow":
-        from pyspark.sql.pandas.functions import pandas_udf
-
-        ids, mat = _codebook_arrays(centroids)
-        # cluster keeps the codebook's centroid_id type (callers pass int
-        # or bigint ids; the output schema must match the builtin's)
-        cid_sql = centroids.schema["centroid_id"].dataType.simpleString()
-        np_dtype = {"int": "int32", "bigint": "int64"}.get(cid_sql, "int64")
-        ids_t = ids.astype(np_dtype)
-
-        @pandas_udf(f"cluster {cid_sql}, _vnorm double")
-        def _assign(vs: pd.Series) -> pd.DataFrame:
-            if not len(vs):
-                return pd.DataFrame(
-                    {
-                        "cluster": pd.Series([], dtype=np_dtype),
-                        "_vnorm": pd.Series([], dtype="float64"),
-                    }
-                )
-            V = np.vstack(vs.to_numpy()).astype("float64")
-            # matmul argmax; rows whose top-2 gap is inside the BLAS
-            # error margin re-decide on the exact fold (incl. bit-exact
-            # ties -> first max = lowest centroid_id, the builtin rule)
-            sims = _sims_matmul(V, mat)
-            best = sims.argmax(axis=1)
-            if sims.shape[1] > 1:
-                p = np.partition(sims, sims.shape[1] - 2, axis=1)
-                risky = (p[:, -1] - p[:, -2]) < _SELECT_MARGIN
-                if risky.any():
-                    best[risky] = _fold_sims(V[risky], mat).argmax(axis=1)
-            vn = np.zeros(len(V), dtype="float64")
-            for j in range(V.shape[1]):
-                vn += V[:, j] * V[:, j]
-            return pd.DataFrame(
-                {"cluster": ids_t[best], "_vnorm": np.sqrt(vn)}
-            )
-
-        out_cols = [F.col(id_col), F.col(vec_col)] + (
-            [F.col("_a._vnorm").alias("_vnorm")] if keep_norm else []
+        route, _ = _sharded_router_factory(
+            centroids, m_super=m_super, caller="assign_to_centroids"
         )
-        return vectors.withColumn("_a", _assign(F.col(vec_col))).select(
-            *out_cols, F.col("_a.cluster").alias("cluster")
+        return _assign_cells(vectors, route(1), id_col, vec_col, keep_norm)
+    if m_super is not None:
+        raise ValueError(
+            "assign_to_centroids: kernel='builtin' routes flat only; "
+            "m_super needs kernel='arrow'"
         )
     cent_arr = centroids.agg(
         F.array_sort(
@@ -848,6 +1047,11 @@ def assign_to_centroids(
             .alias("cluster"),
         )
     )
+
+
+# codebooks up to this many cells route flat (exact, C sims per row) in
+# semantic_dedup; past it, m_super=4 hierarchical routing
+_FLAT_ROUTE_MAX_CELLS = 4096
 
 
 def semantic_dedup(
@@ -889,7 +1093,7 @@ def semantic_dedup(
     cluster-size census rides the already-persisted assignment (one tiny
     ≤ n_centroids-row agg, broadcast back).  Default 100k ≈ SemDeDup's
     own cluster granularity; pass None to disable."""
-    sharded_assign = False
+    m_super = None
     if centroids is None:
         if n_centroids > _KMEANS_LITERAL_MAX:
             # the literal-tree Lloyd fit is Catalyst-analysis-bound past
@@ -904,14 +1108,11 @@ def semantic_dedup(
                 kmeans_iters=kmeans_iters,
                 sample_fraction=sample_fraction,
             )
-            # past the literal cap, assignment must take the sharded
-            # torrent-broadcast tier (r14 ADVICE: the table fit reached
-            # 100k cells but assignment still crashed at 4097).  The
-            # bound is the fitter's structural maximum, so the decision
-            # costs nothing — no count of the fitted table.
-            sharded_assign = (
-                codebook_table_cells_bound(n_centroids) > _ASSIGN_LITERAL_CELLS
-            )
+            # past _FLAT_ROUTE_MAX_CELLS, assignment takes hierarchical
+            # routing.  The bound is the fitter's structural maximum, so
+            # the decision costs nothing — no count of the fitted table.
+            if codebook_table_cells_bound(n_centroids) > _FLAT_ROUTE_MAX_CELLS:
+                m_super = 4
         else:
             centroids = kmeans_centroids(
                 vectors,
@@ -921,25 +1122,25 @@ def semantic_dedup(
                 id_col=id_col,
                 vec_col=vec_col,
             )
-    else:
-        # explicit codebook: one BOUNDED count picks the assignment tier
+    elif (
+        # explicit codebook: one BOUNDED count picks the routing
         # (≤4097 rows scanned; callers pass materialized tables, so this
         # probe is cheap — the fitted paths above never pay it)
-        sharded_assign = (
-            centroids.limit(_ASSIGN_LITERAL_CELLS + 1).count()
-            > _ASSIGN_LITERAL_CELLS
-        )
+        centroids.limit(_FLAT_ROUTE_MAX_CELLS + 1).count()
+        > _FLAT_ROUTE_MAX_CELLS
+    ):
+        m_super = 4
     # keep_norm: the per-cluster self-join below reuses the hoisted
     # norms (and they persist with the frame), so the ε-check is one
     # dot per pair instead of a full cosine
-    if sharded_assign:
-        assigned = assign_to_centroids_sharded(
-            vectors, centroids, id_col=id_col, vec_col=vec_col, keep_norm=True
-        )
-    else:
-        assigned = assign_to_centroids(
-            vectors, centroids, id_col=id_col, vec_col=vec_col, keep_norm=True
-        )
+    assigned = assign_to_centroids(
+        vectors,
+        centroids,
+        id_col=id_col,
+        vec_col=vec_col,
+        keep_norm=True,
+        m_super=m_super,
+    )
     # `assigned` feeds three branches (both sides of the per-cluster
     # self-join plus the final keeper left-join); without a persist the
     # broadcast-argmax assignment and the upstream scan recompute ~3x
@@ -1004,12 +1205,40 @@ def semantic_dedup(
     )
 
 
+def _check_k_nprobe(caller: str, k: int, nprobe: int | None) -> None:
+    """Reject k < 1 and nprobe < 1 at entry; ``nprobe=None`` means every
+    cell.  Unchecked, a negative nprobe slices the routed cell list from
+    the end and 0 returns an empty frame — both silently."""
+    if int(k) < 1:
+        raise ValueError(f"{caller}: k must be >= 1, got {k}")
+    if nprobe is not None and int(nprobe) < 1:
+        raise ValueError(
+            f"{caller}: nprobe must be >= 1 (or None for every cell), "
+            f"got {nprobe}"
+        )
+
+
+def _first_n_codebook(
+    vectors: DataFrame, n: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """The deterministic smallest-id codebook (the registry convention,
+    which a SQL oracle can rebuild)."""
+    return (
+        vectors.orderBy(id_col)
+        .limit(n)
+        .select(
+            F.col(id_col).alias("centroid_id"),
+            F.col(vec_col).alias("centroid_vec"),
+        )
+    )
+
+
 def ivf_topk(
     vectors: DataFrame,
     probes: DataFrame,
     k: int = 5,
     n_centroids: int = 8,
-    nprobe: int = 2,
+    nprobe: int | None = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
@@ -1017,54 +1246,25 @@ def ivf_topk(
     """IVF-style ANN.  ``centroids`` defaults to the first n_centroids
     vectors by id (deterministic, zero-cost — used by the nprobe==all exact
     path); pass ``kmeans_centroids(...)`` for data-adapted cells (the
-    quality path — see test_ivf_kmeans_recall).  Assignment and
-    probe-routing are broadcast map-joins; only routed clusters are
-    scanned."""
+    quality path — see test_ivf_kmeans_recall).  One codebook router
+    assigns every vector to its nearest cell and routes every probe to its
+    ``nprobe`` nearest (``None`` = every cell), both map-only; the routed
+    probes are broadcast, so only routed clusters are scanned, on the map
+    side.  That is the plan for a handful of probes; when the probe side
+    is as large as the corpus, ``knn_join``'s cell-grouped scorer is."""
+    _check_k_nprobe("ivf_topk", k, nprobe)
     if centroids is None:
-        centroids = (
-            vectors.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-        )
-
-    assigned = assign_to_centroids(
-        vectors, centroids, id_col=id_col, vec_col=vec_col, keep_norm=True
-    )
-
-    # route each probe to its nprobe nearest clusters (norms hoisted:
-    # probe norm once per probe, centroid norm once per centroid)
-    probe_routes = (
-        probes.withColumn("_pnorm", l2_norm(F.col("probe_vec")))
-        .crossJoin(
-            F.broadcast(
-                centroids.withColumn("_cnorm", l2_norm(F.col("centroid_vec")))
-            )
-        )
-        .select(
-            "probe_id",
-            "probe_vec",
-            "_pnorm",
-            "centroid_id",
-            cosine_with_norms(
-                F.col("probe_vec"),
-                F.col("centroid_vec"),
-                F.col("_pnorm"),
-                F.col("_cnorm"),
-            ).alias("_sim"),
-        )
-        .withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(F.col("_sim").desc(), F.col("centroid_id"))
-            ),
-        )
-        .filter(F.col("_rk") <= nprobe)
-        .select(
-            "probe_id", "probe_vec", "_pnorm", F.col("centroid_id").alias("cluster")
-        )
+        centroids = _first_n_codebook(vectors, n_centroids, id_col, vec_col)
+    route, n_cells = _sharded_router_factory(centroids, caller="ivf_topk")
+    assigned = _assign_cells(vectors, route(1), id_col, vec_col, keep_norm=True)
+    take = n_cells if nprobe is None else int(nprobe)
+    probe_routes = probes.withColumn(
+        "_r", route(take)(F.col("probe_vec"))
+    ).select(
+        "probe_id",
+        "probe_vec",
+        F.col("_r.norm").alias("_pnorm"),
+        F.explode(F.col("_r.cells")).alias("cluster"),
     )
 
     # scan only the routed clusters
@@ -1090,6 +1290,7 @@ def knn_join(
     centroids: DataFrame,
     k: int = 5,
     nprobe: int | None = 2,
+    m_super: int | None = None,
     left_id_col: str = "probe_id",
     left_vec_col: str = "probe_vec",
     right_id_col: str = "vec_id",
@@ -1097,18 +1298,17 @@ def knn_join(
     exclude_same_id: bool = False,
 ) -> DataFrame:
     """k-nearest-neighbor JOIN between two LARGE vector tables — the
-    co-partitioned sibling of ``ivf_topk``.  Every existing ANN path here
-    broadcasts the probe set, which is right when probes are a handful of
-    queries; building a k-NN GRAPH (SemDeDup's ε-graph over the whole
-    corpus, kNN-LM retrieval sets, link-based curation) makes the probe
-    side the SAME size as the corpus, and a broadcast is exactly the
-    wrong plan.  Here NEITHER side is broadcast — only the centroid
-    codebook is:
+    co-partitioned sibling of ``ivf_topk``.  ``ivf_topk`` broadcasts the
+    probe set, which is right when probes are a handful of queries;
+    building a k-NN GRAPH (SemDeDup's ε-graph over the whole corpus,
+    kNN-LM retrieval sets, link-based curation) makes the probe side the
+    SAME size as the corpus, and a broadcast is exactly the wrong plan.
+    Here NEITHER side is broadcast — only the centroid codebook is:
 
-    * right side: map-only Arrow argmax assignment to its nearest cell
-      (``assign_to_centroids``, matmul selection + fold-exact fallback);
-    * left side: map-only Arrow routing to its ``nprobe`` nearest cells
-      (NO window, NO shuffle — cardinality fan-out is exactly nprobe);
+    * both sides route on ONE codebook router
+      (``_sharded_router_factory``), map-only with no window and no
+      shuffle: right rows to their nearest cell, left rows to their
+      ``nprobe`` nearest (fan-out exactly nprobe);
     * ONE shuffle on the cell key co-partitions both big sides into a
       grouped ``applyInPandas`` scorer: the member×probe similarity
       matrix is a BLAS matmul used for candidate selection, survivors
@@ -1127,147 +1327,55 @@ def knn_join(
     discipline for the exact twin.  Ties break (cosine DESC, neighbor_id
     ASC) everywhere.  Returns (probe_id, neighbor_id, cosine, rank).
 
-    100 TB shape: cost ≈ |left| × nprobe/n_cells × |right| pair scores
-    as BLAS flops spread over cells; skewed cells are AQE-splittable
-    because the grouping key is a plain shuffle.  The codebook stays
-    ≤4096 cells — for larger codebooks compose with the two-level
-    assignment (``assign_two_level``) as ``ivf_two_level_topk`` does.
+    Two measured tiers, one operator (``knn_join_auto`` picks):
 
-    VALIDITY BOUND (r12 tier map): with the FLOP-optimal √N codebook
-    this tier's total work is N^1.5 by design — measured α 1.17 at the
-    2M-vector decade — and √N outgrows the 4096-literal codebook cap at
-    ~16M vectors.  Past ``KNN_FLAT_MAX_N`` use :func:`knn_join_sharded`
-    (bounded cells, hierarchical routing, measured α 0.99), or call
-    :func:`knn_join_auto` which dispatches on corpus size
-    automatically."""
-    # probe routing on the same Arrow kernel as assignment: one batched
-    # UDF computes the fold-exact similarity matrix and takes the
-    # nprobe best cells per probe via a STABLE argsort on -sims — equal
-    # sims keep codebook order (centroid_id asc), the identical tie rule
-    # as the builtin array_sort((-sim, cid)) struct spelling.  The
-    # interpreted HOF transform this replaces dominated the r10 kNN
-    # ladder (44 s of the 67 s sf1 point was routing).
-    from pyspark.sql.pandas.functions import pandas_udf
+    * ``m_super=None`` (default), flat routing over a √N-cell codebook:
+      cost ≈ |left| × nprobe/n_cells × |right| pair scores as BLAS flops
+      spread over cells.  Total work is N^1.5 BY DESIGN — routing costs
+      N·cells sims, scanning N·nprobe·(N/cells), and the sum is minimized
+      at cells ≈ √(nprobe·N) (measured α 1.17 at the 2M decade; the
+      "more cells" fix was refuted at 2.5× worse because flat routing
+      flops then dominate — BENCHNOTES_r11_knn2.json).
+    * ``m_super=4`` over a BOUNDED codebook (cells ≈ N / 512, the
+      ``knn_graph_sharded`` rule max(⌊√N⌋, ⌈N/512⌉)) — the ≥16M-vector
+      tier past ``KNN_FLAT_MAX_N``: the scan term is N·nprobe·512,
+      LINEAR in N, and hierarchical routing keeps routing at ~N^1.25
+      (measured α 0.99; see ``_sharded_router_factory``).  Bounded-cell
+      recall at nprobe=2 read 1.000 @200k on the 10-cluster corpora;
+      RECALL.md carries the per-decade rows.  ``m_super=None`` over the
+      same codebook is the SQL-replayable twin.
 
-    ids, mat = _codebook_arrays(centroids)
-    cid_sql = centroids.schema["centroid_id"].dataType.simpleString()
-    np_dtype = {"int": "int32", "bigint": "int64"}.get(cid_sql, "int64")
-    ids_t = ids.astype(np_dtype)
-    n_take = int(nprobe) if nprobe is not None else len(ids)
-
-    @pandas_udf(f"cells array<{cid_sql}>, _pnorm double")
-    def _route(vs: pd.Series) -> pd.DataFrame:
-        if not len(vs):
-            return pd.DataFrame(
-                {
-                    "cells": pd.Series([], dtype=object),
-                    "_pnorm": pd.Series([], dtype="float64"),
-                }
-            )
-        V = np.vstack(vs.to_numpy()).astype("float64")
-        # matmul selection; only the MEMBERSHIP of the routed cell set
-        # matters downstream (the equijoin ignores order), so a row is
-        # risky only when the boundary gap sims[n_take-1]-sims[n_take]
-        # is inside the BLAS error margin — those rows re-route on the
-        # exact fold with the builtin (sim desc, cid asc) stable order
-        sims = _sims_matmul(V, mat)
-        order = np.argsort(-sims, axis=1, kind="stable")
-        if n_take < sims.shape[1]:
-            srt = np.take_along_axis(sims, order, axis=1)
-            risky = (srt[:, n_take - 1] - srt[:, n_take]) < _SELECT_MARGIN
-            if risky.any():
-                e_order = np.argsort(
-                    -_fold_sims(V[risky], mat), axis=1, kind="stable"
-                )
-                order[risky] = e_order
-        order = order[:, :n_take]
-        vn = np.zeros(len(V), dtype="float64")
-        for j in range(V.shape[1]):
-            vn += V[:, j] * V[:, j]
-        return pd.DataFrame(
-            {
-                "cells": [ids_t[row].tolist() for row in order],
-                "_pnorm": np.sqrt(vn),
-            }
-        )
-
-    routed = (
-        left.withColumn("_r", _route(F.col(left_vec_col)))
-        .select(
-            F.col(left_id_col).alias("probe_id"),
-            F.col(left_vec_col).alias("_pvec"),
-            F.explode(F.col("_r.cells")).alias("cluster"),
-        )
+    100 TB shape: skewed cells are AQE-splittable because the grouping
+    key is a plain shuffle; in the bounded tier cell population is
+    capped by construction, so no task outgrows memory, and the codebook
+    broadcast is ≤128 MB at the 2^18-cell cap."""
+    _check_k_nprobe("knn_join", k, nprobe)
+    _guard_integral_ids(left, left_id_col, right, right_id_col)
+    route, n_cells = _sharded_router_factory(
+        centroids, m_super=m_super, caller="knn_join"
     )
-    assigned = assign_to_centroids(
-        right, centroids, id_col=right_id_col, vec_col=right_vec_col
+    take = n_cells if nprobe is None else int(nprobe)
+    routed = left.withColumn("_r", route(take)(F.col(left_vec_col))).select(
+        F.col(left_id_col).cast("long").alias("_rid"),
+        F.col(left_vec_col).alias("_v"),
+        F.explode(F.col("_r.cells")).alias("cluster"),
     )
+    assigned = _assign_cells(right, route(1), right_id_col, right_vec_col)
     # PER-CELL GROUPED SCORING (applyInPandas on the cell key): members
     # and routed probes co-shuffle once on `cluster`; the member×probe
-    # similarity matrix is computed inside the kernel with the
-    # fold-exact op order (_fold_sims) and only SKINNY
+    # similarity matrix is computed inside the kernel and only SKINNY
     # (probe_id, neighbor_id, cosine) rows return to the JVM.  The
-    # pair-level spelling this replaces shipped BOTH 64-float vectors
+    # pair-level spelling this replaced shipped BOTH 64-float vectors
     # across the Arrow boundary per scored PAIR — ~550 B × |pairs|
     # (≈98 GB at the 200k-vector decade) versus one vector per member +
-    # nprobe per probe here.  Rounding (F.round HALF_UP) and the
-    # two-stage top-k stay JVM-side so ordering/tie semantics and the
-    # SQL oracles are untouched.
-    _guard_integral_ids(left, left_id_col, right, right_id_col)
-    return _grouped_cell_topk(
-        routed, assigned, k, exclude_same_id, right_id_col, right_vec_col
-    )
-
-
-def _guard_integral_ids(left, left_id_col, right, right_id_col) -> None:
-    _integral = {"tinyint", "smallint", "int", "bigint"}
-    for _df, _c, _side_name in (
-        (left, left_id_col, "left"),
-        (right, right_id_col, "right"),
-    ):
-        _t = _df.schema[_c].dataType.simpleString()
-        if _t not in _integral:
-            # the grouped scorer carries ids through a fixed
-            # 'probe_id long, neighbor_id long' Arrow schema; a string
-            # id would silently cast to NULL and drop/corrupt pairs —
-            # fail loudly instead (ADVICE r10).
-            raise TypeError(
-                f"knn_join: {_side_name} id column {_c!r} has type {_t}; "
-                "only integral ids survive the grouped Arrow scorer. "
-                "Derive a surrogate (e.g. xxhash64(id) or "
-                "monotonically_increasing_id) and join back after."
-            )
-
-
-def _grouped_cell_topk(
-    routed: DataFrame,
-    assigned: DataFrame,
-    k: int,
-    exclude_same_id: bool,
-    right_id_col: str,
-    right_vec_col: str,
-) -> DataFrame:
-    """The shared PER-CELL GROUPED SCORING stage of the kNN joins (see
-    ``knn_join``'s docstring for the full plan rationale): ``routed``
-    carries (cluster, probe_id, _pvec), ``assigned`` the right rows plus
-    their ``cluster``; one cell-keyed shuffle co-partitions both, the
-    member×probe matmul selects candidates, survivors re-score with the
-    fold-exact op order, and rounding + the two-stage per-probe top-k
-    stay JVM-side."""
-    excl = bool(exclude_same_id)
+    # nprobe per probe here.
     u = assigned.select(
         "cluster",
         F.lit(0).alias("_side"),
         F.col(right_id_col).cast("long").alias("_rid"),
         F.col(right_vec_col).alias("_v"),
-    ).unionByName(
-        routed.select(
-            "cluster",
-            F.lit(1).alias("_side"),
-            F.col("probe_id").cast("long").alias("_rid"),
-            F.col("_pvec").alias("_v"),
-        )
-    )
+    ).unionByName(routed.select("cluster", F.lit(1).alias("_side"), "_rid", "_v"))
+    excl = bool(exclude_same_id)
     kk = int(k)
 
     def _score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1338,443 +1446,30 @@ def _grouped_cell_topk(
     return topk_per_probe(scored, k, "probe_id")
 
 
-# driver-collect cap for the sharded-routing codebook: 2^18 cells ×
-# 64 dims × 8 B = 128 MB of numpy, shipped to executors as ONE torrent
-# broadcast (never a Catalyst literal, never a task-closure pickle).
-# At 512 members/cell this covers a ~134M-vector corpus; past that,
-# raise members_per_cell (cells shrink proportionally) — the loud error
-# below says so.
-_SHARDED_CODEBOOK_CAP = 1 << 18
-
-
-def _codebook_arrays_large(
-    centroids: DataFrame, max_cells: int = _SHARDED_CODEBOOK_CAP
-) -> tuple[np.ndarray, np.ndarray]:
-    """``_codebook_arrays`` for the sharded-routing tier: same
-    (ids, matrix sorted by centroid_id) contract, but with the cap
-    raised from the 4096 Catalyst-literal bound to the numpy-broadcast
-    bound — this codebook only ever lives as a torrent-broadcast numpy
-    matrix inside Arrow kernels, so the literal-expression limit does
-    not apply.  Still enforced AT THE COLLECT SITE."""
-    rows = (
-        centroids.select("centroid_id", "centroid_vec")
-        .limit(int(max_cells) + 1)
-        .collect()
-    )
-    if len(rows) > max_cells:
-        raise ValueError(
-            f"_codebook_arrays_large: centroid frame exceeds the "
-            f"{max_cells}-cell driver-collect cap; raise members_per_cell "
-            "so the codebook shrinks (cells = N / members_per_cell)"
-        )
-    rows.sort(key=lambda r: int(r["centroid_id"]))
-    ids = np.array([int(r["centroid_id"]) for r in rows], dtype="int64")
-    mat = np.array(
-        [[float(x) for x in r["centroid_vec"]] for r in rows], dtype="float64"
-    )
-    return ids, mat
-
-
-# live codebook broadcasts from knn_join_sharded calls this session —
-# see release_sharded_broadcasts() below
-_SHARDED_BROADCASTS: list = []
-
-
-def release_sharded_broadcasts(blocking: bool = True, destroy: bool = False) -> int:
-    """Release every codebook broadcast shipped by prior
-    ``knn_join_sharded`` calls (ADVICE r12: each call torrent-broadcasts
-    up to ~128 MB and bench/recall loops would otherwise accumulate them
-    for the session lifetime).
-
-    ``unpersist`` drops executor-side copies (a later re-execution of a
-    returned frame refetches from the driver, so it is always safe);
-    ``destroy=True`` additionally frees the driver-side copy but makes
-    any still-unconsumed returned DataFrame unusable — bench's
-    clear_operator_caches uses it between passes where nothing is live.
-    Returns the number of broadcasts released."""
-    n = len(_SHARDED_BROADCASTS)
-    for bc in _SHARDED_BROADCASTS:
-        try:
-            if destroy:
-                bc.destroy()
-            else:
-                bc.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session already stopped — nothing to free
-    _SHARDED_BROADCASTS.clear()
-    return n
-
-
-def release_sharded_broadcasts_since(mark: int, blocking: bool = True) -> int:
-    """Release ONLY the codebook broadcasts registered after ``mark`` (a
-    prior ``len(_SHARDED_BROADCASTS)`` snapshot) — the scoped spelling
-    for callers that spawn router broadcasts inside a loop
-    (``kmeans_codebook_table``'s Lloyd iterations) without touching
-    broadcasts backing still-live frames from unrelated earlier
-    ``knn_join_sharded`` calls (ADVICE r15: the global release inside the
-    fit loop silently degraded concurrent consumers — safe, since
-    executors refetch from the driver, but a surprising side effect).
-    Returns the number released."""
-    released = _SHARDED_BROADCASTS[mark:]
-    for bc in released:
-        try:
-            bc.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session already stopped — nothing to free
-    del _SHARDED_BROADCASTS[mark:]
-    return len(released)
-
-
-def knn_join_sharded(
-    left: DataFrame,
-    right: DataFrame,
-    centroids: DataFrame,
-    k: int = 5,
-    nprobe: int | None = 2,
-    m_super: int | None = 4,
-    n_super: int | None = None,
-    spill: int = 2,
-    super_iters: int = 3,
-    left_id_col: str = "probe_id",
-    left_vec_col: str = "probe_vec",
-    right_id_col: str = "vec_id",
-    right_vec_col: str = "embedding",
-    exclude_same_id: bool = False,
-) -> DataFrame:
-    """``knn_join`` for the BOUNDED-CELL codebook regime — the ≥16M-
-    vector kNN-graph tier (r11 verdict ask #1).
-
-    Why a tier exists at all: the flat √N-cell IVF graph's total work is
-    N^1.5 BY DESIGN — routing costs N·cells sims, scanning costs
-    N·nprobe·(N/cells), and the sum is minimized at cells ≈ √(nprobe·N)
-    (measured α=1.17 at the 2M-vector decade; the "more cells" fix was
-    refuted at 2.5× worse because flat routing flops then dominate —
-    BENCHNOTES_r11_knn2.json).  This operator breaks the trade by
-    fixing BOTH terms:
-
-    * **bounded cells**: the caller passes a codebook of
-      cells ≈ N / members_per_cell (the ``knn_graph_sharded`` query uses
-      max(⌊√N⌋, ⌈N/512⌉)), so the scan term is N·nprobe·members — LINEAR
-      in N at constant nprobe.  Measured recall of the bounded-cell
-      candidate set on the 10-cluster corpora: 1.000 @200k at nprobe=2
-      (vs flat's 0.996) because the per-probe scanned volume
-      (nprobe×512) stays at the flat reference's 200k level while
-      neighbors keep getting closer as N grows; RECALL.md carries the
-      per-decade rows.
-    * **hierarchical routing**: probes route through TWO exact-argmax
-      levels instead of one flat scan of all C centroids — first the
-      ``n_super = ⌈√C⌉`` SUPER-centroids (``super_iters`` rounds of
-      driver-side spherical k-means over the codebook, init = first-√C
-      rows, deterministic given the codebook), then exactly over the
-      centroids belonging to the ``m_super`` nearest super-cells, with
-      each centroid SPILLED into its ``spill`` nearest supers so a true
-      cell on a super boundary stays reachable from either side (raw
-      first-√C supers without spill measured recall 0.72-0.80 — the
-      RECALL.md finding-4 pruning trap; k-means+spill closes it).
-      Routing cost per vector is √C·(1+spill·m_super) sims instead of
-      C — at C=3906 (2M vectors) that is ~560 vs 3906, and
-      asymptotically N^0.25·(1+spill·m) per vector, i.e. total routing
-      N^1.25 with a tiny constant (a third level would give N^1.125;
-      two levels carry to ~10⁹ vectors before routing re-dominates,
-      documented honestly).  Super-membership is computed ONCE
-      driver-side (C×√C sims per k-means round) and the whole codebook
-      ships as one torrent broadcast, never a Catalyst literal and
-      never a per-task closure pickle.
-
-    ``m_super=None`` disables the hierarchy: stage 2 ranks ALL C
-    centroids with the identical stable (sim desc, centroid_id asc) tie
-    rule, making routing EXACTLY the flat argmax — with that spelling
-    the pipeline is a flat IVF over the bounded codebook and the SQL
-    oracle replays it in full (the ``knn_graph_sharded`` correctness
-    discipline).  ``nprobe=None`` additionally routes every cell,
-    giving provable brute-force equality.  Both sides (members route to
-    their 1 nearest cell, probes to their ``nprobe`` nearest) go
-    through the same kernel, and the scoring stage is the exact
-    ``knn_join`` grouped-cell scorer (fold-exact emitted values,
-    JVM-side rounding and two-stage top-k), so result semantics are
-    identical between the tiers.
-
-    100 TB shape: one cell-keyed shuffle co-partitions both sides; cell
-    population is bounded by construction (≈members_per_cell), so no
-    task outgrows memory and AQE handles residual skew; the broadcast
-    is ≤128 MB at the 2^18-cell cap."""
-    _guard_integral_ids(left, left_id_col, right, right_id_col)
-    mk_router, n_cells, cid_sql = _sharded_router_factory(
-        centroids,
-        m_super=m_super,
-        n_super=n_super,
-        spill=spill,
-        super_iters=super_iters,
-        caller="knn_join_sharded",
-    )
-    take = int(nprobe) if nprobe is not None else n_cells
-    routed = left.withColumn(
-        "_cells", mk_router(take)(F.col(left_vec_col))
-    ).select(
-        F.col(left_id_col).alias("probe_id"),
-        F.col(left_vec_col).alias("_pvec"),
-        F.explode(F.col("_cells")).alias("cluster"),
-    )
-    assigned = right.withColumn(
-        "_cells", mk_router(1)(F.col(right_vec_col))
-    ).select(
-        right_id_col,
-        right_vec_col,
-        F.element_at(F.col("_cells"), 1).alias("cluster"),
-    )
-    return _grouped_cell_topk(
-        routed, assigned, k, exclude_same_id, right_id_col, right_vec_col
-    )
-
-
-def _sharded_router_factory(
-    centroids: DataFrame,
-    m_super: int | None = 4,
-    n_super: int | None = None,
-    spill: int = 2,
-    super_iters: int = 3,
-    caller: str = "sharded router",
-):
-    """The sharded tier's torrent-broadcast hierarchical router, shared
-    by ``knn_join_sharded`` (both sides) and
-    ``assign_to_centroids_sharded`` (member-style single-cell routing).
-    Collects the codebook once under the 2^18-cell cap, fits the
-    super-centroid hierarchy driver-side, ships ONE broadcast
-    (registered for ``release_sharded_broadcasts``), and returns
-    ``(mk_router, n_cells, cid_sql)`` where ``mk_router(n_take)`` is a
-    pandas UDF mapping a vector column to its ``n_take`` nearest cell
-    ids (``m_super=None`` ⇒ exact flat argmax, the SQL-replayable
-    spelling).  See ``knn_join_sharded``'s docstring for the full
-    routing-design rationale."""
-    ids, mat = _codebook_arrays_large(centroids)
-    n_cells = len(ids)
-    if n_cells == 0:
-        raise ValueError(f"{caller}: empty centroid frame")
-    cid_sql = centroids.schema["centroid_id"].dataType.simpleString()
-    np_dtype = {"int": "int32", "bigint": "int64"}.get(cid_sql, "int64")
-    ids_t = ids.astype(np_dtype)
-
-    if n_super is None:
-        n_super = max(1, math.isqrt(n_cells - 1) + 1) if n_cells > 1 else 1
-    n_super = min(int(n_super), n_cells)
-    # Super-centroids: ``super_iters`` rounds of driver-side spherical
-    # k-means over the CODEBOOK (init = first-√C rows, deterministic
-    # given the codebook; C×√C sims per round, trivial next to one
-    # routing pass over the corpus).  Better-shaped supers cut
-    # boundary misses — the r12 recall measurement of raw first-√C
-    # supers read 0.72-0.80 vs the ≥0.9 target.  Membership only
-    # steers which centroids stage 2 CONSIDERS under m_super pruning —
-    # the m_super=None exact spelling never reads any of this — so
-    # matmul precision is sufficient throughout.
-    smat = mat[:n_super].copy()
-    _chunk = 65536
-    for _ in range(int(super_iters)):
-        assign1 = np.empty(n_cells, dtype="int64")
-        for off in range(0, n_cells, _chunk):
-            assign1[off : off + _chunk] = np.argmax(
-                _sims_matmul(mat[off : off + _chunk], smat), axis=1
+def _guard_integral_ids(left, left_id_col, right, right_id_col) -> None:
+    _integral = {"tinyint", "smallint", "int", "bigint"}
+    for _df, _c, _side_name in (
+        (left, left_id_col, "left"),
+        (right, right_id_col, "right"),
+    ):
+        _t = _df.schema[_c].dataType.simpleString()
+        if _t not in _integral:
+            # the grouped scorer carries ids through a fixed
+            # 'probe_id long, neighbor_id long' Arrow schema; a string
+            # id would silently cast to NULL and drop/corrupt pairs —
+            # fail loudly instead (ADVICE r10).
+            raise TypeError(
+                f"knn_join: {_side_name} id column {_c!r} has type {_t}; "
+                "only integral ids survive the grouped Arrow scorer. "
+                "Derive a surrogate (e.g. xxhash64(id) or "
+                "monotonically_increasing_id) and join back after."
             )
-        for s in range(n_super):
-            sel = assign1 == s
-            if sel.any():
-                smat[s] = mat[sel].mean(axis=0)
-    # SPILLED membership: each centroid lands in its ``spill`` nearest
-    # supers, so a probe whose true cell sits on a super boundary still
-    # reaches it through either side — the redundancy that closes the
-    # hierarchical-pruning recall gap (RECALL.md finding 4) at the cost
-    # of ~spill× stage-2 candidates.
-    n_spill = max(1, min(int(spill), n_super))
-    members: list[np.ndarray] = []
-    spill_assign = np.empty((n_cells, n_spill), dtype="int64")
-    for off in range(0, n_cells, _chunk):
-        sims_c = _sims_matmul(mat[off : off + _chunk], smat)
-        spill_assign[off : off + _chunk] = np.argsort(
-            -sims_c, axis=1, kind="stable"
-        )[:, :n_spill]
-    for s in range(n_super):
-        members.append(np.nonzero((spill_assign == s).any(axis=1))[0])
-    cn = np.sqrt((mat * mat).sum(axis=1))
-
-    sc = centroids.sparkSession.sparkContext
-    bc = sc.broadcast(
-        {
-            "ids_t": ids_t,
-            "mat": mat,
-            "smat": smat,
-            "members": members,
-            "cn": cn,
-        }
-    )
-    # each call ships up to ~128 MB (2^18-cell cap); without tracking,
-    # repeated calls (recall ladders, bench loops) accumulate broadcasts
-    # for the session lifetime.  Registered here, released via
-    # release_sharded_broadcasts() once the returned frame is consumed
-    # (bench clear_operator_caches does this between passes).
-    _SHARDED_BROADCASTS.append(bc)
-    m_val = None if m_super is None else min(int(m_super), n_super)
-
-    def _mk_router(n_take: int):
-        from pyspark.sql.pandas.functions import pandas_udf
-
-        @pandas_udf(f"array<{cid_sql}>")
-        def _route(vs: pd.Series) -> pd.Series:
-            cb = bc.value
-            _ids, _mat, _smat = cb["ids_t"], cb["mat"], cb["smat"]
-            _members, _cn = cb["members"], cb["cn"]
-            if not len(vs):
-                return pd.Series([], dtype=object)
-            V = np.vstack(vs.to_numpy()).astype("float64")
-            vn = np.sqrt((V * V).sum(axis=1))
-            n_rows = len(V)
-            if m_val is None:
-                # exact flat routing: matmul selection + O(C)
-                # argpartition of the top n_take+1 (a full per-row
-                # argsort is O(C log C) and measured 10-40× the
-                # partition cost at C~4k — it throttled the table-Lloyd
-                # fit's sample assignment), then a stable sort of the
-                # small slice.  Candidates are pre-sorted ascending so
-                # the stable argsort's ties resolve to the lowest
-                # centroid_id — the flat rule.  The boundary gap is
-                # computed from the slice VALUES (exact regardless of
-                # which tied ids argpartition picked); a gap inside the
-                # margin — which also covers any exact tie across the
-                # n_take cut — falls back to the full fold-exact
-                # ordering, so selections stay provably identical to
-                # the old full-argsort spelling.
-                sims = _sims_matmul(V, _mat)
-                C = sims.shape[1]
-                k1 = min(n_take + 1, C)
-                part = np.sort(
-                    np.argpartition(-sims, k1 - 1, axis=1)[:, :k1], axis=1
-                )
-                pvals = np.take_along_axis(sims, part, axis=1)
-                loc = np.argsort(-pvals, axis=1, kind="stable")
-                order = np.take_along_axis(part, loc, axis=1)
-                if n_take < C:
-                    srt = np.take_along_axis(pvals, loc, axis=1)
-                    risky = (
-                        srt[:, n_take - 1] - srt[:, n_take]
-                    ) < _SELECT_MARGIN
-                    if risky.any():
-                        e_order = np.argsort(
-                            -_fold_sims(V[risky], _mat), axis=1, kind="stable"
-                        )[:, :k1]
-                        order[risky] = e_order
-                order = order[:, :n_take]
-                return pd.Series([_ids[row].tolist() for row in order])
-            # stage 1: m_val nearest super-cells (matmul + risky refold)
-            ssims = _sims_matmul(V, _smat)
-            sorder = np.argsort(-ssims, axis=1, kind="stable")
-            if m_val < ssims.shape[1]:
-                ssrt = np.take_along_axis(ssims, sorder, axis=1)
-                risky = (ssrt[:, m_val - 1] - ssrt[:, m_val]) < _SELECT_MARGIN
-                if risky.any():
-                    e_order = np.argsort(
-                        -_fold_sims(V[risky], _smat), axis=1, kind="stable"
-                    )
-                    sorder[risky] = e_order
-            top_s = sorder[:, :m_val]
-            # stage 2: exact ranking over the centroids of the routed
-            # supers, GROUPED BY SUPER-COMBINATION: rows sharing the
-            # same m_val-super set share one candidate list, so each
-            # group is ONE dense BLAS matmul (V_group × candidates)
-            # instead of a per-row padded gather.  On clustered corpora
-            # a 10k-row Arrow batch collapses to a handful of combos —
-            # the r12 padded-einsum spelling this replaces was
-            # memory-bound on the (rows, M, dim) gather and measured
-            # 169 s at the 2M-graph decade.  Candidate lists are
-            # np.unique'd (spilled membership overlaps; ascending order
-            # also makes the stable argsort's ties resolve to the
-            # lowest centroid_id, the flat rule).
-            order_key = np.sort(top_s, axis=1)
-            uq, inv = np.unique(order_key, axis=0, return_inverse=True)
-            out: list = [None] * n_rows
-            for g in range(len(uq)):
-                rows_idx = np.nonzero(inv == g)[0]
-                cands = np.unique(
-                    np.concatenate([_members[s] for s in uq[g]])
-                )
-                if not len(cands):
-                    # every routed super is empty (possible on tiny
-                    # codebooks where spill assignment leaves a super
-                    # memberless): fall back to exact flat routing over
-                    # the whole codebook rather than silently dropping
-                    # the rows (empty _cells → explode drops probes /
-                    # NULL cluster for members)
-                    cands = np.arange(len(_mat), dtype="int64")
-                t = min(n_take, len(cands))
-                sims = _sims_matmul(V[rows_idx], _mat[cands])
-                g_order = np.argsort(-sims, axis=1, kind="stable")
-                if t < len(cands):
-                    srt = np.take_along_axis(sims, g_order, axis=1)
-                    risky = (srt[:, t - 1] - srt[:, t]) < _SELECT_MARGIN
-                    for j in np.nonzero(risky)[0]:
-                        e = _fold_sims(
-                            V[rows_idx[j] : rows_idx[j] + 1], _mat[cands]
-                        )[0]
-                        g_order[j] = np.argsort(-e, kind="stable")
-                picked = cands[g_order[:, :t]]
-                for j, i in enumerate(rows_idx):
-                    out[i] = _ids[picked[j]].tolist()
-            return pd.Series(out)
-
-        return _route
-
-    return _mk_router, n_cells, cid_sql
-
-
-def assign_to_centroids_sharded(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_norm: bool = False,
-    m_super: int | None = 4,
-    n_super: int | None = None,
-    spill: int = 2,
-    super_iters: int = 3,
-) -> DataFrame:
-    """``assign_to_centroids`` for codebooks PAST the 4096-cell
-    Catalyst-literal / driver-collect cap (SemDeDup at 100 TB wants
-    ~100k cells, and ``kmeans_codebook_table`` fits them — r14 ADVICE:
-    the fit path extended past 4096 cells but assignment still crashed
-    there).  Same (id, vec[, _vnorm], cluster) contract and the same
-    map-only shape — one routing pass, no shuffle — but the codebook
-    ships as ONE torrent broadcast (2^18-cell cap ≈ 128 MB) and each
-    vector routes through the sharded tier's two-level hierarchy:
-    ``m_super`` nearest super-cells, then exact argmax over their
-    spill-redundant members.  Routing cost per vector is
-    √C·(1+spill·m_super) sims instead of C — at C=100k that is ~2.9k
-    vs 100k.  Deterministic given the codebook; ``m_super=None`` makes
-    routing the EXACT flat argmax over all C cells (the stable
-    sim-desc / centroid_id-asc tie rule, bit-faithful to
-    ``assign_to_centroids``) at C-sims-per-vector cost.  Hierarchical
-    assignment may route a boundary vector to its second-nearest cell —
-    for the partition-shaped callers (``semantic_dedup``) that is the
-    same fail-open trade as its cluster-size cap (a possibly-missed
-    pair, never a wrong drop).  ``keep_norm`` hoists the row L2 norm
-    JVM-side with the identical ``l2_norm`` fold."""
-    mk_router, _, _ = _sharded_router_factory(
-        centroids,
-        m_super=m_super,
-        n_super=n_super,
-        spill=spill,
-        super_iters=super_iters,
-        caller="assign_to_centroids_sharded",
-    )
-    out_cols = [F.col(id_col), F.col(vec_col)] + (
-        [l2_norm(F.col(vec_col)).alias("_vnorm")] if keep_norm else []
-    )
-    return vectors.withColumn("_cells", mk_router(1)(F.col(vec_col))).select(
-        *out_cols, F.element_at(F.col("_cells"), 1).alias("cluster")
-    )
 
 
 # Crossover between the flat √N-cell kNN-graph tier and the bounded-cell
-# sharded tier: the flat design's total work is N^1.5 by construction
-# (BENCHNOTES_r11_knn2.json measured the asymptote), and √N also hits the
-# 4096 Catalyst-literal codebook cap at 4096² ≈ 16.8M vectors — past ~16M
-# BOTH the cost model and the codebook representation say switch.
+# m_super tier: the flat design's total work is N^1.5 by construction
+# (BENCHNOTES_r11_knn2.json measured the asymptote), and √N also reaches
+# knn_join_auto's 4096-cell flat codebook clamp at 4096² ≈ 16.8M vectors.
 # Mirrored machine-readably in __spark_entry__.tier_bounds().
 KNN_FLAT_MAX_N = 16_000_000
 KNN_SHARDED_NPROBE_CAP = 16
@@ -1783,7 +1478,7 @@ KNN_SHARDED_NPROBE_CAP = 16
 def sharded_nprobe_auto(
     n: int, cells: int, nprobe: int, cap: int = KNN_SHARDED_NPROBE_CAP
 ) -> int:
-    """Volume-equalizing nprobe raise for the bounded-cell sharded tier
+    """Volume-equalizing nprobe raise for the bounded-cell kNN tier
     (r13, measured in KNN_NPROBE_r13.json / RECALL_r13.json).
 
     The bounded rule ``cells = max(√N, ⌈N/512⌉)`` shrinks the per-probe
@@ -1836,19 +1531,19 @@ def knn_join_auto(
       ``max(8, min(4096, ⌊√N⌋))``-cell codebook — the FLOP-optimal flat
       IVF balance, recommended below the crossover (N^1.5 total but the
       constant wins at these sizes; measured α 1.17 at 2M).
-    * ``N > KNN_FLAT_MAX_N``: :func:`knn_join_sharded` over a bounded
-      ``max(⌊√N⌋, ⌈N/512⌉)``-cell codebook with hierarchical
-      ``m_super``-routed super-centroids — linear scan term, ~N^1.25
+    * ``N > KNN_FLAT_MAX_N``: :func:`knn_join` with ``m_super`` over a
+      bounded ``max(⌊√N⌋, ⌈N/512⌉)``-cell codebook — hierarchical
+      routing through super-centroids, linear scan term, ~N^1.25
       routing (measured α 0.99 at the 2M decade, SCALE.md).
 
     The codebook is built here by the deterministic smallest-id
     convention both registry contract queries use (first ``cells``
     vectors of ``right`` by id), so results are replicable; callers who
-    trained k-means codebooks should call the tier functions directly.
+    trained k-means codebooks should call ``knn_join`` directly.
     ``n_right`` skips the sizing ``count()`` when the caller already
     knows it (e.g. from parquet metadata).  Everything else passes
     through unchanged; result schema and tie rules are identical across
-    tiers (same grouped-cell scorer).
+    tiers (one operator, one grouped-cell scorer).
 
     Past the 16M switch, don't trust the default nprobe raise on your
     own corpus: sample ~1–2M vectors, run :func:`nprobe_recall_curve`,
@@ -1856,6 +1551,7 @@ def knn_join_auto(
     (never lowered, even above the cap) — see README "Past 16M vectors:
     calibrate, don't trust" and bench_records/KNN_NPROBE_r13.json for
     the worked example."""
+    _check_k_nprobe("knn_join_auto", k, nprobe)
     n = int(n_right) if n_right is not None else right.count()
     if n <= KNN_FLAT_MAX_N:
         cells = max(8, min(4096, math.isqrt(n)))
@@ -1887,351 +1583,56 @@ def knn_join_auto(
     # scan term linear (see sharded_nprobe_auto)
     if nprobe is not None:
         common["nprobe"] = sharded_nprobe_auto(n, cells, int(nprobe))
-    return knn_join_sharded(left, right, cents, m_super=m_super, **common)
-
-
-def fine_centroid_table(
-    vectors: DataFrame,
-    coarse: DataFrame,
-    n_fine_per_cell: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Fine-centroid table for the two-level IVF: within each coarse
-    cell, the ``n_fine_per_cell`` smallest-id member vectors become that
-    cell's fine centroids — the same deterministic convention as
-    ``ivf_topk``'s default centroids, which keeps the whole index
-    engine-portable (a SQL oracle can rebuild it) and makes the
-    exact-routing path provably equal to brute force.
-
-    Returns ``(coarse_id, fine_id, fine_vec)`` with fine_id dense 0..m-1
-    per cell.  This is a TABLE, not a broadcast literal — which is the
-    entire point: total centroids = n_coarse × n_fine_per_cell can go
-    far past the 4096-literal Catalyst cap (kmeans_centroids' documented
-    limit); only the n_coarse COARSE codebook rides the expression tree.
-
-    Cost shape: coarse assignment is map-only (broadcast-literal
-    argmax); the per-cell top-n is ONE shuffle of (id, vec, cluster) on
-    the coarse key — index-BUILD cost, paid once and amortized over
-    every probe batch, exactly like training any IVF index.  At 100 TB
-    build the index from a hash_sample of the corpus instead of the
-    full set (sampling changes which vectors act as centroids, not the
-    operator's shape)."""
-    assigned = assign_to_centroids(vectors, coarse, id_col=id_col, vec_col=vec_col)
-    w = Window.partitionBy("cluster").orderBy(id_col)
-    return (
-        assigned.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n_fine_per_cell)
-        .select(
-            F.col("cluster").alias("coarse_id"),
-            (F.col("_rk") - 1).cast("int").alias("fine_id"),
-            F.col(vec_col).alias("fine_vec"),
-        )
-    )
-
-
-def fine_centroid_table_kmeans(
-    vectors: DataFrame,
-    coarse: DataFrame,
-    n_fine_per_cell: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    kmeans_iters: int = 4,
-    sample_per_cell: int = 2048,
-) -> DataFrame:
-    """Data-adapted fine codebook for the two-level IVF — the QUALITY
-    mode the r10 recall measurement showed the deterministic
-    ``fine_centroid_table`` lacks (RECALL.md: first-k-by-id fine
-    centroids are consecutive-id clumps, capping two-level recall at
-    ~0.6-0.7 where single-level √N IVF reaches 0.996).  Per coarse
-    cell, a small Lloyd k-means runs INSIDE one ``applyInPandas`` group:
-    members are ordered by id, the first ``sample_per_cell`` rows are
-    the deterministic training sample, init = the sample's first
-    ``n_fine_per_cell`` rows, then ``kmeans_iters`` numpy iterations
-    (euclidean on the unit-norm vectors ≈ spherical k-means).  Fully
-    deterministic (no RNG), distributed (one task per coarse cell,
-    training cost bounded by ``sample_per_cell`` regardless of corpus
-    size) — but NOT SQL-replicable: the deterministic table remains the
-    verification mode, this is the production-recall mode (pass the
-    result as ``fine=`` to ``ivf_two_level_topk``).
-
-    Returns ``(coarse_id, fine_id, fine_vec)`` like the deterministic
-    builder; empty cells yield no rows, cells smaller than
-    ``n_fine_per_cell`` yield one centroid per member."""
-    assigned = assign_to_centroids(vectors, coarse, id_col=id_col, vec_col=vec_col)
-    m = int(n_fine_per_cell)
-    iters = int(kmeans_iters)
-    cap = int(sample_per_cell)
-
-    def _fit_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).head(cap)
-        V = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-        k = min(m, len(V))
-        cents = V[:k].copy()
-        vsq = (V * V).sum(axis=1)
-        for _ in range(iters):
-            # argmin ||v-c||² via the matmul identity: the explicit
-            # (n, k, dim) difference tensor is O(n·k·dim) memory; BLAS
-            # keeps this at O(n·k)
-            d2 = vsq[:, None] - 2.0 * (V @ cents.T) + (cents * cents).sum(axis=1)[None, :]
-            lab = d2.argmin(axis=1)
-            sums = np.zeros_like(cents)
-            np.add.at(sums, lab, V)
-            cnt = np.bincount(lab, minlength=k).astype("float64")
-            nz = cnt > 0
-            cents[nz] = sums[nz] / cnt[nz, None]
-        cluster = pdf["cluster"].iloc[0]
-        return pd.DataFrame(
-            {
-                "coarse_id": [cluster] * k,
-                "fine_id": np.arange(k, dtype="int32"),
-                "fine_vec": [c.astype("float32").tolist() for c in cents],
-            }
-        )
-
-    cid_sql = assigned.schema["cluster"].dataType.simpleString()
-    return assigned.groupBy("cluster").applyInPandas(
-        _fit_cell,
-        f"coarse_id {cid_sql}, fine_id int, fine_vec array<float>",
-    )
-
-
-def assign_two_level(
-    vectors: DataFrame,
-    coarse: DataFrame,
-    fine: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_norm: bool = False,
-) -> DataFrame:
-    """Assign every vector to its (coarse_id, fine_id) bucket.  Coarse:
-    the broadcast-literal argmax of ``assign_to_centroids``.  Fine: the
-    fine table is rolled up to ONE ROW PER COARSE CELL (an array of
-    fine structs), broadcast-hash-joined on coarse_id, then the same
-    array-argmax — so the fine step is also map-only: no row
-    multiplication (a plain vectors×fine join would emit n_fine rows
-    per vector before the argmax) and no corpus shuffle.  Ties break on
-    the lowest fine_id via array_sort + first-max, mirroring
-    assign_to_centroids.  Returns (id_col, vec_col, coarse_id,
-    fine_id)."""
-    cells = fine.groupBy("coarse_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "fine_id",
-                    "fine_vec",
-                    l2_norm(F.col("fine_vec")).alias("fine_norm"),
-                )
-            )
-        ).alias("_fines")
-    )
-    a = assign_to_centroids(
-        vectors, coarse, id_col=id_col, vec_col=vec_col, keep_norm=True
-    ).select(id_col, vec_col, "_vnorm", F.col("cluster").alias("coarse_id"))
-    sims = F.transform(
-        F.col("_fines"),
-        lambda c: cosine_with_norms(
-            F.col(vec_col),
-            c.getField("fine_vec"),
-            F.col("_vnorm"),
-            c.getField("fine_norm"),
-        ),
-    )
-    out_cols = [id_col, vec_col] + (["_vnorm"] if keep_norm else [])
-    return (
-        a.join(F.broadcast(cells), "coarse_id")
-        .withColumn("_sims", sims)
-        .withColumn("_best", F.array_position(F.col("_sims"), F.array_max(F.col("_sims"))))
-        .select(
-            *out_cols,
-            "coarse_id",
-            F.element_at(F.col("_fines"), F.col("_best").cast("int"))
-            .getField("fine_id")
-            .alias("fine_id"),
-        )
-    )
-
-
-def ivf_two_level_topk(
-    vectors: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    n_coarse: int = 8,
-    n_fine_per_cell: int = 8,
-    nprobe_coarse: int | None = 2,
-    nprobe_fine: int | None = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    coarse: DataFrame | None = None,
-    fine: DataFrame | None = None,
-) -> DataFrame:
-    """Two-level IVF ANN — the codebook scale tier past kmeans_centroids'
-    4096-literal cap (similarity.py's documented 100 TB gap): a coarse
-    codebook small enough to ride the broadcast-literal argmax routes
-    into a FINE codebook that lives as a broadcast-joined table, so
-    total cells = n_coarse × n_fine_per_cell reach the ≥64k a 100 TB
-    embedding corpus wants (√N cells at N≈10⁹ vectors) while no Catalyst
-    expression tree ever exceeds n_coarse literals.
-
-    Defaults are deterministic (coarse = first n_coarse vectors by id,
-    fine = first n_fine members per cell — fine_centroid_table); pass
-    data-adapted frames (e.g. kmeans_centroids per level) for recall.
-    ``nprobe_coarse=None`` / ``nprobe_fine=None`` mean "all" — with both
-    None the scan covers every bucket and the result EQUALS brute force
-    (the ann_ivf_exact oracle discipline).
-
-    Plan shape: probe routing is two broadcast joins over list-sized
-    frames (probes×coarse, routed×fine) with per-probe row_number ranks
-    — never over the corpus; the corpus-side work is the map-only
-    two-level assignment plus ONE keyed equijoin on (coarse_id, fine_id)
-    against the broadcast routed buckets, then TakeOrderedAndProject
-    top-k.  Zero corpus shuffles beyond the index build."""
-    if coarse is None:
-        coarse = (
-            vectors.orderBy(id_col)
-            .limit(n_coarse)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-        )
-    if fine is None:
-        fine = fine_centroid_table(
-            vectors, coarse, n_fine_per_cell, id_col=id_col, vec_col=vec_col
-        )
-
-    assigned = assign_two_level(
-        vectors, coarse, fine, id_col=id_col, vec_col=vec_col, keep_norm=True
-    )
-
-    # level-1 routing: nprobe_coarse nearest coarse cells per probe
-    # (norms hoisted per side — cosine_with_norms)
-    c_sim = cosine_with_norms(
-        F.col("probe_vec"), F.col("centroid_vec"), F.col("_pnorm"), F.col("_cnorm")
-    )
-    c_routes = (
-        probes.withColumn("_pnorm", l2_norm(F.col("probe_vec")))
-        .crossJoin(
-            F.broadcast(
-                coarse.withColumn("_cnorm", l2_norm(F.col("centroid_vec")))
-            )
-        )
-        .select(
-            "probe_id", "probe_vec", "_pnorm",
-            F.col("centroid_id").alias("coarse_id"),
-            c_sim.alias("_csim"),
-        )
-    )
-    if nprobe_coarse is not None:
-        c_routes = (
-            c_routes.withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy("probe_id").orderBy(
-                        F.col("_csim").desc(), F.col("coarse_id")
-                    )
-                ),
-            )
-            .filter(F.col("_rk") <= nprobe_coarse)
-            .drop("_rk")
-        )
-    c_routes = c_routes.drop("_csim")
-
-    # level-2 routing: nprobe_fine nearest fine cells within routed coarse
-    f_sim = cosine_with_norms(
-        F.col("probe_vec"), F.col("fine_vec"), F.col("_pnorm"), F.col("_fnorm")
-    )
-    f_routes = c_routes.join(
-        F.broadcast(fine.withColumn("_fnorm", l2_norm(F.col("fine_vec")))),
-        "coarse_id",
-    ).select(
-        "probe_id", "probe_vec", "_pnorm", "coarse_id", "fine_id",
-        f_sim.alias("_fsim"),
-    )
-    if nprobe_fine is not None:
-        f_routes = (
-            f_routes.withColumn(
-                "_rk",
-                F.row_number().over(
-                    Window.partitionBy("probe_id").orderBy(
-                        F.col("_fsim").desc(), F.col("coarse_id"), F.col("fine_id")
-                    )
-                ),
-            )
-            .filter(F.col("_rk") <= nprobe_fine)
-            .drop("_rk")
-        )
-    f_routes = f_routes.drop("_fsim")
-
-    joined = assigned.join(
-        F.broadcast(f_routes), ["coarse_id", "fine_id"]
-    ).filter(F.col(id_col) != F.col("probe_id"))
-    scored = joined.select(
-        "probe_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_with_norms_arrow(
-                F.col(vec_col), F.col("probe_vec"), F.col("_vnorm"), F.col("_pnorm")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    return topk_per_probe(scored, k, "probe_id")
+    return knn_join(left, right, cents, m_super=m_super, **common)
 
 
 def ivf_two_level_sharded(
     vectors: DataFrame,
     probes: DataFrame,
     k: int = 5,
-    nprobe: int = 2,
+    nprobe: int | None = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_coarse: int | None = None,
     corpus_size: int | None = None,
     coarse_cap: int = 4096,
 ) -> DataFrame:
-    """The RECALL-TARGET spelling of the two-level tier (r10 verdict ask
-    #3 — RECALL.md's own production guidance made the implemented
-    default): the fine level is pure SHARDING, never pruning.
-
-    RECALL.md's r10 measurement showed hierarchical PRUNING is what
-    costs recall — every fine-pruned variant ceilinged at 0.61–0.74
-    @200k while flat √N IVF reads 0.996 — because a probe's true
-    neighbors spread across fine cells outside its top-nprobe_fine.
-    This mode routes ``nprobe_coarse`` coarse cells and scans ALL fine
-    shards within them (``nprobe_fine=None``), so the candidate set is
-    EXACTLY a flat IVF's over the coarse codebook; the fine level keeps
-    its real job for the >4096-cell regime — splitting each coarse
-    cell's members into bounded sub-buckets so no Catalyst literal
-    array and no single equijoin bucket outgrows its task.
+    """Auto-sized IVF for the RECALL target: ``ivf_topk`` over a
+    deterministic first-``n_coarse`` codebook with a volume-equalizing
+    probe raise.  (The name survives from the r10 two-level index, whose
+    fine level scanned every shard of a routed coarse cell — exactly this
+    flat IVF's candidate set; RECALL.md's r10 rows showed that fine-level
+    PRUNING is what cost recall, 0.61–0.74 @200k against flat √N IVF's
+    0.996.)
 
     Auto-sizing (overridable): ``n_coarse = min(coarse_cap, ⌈√N⌉)``.
-    Below the cap this IS flat √N IVF (measured 0.996 @200k) sharded;
-    past it, the coarse probe count auto-raises as
-    ``nprobe_eff = ⌈nprobe × ⌈√N⌉ / n_coarse⌉`` — each capped coarse
-    cell covers √N/cap flat cells' worth of corpus, so raising probes
-    by the same ratio keeps the scanned volume equal to the flat
-    reference while the bigger cells cut FEWER neighborhoods at their
-    boundaries (recall ≥ the flat equivalent at equal scan; measured in
-    RECALL.md's two_level_sharded_cap rows).  ``corpus_size`` skips the
-    sizing ``count()`` when the caller already knows N (index-build
-    cost either way)."""
+    Below the cap this IS flat √N IVF (measured 0.996 @200k); past it,
+    the probe count auto-raises as
+    ``nprobe_eff = ⌈nprobe × ⌈√N⌉ / n_coarse⌉`` — each capped cell
+    covers √N/cap flat cells' worth of corpus, so raising probes by the
+    same ratio keeps the scanned volume equal to the flat reference while
+    the bigger cells cut FEWER neighborhoods at their boundaries (recall
+    ≥ the flat equivalent at equal scan; measured in RECALL.md's
+    two_level_sharded_cap rows).  ``nprobe=None`` routes every cell (=
+    brute force).  ``corpus_size`` skips the sizing ``count()`` when the
+    caller already knows N (index-build cost either way)."""
+    _check_k_nprobe("ivf_two_level_sharded", k, nprobe)
     n = int(corpus_size) if corpus_size is not None else vectors.count()
     target_cells = max(8, min(int(math.isqrt(max(1, n))), n))
     if n_coarse is None:
         n_coarse = min(int(coarse_cap), target_cells)
-    n_fine = max(1, -(-target_cells // int(n_coarse)))  # ceil div
-    nprobe_eff = min(
-        int(n_coarse), max(int(nprobe), -(-int(nprobe) * target_cells // int(n_coarse)))
-    )
-    return ivf_two_level_topk(
+    nprobe_eff = None
+    if nprobe is not None:
+        nprobe_eff = min(
+            int(n_coarse),
+            max(int(nprobe), -(-int(nprobe) * target_cells // int(n_coarse))),
+        )
+    return ivf_topk(
         vectors,
         probes,
         k=k,
-        n_coarse=int(n_coarse),
-        n_fine_per_cell=int(n_fine),
-        nprobe_coarse=nprobe_eff,
-        nprobe_fine=None,
+        n_centroids=int(n_coarse),
+        nprobe=nprobe_eff,
         id_col=id_col,
         vec_col=vec_col,
     )
@@ -2275,57 +1676,29 @@ def nprobe_recall_curve(
         raise ValueError(f"nprobe_grid must be positive ints, got {nprobe_grid}")
     max_np = grid[-1]
     if centroids is None:
-        centroids = (
-            vectors.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-        )
+        centroids = _first_n_codebook(vectors, n_centroids, id_col, vec_col)
 
     exact = brute_force_topk(
         vectors, probes, k=k, id_col=id_col, vec_col=vec_col
     ).select("probe_id", "neighbor_id")
 
-    assigned = assign_to_centroids(
-        vectors, centroids, id_col=id_col, vec_col=vec_col, keep_norm=True
-    )
-    routes = (
-        probes.withColumn("_pnorm", l2_norm(F.col("probe_vec")))
-        .crossJoin(
-            F.broadcast(
-                centroids.withColumn("_cnorm", l2_norm(F.col("centroid_vec")))
-            )
-        )
-        .select(
-            "probe_id",
-            "probe_vec",
-            "_pnorm",
-            "centroid_id",
-            cosine_with_norms(
-                F.col("probe_vec"),
-                F.col("centroid_vec"),
-                F.col("_pnorm"),
-                F.col("_cnorm"),
-            ).alias("_sim"),
-        )
-        .withColumn(
-            "_route_rk",
-            F.row_number().over(
-                Window.partitionBy("probe_id").orderBy(
-                    F.col("_sim").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("_route_rk") <= max_np)
-        .select(
-            "probe_id",
-            "probe_vec",
-            "_pnorm",
-            F.col("centroid_id").alias("cluster"),
-            "_route_rk",
-        )
+    route, _ = _sharded_router_factory(centroids, caller="nprobe_recall_curve")
+    assigned = _assign_cells(vectors, route(1), id_col, vec_col, keep_norm=True)
+    # the router's cell lists are ordered (position = route rank), so
+    # posexplode gives each candidate cell its rank
+    routes = probes.withColumn(
+        "_r", route(max_np)(F.col("probe_vec"))
+    ).select(
+        "probe_id",
+        "probe_vec",
+        F.col("_r.norm").alias("_pnorm"),
+        F.posexplode(F.col("_r.cells")).alias("_pos", "cluster"),
+    ).select(
+        "probe_id",
+        "probe_vec",
+        "_pnorm",
+        "cluster",
+        (F.col("_pos") + 1).alias("_route_rk"),
     )
     cand = (
         assigned.join(F.broadcast(routes), "cluster")

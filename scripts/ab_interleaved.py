@@ -22,24 +22,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def clear_operator_caches() -> None:
-    from csv_etl_spark.operators import classify as _classify
-    from csv_etl_spark.operators import dedup as _dedup
-    from csv_etl_spark.operators import graph as _graph
-    from csv_etl_spark.operators import multimodal as _mm
-    from csv_etl_spark.operators import packing as _pack
+    from csv_etl_spark import driver_memo
     from csv_etl_spark.operators import similarity as _sim
-    from csv_etl_spark.operators import text as _text
 
-    _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-    _sim._BUCKET_CACHE.invalidate(blocking=True)
-    _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-    _mm._DHASH_CACHE.invalidate(blocking=True)
-    _text._TF_CACHE.invalidate(blocking=True)
-    # r17: learned BPE merge tables (driver-side memo)
-    _text._MERGE_MEMO.invalidate(blocking=True)
-    _pack._CUMSUM_CACHE.invalidate(blocking=True)
-    _classify._FEAT_CACHE.invalidate(blocking=True)
-    _graph._LINKS_CACHE.invalidate(blocking=True)
+    driver_memo.clear_all(blocking=True)
     _sim.release_sharded_broadcasts(destroy=True)
 
 

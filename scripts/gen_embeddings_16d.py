@@ -2,7 +2,7 @@
 """16-dim surrogate corpora for the ≥16M kNN tier ladder (r13 verdict
 asks #1/#6).
 
-The production (raised-nprobe) spelling of ``knn_join_sharded`` past
+The production (raised-nprobe) spelling of ``knn_join(m_super=4)`` past
 the 16M switch shuffles N × nprobe_eff full-vector probe rows — ~90 GB
 at 64-dim/20M, more than this sandbox's scratch disk, which is why the
 20M decade was only ever measured on the fixed-nprobe control.  At

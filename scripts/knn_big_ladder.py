@@ -8,7 +8,7 @@ cell rule cells = max(√N, N/512) only just exceeds √N.  At 20M vectors
 (scripts/scale/sf1000, gen_scale_embeddings.py) the production regime
 is real: 39,063 cells vs √N = 4,472, and the r13 volume-equalizing
 nprobe raise is at its cap (nprobe_eff = 16).  This ladder measures
-the PRODUCTION spelling — knn_join_auto's sharded branch exactly:
+the PRODUCTION spelling — knn_join_auto's bounded branch exactly:
 bounded codebook, m_super=4 hierarchical routing, raised nprobe — so
 the α it reports is what a user gets, raise included.  The nprobe=2
 spelling is measured alongside as the scan-term control (its scan is
@@ -104,7 +104,7 @@ def main() -> None:
         nprobe = (
             similarity.sharded_nprobe_auto(n, cells, 2) if raised else 2
         )
-        return similarity.knn_join_sharded(
+        return similarity.knn_join(
             probes, e, cents, k=3, nprobe=nprobe, m_super=4,
             exclude_same_id=True,
         )
@@ -138,7 +138,7 @@ def main() -> None:
         nprobe = (
             similarity.sharded_nprobe_auto(n, cells, 2) if raised else 2
         )
-        return similarity.knn_join_sharded(
+        return similarity.knn_join(
             probes, q, cents, k=3, nprobe=nprobe, m_super=4,
             exclude_same_id=True,
         )
@@ -190,7 +190,7 @@ def main() -> None:
     payload: dict = {
         "median_sec_big": med,
         "protocol": (
-            "knn_join_sharded graph (probes = corpus, k=3, m_super=4, "
+            "knn_join graph (probes = corpus, k=3, m_super=4, "
             "bounded max(sqrt(N), N/512) codebook) at the 2M and 20M "
             "decades; _auto = the production raised nprobe "
             f"(sharded_nprobe_auto: {nprobes}), _np2 = the fixed-scan "

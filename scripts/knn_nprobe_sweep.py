@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""nprobe sweep for the bounded-cell sharded kNN tier on the HARD 2M
+"""nprobe sweep for the bounded-cell (m_super) kNN tier on the HARD 2M
 corpus (r13): RECALL_r13 showed knn_sharded at nprobe=2 reads 0.88 —
 below the 0.9 bar — because the bounded-cell rule (cells = max(√N,
 N/512)) shrinks the per-probe scanned volume by cells/√N (2.76× at 2M)
@@ -97,7 +97,7 @@ def main():
     for nprobe in grid:
         t0 = time.perf_counter()
         approx = topk_sets(
-            similarity.knn_join_sharded(
+            similarity.knn_join(
                 probes, e, cents, k=K, nprobe=nprobe, m_super=4,
                 exclude_same_id=True,
             ),
@@ -119,7 +119,7 @@ def main():
 
     payload = {
         "protocol": (
-            f"knn_join_sharded m_super=4 recall@{K} vs brute force, "
+            f"knn_join m_super=4 recall@{K} vs brute force, "
             f"first-{N_PROBES} probes, bounded-cell codebook "
             f"(max(sqrt(N), N/512)), {step} hard corpus; nprobe sweep"
         ),

@@ -14,7 +14,10 @@ their headline queries where applicable):
 
 * ivf        — single-level IVF, deterministic first-√N codebook,
                nprobe=2 (the ann_ivf_approx shape)
-* two_level  — coarse √(cells) × fine, nprobe 2/4 (ann_ivf_two_level)
+* two_level_sharded — auto-sized IVF with the volume-equalizing probe
+               raise (ivf_two_level_sharded; the r10 fine-pruning
+               variants were removed with their code — RECALL.md keeps
+               their rows)
 * quantized  — int8-quantized brute force (ann_quantized; recall loss
                comes only from quantization, not routing)
 * knn_graph  — the cell-co-partitioned knn_join at k=3, nprobe=2 over
@@ -60,10 +63,7 @@ STEPS = [
 K = 5
 N_PROBES = 50
 
-# at the 2M-vector decades only the RECOMMENDED tiers run (the r10
-# pruning variants are kept at the small decades as the measured
-# evidence for why the sharded default exists; re-measuring a known
-# structural ceiling at 2M buys nothing for its DuckDB-free cost)
+# at the 2M-vector decades only the RECOMMENDED tiers run
 SF100_VARIANTS = {
     "ivf",
     "two_level_sharded_auto",
@@ -174,79 +174,6 @@ def main() -> None:
                 e, probes, k=K, n_centroids=n_cells, nprobe=2
             ),
         )
-        run(
-            "two_level",
-            lambda: similarity.ivf_two_level_topk(
-                e,
-                probes,
-                k=K,
-                n_coarse=max(8, int(math.sqrt(n_cells))),
-                n_fine_per_cell=8,
-                nprobe_coarse=2,
-                nprobe_fine=4,
-            ),
-        )
-        run(
-            "two_level_wide",
-            lambda: similarity.ivf_two_level_topk(
-                e,
-                probes,
-                k=K,
-                n_coarse=max(8, int(math.sqrt(n_cells))),
-                n_fine_per_cell=8,
-                nprobe_coarse=4,
-                nprobe_fine=16,
-            ),
-        )
-        run(
-            "two_level_kmeans",
-            lambda: similarity.ivf_two_level_topk(
-                e,
-                probes,
-                k=K,
-                n_coarse=max(8, int(math.sqrt(n_cells))),
-                n_fine_per_cell=8,
-                nprobe_coarse=4,
-                nprobe_fine=16,
-                coarse=similarity.kmeans_centroids(
-                    e,
-                    n_centroids=max(8, int(math.sqrt(n_cells))),
-                    iters=2,
-                    sample_fraction=0.25,
-                ),
-            ),
-        )
-        run(
-            "two_level_shard",
-            lambda: similarity.ivf_two_level_topk(
-                e,
-                probes,
-                k=K,
-                n_coarse=max(8, int(math.sqrt(n_cells))),
-                n_fine_per_cell=8,
-                nprobe_coarse=4,
-                nprobe_fine=None,
-            ),
-        )
-        def _two_level_kmfine():
-            n_coarse = max(8, int(math.sqrt(n_cells)))
-            coarse = (
-                e.orderBy("vec_id")
-                .limit(n_coarse)
-                .select(
-                    F.col("vec_id").cast("int").alias("centroid_id"),
-                    F.col("embedding").alias("centroid_vec"),
-                )
-            )
-            fine = similarity.fine_centroid_table_kmeans(
-                e, coarse, n_fine_per_cell=8
-            )
-            return similarity.ivf_two_level_topk(
-                e, probes, k=K, nprobe_coarse=4, nprobe_fine=16,
-                coarse=coarse, fine=fine,
-            )
-
-        run("two_level_kmfine", _two_level_kmfine)
         # r11 (verdict ask #3): the implemented recall-target default —
         # fine = sharding, auto-sized n_coarse = min(4096, √N) (flat-IVF-
         # equivalent candidates at these scales)...
@@ -286,7 +213,7 @@ def main() -> None:
                 exclude_same_id=True,
             ),
         )
-        # r12: the bounded-cell sharded tier (knn_join_sharded) — cells
+        # r12: the bounded-cell tier (knn_join over a bounded codebook) — cells
         # = max(8, ⌊√N⌋, ⌈N/512⌉) so the graph scan term is linear past
         # the ~262k crossover.  "exact" = m_super=None flat routing
         # (the knn_graph_sharded contract spelling); "m4" = the
@@ -305,14 +232,14 @@ def main() -> None:
         )
         run(
             "knn_sharded_exact",
-            lambda: similarity.knn_join_sharded(
+            lambda: similarity.knn_join(
                 probes, e, bounded_cents, k=K, nprobe=2, m_super=None,
                 exclude_same_id=True,
             ),
         )
         run(
             "knn_sharded_m4",
-            lambda: similarity.knn_join_sharded(
+            lambda: similarity.knn_join(
                 probes, e, bounded_cents, k=K, nprobe=2, m_super=4,
                 exclude_same_id=True,
             ),
@@ -323,7 +250,7 @@ def main() -> None:
         # tier switch, so its recall row is the one that matters
         run(
             "knn_sharded_m4_auto",
-            lambda: similarity.knn_join_sharded(
+            lambda: similarity.knn_join(
                 probes, e, bounded_cents, k=K,
                 nprobe=similarity.sharded_nprobe_auto(n, n_cells_bounded, 2),
                 m_super=4, exclude_same_id=True,
@@ -331,8 +258,8 @@ def main() -> None:
         )
         results[step] = step_res
         print(f"{step}: {step_res}", file=sys.stderr)
-        # ADVICE r12: release the sharded tier's per-call codebook
-        # broadcasts between decades — each ships up to ~128 MB
+        # ADVICE r12: release the router's per-call codebook broadcasts
+        # between decades — each ships up to ~128 MB
         similarity.release_sharded_broadcasts(destroy=True)
 
     payload = {

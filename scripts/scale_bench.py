@@ -159,7 +159,7 @@ QUERIES = {
     # rows on one join key at every size — the salting is what's measured
     "salted_join_customers": "sf10",
     # r12: the PRODUCTION spelling of the bounded-cell kNN-graph tier
-    # (knn_join_sharded, m_super=4 hierarchical routing + spill — NOT the
+    # (knn_join, m_super=4 hierarchical routing + spill — NOT the
     # registry's m_super=None oracle twin, whose flat routing over N/512
     # cells is the very cost this tier removes).  Defined locally in
     # _extra_queries(); its ladder is the r11 verdict ask-#1 evidence
@@ -179,30 +179,12 @@ N_RUNS = 3
 
 
 def clear_caches() -> None:
-    from csv_etl_spark.operators import classify as _classify
-    from csv_etl_spark.operators import graph as _graph
-    from csv_etl_spark.operators import dedup as _dedup
-    from csv_etl_spark.operators import multimodal as _mm
-    from csv_etl_spark.operators import packing as _pack
+    from csv_etl_spark import driver_memo
     from csv_etl_spark.operators import similarity as _sim
-    from csv_etl_spark.operators import text as _text
 
-    _dedup._SHINGLE_CACHE.invalidate(blocking=True)
-    _sim._BUCKET_CACHE.invalidate(blocking=True)
-    _sim._ASSIGNED_CACHE.invalidate(blocking=True)
-    _mm._DHASH_CACHE.invalidate(blocking=True)
-    _text._TF_CACHE.invalidate(blocking=True)
-    # r17: learned BPE merge tables (driver-side memo)
-    _text._MERGE_MEMO.invalidate(blocking=True)
-    # same r7 fix as bench.py: prefix-sum cache must not serve passes 2+
-    _pack._CUMSUM_CACHE.invalidate(blocking=True)
-    # r8 addition: the classifier's (doc, feature) pair cache
-    _classify._FEAT_CACHE.invalidate(blocking=True)
-    # r9 addition: pagerank's persisted link table
-    _graph._LINKS_CACHE.invalidate(blocking=True)
-    # r13 addition (ADVICE r12): knn_join_sharded codebook broadcasts —
-    # ladder runs call the sharded tier once per decade per run and the
-    # ~128 MB/call broadcasts would otherwise accumulate all session
+    driver_memo.clear_all(blocking=True)
+    # codebook router broadcasts (up to ~128 MB per routing call) would
+    # otherwise accumulate across the ladder's runs
     _sim.release_sharded_broadcasts(destroy=True)
 
 
@@ -229,7 +211,7 @@ def _extra_queries() -> dict:
             F.col("vec_id").alias("probe_id"),
             F.col("embedding").alias("probe_vec"),
         )
-        return similarity.knn_join_sharded(
+        return similarity.knn_join(
             probes, e, cents, k=3, nprobe=2, m_super=4, exclude_same_id=True
         )
 

@@ -30,8 +30,8 @@ Usage: python scripts/semantic_ladder.py --out FILE.json
 from the deterministic first-(N//512) rows to the PRODUCTION fit:
 ``semantic_dedup(n_centroids=N//512)`` dispatches internally to
 ``kmeans_codebook_table`` (since r15: global distributed Lloyd over a
-TABLE codebook, sharded routing) and, past the 4096-cell assignment cap
-(the 20M point: ~39k cells), to ``assign_to_centroids_sharded`` —
+TABLE codebook, torrent-broadcast routing) and, past 4096 cells (the
+20M point: ~39k cells), to ``assign_to_centroids(m_super=4)`` —
 measuring the exact path a 100 TB SemDeDup (n_centroids ∝ N) takes end
 to end.  The fit sample is capped at ~400k rows (Lloyd only steers the
 codebook; the downstream assignment always sees the full corpus).
@@ -128,14 +128,14 @@ def main() -> None:
         # (measured: the 390-centroid fit at 200k sat idle for minutes in
         # analysis; 3907 at 2M would be hours).  Fitting large codebooks
         # belongs to the sampled table-codebook discipline
-        # (ivf_two_level / knn_join_sharded); the ladder measures the
+        # (kmeans_codebook_table); the ladder measures the
         # OPERATOR's scale shape — assignment + bounded per-cluster
         # self-join — which is codebook-source-independent.
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         cells = max(8, n // 512)
         if codebook == "table":
             # PRODUCTION path: internal kmeans_codebook_table fit (>256
-            # cells) + sharded assignment past 4096 cells.  Coarse-fit
+            # cells) + m_super assignment past 4096 cells.  Coarse-fit
             # sample capped ~400k rows — the interpreted literal-tree
             # Lloyd step only steers ≤256 coarse cells.
             return similarity.semantic_dedup(
@@ -298,7 +298,7 @@ def main() -> None:
             + (
                 "PRODUCTION table fit: n_centroids=N//512 via internal "
                 "kmeans_codebook_table dispatch (coarse-fit sample capped "
-                "~400k rows), sharded assignment past 4096 cells"
+                "~400k rows), m_super assignment past 4096 cells"
                 if codebook == "table"
                 else "deterministic first-(N//512) vectors (constant "
                 "~512-row expected cells)"

@@ -473,7 +473,7 @@ def test_registry_tier_tags_complete():
     assert set(bounds) == {k for k, v in t.items() if v == E.TIER_SCALE_BOUNDED}
     kb = bounds["knn_graph"]
     assert kb["recommended_max_n"] == 16_000_000
-    assert kb["successor"] == "knn_join_sharded"
+    assert kb["successor"] == "knn_join_auto"
     assert kb["successor_query"] in t  # the named successor query exists
     # the successor operator must actually exist
     assert hasattr(similarity, kb["successor"])
@@ -1075,14 +1075,13 @@ def test_kmeans_codebook_table_and_semantic_dispatch(spark, monkeypatch):
             assert not out[pid]["kept"], f"planted copy {pid} must be dropped"
 
 
-def test_assign_sharded_above_literal_cap_real_codebook(spark):
-    """r15 (r14 ADVICE medium): assignment PAST the 4096-cell cap must
-    actually run — a REAL 5000-cell codebook through the sharded
-    torrent-broadcast router, no monkeypatched bounds.  Pins: planted
-    probes (exact copies of sampled centroids) land on their own cell
-    under BOTH the hierarchical default and the exact flat spelling
-    (m_super=None); the literal-path assign still refuses the same
-    codebook (the cap is real, not bypassed)."""
+def test_assign_sharded_above_literal_cap_real_codebook(spark, monkeypatch):
+    """r15 (r14 ADVICE medium): assignment PAST 4096 cells must
+    actually run — a REAL 5000-cell codebook through the torrent-broadcast
+    router at its real bounds.  Pins: planted probes (exact copies
+    of sampled centroids) land on their own cell under BOTH hierarchical
+    routing (m_super=4) and the exact flat default; the router's 2^18-cell
+    collect cap is real (a cap lowered under the codebook refuses it)."""
     import random
 
     import pytest
@@ -1104,25 +1103,26 @@ def test_assign_sharded_above_literal_cap_real_codebook(spark):
 
     hier = {
         r["vec_id"]: r["cluster"]
-        for r in similarity.assign_to_centroids_sharded(pdf, cb).collect()
+        for r in similarity.assign_to_centroids(pdf, cb, m_super=4).collect()
     }
     flat = {
         r["vec_id"]: r["cluster"]
-        for r in similarity.assign_to_centroids_sharded(
-            pdf, cb, m_super=None
-        ).collect()
+        for r in similarity.assign_to_centroids(pdf, cb).collect()
     }
     assert hier == {cid: cid for cid, _ in probes}
     assert flat == hier
 
-    with pytest.raises(ValueError, match="4096"):
+    assert similarity._CODEBOOK_CAP == 1 << 18
+    monkeypatch.setattr(similarity, "_CODEBOOK_CAP", 4999)
+    with pytest.raises(ValueError, match="4999-cell"):
         similarity.assign_to_centroids(pdf, cb).collect()
+    similarity.release_sharded_broadcasts(destroy=True)
 
 
 def test_semantic_dedup_explicit_codebook_above_cap(spark):
     """r15: semantic_dedup with an EXPLICIT >4096-cell codebook routes
-    assignment through the sharded tier (previously crashed in
-    _codebook_arrays) and keeps the planted-copy drop guarantees."""
+    assignment hierarchically (m_super=4) and keeps the planted-copy drop
+    guarantees."""
     import random
 
     from csv_etl_spark.operators.similarity import semantic_dedup
@@ -4068,8 +4068,9 @@ def _toy_embeddings(spark, n=300, dim=8, seed=7):
 
 
 def test_ivf_two_level_exhaustive_equals_brute_force(spark):
-    """nprobe_coarse=nprobe_fine=None scans every bucket — results must
-    be identical to brute_force_topk (the ann_ivf_exact discipline)."""
+    """nprobe=None scans every cell — results must be identical to
+    brute_force_topk (the ann_ivf_exact discipline; the ann_ivf_two_level
+    query's spelling)."""
     from csv_etl_spark.operators import similarity
 
     e = _toy_embeddings(spark)
@@ -4077,30 +4078,34 @@ def test_ivf_two_level_exhaustive_equals_brute_force(spark):
     brute = {(r["probe_id"], r["rank"]): r["neighbor_id"] for r in
              similarity.brute_force_topk(e, probes, k=4).collect()}
     two = {(r["probe_id"], r["rank"]): r["neighbor_id"] for r in
-           similarity.ivf_two_level_topk(
-               e, probes, k=4, n_coarse=5, n_fine_per_cell=3,
-               nprobe_coarse=None, nprobe_fine=None).collect()}
+           similarity.ivf_two_level_sharded(
+               e, probes, k=4, nprobe=None, n_coarse=5).collect()}
     assert two == brute
 
 
 def test_ivf_two_level_past_literal_cap(spark):
-    """The point of the two-level index: total cells can exceed the 4096
-    broadcast-literal cap that kmeans_centroids enforces.  128 coarse ×
-    40 fine = 5120 cells must build and answer; the single-level
-    codebook builder refuses the same cell count."""
+    """Codebooks past the 4096 broadcast-literal cap that kmeans_centroids
+    enforces (its error points at the table fitter) route through the
+    torrent-broadcast router: a 5120-cell codebook must build and answer."""
+    import random as _random
+
     import pytest as _pytest
 
     from csv_etl_spark.operators import similarity
 
     e = _toy_embeddings(spark, n=400)
-    with _pytest.raises(ValueError, match="ivf_two_level_topk"):
+    with _pytest.raises(ValueError, match="kmeans_codebook_table"):
         similarity.kmeans_centroids(e, n_centroids=5120)
+    rng = _random.Random(5120)
+    cb = spark.createDataFrame(
+        [(c, [rng.uniform(-1, 1) for _ in range(8)]) for c in range(5120)],
+        "centroid_id int, centroid_vec array<double>",
+    )
     probes = similarity.make_probes(e, n=3)
-    out = similarity.ivf_two_level_topk(
-        e, probes, k=3, n_coarse=128, n_fine_per_cell=40,
-        nprobe_coarse=None, nprobe_fine=None,
+    out = similarity.ivf_topk(
+        e, probes, k=3, nprobe=None, centroids=cb
     ).collect()
-    # with more cells than vectors every cell holds <=1 vector, but the
+    # with more cells than vectors most cells are empty, but the
     # exhaustive route still recovers exact brute force
     brute = {(r["probe_id"], r["rank"]): r["neighbor_id"] for r in
              similarity.brute_force_topk(e, probes, k=3).collect()}
@@ -4108,17 +4113,16 @@ def test_ivf_two_level_past_literal_cap(spark):
 
 
 def test_ivf_two_level_routed_recall_and_plan(spark):
-    """The approximate path (nprobe_coarse=3, nprobe_fine=8) must (a)
-    return k ranked rows per probe with decent recall vs brute force and
-    (b) keep the corpus side shuffle-free past the index build: the
-    probe-routing joins and the bucket scan join are all broadcast."""
+    """The routed path (8 cells, nprobe=3) must (a) return k ranked rows
+    per probe with decent recall vs brute force and (b) keep the corpus
+    side shuffle-free: probes are routed map-side and the cell scan join
+    is broadcast."""
     from csv_etl_spark.operators import similarity
 
     e = _toy_embeddings(spark, n=500)
     probes = similarity.make_probes(e, n=5)
-    out = similarity.ivf_two_level_topk(
-        e, probes, k=5, n_coarse=8, n_fine_per_cell=4,
-        nprobe_coarse=3, nprobe_fine=8,
+    out = similarity.ivf_two_level_sharded(
+        e, probes, k=5, nprobe=3, n_coarse=8, corpus_size=64
     )
     rows = out.collect()
     per_probe = {}
@@ -4350,13 +4354,13 @@ def test_knn_join_nprobe_plan_and_recall(spark):
         assert r["neighbor_id"] % 3 == r["probe_id"] % 3
 
 
-def test_knn_join_sharded_exact_spellings(spark):
-    """The bounded-cell tier's exactness ladder: (a) m_super=None +
-    nprobe=None must equal brute force row for row; (b) m_super=None at
-    finite nprobe must equal knn_join over the SAME codebook (flat
-    routing equivalence — the SQL-oracle spelling); (c) the hierarchical
-    m_super path returns full, well-formed top-k on clustered data with
-    the same-cluster property."""
+def test_knn_join_m_super_exact_spellings(spark):
+    """knn_join's exactness ladder: (a) flat routing + nprobe=None must
+    equal brute force row for row; (b) at finite nprobe the grouped
+    scorer must equal ivf_topk's broadcast-probe scorer over the SAME
+    codebook (one router, two scorers); (c) the hierarchical m_super
+    path returns full, well-formed top-k on clustered data with the
+    same-cluster property."""
     import random as _random
 
     rng = _random.Random(13)
@@ -4382,25 +4386,22 @@ def test_knn_join_sharded_exact_spellings(spark):
                 for r in df.collect()}
 
     # (a) double-exact = brute force
-    got = keyed(similarity.knn_join_sharded(
-        probes, e, cents, k=3, nprobe=None, m_super=None,
-        exclude_same_id=True,
+    got = keyed(similarity.knn_join(
+        probes, e, cents, k=3, nprobe=None, exclude_same_id=True,
     ))
     want = keyed(similarity.brute_force_topk(e, probes, k=3))
     assert got == want and len(got) == 200 * 3
 
-    # (b) flat-routing equivalence at nprobe=2
-    got2 = keyed(similarity.knn_join_sharded(
-        probes, e, cents, k=3, nprobe=2, m_super=None, exclude_same_id=True,
-    ))
-    want2 = keyed(similarity.knn_join(
+    # (b) the two scorers agree at nprobe=2 (ivf_topk drops self-matches)
+    got2 = keyed(similarity.knn_join(
         probes, e, cents, k=3, nprobe=2, exclude_same_id=True,
     ))
-    assert got2 == want2
+    want2 = keyed(similarity.ivf_topk(e, probes, k=3, nprobe=2, centroids=cents))
+    assert got2 == want2 and len(got2) == 200 * 3
 
     # (c) hierarchical routing (supers=ceil(sqrt(20))=5, m=2): full
     # result, no cartesian, same-cluster neighbors win
-    out = similarity.knn_join_sharded(
+    out = similarity.knn_join(
         probes, e, cents, k=3, nprobe=2, m_super=2, exclude_same_id=True,
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -4411,7 +4412,7 @@ def test_knn_join_sharded_exact_spellings(spark):
     assert same / len(rowsout) > 0.95
 
 
-def test_knn_join_sharded_degenerate_codebook_drops_nothing(spark):
+def test_knn_join_m_super_degenerate_codebook_drops_nothing(spark, monkeypatch):
     """ADVICE r12: a probe routed only to memberless supers used to get
     an empty _cells list and silently vanish from the graph.  The fix
     falls back to flat routing over the whole codebook.  Degenerate
@@ -4439,9 +4440,10 @@ def test_knn_join_sharded_degenerate_codebook_drops_nothing(spark):
     probes = e.select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
-    out = similarity.knn_join_sharded(
-        probes, e, cents, k=2, nprobe=2, m_super=1, n_super=3, spill=1,
-        exclude_same_id=True,
+    monkeypatch.setattr(similarity, "_N_SUPER", 3)
+    monkeypatch.setattr(similarity, "_SPILL", 1)
+    out = similarity.knn_join(
+        probes, e, cents, k=2, nprobe=2, m_super=1, exclude_same_id=True,
     ).collect()
     assert len(out) == 60 * 2  # nothing silently dropped
 
@@ -4451,7 +4453,7 @@ def test_knn_join_auto_dispatch(spark, monkeypatch):
     KNN_FLAT_MAX_N and the bounded-cell sharded tier above it, with the
     threshold pinned to the machine-readable tier_bounds() value.  Both
     dispatches produce the identical result on the same corpus (the
-    sharded m_super path's routing superset at this size)."""
+    bounded tier with m_super=None routes flat at this size)."""
     import __spark_entry__ as E
 
     assert similarity.KNN_FLAT_MAX_N == 16_000_000
@@ -4467,18 +4469,14 @@ def test_knn_join_auto_dispatch(spark, monkeypatch):
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     calls = []
-    real_flat, real_sharded = similarity.knn_join, similarity.knn_join_sharded
+    real = similarity.knn_join
 
-    def spy_flat(*a, **kw):
-        calls.append("flat")
-        return real_flat(*a, **kw)
+    def spy(*a, **kw):
+        # only the bounded tier passes m_super (here None, for parity)
+        calls.append("sharded" if "m_super" in kw else "flat")
+        return real(*a, **kw)
 
-    def spy_sharded(*a, **kw):
-        calls.append("sharded")
-        return real_sharded(*a, **kw)
-
-    monkeypatch.setattr(similarity, "knn_join", spy_flat)
-    monkeypatch.setattr(similarity, "knn_join_sharded", spy_sharded)
+    monkeypatch.setattr(similarity, "knn_join", spy)
 
     def keyed(df):
         return {(r["probe_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
@@ -4532,21 +4530,21 @@ def test_sharded_nprobe_auto_rule():
 
 def test_knn_join_auto_applies_nprobe_raise(spark, monkeypatch):
     """In the bounded regime knn_join_auto must pass the RAISED nprobe to
-    knn_join_sharded (n_right pins a fake 2M corpus size over a small
-    frame: cells outgrow sqrt(N) and the deficit rule kicks in)."""
+    knn_join (n_right pins a fake 2M corpus size over a small frame:
+    cells outgrow sqrt(N) and the deficit rule kicks in)."""
     rows = [(i, [float((i % 4) == b) for b in range(4)]) for i in range(40)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     probes = e.select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     seen = {}
-    real = similarity.knn_join_sharded
+    real = similarity.knn_join
 
     def spy(*a, **kw):
         seen["nprobe"] = kw.get("nprobe")
         return real(*a, **kw)
 
-    monkeypatch.setattr(similarity, "knn_join_sharded", spy)
+    monkeypatch.setattr(similarity, "knn_join", spy)
     monkeypatch.setattr(similarity, "KNN_FLAT_MAX_N", 10)
     similarity.knn_join_auto(
         probes, e, k=1, nprobe=2, m_super=None, n_right=2_000_000,
@@ -4558,9 +4556,10 @@ def test_knn_join_auto_applies_nprobe_raise(spark, monkeypatch):
 
 
 def test_sharded_broadcast_registry_release(spark):
-    """ADVICE r12: every knn_join_sharded call ships a codebook broadcast;
-    the registry must track them and release_sharded_broadcasts must
-    drain it (bench/ladder loops call it between passes)."""
+    """ADVICE r12: every routing call ships ONE codebook broadcast (both
+    knn_join sides share it); the registry must track them and
+    release_sharded_broadcasts must drain it (bench/ladder loops call it
+    between passes)."""
     similarity.release_sharded_broadcasts(destroy=True)  # clean slate
     e = spark.createDataFrame(
         [(i, [float(i % 3), 1.0]) for i in range(30)],
@@ -4577,25 +4576,12 @@ def test_sharded_broadcast_registry_release(spark):
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     before = len(similarity._SHARDED_BROADCASTS)
-    similarity.knn_join_sharded(probes, e, cents, k=1, nprobe=1).collect()
-    similarity.knn_join_sharded(probes, e, cents, k=1, nprobe=1).collect()
+    similarity.knn_join(probes, e, cents, k=1, nprobe=1).collect()
+    similarity.knn_join(probes, e, cents, k=1, nprobe=1, m_super=1).collect()
     assert len(similarity._SHARDED_BROADCASTS) == before + 2
     released = similarity.release_sharded_broadcasts(destroy=True)
     assert released == before + 2
     assert similarity._SHARDED_BROADCASTS == []
-
-
-def test_codebook_arrays_large_cap(spark):
-    """The sharded codebook collect must still be bounded — at its own
-    (higher) cap — and must sort by centroid_id like the 4096 spelling."""
-    big = spark.range(300).select(
-        (F.lit(299) - F.col("id")).alias("centroid_id"),
-        F.array(F.lit(1.0), F.lit(2.0)).alias("centroid_vec"),
-    )
-    ids, mat = similarity._codebook_arrays_large(big, max_cells=512)
-    assert list(ids[:3]) == [0, 1, 2] and mat.shape == (300, 2)
-    with pytest.raises(ValueError, match="cap"):
-        similarity._codebook_arrays_large(big, max_cells=100)
 
 
 def test_knn_join_rejects_non_integral_ids(spark):
@@ -4616,15 +4602,123 @@ def test_knn_join_rejects_non_integral_ids(spark):
         similarity.knn_join(probes, e, cents, k=1)
 
 
-def test_codebook_arrays_enforces_cap(spark):
-    """_codebook_arrays must refuse an unbounded centroid frame instead
-    of silently collecting it to the driver (ADVICE r10)."""
-    big = spark.range(4200).select(
-        F.col("id").alias("centroid_id"),
+@pytest.mark.parametrize("n_rows,max_cells", [(300, 512), (300, 100), (4200, 4096)])
+def test_codebook_arrays_cap(spark, n_rows, max_cells):
+    """The codebook collect is bounded AT THE COLLECT SITE: a frame over
+    the cap is refused instead of silently pulled onto the driver
+    (ADVICE r10), and one under it comes back sorted by centroid_id."""
+    big = spark.range(n_rows).select(
+        (F.lit(n_rows - 1) - F.col("id")).alias("centroid_id"),
         F.array(F.lit(1.0), F.lit(2.0)).alias("centroid_vec"),
     )
-    with pytest.raises(ValueError, match="4096"):
-        similarity._codebook_arrays(big)
+    if n_rows > max_cells:
+        with pytest.raises(ValueError, match=f"{max_cells}-cell"):
+            similarity._codebook_arrays(big, max_cells)
+    else:
+        ids, mat = similarity._codebook_arrays(big, max_cells)
+        assert list(ids[:3]) == [0, 1, 2] and mat.shape == (n_rows, 2)
+
+
+@pytest.mark.parametrize(
+    "op,kw",
+    [
+        ("knn_join", {"nprobe": -1}),
+        ("knn_join", {"nprobe": 0}),
+        ("knn_join", {"k": 0}),
+        ("knn_join_m4", {"nprobe": -1}),
+        ("ivf_topk", {"nprobe": 0}),
+        ("ivf_topk", {"k": 0}),
+        ("knn_join_auto", {"nprobe": 0}),
+        ("knn_join_auto", {"k": -2}),
+        ("ivf_two_level_sharded", {"nprobe": -1}),
+        ("ivf_two_level_sharded", {"k": 0}),
+    ],
+)
+def test_ann_entry_rejects_k_and_nprobe_below_one(spark, op, kw):
+    """k < 1 and nprobe < 1 raise at entry.  Without the check, on this
+    60-row, 4-cell toy frame, knn_join(nprobe=-1) silently routes 3 of
+    the 4 cells (180 rows), nprobe=0 or k=0 returns an empty frame, and
+    the m_super router fails inside a Python worker.  nprobe=None still
+    means every cell."""
+    import random as _random
+
+    rng = _random.Random(60)
+    e = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = e.orderBy("vec_id").limit(4).select(
+        F.col("vec_id").cast("int").alias("centroid_id"),
+        F.col("embedding").alias("centroid_vec"),
+    )
+    probes = e.select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    args = {"k": 2, "nprobe": 2, **kw}
+    calls = {
+        "knn_join": lambda: similarity.knn_join(probes, e, cents, **args),
+        "knn_join_m4": lambda: similarity.knn_join(
+            probes, e, cents, m_super=4, **args
+        ),
+        "ivf_topk": lambda: similarity.ivf_topk(e, probes, centroids=cents, **args),
+        "knn_join_auto": lambda: similarity.knn_join_auto(probes, e, **args),
+        "ivf_two_level_sharded": lambda: similarity.ivf_two_level_sharded(
+            e, probes, **args
+        ),
+    }
+    with pytest.raises(ValueError, match="k must be|nprobe must be"):
+        calls[op]().collect()
+    # nprobe=None is "every cell", not an error
+    assert similarity.knn_join(
+        probes, e, cents, k=2, nprobe=None, exclude_same_id=True
+    ).count() == 60 * 2
+
+
+def test_router_route_order_matches_column_reference(spark):
+    """For n_take > 1 the router's ordered cell lists (the route rank
+    ivf_topk and nprobe_recall_curve read by position) must equal the
+    pure-Column reference — crossJoin + row_number ordered by sim desc,
+    then centroid_id asc — including exact ties from duplicate
+    centroids (which must break to the lowest centroid_id)."""
+    from pyspark.sql import Window
+
+    e = _toy_embeddings(spark, n=200)
+    base = e.orderBy("vec_id").limit(12).collect()
+    # centroid ids out of vector order, with three exact duplicates
+    rows = [(100 - 3 * i, list(r["embedding"])) for i, r in enumerate(base)]
+    rows += [(7, rows[0][1]), (2, rows[5][1]), (300, rows[5][1])]
+    cents = spark.createDataFrame(rows, "centroid_id int, centroid_vec array<double>")
+    n_take = 6
+    route, n_cells = similarity._sharded_router_factory(cents)
+    assert n_cells == len(rows)
+    got = {
+        r["vec_id"]: list(r["cells"])
+        for r in e.select("vec_id", route(n_take)(F.col("embedding")).alias("_r"))
+        .select("vec_id", "_r.cells")
+        .collect()
+    }
+    sim = similarity.cosine_with_norms(
+        F.col("embedding"),
+        F.col("centroid_vec"),
+        similarity.l2_norm(F.col("embedding")),
+        similarity.l2_norm(F.col("centroid_vec")),
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("_sim").desc(), F.col("centroid_id"))
+    ref: dict = {}
+    for r in (
+        e.crossJoin(F.broadcast(cents))
+        .withColumn("_sim", sim)
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= n_take)
+        .collect()
+    ):
+        ref.setdefault(r["vec_id"], {})[r["_rk"]] = r["centroid_id"]
+    want = {v: [d[i] for i in range(1, n_take + 1)] for v, d in ref.items()}
+    assert got == want and len(got) == 200
+    # the duplicate pairs are really exercised: a vector equal to a
+    # duplicated centroid ranks both copies, lowest id first
+    assert got[base[5]["vec_id"]][:3] == [2, 85, 300]
+    similarity.release_sharded_broadcasts(destroy=True)
 
 
 def test_pagerank_matches_serial_reference(spark):
@@ -4929,56 +5023,9 @@ def test_assign_kernels_agree(spark):
     assert a == b
 
 
-def test_fine_centroid_kmeans_mode(spark):
-    """The data-adapted fine codebook must (a) be deterministic across
-    runs, (b) emit ≤ n_fine_per_cell centroids per coarse cell with
-    dense fine_ids, and (c) beat the deterministic first-k fine table on
-    two-level recall for a clustered corpus (the RECALL.md finding)."""
-    from csv_etl_spark.operators.similarity import (
-        brute_force_topk,
-        fine_centroid_table,
-        fine_centroid_table_kmeans,
-        ivf_two_level_topk,
-        make_probes,
-    )
-
-    e = _toy_embeddings(spark, n=400)
-    coarse = (
-        e.orderBy("vec_id").limit(6)
-        .select(
-            F.col("vec_id").cast("int").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
-    fk1 = sorted(map(tuple, fine_centroid_table_kmeans(e, coarse, 4).collect()))
-    fk2 = sorted(map(tuple, fine_centroid_table_kmeans(e, coarse, 4).collect()))
-    assert fk1 == fk2  # deterministic
-    per_cell: dict = {}
-    for coarse_id, fine_id, _vec in fk1:
-        per_cell.setdefault(coarse_id, []).append(fine_id)
-    for ids in per_cell.values():
-        assert sorted(ids) == list(range(len(ids))) and len(ids) <= 4
-
-    probes = make_probes(e, n=10)
-    exact = {(r["probe_id"], r["neighbor_id"]) for r in
-             brute_force_topk(e, probes, k=4).collect()}
-
-    def rec(fine):
-        got = {(r["probe_id"], r["neighbor_id"]) for r in
-               ivf_two_level_topk(e, probes, k=4, n_coarse=6,
-                                  n_fine_per_cell=4, nprobe_coarse=2,
-                                  nprobe_fine=4, coarse=coarse,
-                                  fine=fine).collect()}
-        return len(got & exact) / len(exact)
-
-    r_first = rec(fine_centroid_table(e, coarse, 4))
-    r_kmeans = rec(fine_centroid_table_kmeans(e, coarse, 4))
-    assert r_kmeans >= r_first
-
-
 def test_kmeans_codebook_table_matches_literal_fit(spark):
-    """r15 (CODEBOOK_QUALITY_r15): below the 4096-cell literal cap the
-    table fitter routes EXACTLY (m_super=None flat sharded assignment)
+    """r15 (CODEBOOK_QUALITY_r15): up to 256 cells the table fitter
+    routes EXACTLY (m_super=None flat assignment)
     and shares the literal fitter's init / tie / mean-rounding / empty-
     cell rules — so at equal (n, iters, sample) the fitted codebooks
     must MATCH.  This is the quality contract that replaced the r14
@@ -5000,3 +5047,30 @@ def test_kmeans_codebook_table_matches_literal_fit(spark):
     assert set(lit) == set(tab)
     for cid, vec in lit.items():
         assert vec == pytest.approx(tab[cid], abs=1e-9), f"centroid {cid}"
+
+
+def test_every_cache_instance_is_registered():
+    """Every BoundedPersistCache/BoundedDriverMemo in the operator modules
+    and the compiler registers itself on construction, so clear_all
+    reaches each one without a hand-kept list."""
+    import importlib
+    import pkgutil
+
+    import csv_etl_spark.operators as ops
+    from csv_etl_spark import driver_memo
+    from csv_etl_spark.operators._cache import BoundedDriverMemo, BoundedPersistCache
+
+    mods = [
+        importlib.import_module(f"{ops.__name__}.{info.name}")
+        for info in pkgutil.iter_modules(ops.__path__)
+    ]
+    mods.append(importlib.import_module("csv_etl_spark.compiler"))
+    found = {
+        id(v): v
+        for mod in mods
+        for v in vars(mod).values()
+        if isinstance(v, (BoundedPersistCache, BoundedDriverMemo))
+    }
+    registered = {id(c) for c in driver_memo._REGISTRY}
+    assert len(found) >= 10
+    assert set(found) <= registered
