@@ -28,22 +28,17 @@ from csv_etl_spark.conditions import compile_condition
 from csv_etl_spark.datefmt import strptime_to_java
 from csv_etl_spark.driver_memo import BoundedDriverMemo
 from csv_etl_spark.formula import FormulaError, compile_formula
+from csv_etl_spark.local import ident_col
 from csv_etl_spark.specs import ETLMapping, FieldMapping, TransformType
 
 ERRORS_COL = "_errors"
-LINE_COL = "_line"
-
-
-def _c(name: str) -> Column:
-    """Column ref tolerant of spaces/specials (no struct-dot interpretation)."""
-    return F.col(f"`{name}`")
 
 
 def _src(source_field: str | None, source_columns: list[str]) -> Column:
     """``row.get(source_field)`` semantics: missing column or no source_field
     → null (reference ``dynamic.py:96``; spec/file mismatch yields None)."""
     if source_field and source_field in source_columns:
-        return _c(source_field)
+        return ident_col(source_field)
     return F.lit(None).cast("string")
 
 
@@ -131,6 +126,26 @@ def compile_filter(filter_rules: list[dict], source_columns: list[str]) -> Colum
 # ---------------------------------------------------------------------------
 # Field transforms (T1-T8) — reference dynamic.py:84-195
 # ---------------------------------------------------------------------------
+
+
+def errors_array(entries) -> Column:
+    """The ``_errors`` channel (V1): array<struct<field,message,
+    source_value>> of the ``(field name, message, source value)`` entries
+    whose message is non-null in this row.  A literal array + runtime
+    filter — stays inside codegen, no UDF."""
+    structs = [
+        F.struct(
+            F.lit(name).alias("field"),
+            message.cast("string").alias("message"),
+            value.cast("string").alias("source_value"),
+        )
+        for name, message, value in entries
+    ]
+    if not structs:
+        return F.expr(
+            "cast(array() as array<struct<field:string,message:string,source_value:string>>)"
+        )
+    return F.filter(F.array(*structs), lambda e: e.getField("message").isNotNull())
 
 
 @dataclass
@@ -233,7 +248,7 @@ def compile_field(fm: FieldMapping, source_columns: list[str]) -> CompiledField:
         # table, realized as a broadcast left join in CompiledMapping.apply.
         # The value/error expressions reference the join-produced column.
         alias = f"__lkt_{fm.destination_field}"
-        joined_val = F.col(f"`{alias}_v`")
+        joined_val = ident_col(f"{alias}_v")
         default = cfg.get("_default")
         value = F.coalesce(joined_val, F.lit(default).cast("string"))
         error = (
@@ -308,30 +323,13 @@ class CompiledMapping:
     _derived: dict = dc_field(default_factory=dict, repr=False, compare=False)
 
     def errors_column(self) -> Column:
-        """Array<struct<field,message,source_value>> of this row's field
-        errors (V1).  Compiled as a literal array + runtime filter on
-        non-null messages — stays inside codegen, no UDF.  Built once per
+        """This row's field errors (see ``errors_array``).  Built once per
         compiled mapping: each ``F.*`` call is a py4j round trip."""
         if "errors" not in self._derived:
-            self._derived["errors"] = self._build_errors_column()
+            self._derived["errors"] = errors_array(
+                (f.name, f.error, f.source_value) for f in self.fields if f.error is not None
+            )
         return self._derived["errors"]
-
-    def _build_errors_column(self) -> Column:
-        entries = []
-        for f in self.fields:
-            if f.error is None:
-                continue
-            parts = [
-                F.lit(f.name).alias("field"),
-                f.error.cast("string").alias("message"),
-                f.source_value.cast("string").alias("source_value"),
-            ]
-            entries.append(F.struct(*parts))
-        if not entries:
-            empty_schema = "array<struct<field:string,message:string,source_value:string>>"
-            return F.expr(f"cast(array() as {empty_schema})")
-        arr = F.array(*entries)
-        return F.filter(arr, lambda e: e.getField("message").isNotNull())
 
     def error_count_column(self) -> Column:
         """Per-row count of field errors — a codegen-friendly sum of
@@ -381,8 +379,8 @@ class CompiledMapping:
             side = (
                 tables[lj.table]
                 .select(
-                    F.col(f"`{lj.key}`").cast("string").alias(f"{lj.alias}_k"),
-                    F.col(f"`{lj.value}`").cast("string").alias(f"{lj.alias}_v"),
+                    ident_col(lj.key).cast("string").alias(f"{lj.alias}_k"),
+                    ident_col(lj.value).cast("string").alias(f"{lj.alias}_v"),
                 )
                 .dropDuplicates([f"{lj.alias}_k"])
             )
@@ -390,7 +388,7 @@ class CompiledMapping:
             # default/error path, mirroring the in-config lookup (T4)
             out = out.join(
                 F.broadcast(side),
-                _src(lj.source_field, self.source_columns) == F.col(f"{lj.alias}_k"),
+                _src(lj.source_field, self.source_columns) == ident_col(f"{lj.alias}_k"),
                 "left",
             )
 
@@ -404,7 +402,7 @@ class CompiledMapping:
             cols.append(F.col(line_col))
         for c in carry or []:
             if c in df.columns:
-                cols.append(F.col(f"`{c}`"))
+                cols.append(ident_col(c))
         projected = out.select(*cols)
         if self.mapping.aggregations:
             return self.aggregate(projected)
@@ -424,10 +422,10 @@ class CompiledMapping:
             dest = agg["destination_field"]
             src_field = agg.get("source_field")
             kind = agg.get("agg", "count")
-            num = F.col(f"`{src_field}`").try_cast("double") if src_field else None
+            num = ident_col(src_field).try_cast("double") if src_field else None
             dec = num.cast("decimal(38,6)") if num is not None else None
             if kind == "count":
-                expr = F.count(F.col(f"`{src_field}`")) if src_field else F.count(F.lit(1))
+                expr = F.count(ident_col(src_field)) if src_field else F.count(F.lit(1))
             elif kind == "sum":
                 expr = F.sum(dec).cast("double")
             elif kind == "avg":
@@ -439,7 +437,7 @@ class CompiledMapping:
             else:
                 raise ValueError(f"unknown aggregation '{kind}'")
             exprs.append(expr.alias(dest))
-        keys = [F.col(f"`{k}`") for k in self.mapping.group_by]
+        keys = [ident_col(k) for k in self.mapping.group_by]
         if keys:
             return projected.groupBy(*keys).agg(*exprs)
         return projected.agg(*exprs)

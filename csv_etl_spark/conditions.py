@@ -18,6 +18,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col
+
 _CONDITION_RE = re.compile(r"(\w+)\s*(==|!=|in)\s*(.+)", re.DOTALL)
 _LIST_ITEM_RE = re.compile(r"'([^']*)'|\"([^\"]*)\"")
 
@@ -34,7 +36,7 @@ def compile_condition(condition: str) -> Column:
 
     fld, operator, value_str = match.groups()
     # str(row_value): null → "None", like Python's str(None)
-    row_value = F.coalesce(F.col(fld).cast("string"), F.lit("None"))
+    row_value = F.coalesce(ident_col(fld).cast("string"), F.lit("None"))
 
     if operator == "==":
         return row_value == F.lit(value_str.strip("'\""))

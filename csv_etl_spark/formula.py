@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col
+
 _TOKEN_RE = re.compile(
     r"\s*(?:"
     r"(?P<num>\d+\.\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?|\d+(?:[eE][+-]?\d+)?)"
@@ -144,7 +146,7 @@ class _Parser:
             if tok.text in self.fields:
                 self.used.add(tok.text)
                 # float(value) if value else 0; unparseable → 0
-                return F.coalesce(F.col(f"`{tok.text}`").try_cast("double"), F.lit(0.0))
+                return F.coalesce(ident_col(tok.text).try_cast("double"), F.lit(0.0))
             # unknown field name → NameError in the reference → null result
             self.has_unknown = True
             return F.lit(None).cast("double")

@@ -33,8 +33,9 @@ the engine, which is exact for every finite double.
 from __future__ import annotations
 
 import math
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _INT_TYPES = {"tinyint", "smallint", "int", "integer", "bigint", "long"}
@@ -44,6 +45,25 @@ _FLOAT_TYPES = {"float", "double"}
 # 10k rows of a few scalar columns is already a ~100k-node expression
 # tree — past the point where createDataFrame's Python RDD is cheaper.
 _MAX_INLINE_ROWS = 10_000
+
+# one schema entry: a name (bare, or backtick-quoted as in Spark DDL), a type
+_SCHEMA_ENTRY = re.compile(r"\s*(`(?:[^`]|``)+`|[^\s`]+)\s+(\S.*?)\s*")
+
+
+def quote_ident(name: str) -> str:
+    """``name`` as ONE Spark SQL identifier: a dot, space or backtick in a
+    user's column name never reads as a struct path or breaks the parse."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def ident_col(name: str) -> Column:
+    """The column literally named ``name``."""
+    return F.col(quote_ident(name))
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal — the only renderer of one."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _render(v, base: str) -> str:
@@ -80,7 +100,7 @@ def _render(v, base: str) -> str:
             raise TypeError(
                 f"local_values_frame: string column got {type(v).__name__}"
             )
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return sql_string(v)
     raise TypeError(f"local_values_frame: unsupported literal type {type(v)}")
 
 
@@ -91,7 +111,8 @@ def local_values_frame(
     JVM ``LocalRelation`` (inline VALUES), not a Python RDD.
 
     ``schema`` is a Spark schema string of SCALAR columns, e.g.
-    ``"suffix string, kind string, nlab int"``; every value is validated
+    ``"suffix string, kind string, nlab int"`` (a name with a space or
+    backtick is written ``quote_ident(name)``); every value is validated
     against its declared type and CAST so the result schema matches
     ``createDataFrame`` with the same schema string.  Empty ``rows``
     yield an empty frame of the same schema.  Raises ``ValueError``
@@ -99,10 +120,12 @@ def local_values_frame(
     constant tables, never data-sized rows."""
     cols: list[tuple[str, str, str, bool]] = []
     for part in schema.split(","):
-        bits = part.strip().split(None, 1)
-        if len(bits) != 2:
+        m = _SCHEMA_ENTRY.fullmatch(part)
+        if m is None:
             raise ValueError(f"bad schema entry {part!r}")
-        name, typ = bits[0], bits[1].strip()
+        name, typ = m.group(1), m.group(2)
+        if name.startswith("`"):
+            name = name[1:-1].replace("``", "`")
         base = typ.lower()
         is_array = False
         if base.startswith("array<") and base.endswith(">"):
@@ -147,7 +170,7 @@ def local_values_frame(
         for r in rows
     )
     proj = ",".join(
-        f"CAST(c{i} AS {t}) AS `{n}`"
+        f"CAST(c{i} AS {t}) AS {quote_ident(n)}"
         for i, (n, t, _b, _a) in enumerate(cols)
     )
     alias_cols = ",".join(f"c{i}" for i in range(len(cols)))

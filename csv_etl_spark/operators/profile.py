@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from csv_etl_spark.local import ident_col
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -56,42 +58,30 @@ def profile_table(df: DataFrame, approx: bool = False) -> DataFrame:
     min_num, max_num, min_str, max_str)`` — one row per column, one pass
     over the data.  Pass ``approx=True`` on large or wide tables: exact
     multi-column distincts cost an Expand (~n_cols× the scan; see module
-    docstring), the HLL path is a single partial-aggregate pass."""
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for f in df.schema.fields:
-        c, q = f.name, F.col(f"`{f.name}`")
-        aggs.append(F.count(F.when(q.isNull(), 1)).alias(f"_nn_{c}"))
-        distinct = (
-            F.approx_count_distinct(q) if approx else F.count_distinct(q)
-        )
-        aggs.append(distinct.alias(f"_nd_{c}"))
-        if isinstance(f.dataType, _NUMERIC):
-            aggs.append(F.round(F.min(q).cast("double"), 6).alias(f"_mn_{c}"))
-            aggs.append(F.round(F.max(q).cast("double"), 6).alias(f"_mx_{c}"))
-        elif isinstance(f.dataType, T.StringType):
-            aggs.append(F.min(q).alias(f"_ms_{c}"))
-            aggs.append(F.max(q).alias(f"_xs_{c}"))
-    row = df.agg(*aggs)
+    docstring), the HLL path is a single partial-aggregate pass.
+    Each column's statistics are aggregated straight into its output
+    struct, so no internal column is named after a user's column."""
 
-    cols = []
-    for f in df.schema.fields:
-        c = f.name
+    def stats(f: T.StructField):
+        q = ident_col(f.name)
         is_num = isinstance(f.dataType, _NUMERIC)
         is_str = isinstance(f.dataType, T.StringType)
-        cols.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                F.lit(f.dataType.simpleString()).alias("dtype"),
-                F.col("_rows").cast("bigint").alias("n_rows"),
-                F.col(f"_nn_{c}").cast("bigint").alias("n_nulls"),
-                F.col(f"_nd_{c}").cast("bigint").alias("n_distinct"),
-                (F.col(f"_mn_{c}") if is_num else F.lit(None).cast("double")).alias("min_num"),
-                (F.col(f"_mx_{c}") if is_num else F.lit(None).cast("double")).alias("max_num"),
-                (F.col(f"_ms_{c}") if is_str else F.lit(None).cast("string")).alias("min_str"),
-                (F.col(f"_xs_{c}") if is_str else F.lit(None).cast("string")).alias("max_str"),
-            )
+        distinct = F.approx_count_distinct(q) if approx else F.count_distinct(q)
+        none_num, none_str = F.lit(None).cast("double"), F.lit(None).cast("string")
+        return F.struct(
+            F.lit(f.name).alias("column"),
+            F.lit(f.dataType.simpleString()).alias("dtype"),
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.count(F.when(q.isNull(), 1)).cast("bigint").alias("n_nulls"),
+            distinct.cast("bigint").alias("n_distinct"),
+            (F.round(F.min(q).cast("double"), 6) if is_num else none_num).alias("min_num"),
+            (F.round(F.max(q).cast("double"), 6) if is_num else none_num).alias("max_num"),
+            (F.min(q) if is_str else none_str).alias("min_str"),
+            (F.max(q) if is_str else none_str).alias("max_str"),
         )
-    return row.select(F.explode(F.array(*cols)).alias("_p")).select("_p.*")
+
+    row = df.agg(F.array(*map(stats, df.schema.fields)).alias("_p"))
+    return row.select(F.explode("_p").alias("_p")).select("_p.*")
 
 
 def profile_oracle_sql(table: str, schema: list[tuple[str, str, str]]) -> str:

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col, sql_string
+
 # 10^6 fixed-point quantization: floor is unambiguous on identical IEEE
 # inputs in every engine (no round-half mode to disagree on)
 QUANT = 1_000_000
@@ -330,13 +332,14 @@ def pairwise_corr(
     center_of = {c: float(centers.get(c, 0.0)) for c in ucols}
     idx = {c: i for i, c in enumerate(ucols)}
     pair_idx = [(idx[a], idx[b]) for a, b in pairs]
-    tags = [f"{a}__{b}" for a, b in pairs]
+    # internal columns are tagged by pair POSITION: a name-built tag could
+    # collide (a__b·c vs a·b__c) or fail to parse
+    tags = [f"p{k}" for k in range(len(pairs))]
     fields = []
     for t in tags:
-        fields.append(f"`_n_{t}` bigint")
+        fields.append(f"_n_{t} bigint")
         for s in ("sa", "sb", "saa", "sbb", "sab"):
-            fields.append(f"`_{s}_{t}` decimal(38,0)")
-        fields.append(f"`_nab_{t}` bigint")
+            fields.append(f"_{s}_{t} decimal(38,0)")
     partial_schema = ", ".join(fields)
     n_ucols = len(ucols)
     centers_vec = [center_of[c] for c in ucols]
@@ -348,7 +351,7 @@ def pairwise_corr(
 
         long_lo = float(-(2**63))  # exactly representable doubles
         long_hi = float(2**63)
-        acc = [[0, 0, 0, 0, 0, 0, 0] for _ in pair_idx]
+        acc = [[0, 0, 0, 0, 0, 0] for _ in pair_idx]
         seen = False
         for batch in batches:
             seen = True
@@ -388,7 +391,6 @@ def pairwise_corr(
                 a[3] += int((qa * qa).sum())
                 a[4] += int((qb * qb).sum())
                 a[5] += int((qa * qb).sum())
-                a[6] += n
         if not seen:
             return
         dec38 = pa.decimal128(38, 0)
@@ -401,11 +403,9 @@ def pairwise_corr(
             for j, s in enumerate(("sa", "sb", "saa", "sbb", "sab")):
                 arrays.append(pa.array([a[1 + j]], type=dec38))
                 names.append(f"_{s}_{t}")
-            arrays.append(pa.array([a[6]], type=pa.int64()))
-            names.append(f"_nab_{t}")
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    src = df.select(*[F.col(c).cast("double").alias(c) for c in ucols])
+    src = df.select(*[ident_col(c).cast("double").alias(f"_x{i}") for i, c in enumerate(ucols)])
     partials = src.mapInArrow(_moment_partials, schema=partial_schema)
 
     # The final combine renders as SQL TEXT, one selectExpr each for the
@@ -415,49 +415,41 @@ def pairwise_corr(
     # SQL is the exact operator-for-operator transliteration — same
     # casts, same division order, same HALF_UP round — so results are
     # bit-identical.
-    def esc(s: str) -> str:
-        return s.replace("'", "''")
-
     agg_exprs = []
     for t in tags:
         # counts coalesce to 0 like the old F.count() (sum over zero
         # partial rows — empty input — is NULL, count never was)
-        agg_exprs.append(
-            f"coalesce(sum(`_n_{t}`), CAST(0 AS BIGINT)) AS `_n_{t}`"
-        )
+        agg_exprs.append(f"coalesce(sum(_n_{t}), CAST(0 AS BIGINT)) AS _n_{t}")
         for s in ("sa", "sb", "saa", "sbb", "sab"):
-            agg_exprs.append(f"sum(`_{s}_{t}`) AS `_{s}_{t}`")
-        agg_exprs.append(
-            f"coalesce(sum(`_nab_{t}`), CAST(0 AS BIGINT)) AS `_nab_{t}`"
-        )
+            agg_exprs.append(f"sum(_{s}_{t}) AS _{s}_{t}")
     m = partials.selectExpr(*agg_exprs)
 
     pair_structs = []
-    for a, b in pairs:
-        t = f"{a}__{b}"
-        n = f"CAST(`_n_{t}` AS DOUBLE)"
-        sa, sb = f"CAST(`_sa_{t}` AS DOUBLE)", f"CAST(`_sb_{t}` AS DOUBLE)"
-        saa = f"CAST(`_saa_{t}` AS DOUBLE)"
-        sbb = f"CAST(`_sbb_{t}` AS DOUBLE)"
-        sab = f"CAST(`_sab_{t}` AS DOUBLE)"
+    overflow_msg = sql_string(_OVERFLOW_MSG)
+    for (a, b), t in zip(pairs, tags):
+        n = f"CAST(_n_{t} AS DOUBLE)"
+        sa, sb = f"CAST(_sa_{t} AS DOUBLE)", f"CAST(_sb_{t} AS DOUBLE)"
+        saa = f"CAST(_saa_{t} AS DOUBLE)"
+        sbb = f"CAST(_sbb_{t} AS DOUBLE)"
+        sab = f"CAST(_sab_{t} AS DOUBLE)"
         van = f"({n} * {saa} - {sa} * {sa})"
         vbn = f"({n} * {sbb} - {sb} * {sb})"
         cvn = f"({n} * {sab} - {sa} * {sb})"
         corr = (
-            f"CASE WHEN `_n_{t}` >= 2 AND {van} > 0 AND {vbn} > 0 "
+            f"CASE WHEN _n_{t} >= 2 AND {van} > 0 AND {vbn} > 0 "
             f"THEN round({cvn} / sqrt({van}) / sqrt({vbn}), 6) END"
         )
         ok = (
-            f"(`_nab_{t}` = `_n_{t}`) AND ((`_n_{t}` = 0) OR ("
-            f"`_sa_{t}` IS NOT NULL AND `_sb_{t}` IS NOT NULL AND "
-            f"`_saa_{t}` IS NOT NULL AND `_sbb_{t}` IS NOT NULL AND "
-            f"`_sab_{t}` IS NOT NULL))"
+            f"(_n_{t} = 0) OR ("
+            f"_sa_{t} IS NOT NULL AND _sb_{t} IS NOT NULL AND "
+            f"_saa_{t} IS NOT NULL AND _sbb_{t} IS NOT NULL AND "
+            f"_sab_{t} IS NOT NULL)"
         )
-        guard = f"assert_true({ok}, '{esc(_OVERFLOW_MSG)}')"
+        guard = f"assert_true({ok}, {overflow_msg})"
         pair_structs.append(
             f"named_struct("
-            f"'col_x', '{esc(a)}', 'col_y', '{esc(b)}', "
-            f"'n', coalesce(CAST({guard} AS BIGINT), CAST(`_n_{t}` AS BIGINT)), "
+            f"'col_x', {sql_string(a)}, 'col_y', {sql_string(b)}, "
+            f"'n', coalesce(CAST({guard} AS BIGINT), CAST(_n_{t} AS BIGINT)), "
             f"'corr', coalesce(CAST({guard} AS DOUBLE), {corr}))"
         )
     return m.selectExpr(f"inline(array({', '.join(pair_structs)}))")

@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from csv_etl_spark.compiler import ERRORS_COL
+from csv_etl_spark.compiler import ERRORS_COL, errors_array
 from csv_etl_spark.datefmt import strptime_to_java
+from csv_etl_spark.local import ident_col
 from csv_etl_spark.specs import ColumnSpec, ColumnType, FileSpec
 
 # numeric text accepted for integer/float/money after cleanup
@@ -26,7 +27,7 @@ _MONEY_JUNK = r"[€$£,]"
 def _checks_for(col_spec: ColumnSpec, present: bool) -> list[tuple[Column, Column]]:
     """(error_condition, message) pairs for one column."""
     name = col_spec.name
-    src = F.col(f"`{name}`").cast("string") if present else F.lit(None).cast("string")
+    src = ident_col(name).cast("string") if present else F.lit(None).cast("string")
     empty = src.isNull() | (src == "")
     checks: list[tuple[Column, Column]] = []
 
@@ -74,25 +75,11 @@ def _checks_for(col_spec: ColumnSpec, present: bool) -> list[tuple[Column, Colum
 def validation_errors_column(spec: FileSpec, columns: list[str]) -> Column:
     """array<struct<field,message,source_value>> of spec violations for one
     row — same shape as the mapping compiler's error channel."""
-    entries = []
-    for cs in spec.columns:
-        present = cs.name in columns
-        for cond, msg, src in _checks_for(cs, present):
-            entries.append(
-                F.when(
-                    cond,
-                    F.struct(
-                        F.lit(cs.name).alias("field"),
-                        msg.cast("string").alias("message"),
-                        src.cast("string").alias("source_value"),
-                    ),
-                )
-            )
-    if not entries:
-        return F.expr(
-            "cast(array() as array<struct<field:string,message:string,source_value:string>>)"
-        )
-    return F.filter(F.array(*entries), lambda e: e.isNotNull())
+    return errors_array(
+        (cs.name, F.when(cond, msg), src)
+        for cs in spec.columns
+        for cond, msg, src in _checks_for(cs, cs.name in columns)
+    )
 
 
 def validate_against_spec(df: DataFrame, spec: FileSpec) -> DataFrame:

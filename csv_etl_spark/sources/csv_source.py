@@ -66,7 +66,6 @@ def read_spec_csv(
     spark: SparkSession,
     path: str,
     spec: FileSpec | None = None,
-    line_numbers: bool = False,
 ) -> DataFrame:
     """S1/S2/S3: header-keyed all-string CSV scan over a file, directory or
     glob.  All columns are StringType — typing happens inside compiled
@@ -90,16 +89,11 @@ def read_spec_csv(
     )
     if not has_header:
         # no header: names come from the spec, positionally
-        schema = spec.spark_schema(all_string=True)
-        df = reader.schema(schema).csv(path)
-    elif encoding.lower() in ("utf-8", "utf8") and (names := _plain_header(path, sep)):
+        return reader.schema(spec.spark_schema(all_string=True)).csv(path)
+    if encoding.lower() in ("utf-8", "utf8") and (names := _plain_header(path, sep)):
         schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-        df = reader.schema(schema).option("enforceSchema", "false").csv(path)
-    else:
-        df = reader.csv(path)
-    if line_numbers:
-        df = with_line_numbers(df)
-    return df
+        return reader.schema(schema).option("enforceSchema", "false").csv(path)
+    return reader.csv(path)
 
 
 def with_line_numbers(df: DataFrame) -> DataFrame:

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col
 from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
 from csv_etl_spark.specs import FileSpec
@@ -39,10 +40,10 @@ def update_csv_row(
     updated = df.select(
         *[
             F.when(F.col(LINE_COL) == line_number, F.lit(new_values[c]))
-            .otherwise(F.col(f"`{c}`"))
+            .otherwise(ident_col(c))
             .alias(c)
             if c in new_values
-            else F.col(f"`{c}`")
+            else ident_col(c)
             for c in df.columns
             if c != LINE_COL
         ],

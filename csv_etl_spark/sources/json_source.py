@@ -12,9 +12,9 @@ supported via ``multiline=True`` for small config-ish inputs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from csv_etl_spark.local import ident_col
 from csv_etl_spark.specs import FileSpec
 
 
@@ -43,7 +43,7 @@ def read_spec_json(
         )
         return reader.schema(schema).json(path)
     df = reader.json(path)
-    return df.select(*[F.col(f"`{c}`").cast("string").alias(c) for c in df.columns])
+    return df.select(*[ident_col(c).cast("string").alias(c) for c in df.columns])
 
 
 def write_spec_json(

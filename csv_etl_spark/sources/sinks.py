@@ -13,8 +13,8 @@ import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col
 from csv_etl_spark.specs import ColumnType, FileSpec
 
 # FIXTURES §5 / reference app.py:730-740 template dummy values
@@ -37,14 +37,17 @@ def write_spec_csv(
 ) -> None:
     """S5: write CSV with header.  Column order comes from the DataFrame
     (mapping order — reference uses the first result row's key order, which
-    is mapping order)."""
+    is mapping order).  Header names and cells keep their surrounding
+    spaces, as the reference's ``csv`` writer does (Spark trims them)."""
     out = df
     if spec is not None:
         ordered = [c for c in spec.column_names() if c in df.columns]
         ordered += [c for c in df.columns if c not in ordered]
-        out = df.select(*ordered)
+        out = df.select(*map(ident_col, ordered))
     writer = out.coalesce(1) if single_file else out
-    writer.write.mode("overwrite").option("header", "true").csv(path)
+    writer.write.mode("overwrite").options(
+        header="true", ignoreLeadingWhiteSpace="false", ignoreTrailingWhiteSpace="false"
+    ).csv(path)
 
 
 def write_single_csv_file(df: DataFrame, file_path: str, order_by: str | None = None) -> None:

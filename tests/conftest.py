@@ -17,5 +17,16 @@ def spark():
     yield spark
 
 
+def newest_job_id(spark) -> int:
+    """Id of the newest Spark job in the status store (-1 before any),
+    after the listener bus drains — works with the UI off.  Jobs launched
+    by a call = the difference across it."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
+    return jobs.head().jobId() if jobs.nonEmpty() else -1  # newest first
+
+
 def rows_as_dicts(df):
     return [r.asDict(recursive=True) for r in df.collect()]

@@ -12,6 +12,7 @@ import pytest
 
 from csv_etl_spark.api import create_app
 from csv_etl_spark.specs import SpecStore
+from tests.conftest import newest_job_id
 
 
 @pytest.fixture
@@ -101,6 +102,45 @@ def test_convert_gated_then_fixed_via_update(env):
     out = (tmp_path / "out" / "d1" / "a_dst1.csv").read_text().splitlines()
     assert out[0] == "date,symbol"
     assert sorted(out[1:]) == ["15.01.2024,AAPL", "16.01.2024,MSFT"]
+
+
+def test_backtick_header_preview_edit_convert(env):
+    """An uploaded header is the user's column name verbatim: a backtick
+    in it must not break the compiled plan of preview, edit or convert."""
+    import io
+
+    client, tmp_path, _ = env
+    r = client.post(
+        "/api/upload/src1",
+        data={"file": (io.BytesIO(b"Date,Ti`cker,Type\n2024-01-15,AAPL,BUY\n"
+                                  b"2024-01-16,MSFT,BUY\n"), "bt.csv")},
+        content_type="multipart/form-data",
+    )
+    assert r.status_code == 201
+    r = client.post("/api/mappings/m1/save", json={"field_mappings": [
+        {"destination_field": "date", "source_field": "Date",
+         "transform_type": "date_format",
+         "transform_config": {"input_format": "%Y-%m-%d", "output_format": "%d.%m.%Y"}},
+        {"destination_field": "symbol", "source_field": "Ti`cker",
+         "transform_type": "direct", "transform_config": {}},
+    ]})
+    assert r.status_code == 200
+
+    r = client.get("/api/preview/src1/bt.csv?mapping_id=m1")
+    assert r.status_code == 200, r.get_data(as_text=True)[:300]
+    body = r.get_json()
+    assert body["columns"] == ["Date", "Ti`cker", "Type"]
+    assert [row["Ti`cker"] for row in body["rows"]] == ["AAPL", "MSFT"]
+    assert (body["validation"]["success_count"], body["validation"]["error_count"]) == (2, 0)
+
+    r = client.post("/api/preview/src1/bt.csv/update",
+                    json={"line": 3, "row": {"Ti`cker": "TSLA"}})
+    assert r.status_code == 200, r.get_data(as_text=True)[:300]
+
+    r = client.post("/api/preview/src1/bt.csv/convert", json={"mapping_id": "m1"})
+    assert r.status_code == 200, r.get_data(as_text=True)[:300]
+    out = (tmp_path / "out" / "d1" / "bt_dst1.csv").read_text().splitlines()
+    assert out == ["date,symbol", "15.01.2024,AAPL", "16.01.2024,TSLA"]
 
 
 def test_process_bulk(env):
@@ -409,14 +449,6 @@ def test_saved_mapping_recompiles_between_previews(env):
     assert body["errors_by_line"] == {}
 
 
-def _newest_job(spark) -> int:
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
-    return jobs.head().jobId() if jobs.nonEmpty() else -1  # newest first
-
-
 def test_request_job_budget(spark, env):
     """Spark jobs per dashboard request, read from the status store (UI
     off).  A per-request header job, a separate preview count(), an error
@@ -427,10 +459,10 @@ def test_request_job_budget(spark, env):
     client, _, _ = env
 
     def jobs(call, status: int):
-        before = _newest_job(spark)
+        before = newest_job_id(spark)
         r = call()
         assert r.status_code == status, r.get_data(as_text=True)[:300]
-        return _newest_job(spark) - before, r.get_json()
+        return newest_job_id(spark) - before, r.get_json()
 
     preview, body = jobs(lambda: client.get("/api/preview/src1/a.csv?mapping_id=m1"), 200)
     assert body["validation"]["error_count"] == 1 and body["total"] == 3

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from csv_etl_spark.operators import dedup, similarity, text
 from csv_etl_spark.operators.multimodal import documents_as_media, extract_features
+from tests.conftest import newest_job_id
 
 SF = "/root/testdata/sf0.001"
 
@@ -561,21 +562,13 @@ def test_resolve_clusters_job_budget(spark):
     rounds, three jobs each): a per-round probe job or a ``distinct`` on
     the edge list would push it past the pin.  Read from the status
     store, which works with the UI off."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-
-    def newest_job():
-        jsc.listenerBus().waitUntilEmpty()
-        jobs = jsc.statusStore().jobsList(sc._jvm.java.util.ArrayList())
-        return jobs.head().jobId() if jobs.nonEmpty() else -1
-
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], ["id_a", "id_b"]
     )
     pairs.collect()
-    before = newest_job()
+    before = newest_job_id(spark)
     dedup.resolve_duplicate_clusters(pairs)
-    assert newest_job() - before <= 9
+    assert newest_job_id(spark) - before <= 9
 
 
 def test_corpus_curation_composition(spark):
@@ -3287,10 +3280,10 @@ def test_pairwise_corr_arrow_partials_match_jvm_decimal_path(spark):
     with the old JVM decimal-aggregate spelling on EVERY edge the
     quantizer can see — SQL NULL (excluded by pairwise deletion), real
     NaN (Double.NaN.toLong == 0), ±Inf and out-of-long-range magnitudes
-    (saturate to ±2^63), negatives, and exact zero."""
-    from pyspark.sql import functions as F
-
-    from csv_etl_spark.operators.stats import QUANT, _q, pairwise_corr
+    (saturate to ±2^63), negatives, and exact zero — uncentered, and
+    centered on x (the numpy shift before quantizing must match
+    ``_q(col, center)``)."""
+    from csv_etl_spark.operators.stats import QUANT
 
     nan, inf = float("nan"), float("inf")
     # exactly ONE saturating row: a single (±2^63)² product is 38 digits
@@ -3306,12 +3299,28 @@ def test_pairwise_corr_arrow_partials_match_jvm_decimal_path(spark):
         (-7.125, 9.75),
         (2.0, 3.0),
     ]
+    for center in (0.0, 1.5):
+        _pairwise_corr_matches_jvm_decimal_path(spark, rows, center)
+    # corr is shift-invariant, and the saturated row swamps the others, so
+    # the rows above cannot tell a wrong shift from the right one.  Near a
+    # large center without it, only the right shift keeps the moments
+    # exact in the double combine.
+    far = [(x if x is None or x != x else x + 1e6, y) for x, y in rows if x != inf]
+    _pairwise_corr_matches_jvm_decimal_path(spark, far, 1e6, n=5)
+    assert QUANT == 1_000_000  # the replica hard-codes the same scale
+
+
+def _pairwise_corr_matches_jvm_decimal_path(spark, rows, center, n=6):
+    from pyspark.sql import functions as F
+
+    from csv_etl_spark.operators.stats import _q, pairwise_corr
+
     df = spark.createDataFrame(rows, ["x", "y"])
-    got = pairwise_corr(df, ["x", "y"]).collect()[0]
+    got = pairwise_corr(df, ["x", "y"], centers={"x": center}).collect()[0]
 
     # reference: the pre-r17 fused decimal aggregate, spelled inline
     cond = F.col("x").isNotNull() & F.col("y").isNotNull()
-    qa = F.when(cond, _q(F.col("x"), 0.0))
+    qa = F.when(cond, _q(F.col("x"), center))
     qb = F.when(cond, _q(F.col("y"), 0.0))
     ref = df.agg(
         F.count(F.when(cond, 1)).alias("n"),
@@ -3338,9 +3347,8 @@ def test_pairwise_corr_arrow_partials_match_jvm_decimal_path(spark):
             F.round(cvn / F.sqrt(van) / F.sqrt(vbn), 6),
         ).alias("corr")
     ).collect()[0]
-    assert got["n"] == ref["n"] == 6
+    assert got["n"] == ref["n"] == n
     assert got["corr"] == exp["corr"] and got["corr"] is not None
-    assert QUANT == 1_000_000  # the replica hard-codes the same scale
 
 
 def test_pairwise_corr_pairwise_deletion(spark):

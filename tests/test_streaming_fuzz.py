@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 
 from csv_etl_spark.compiler import ERRORS_COL, compile_mapping
 
-from tests.test_mapping_fuzz import COLS, mapping_st, row
+from tests.mapping_strategies import COLS, mapping_st, row
 
 _COUNTER = {"n": 0}
 
