@@ -15,8 +15,8 @@ stays out of scope (SURVEY §7); everything a dashboard client calls is here:
 | POST /api/delete/<type>/<path>        | app.py:140-155 delete | filesystem (containment-checked) |
 | GET  /api/preview/<src>/<file>        | app.py:515-575 | read_spec_csv + validate |
 | POST /api/preview/<src>/<file>/update | app.py:577-623 | sources.edits.update_csv_row |
-| POST /api/preview/<src>/<file>/convert| app.py:625-677 | plans.transform (gated) |
-| POST /api/process/<source_id>         | app.py:161-231 | plans.transform per file |
+| POST /api/preview/<src>/<file>/convert| app.py:625-677 | orchestrate.convert_file (gated) |
+| POST /api/process/<source_id>         | app.py:161-231 | orchestrate.process_source (convert_file per file) |
 
 Documented divergence (intentional, like the compiler's): the reference's
 visual-editor save always persists ``filter_rules: []`` — a recorded bug
@@ -31,10 +31,11 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.plans import transform, validate
+from csv_etl_spark.orchestrate import convert_file, process_source
+from csv_etl_spark.plans import validate
 from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.edits import update_csv_row
-from csv_etl_spark.sources.sinks import write_single_csv_file, write_template_csv
+from csv_etl_spark.sources.sinks import write_template_csv
 from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
 
 
@@ -45,24 +46,6 @@ from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
 DEFAULT_ERROR_CAP = 50
 DEFAULT_PREVIEW_ROWS = 500
 CONVERT_ERROR_CAP = 20  # errors a failed convert reports
-
-
-def _error_entries(result) -> list[dict]:
-    """First errors → reference JSON shape (line/field/message/value).
-    Read from ``result.error_sample``, which the transform bounded by the
-    cap its caller passed (DEFAULT_ERROR_CAP, CONVERT_ERROR_CAP) — the
-    collect is always bounded."""
-    out = []
-    for d in result.error_sample:
-        out.append(
-            {
-                "line": d.get(LINE_COL),
-                "field": d.get("field"),
-                "message": d.get("message"),
-                "value": str(d["source_value"]) if d.get("source_value") else "",
-            }
-        )
-    return out
 
 
 def create_app(
@@ -314,7 +297,10 @@ def create_app(
         row_cap = request.args.get("limit", type=int) or DEFAULT_PREVIEW_ROWS
         if row_cap < 0:
             return jsonify({"error": "limit must not be negative"}), 400
-        df = with_line_numbers(read_spec_csv(spark, str(path), source))
+        try:
+            df = with_line_numbers(read_spec_csv(spark, str(path), source))
+        except ValueError as exc:  # a header column named like the reserved _line
+            return jsonify({"error": str(exc)}), 400
         columns = [c for c in df.columns if c != LINE_COL]
         rows = [
             {"_line": r[LINE_COL], **{c: r[c] for c in columns}}
@@ -327,7 +313,7 @@ def create_app(
         mapping = store.get_mapping(mapping_id) if mapping_id else None
         if mapping:
             # the validation pass counts the input rows on its way
-            result = validate(df, mapping, line_col=LINE_COL, error_sample=DEFAULT_ERROR_CAP)
+            result = validate(df, mapping, error_sample=DEFAULT_ERROR_CAP)
             total = result.input_count
             validation = {
                 "success_count": result.success_count,
@@ -335,7 +321,7 @@ def create_app(
                 "error_count": result.error_count,
                 "logs": result.log_messages[-50:],
             }
-            for e in _error_entries(result):
+            for e in result.error_sample:
                 errors_by_line.setdefault(e["line"], []).append(
                     {k: e[k] for k in ("field", "message", "value")}
                 )
@@ -371,7 +357,7 @@ def create_app(
             return jsonify({"error": "Row data must be an object"}), 400
         try:
             update_csv_row(spark, str(path), line, row, spec=source)
-        except ValueError as exc:  # unknown column names
+        except ValueError as exc:  # unknown column names, a reserved _line column
             return jsonify({"error": str(exc)}), 400
         return jsonify({"success": True, "message": f"Row {line} updated"})
 
@@ -393,16 +379,12 @@ def create_app(
         if not destination:
             return jsonify({"error": "Destination not found"}), 404
 
-        out_file = out_root / destination.default_directory / f"{path.stem}_{destination.id}.csv"
-        df = with_line_numbers(read_spec_csv(spark, str(path), source))
-        result = transform(
-            df,
-            mapping,
-            fail_on_error=True,
-            line_col=LINE_COL,
-            write=lambda out: write_single_csv_file(out, str(out_file)),
-            error_sample=CONVERT_ERROR_CAP,
-        )
+        try:
+            result, out_file = convert_file(
+                spark, path, mapping, source, destination, out_root, CONVERT_ERROR_CAP
+            )
+        except ValueError as exc:  # a header column named like the reserved _line
+            return jsonify({"error": str(exc)}), 400
         if result.error_count > 0:
             return (
                 jsonify(
@@ -411,7 +393,7 @@ def create_app(
                         "message": f"Conversion failed with {result.error_count} errors",
                         "errors": [
                             {k: e[k] for k in ("line", "field", "message")}
-                            for e in _error_entries(result)
+                            for e in result.error_sample
                         ],
                         "logs": result.log_messages,
                     }
@@ -431,8 +413,6 @@ def create_app(
 
     @app.post("/api/process/<source_id>")
     def process(source_id: str):
-        from csv_etl_spark.orchestrate import process_source
-
         data = request.get_json() or request.form or {}
         mapping_id = data.get("mapping_id")
         if not mapping_id:

@@ -33,50 +33,39 @@ def _write_single(df, path: Path) -> int:
     return n
 
 
-def process_revolut_stocks(spark: SparkSession, account_name: str | None = None) -> int:
-    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv, revolut_stocks_plan
+def _process_revolut(spark: SparkSession, kind: str, plan, account_name: str) -> int:
+    """Every ``*.csv`` of ``data/in/revolut_<kind>`` through the typed
+    ``plan`` into ``data/out/ghostfolio/<stem>_ghostfolio.csv``."""
+    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv
     from csv_etl_spark.sources.csv_source import read_spec_csv
 
-    input_dir = INPUT_DIR / "revolut_stocks"
+    input_dir = INPUT_DIR / f"revolut_{kind}"
     output_dir = OUTPUT_DIR / "ghostfolio"
     if not input_dir.exists():
         return 0
     output_dir.mkdir(parents=True, exist_ok=True)
     total = 0
     for csv_file in sorted(input_dir.glob("*.csv")):
-        print(f"Processing (stocks): {csv_file.name}")
+        print(f"Processing ({kind}): {csv_file.name}")
         df = read_spec_csv(spark, str(csv_file.resolve()))
-        out = format_ghostfolio_for_csv(
-            revolut_stocks_plan(df, account_name=account_name or "Revolut Stocks")
-        )
+        out = format_ghostfolio_for_csv(plan(df, account_name=account_name))
         out_file = output_dir / f"{csv_file.stem}_ghostfolio.csv"
         n = _write_single(out, out_file.resolve())
         total += n
         print(f"  -> {out_file.name} ({n} activities)")
     return total
+
+
+def process_revolut_stocks(spark: SparkSession, account_name: str | None = None) -> int:
+    from csv_etl_spark.plans.typed import revolut_stocks_plan
+
+    return _process_revolut(spark, "stocks", revolut_stocks_plan, account_name or "Revolut Stocks")
 
 
 def process_revolut_crypto(spark: SparkSession, account_name: str | None = None) -> int:
-    from csv_etl_spark.plans.typed import format_ghostfolio_for_csv, revolut_crypto_plan
-    from csv_etl_spark.sources.csv_source import read_spec_csv
+    from csv_etl_spark.plans.typed import revolut_crypto_plan
 
-    input_dir = INPUT_DIR / "revolut_crypto"
-    output_dir = OUTPUT_DIR / "ghostfolio"
-    if not input_dir.exists():
-        return 0
-    output_dir.mkdir(parents=True, exist_ok=True)
-    total = 0
-    for csv_file in sorted(input_dir.glob("*.csv")):
-        print(f"Processing (crypto): {csv_file.name}")
-        df = read_spec_csv(spark, str(csv_file.resolve()))
-        out = format_ghostfolio_for_csv(
-            revolut_crypto_plan(df, account_name=account_name or "Revolut Crypto")
-        )
-        out_file = output_dir / f"{csv_file.stem}_ghostfolio.csv"
-        n = _write_single(out, out_file.resolve())
-        total += n
-        print(f"  -> {out_file.name} ({n} activities)")
-    return total
+    return _process_revolut(spark, "crypto", revolut_crypto_plan, account_name or "Revolut Crypto")
 
 
 def process_dynamic(
@@ -90,7 +79,7 @@ def process_dynamic(
     """Run a stored mapping over a directory (the dashboard's bulk-process
     path, ``app.py:161-231``, headless)."""
     from csv_etl_spark.plans.pipeline import transform
-    from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
+    from csv_etl_spark.sources.csv_source import read_spec_csv, with_line_numbers
     from csv_etl_spark.specs import SpecStore
 
     store = SpecStore(config_dir)
@@ -99,10 +88,7 @@ def process_dynamic(
         raise SystemExit(f"unknown mapping: {mapping_id}")
     src_spec = store.get_source(mapping.source_id)
     df = with_line_numbers(read_spec_csv(spark, input_dir, src_spec))
-    result = transform(
-        df, mapping, output_path=output_dir,
-        fail_on_error=fail_on_error, line_col=LINE_COL,
-    )
+    result = transform(df, mapping, output_path=output_dir, fail_on_error=fail_on_error)
     print(
         f"{result.success_count} valid, {result.skipped_count} skipped, "
         f"{result.error_count} errors"

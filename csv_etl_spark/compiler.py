@@ -351,20 +351,20 @@ class CompiledMapping:
         self,
         df: DataFrame,
         with_errors: bool | str = True,
-        line_col: str | None = None,
         tables: dict[str, DataFrame] | None = None,
         carry: list[str] | None = None,
     ) -> DataFrame:
         """filter → [broadcast lookup joins] → project [→ aggregate].
 
         Output columns = destination fields in mapping order (reference
-        ``transform_row``, dynamic.py:239-257), plus ``_errors`` (and the
-        carried line/extra columns) when requested.
+        ``transform_row``, dynamic.py:239-257), plus ``_errors`` when
+        requested, plus the carried columns.
 
         ``tables`` resolves ``lookup_table`` fields to DataFrames; each
         becomes one broadcast LEFT join (keys deduplicated so the join
         can't fan out rows).  ``carry`` lists input columns to pass through
-        untouched (used by mapping chains to accumulate errors).
+        untouched when present (the pipeline's ``_line`` provenance, mapping
+        chains' accumulated errors).
 
         If the mapping declares ``aggregations``, the projected rows are
         then grouped by ``group_by`` — see :meth:`aggregate`."""
@@ -398,8 +398,6 @@ class CompiledMapping:
             cols.append(self.error_count_column().alias(ERRORS_COL))
         elif with_errors:
             cols.append(self.errors_column().alias(ERRORS_COL))
-        if line_col and line_col in df.columns:
-            cols.append(F.col(line_col))
         for c in carry or []:
             if c in df.columns:
                 cols.append(ident_col(c))

@@ -50,15 +50,15 @@ def plan_key(df: DataFrame, *extra) -> tuple | None:
 class BoundedDriverMemo:
     """Session-aware bounded memo for SMALL driver-side values (r17: the
     BPE merge table — k rows, the merge table IS the model; the
-    compiled mappings of ``compiler.compile_mapping``).  Same keying
-    discipline as ``operators._cache.BoundedPersistCache`` —
-    (applicationId, ...), entries from stopped sessions evicted on
-    access, FIFO-bounded — but values are plain Python objects, so
-    eviction has nothing to unpersist.  ``invalidate(blocking=...)``
-    matches the persist cache's signature so bench harnesses clear
-    every cache uniformly.  A lock guards the entries: the
-    compiled-mapping memo is shared by the dashboard's request
-    threads."""
+    compiled mappings of ``compiler.compile_mapping``).  Keys start with
+    the applicationId; entries from stopped sessions are evicted on
+    access; the entries are FIFO-bounded.  Values are plain Python
+    objects, so eviction only forgets them —
+    ``operators._cache.BoundedPersistCache`` subclasses this and
+    overrides ``_drop`` to unpersist.  ``invalidate(blocking=...)``
+    takes the persist cache's signature so bench harnesses clear every
+    cache uniformly.  A lock guards the entries: the compiled-mapping
+    memo is shared by the dashboard's request threads."""
 
     def __init__(self, max_entries: int = 8) -> None:
         self._entries: dict[tuple, object] = {}
@@ -81,16 +81,22 @@ class BoundedDriverMemo:
         with self._lock:
             self._evict_other_sessions(key[0])
             while len(self._entries) >= self._max:
-                self._entries.pop(next(iter(self._entries)))
+                self._drop(next(iter(self._entries)))
             self._entries[key] = value
 
     def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
+        """Drop one entry (or all, when key is None).  ``blocking`` is
+        passed to ``_drop``: a persist cache then finishes its unpersists
+        before returning, so they do not contend with what runs next."""
         with self._lock:
-            if key is not None:
-                self._entries.pop(key, None)
-                return
-            self._entries.clear()
+            for k in list(self._entries) if key is None else [key]:
+                self._drop(k, blocking=blocking)
 
     def _evict_other_sessions(self, app_id: str) -> None:
         for k in [k for k in self._entries if k[0] != app_id]:
-            self._entries.pop(k, None)
+            self._drop(k)
+
+    def _drop(self, key: tuple, blocking: bool = False):
+        """Remove one entry and return its value; the caller holds the
+        lock."""
+        return self._entries.pop(key, None)

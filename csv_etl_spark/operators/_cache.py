@@ -19,18 +19,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from csv_etl_spark.driver_memo import BoundedDriverMemo, plan_key, register
+from csv_etl_spark.driver_memo import BoundedDriverMemo
 
 __all__ = ["BoundedDriverMemo", "BoundedPersistCache"]
 
 
-class BoundedPersistCache:
-    def __init__(self, max_entries: int = 8) -> None:
-        self._entries: dict[tuple, DataFrame] = {}
-        self._max = max_entries
-        register(self)
-
-    key_for = staticmethod(plan_key)
+class BoundedPersistCache(BoundedDriverMemo):
+    """``BoundedDriverMemo`` over persisted DataFrames: the same keying,
+    session eviction, FIFO bound and lock; every evicted or invalidated
+    frame is unpersisted."""
 
     def get_or_persist(self, df: DataFrame, *tags) -> DataFrame:
         """The get-or-persist idiom every multi-consumer projection uses,
@@ -51,44 +48,11 @@ class BoundedPersistCache:
         self.put(key, df)
         return df
 
-    def get(self, key: tuple | None) -> DataFrame | None:
-        if key is None:
-            return None
-        self._evict_other_sessions(key[0])
-        return self._entries.get(key)
-
-    def put(self, key: tuple | None, df: DataFrame) -> None:
-        if key is None:
-            return
-        self._evict_other_sessions(key[0])
-        while len(self._entries) >= self._max:
-            oldest = next(iter(self._entries))
-            self._drop(oldest)
-        self._entries[key] = df
-
-    def invalidate(self, key: tuple | None = None, blocking: bool = False) -> None:
-        """Drop one entry (or all, when key is None), unpersisting.
-
-        ``blocking=True`` forces the unpersist to complete before
-        returning — benchmark harnesses need this, because the default
-        async unpersist otherwise runs concurrently with (and contends
-        against) whatever is timed next.
-        """
-        if key is not None:
-            self._drop(key, blocking=blocking)
-            return
-        for k in list(self._entries):
-            self._drop(k, blocking=blocking)
-
-    def _evict_other_sessions(self, app_id: str) -> None:
-        for k in [k for k in self._entries if k[0] != app_id]:
+    def _drop(self, key: tuple, blocking: bool = False) -> None:
+        df = super()._drop(key)
+        if df is not None:
             # the owning session may already be stopped — unpersist
             # best-effort, always drop the reference
-            self._drop(k)
-
-    def _drop(self, key: tuple, blocking: bool = False) -> None:
-        df = self._entries.pop(key, None)
-        if df is not None:
             try:
                 df.unpersist(blocking=blocking)
             except Exception:

@@ -2,10 +2,13 @@
 (reference ROADMAP.md "scheduled conversions" — the last road-mapped
 feature family).
 
-``process_source`` is the one shared implementation of "run mapping M
-over every CSV in its source directory, gate on errors, account totals"
-— the dashboard's POST /process (app.py:161-231) and the scheduler both
-call it.
+``convert_file`` is the one per-file routine: line-numbered read, gated
+transform, ``<stem>_<destination id>.csv`` single-file write, bounded
+error sample.  The dashboard's single-file convert (app.py:625-677) calls
+it, and so does ``process_source``, the one shared implementation of "run
+mapping M over every CSV in its source directory, gate on errors, account
+totals" — the dashboard's POST /process (app.py:161-231) and the
+scheduler both call that.
 
 ``Scheduler`` is deliberately clock-injected and poll-driven: jobs carry
 a monotonic next-run deadline, ``run_pending()`` executes due jobs and
@@ -25,10 +28,39 @@ from typing import Callable
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.plans import transform
-from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
+from csv_etl_spark.plans import TransformResult, transform
+from csv_etl_spark.sources.csv_source import read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
-from csv_etl_spark.specs import SpecStore
+from csv_etl_spark.specs import ETLMapping, FileSpec, SpecStore
+
+
+def convert_file(
+    spark: SparkSession,
+    csv_file: Path,
+    mapping: ETLMapping,
+    source: FileSpec,
+    destination: FileSpec,
+    output_root: str | Path,
+    error_sample: int,
+    fail_on_error: bool = True,
+) -> tuple[TransformResult, Path]:
+    """One input file through the gated mapping into the single CSV
+    ``<output_root>/<destination dir>/<stem>_<destination id>.csv``
+    (reference app.py:194-212, 644-660).  Returns the result, whose
+    ``error_sample`` holds the first ``error_sample`` errors, and the
+    output path (written only when the gate passed)."""
+    out_file = (
+        Path(output_root) / destination.default_directory / f"{csv_file.stem}_{destination.id}.csv"
+    )
+    df = with_line_numbers(read_spec_csv(spark, str(csv_file), source))
+    result = transform(
+        df,
+        mapping,
+        fail_on_error=fail_on_error,
+        write=lambda out: write_single_csv_file(out, str(out_file)),
+        error_sample=error_sample,
+    )
+    return result, out_file
 
 
 def process_source(
@@ -56,35 +88,19 @@ def process_source(
         raise ValueError("invalid source or destination in mapping")
 
     input_path = Path(input_root) / source.default_directory
-    out_dir = Path(output_root) / destination.default_directory
     totals = {"success_count": 0, "skipped_count": 0, "error_count": 0}
     all_errors: list[dict] = []
     all_logs: list[str] = []
 
     for csv_file in sorted(input_path.glob("*.csv")):
-        out_file = out_dir / f"{csv_file.stem}_{destination.id}.csv"
-        df = with_line_numbers(read_spec_csv(spark, str(csv_file), source))
-        result = transform(
-            df,
-            mapping,
-            fail_on_error=fail_on_error,
-            line_col=LINE_COL,
-            write=lambda out, p=str(out_file): write_single_csv_file(out, p),
-            error_sample=error_cap - len(all_errors),
+        result, _ = convert_file(
+            spark, csv_file, mapping, source, destination, output_root,
+            error_cap - len(all_errors), fail_on_error,
         )
         totals["success_count"] += result.success_count
         totals["skipped_count"] += result.skipped_count
         totals["error_count"] += result.error_count
-        for d in result.error_sample:
-            all_errors.append(
-                {
-                    "file": csv_file.name,
-                    "line": d.get(LINE_COL),
-                    "field": d.get("field"),
-                    "message": d.get("message"),
-                    "value": str(d["source_value"]) if d.get("source_value") else "",
-                }
-            )
+        all_errors += ({"file": csv_file.name, **e} for e in result.error_sample)
         all_logs.extend(f"[{csv_file.name}] {m}" for m in result.log_messages)
 
     return {

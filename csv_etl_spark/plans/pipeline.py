@@ -14,7 +14,12 @@ replicated — at 100 TB that's a driver OOM; the errors DF + counters carry
 the same information.  The UI views the reference builds from its error
 list need only the first few errors: ``transform(error_sample=n)``
 collects them into ``TransformResult.error_sample`` from the cached pass,
-so they are served without re-reading the source.
+already in the reference's RowError JSON shape, so they are served without
+re-reading the source.
+
+``_line`` (``csv_source.LINE_COL``) is reserved like ``_errors``: when the
+frame has it, it is provenance, not a source column, and the transform
+carries it onto every output and error row.
 """
 
 from __future__ import annotations
@@ -26,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csv_etl_spark.compiler import ERRORS_COL, CompiledMapping, compile_mapping
+from csv_etl_spark.sources.csv_source import LINE_COL
+from csv_etl_spark.sources.sinks import write_spec_csv
 from csv_etl_spark.specs import ETLMapping
 
 
@@ -44,7 +51,8 @@ class TransformResult:
     input_count: int = 0  # rows read, before the skip rules
     output: DataFrame | None = None  # destination fields only
     errors: DataFrame | None = None  # field, message, source_value [, _line]
-    # first errors as row dicts, collected during the cached pass
+    # first errors as {line, field, message, value} (the reference's
+    # RowError JSON), collected during the cached pass
     error_sample: list[dict] = field(default_factory=list)
     output_written: bool = False
     log_messages: list[str] = field(default_factory=list)
@@ -53,18 +61,21 @@ class TransformResult:
         self.log_messages.append(message)
 
 
+def _compile(df: DataFrame, mapping: ETLMapping | dict) -> CompiledMapping:
+    return compile_mapping(mapping, [c for c in df.columns if c != LINE_COL])
+
+
 def run_mapping(
     df: DataFrame,
     mapping: ETLMapping | dict,
-    line_col: str | None = None,
     with_errors: bool = True,
     tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Lazy: compile + apply, no action.  Use for composing with further
     Spark transformations.  ``tables`` resolves ``lookup_table`` fields."""
-    source_columns = [c for c in df.columns if c != line_col]
-    compiled = compile_mapping(mapping, source_columns)
-    return compiled.apply(df, with_errors=with_errors, line_col=line_col, tables=tables)
+    return _compile(df, mapping).apply(
+        df, with_errors=with_errors, tables=tables, carry=[LINE_COL]
+    )
 
 
 def chain_mappings(
@@ -107,7 +118,6 @@ def transform(
     output_path: str | None = None,
     fail_on_error: bool = True,
     dry_run: bool = False,
-    line_col: str | None = None,
     write=None,
     error_sample: int = 0,
 ) -> TransformResult:
@@ -119,8 +129,9 @@ def transform(
     counter aggregation over the persisted transform output), so the source
     is never scanned a second time just to count it — at 100 TB the old
     separate ``df.count()`` was a full extra pass.  ``write`` is an optional
-    callable ``(DataFrame) -> None`` that replaces the default CSV write —
-    lets callers target parquet/Delta without changing gate semantics.
+    callable ``(DataFrame) -> None`` that replaces the default CSV write
+    (``sinks.write_spec_csv`` to ``output_path``) — lets callers target
+    parquet/Delta without changing gate semantics.
 
     ``error_sample`` > 0 collects that many first errors into
     ``result.error_sample`` from the persisted pass, and only when there
@@ -132,8 +143,7 @@ def transform(
     result = TransformResult()
     if isinstance(mapping, dict):
         mapping = ETLMapping.from_dict(mapping)
-    source_columns = [c for c in df.columns if c != line_col]
-    compiled: CompiledMapping = compile_mapping(mapping, source_columns)
+    compiled = _compile(df, mapping)
 
     mode = "Validating" if dry_run else "Transforming"
     result.add_log(f"{mode} with mapping: {mapping.name}")
@@ -148,7 +158,7 @@ def transform(
     projected = compiled.apply(
         df.observe(obs, F.count(F.lit(1)).alias("total")),
         with_errors=True,
-        line_col=line_col,
+        carry=[LINE_COL],
     )
     projected = projected.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -173,19 +183,25 @@ def transform(
         result.error_count = error_count
         result.error_row_count = error_rows
 
-        err_cols = [F.explode(F.col(ERRORS_COL)).alias("error")]
-        if line_col and line_col in projected.columns:
-            err_cols.insert(0, F.col(line_col))
-        errors_df = projected.select(*err_cols).select(
-            *([line_col] if line_col and line_col in projected.columns else []),
+        line = [LINE_COL] if LINE_COL in projected.columns else []
+        errors_df = projected.select(*line, F.explode(F.col(ERRORS_COL)).alias("error")).select(
+            *line,
             F.col("error.field").alias("field"),
             F.col("error.message").alias("message"),
             F.col("error.source_value").alias("source_value"),
         )
         result.errors = errors_df
         if error_sample > 0 and error_count > 0:
-            result.error_sample = [r.asDict() for r in errors_df.limit(error_sample).collect()]
-        output_df = projected.drop(ERRORS_COL, *( [line_col] if line_col else [] ))
+            result.error_sample = [
+                {
+                    "line": r[LINE_COL] if line else None,
+                    "field": r["field"],
+                    "message": r["message"],
+                    "value": r["source_value"] or "",
+                }
+                for r in errors_df.limit(error_sample).collect()
+            ]
+        output_df = projected.drop(ERRORS_COL, LINE_COL)
         result.output = output_df
 
         # V5/S6: gate — write only when not dry-run, rows exist, and either
@@ -199,7 +215,7 @@ def transform(
                 if write is not None:
                     write(output_df)
                 else:
-                    output_df.write.mode("overwrite").option("header", "true").csv(output_path)
+                    write_spec_csv(output_df, output_path)
                 result.output_written = True
                 result.add_log(f"Output written to {output_path or 'custom sink'}")
 
@@ -225,17 +241,16 @@ def transform(
 def validate(
     df: DataFrame,
     mapping: ETLMapping | dict,
-    line_col: str | None = None,
     error_sample: int = 0,
 ) -> TransformResult:
     """V3: dry-run — full transform pass, metrics + errors, no write
     (reference ``validate_file``, dynamic.py:259-265)."""
-    return transform(df, mapping, dry_run=True, line_col=line_col, error_sample=error_sample)
+    return transform(df, mapping, dry_run=True, error_sample=error_sample)
 
 
-def errors_by_line(errors_df: DataFrame, line_col: str = "_line") -> DataFrame:
+def errors_by_line(errors_df: DataFrame) -> DataFrame:
     """V4: ``{line: [errors…]}`` grouping for UI highlighting
     (reference ``app.py:560-567``)."""
-    return errors_df.groupBy(line_col).agg(
+    return errors_df.groupBy(LINE_COL).agg(
         F.collect_list(F.struct("field", "message", "source_value")).alias("errors")
     )

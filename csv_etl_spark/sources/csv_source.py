@@ -106,7 +106,17 @@ def with_line_numbers(df: DataFrame) -> DataFrame:
     partition, so the ordering reconstructs physical order.  This is a
     per-file shuffle: it exists for error-report/preview parity, NOT for the
     hot path — at 100 TB you process without line provenance (the mapping
-    plan itself never needs it)."""
+    plan itself never needs it).
+
+    ``_line`` is a reserved name: a frame that already has a column of that
+    name, in any case (Spark resolves names case-insensitively by default),
+    raises ``ValueError`` instead of losing the user's values to the line
+    numbers."""
+    clash = [c for c in df.columns if c.lower() == LINE_COL]
+    if clash:
+        raise ValueError(
+            f"column {clash[0]!r} uses the name {LINE_COL!r}, which is reserved for line numbers"
+        )
     w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
     return df.withColumn(LINE_COL, F.row_number().over(w) + F.lit(1))
 

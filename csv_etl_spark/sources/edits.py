@@ -64,9 +64,9 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> Data
     arbitrary one) so the output can never contain two rows per key."""
     if not keys:
         raise ValueError("merge_upsert needs at least one key column")
-    kept = target.join(updates.select(*keys), keys, "left_anti")
+    kept = target.join(updates.select(*map(ident_col, keys)), keys, "left_anti")
     deduped = updates.dropDuplicates(keys)
-    return kept.unionByName(deduped.select(*target.columns))
+    return kept.unionByName(deduped.select(*map(ident_col, target.columns)))
 
 
 def scd2_history(
@@ -90,24 +90,22 @@ def scd2_history(
     microsecond digits)."""
     from pyspark.sql import Window
 
-    tiebreak = [F.col(order_tiebreak)] if order_tiebreak else []
-    w = Window.partitionBy(key_col).orderBy(F.col(ts_col), *tiebreak)
+    key, ts, value = ident_col(key_col), ident_col(ts_col), ident_col(value_col)
+    tiebreak = [ident_col(order_tiebreak)] if order_tiebreak else []
+    w = Window.partitionBy(key).orderBy(ts, *tiebreak)
     changed = (
-        updates.withColumn("_prev", F.lag(value_col).over(w))
-        .filter(
-            F.col("_prev").isNull() | (F.col(value_col) != F.col("_prev"))
-        )
+        updates.withColumn("_prev", F.lag(value).over(w))
+        .filter(F.col("_prev").isNull() | (value != F.col("_prev")))
         .drop("_prev")
     )
-    w2 = Window.partitionBy(key_col).orderBy(F.col(ts_col), *tiebreak)
     # parquet timestamps load as TIMESTAMP_NTZ; unix_micros wants TIMESTAMP.
     # The cast interprets in the session zone, which session.py pins to UTC —
     # so the micros match DuckDB's epoch_us on the same naive value.
-    ts_utc = F.col(ts_col).cast("timestamp")
-    lead_ts = F.lead(ts_col).over(w2)
+    ts_utc = ts.cast("timestamp")
+    lead_ts = F.lead(ts).over(w)
     return changed.select(
-        F.col(key_col),
-        F.col(value_col),
+        key,
+        value,
         F.unix_micros(ts_utc).alias("valid_from_us"),
         F.unix_micros(lead_ts.cast("timestamp")).alias("valid_to_us"),
         lead_ts.isNull().alias("is_current"),
@@ -136,14 +134,15 @@ def snapshot_diff(
     if compare_cols is None:
         shared = [c for c in old.columns if c in set(new.columns)]
         compare_cols = [c for c in shared if c not in set(keys)]
-    o = old.select(*keys, *[F.col(c).alias(f"old_{c}") for c in compare_cols],
+    key_cols = [ident_col(k) for k in keys]
+    o = old.select(*key_cols, *[ident_col(c).alias(f"old_{c}") for c in compare_cols],
                    F.lit(True).alias("_in_old"))
-    n = new.select(*keys, *[F.col(c).alias(f"new_{c}") for c in compare_cols],
+    n = new.select(*key_cols, *[ident_col(c).alias(f"new_{c}") for c in compare_cols],
                    F.lit(True).alias("_in_new"))
     joined = o.join(n, keys, "full_outer")
     same = F.lit(True)
     for c in compare_cols:
-        same = same & F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
+        same = same & ident_col(f"old_{c}").eqNullSafe(ident_col(f"new_{c}"))
     status = (
         F.when(F.col("_in_old").isNull(), F.lit("added"))
         .when(F.col("_in_new").isNull(), F.lit("removed"))
@@ -151,8 +150,8 @@ def snapshot_diff(
         .otherwise(F.lit("changed"))
     )
     return joined.select(
-        *keys,
+        *key_cols,
         status.alias("status"),
-        *[F.col(f"old_{c}") for c in compare_cols],
-        *[F.col(f"new_{c}") for c in compare_cols],
+        *[ident_col(f"old_{c}") for c in compare_cols],
+        *[ident_col(f"new_{c}") for c in compare_cols],
     )

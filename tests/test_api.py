@@ -143,6 +143,30 @@ def test_backtick_header_preview_edit_convert(env):
     assert out == ["date,symbol", "15.01.2024,AAPL", "16.01.2024,TSLA"]
 
 
+def test_reserved_line_column_is_400(env):
+    """``_line`` is the engine's line-number column: a file whose header
+    has one is refused by every per-file endpoint with a JSON 400, and the
+    file is left byte-identical (an edit once rewrote it without the
+    user's ``_line`` column)."""
+    client, tmp_path, _ = env
+    f = tmp_path / "in" / "s1" / "l.csv"
+    f.write_bytes(b"Date,_line,Ticker\n2024-01-15,x,AAPL\n2024-01-16,y,MSFT\n")
+    before = f.read_bytes()
+    for call in (
+        lambda: client.get("/api/preview/src1/l.csv"),
+        lambda: client.get("/api/preview/src1/l.csv?mapping_id=m1"),
+        lambda: client.post("/api/preview/src1/l.csv/update",
+                            json={"line": 2, "row": {"Date": "2024-01-14"}}),
+        lambda: client.post("/api/preview/src1/l.csv/convert", json={"mapping_id": "m1"}),
+        lambda: client.post("/api/process/src1", json={"mapping_id": "m1"}),
+    ):
+        r = call()
+        assert r.status_code == 400, r.get_data(as_text=True)[:300]
+        assert "'_line'" in r.get_json()["error"]
+    assert f.read_bytes() == before
+    assert not (tmp_path / "out" / "d1" / "l_dst1.csv").exists()
+
+
 def test_process_bulk(env):
     client, tmp_path, _ = env
     (tmp_path / "in" / "s1" / "b.csv").write_text(

@@ -80,6 +80,33 @@ def test_cli_dynamic_mode(spark, workdir):
     assert out_dir.exists()
 
 
+def test_cli_dynamic_output_keeps_cell_spaces(spark, tmp_path):
+    """``transform(output_path=...)`` writes through the package's one CSV
+    writer, which keeps a cell's surrounding spaces like the reference's
+    ``csv`` writer (Spark's write default trims them)."""
+    cfg = tmp_path / "config"
+    cfg.mkdir()
+    (cfg / "sources.json").write_text(json.dumps({
+        "s1": {"id": "s1", "name": "s1", "columns": [{"name": "Name", "type": "string"}]}}))
+    (cfg / "destinations.json").write_text(json.dumps({}))
+    (cfg / "mappings.json").write_text(json.dumps({
+        "m1": {"id": "m1", "name": "m1", "source_id": "s1", "destination_id": "",
+               "filter_rules": [],
+               "field_mappings": [
+                   {"destination_field": "name", "source_field": "Name",
+                    "transform_type": "direct", "transform_config": {}}]}}))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "a.csv").write_text("Name\n  padded  \nplain\n")
+    out_dir = tmp_path / "out"
+    assert cli.process_dynamic(spark, str(cfg), "m1", str(in_dir), str(out_dir)) == 2
+    cells = []
+    for part in sorted(out_dir.glob("part-*.csv")):
+        with open(part, newline="") as f:
+            cells += [r["name"] for r in csv.DictReader(f)]
+    assert sorted(cells) == ["  padded  ", "plain"]
+
+
 def test_gated_stream_writer(spark, tmp_path):
     # events stream with deliberately corrupt ts on 'error' rows
     src_dir = tmp_path / "stream_in"

@@ -82,7 +82,7 @@ def _reference_results(mapping: dict, rows: list[list[str]]):
 def _spark_results(spark, mapping: dict, rows: list[list[str]]):
     df = spark.createDataFrame([tuple(r) + (i + 2,) for i, r in enumerate(rows)], COLUMNS + ["_line"])
     compiled = compile_mapping(mapping, COLUMNS)
-    result = compiled.apply(df, with_errors=True, line_col="_line").orderBy("_line")
+    result = compiled.apply(df, with_errors=True, carry=["_line"]).orderBy("_line")
     out = {}
     for r in result.collect():
         d = r.asDict(recursive=True)

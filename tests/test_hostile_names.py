@@ -20,7 +20,12 @@ from csv_etl_spark.local import local_values_frame
 from csv_etl_spark.operators.profile import profile_table
 from csv_etl_spark.operators.stats import pairwise_corr
 from csv_etl_spark.plans.validation import validate_against_spec
-from csv_etl_spark.sources.edits import update_csv_row
+from csv_etl_spark.sources.edits import (
+    merge_upsert,
+    scd2_history,
+    snapshot_diff,
+    update_csv_row,
+)
 from csv_etl_spark.sources.json_source import read_spec_json
 from csv_etl_spark.specs import ColumnSpec, ColumnType, FileSpec
 
@@ -160,6 +165,47 @@ def test_update_csv_row_hostile_names(spark, tmp_path):
         update_csv_row(spark, str(path), 3, {n[0]: "new", n[6]: "edited"})
         lines = path.read_text().splitlines()
         return spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "i int, line string")
+
+    _assert_same(run)
+
+
+# rows of _frame with new values: row 1 changed, row 2 unchanged, a new key
+UPDATES = [
+    ("u1", "x", "2024-01-15T10:30:00", "1", "x", "30", "w", "p"),
+    ("v2", "y", "bad", "2", "y", "junk", "", "SKIP"),
+    ("u5", "n", "2024-03-01T00:00:00", "5", "x", "1", "w", "s"),
+]
+
+
+def test_merge_upsert_hostile_names(spark):
+    def run(n):
+        updates = spark.createDataFrame(UPDATES, n).select(*[F.col(_ddl(c)) for c in reversed(n)])
+        return merge_upsert(_frame(spark, n), updates, [n[1], n[3]])
+
+    _assert_same(run)
+
+
+def test_snapshot_diff_hostile_names(spark):
+    def run(n):
+        new = spark.createDataFrame(UPDATES, n)
+        return snapshot_diff(_frame(spark, n), new, [n[1], n[3]])
+
+    _assert_same(run)
+
+
+def test_scd2_history_hostile_names(spark):
+    from datetime import datetime
+
+    rows = [
+        ("k1", datetime(2024, 1, 1), "v", 1), ("k1", datetime(2024, 1, 2), "v", 1),
+        ("k1", datetime(2024, 1, 3), "w", 1), ("k2", datetime(2024, 1, 1), "v", 2),
+        ("k2", datetime(2024, 1, 1), "w", 1),
+    ]
+
+    def run(n):
+        schema = (f"{_ddl(n[1])} string, {_ddl(n[0])} timestamp, "
+                  f"{_ddl(n[2])} string, {_ddl(n[6])} int")
+        return scd2_history(spark.createDataFrame(rows, schema), n[1], n[0], n[2], n[6])
 
     _assert_same(run)
 

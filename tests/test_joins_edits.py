@@ -124,7 +124,7 @@ def test_errors_by_line_v4(spark, tmp_path):
         ],
     }
     df = with_line_numbers(read_spec_csv(spark, str(d)))
-    result = transform(df, mapping, dry_run=True, line_col=LINE_COL)
+    result = transform(df, mapping, dry_run=True)
     grouped = {r[LINE_COL]: sorted(e["field"] for e in r["errors"])
                for r in errors_by_line(result.errors).collect()}
     assert grouped == {2: ["date"], 3: ["date", "type"]}

@@ -51,7 +51,7 @@ def test_random_mapping_parity(spark, mapping, rows):
     )
     compiled = compile_mapping(mapping, COLS)
     got = {}
-    for out_row in compiled.apply(df, with_errors=True, line_col="_line").collect():
+    for out_row in compiled.apply(df, with_errors=True, carry=["_line"]).collect():
         d = out_row.asDict(recursive=True)
         line = d.pop("_line")
         errs = {e["field"] for e in d.pop(ERRORS_COL)}

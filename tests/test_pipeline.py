@@ -40,7 +40,7 @@ def test_transform_counts_and_gate(spark, tmp_path):
     out_dir = str(tmp_path / "out")
 
     # fail_on_error=True: 2 errors (bad date line 4, lookup miss line 5) → no write
-    r = transform(df, MAPPING, output_path=out_dir, fail_on_error=True, line_col=LINE_COL)
+    r = transform(df, MAPPING, output_path=out_dir, fail_on_error=True)
     assert (r.success_count, r.skipped_count, r.error_count) == (1, 1, 2)
     assert not r.output_written
     assert not os.path.exists(out_dir)
@@ -53,7 +53,7 @@ def test_transform_counts_and_gate(spark, tmp_path):
     assert ("type", 5, "MYSTERY") in errs
 
     # fail_on_error=False: errored rows still written (V5)
-    r2 = transform(df, MAPPING, output_path=out_dir, fail_on_error=False, line_col=LINE_COL)
+    r2 = transform(df, MAPPING, output_path=out_dir, fail_on_error=False)
     assert r2.output_written
     import glob
     files = glob.glob(out_dir + "/*.csv")
@@ -65,7 +65,7 @@ def test_transform_counts_and_gate(spark, tmp_path):
 
 def test_validate_is_dry_run(spark, tmp_path):
     df = with_line_numbers(read_spec_csv(spark, _write_csv(tmp_path)))
-    r = validate(df, MAPPING, line_col=LINE_COL)
+    r = validate(df, MAPPING)
     assert (r.success_count, r.skipped_count, r.error_count) == (1, 1, 2)
     assert r.output is not None and not r.output_written
 
