@@ -381,7 +381,8 @@ def create_app(
 
         try:
             result, out_file = convert_file(
-                spark, path, mapping, source, destination, out_root, CONVERT_ERROR_CAP
+                read_spec_csv(spark, str(path), source),
+                path, mapping, destination, out_root, CONVERT_ERROR_CAP,
             )
         except ValueError as exc:  # a header column named like the reserved _line
             return jsonify({"error": str(exc)}), 400

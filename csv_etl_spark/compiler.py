@@ -331,6 +331,13 @@ class CompiledMapping:
             )
         return self._derived["errors"]
 
+    def destination_columns(self) -> list[Column]:
+        """The destination fields, each aliased to its name.  Built once
+        per compiled mapping: each ``alias`` is a py4j round trip."""
+        if "destinations" not in self._derived:
+            self._derived["destinations"] = [f.value.alias(f.name) for f in self.fields]
+        return self._derived["destinations"]
+
     def error_count_column(self) -> Column:
         """Per-row count of field errors — a codegen-friendly sum of
         when-clauses.  ``size(errors_column())`` is semantically identical
@@ -392,7 +399,7 @@ class CompiledMapping:
                 "left",
             )
 
-        cols = [f.value.alias(f.name) for f in self.fields]
+        cols = list(self.destination_columns())
         if with_errors == "count":
             # cheap path: only the per-row error count, no array materialized
             cols.append(self.error_count_column().alias(ERRORS_COL))

@@ -2,9 +2,9 @@
 (reference ROADMAP.md "scheduled conversions" — the last road-mapped
 feature family).
 
-``convert_file`` is the one per-file routine: line-numbered read, gated
-transform, ``<stem>_<destination id>.csv`` single-file write, bounded
-error sample.  The dashboard's single-file convert (app.py:625-677) calls
+``convert_file`` is the one per-file routine: line numbers on the file's
+scan, gated transform, ``<stem>_<destination id>.csv`` single-file write,
+bounded error sample.  The dashboard's single-file convert (app.py:625-677) calls
 it, and so does ``process_source``, the one shared implementation of "run
 mapping M over every CSV in its source directory, gate on errors, account
 totals" — the dashboard's POST /process (app.py:161-231) and the
@@ -26,25 +26,25 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from csv_etl_spark.plans import TransformResult, transform
-from csv_etl_spark.sources.csv_source import read_spec_csv, with_line_numbers
+from csv_etl_spark.sources.csv_source import check_line_column, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
 from csv_etl_spark.specs import ETLMapping, FileSpec, SpecStore
 
 
 def convert_file(
-    spark: SparkSession,
+    scan: DataFrame,
     csv_file: Path,
     mapping: ETLMapping,
-    source: FileSpec,
     destination: FileSpec,
     output_root: str | Path,
     error_sample: int,
     fail_on_error: bool = True,
 ) -> tuple[TransformResult, Path]:
-    """One input file through the gated mapping into the single CSV
+    """One input file, read as ``scan`` (its ``read_spec_csv`` frame),
+    through the gated mapping into the single CSV
     ``<output_root>/<destination dir>/<stem>_<destination id>.csv``
     (reference app.py:194-212, 644-660).  Returns the result, whose
     ``error_sample`` holds the first ``error_sample`` errors, and the
@@ -52,7 +52,7 @@ def convert_file(
     out_file = (
         Path(output_root) / destination.default_directory / f"{csv_file.stem}_{destination.id}.csv"
     )
-    df = with_line_numbers(read_spec_csv(spark, str(csv_file), source))
+    df = with_line_numbers(scan)
     result = transform(
         df,
         mapping,
@@ -78,6 +78,10 @@ def process_source(
 
     Returns the reference's accounting shape: success/skipped/error
     totals, first ``error_cap`` errors with file context, last-100 logs.
+
+    Every file's header is checked before the first file converts, so a
+    file with a reserved ``_line`` column fails the run (a ``ValueError``
+    naming the file) before any output is written.
     """
     mapping = store.get_mapping(mapping_id)
     if not mapping:
@@ -92,9 +96,17 @@ def process_source(
     all_errors: list[dict] = []
     all_logs: list[str] = []
 
+    scans = {}
     for csv_file in sorted(input_path.glob("*.csv")):
+        scans[csv_file] = read_spec_csv(spark, str(csv_file), source)
+        try:
+            check_line_column(scans[csv_file].columns)
+        except ValueError as exc:
+            raise ValueError(f"{csv_file.name}: {exc}") from None
+
+    for csv_file, scan in scans.items():
         result, _ = convert_file(
-            spark, csv_file, mapping, source, destination, output_root,
+            scan, csv_file, mapping, destination, output_root,
             error_cap - len(all_errors), fail_on_error,
         )
         totals["success_count"] += result.success_count

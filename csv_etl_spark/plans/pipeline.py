@@ -6,16 +6,17 @@ Reference model (``dynamic.py:259-348``): interpret mapping per row, collect
 ``fail_on_error`` and any error occurred.
 
 Scale redesign (SURVEY §2.8/§4): errors are DATA (a DataFrame), counters
-come from one aggregation pass over the persisted transform output (the
-fail-on-error gate needs the error count before writing anyway — the
-reference buffers the whole output in RAM for the same reason; we persist
-to executor storage instead).  Per-row log lines (V6) are deliberately NOT
-replicated — at 100 TB that's a driver OOM; the errors DF + counters carry
-the same information.  The UI views the reference builds from its error
-list need only the first few errors: ``transform(error_sample=n)``
-collects them into ``TransformResult.error_sample`` from the cached pass,
-already in the reference's RowError JSON shape, so they are served without
-re-reading the source.
+are observed on the one job that materializes the persisted transform
+output (the fail-on-error gate needs the error count before writing
+anyway — the reference buffers the whole output in RAM for the same
+reason; we persist to executor storage instead).  Per-row log lines (V6)
+are deliberately NOT replicated — at 100 TB that's a driver OOM; the
+errors DF + counters carry the same information.  The UI views the
+reference builds from its error list need only the first few errors:
+``transform(error_sample=n)`` collects them into
+``TransformResult.error_sample`` from the cached pass, already in the
+reference's RowError JSON shape, so they are served without re-reading
+the source.
 
 ``_line`` (``csv_source.LINE_COL``) is reserved like ``_errors``: when the
 frame has it, it is provenance, not a source column, and the transform
@@ -124,14 +125,15 @@ def transform(
     """Reference ``transform_file``/``validate_file`` semantics
     (``dynamic.py:267-348``) over a DataFrame.
 
-    ONE scan computes everything: the input-row total rides along as an
-    ``observe`` metric on the source (collected as a side-effect of the
-    counter aggregation over the persisted transform output), so the source
-    is never scanned a second time just to count it — at 100 TB the old
-    separate ``df.count()`` was a full extra pass.  ``write`` is an optional
-    callable ``(DataFrame) -> None`` that replaces the default CSV write
-    (``sinks.write_spec_csv`` to ``output_path``) — lets callers target
-    parquet/Delta without changing gate semantics.
+    ONE scan computes everything: one noop write materializes the
+    persisted transform output, and the input-row total (observed on the
+    source) and the kept/error counters (observed on the output) ride
+    along on that job as ``observe`` metrics — no separate count or
+    aggregate pass.  The error sample and the gated write then read the
+    cache.  ``write`` is an optional callable ``(DataFrame) -> None`` that
+    replaces the default CSV write (``sinks.write_spec_csv`` to
+    ``output_path``) — lets callers target parquet/Delta without changing
+    gate semantics.
 
     ``error_sample`` > 0 collects that many first errors into
     ``result.error_sample`` from the persisted pass, and only when there
@@ -151,26 +153,30 @@ def transform(
         f"Field mappings: {len(mapping.field_mappings)}, Filter rules: {len(mapping.filter_rules)}"
     )
 
-    # CollectMetrics sits UPSTREAM of the mapping's skip-filter, so it sees
-    # every input row; it cannot be optimized away because the filter is
-    # never a constant (rules always reference source columns).
-    obs = Observation()
+    # The input total is observed UPSTREAM of the mapping's skip-filter,
+    # so it sees every input row (it cannot be optimized away: the filter
+    # is never a constant, rules always reference source columns); the
+    # counters are observed on the projected rows.  Both fill on the one
+    # job that materializes the persisted frame.
+    total_obs, counts_obs = Observation(), Observation()
+    n_errors = F.size(F.col(ERRORS_COL))
     projected = compiled.apply(
-        df.observe(obs, F.count(F.lit(1)).alias("total")),
+        df.observe(total_obs, F.count(F.lit(1)).alias("total")),
         with_errors=True,
         carry=[LINE_COL],
+    ).observe(
+        counts_obs,
+        F.count(F.lit(1)).alias("kept"),
+        F.coalesce(F.sum(n_errors), F.lit(0)).alias("errors"),
+        F.coalesce(F.sum(F.when(n_errors > 0, 1).otherwise(0)), F.lit(0)).alias("error_rows"),
     )
     projected = projected.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        agg = projected.agg(
-            F.count(F.lit(1)).alias("kept"),
-            F.coalesce(F.sum(F.size(F.col(ERRORS_COL))), F.lit(0)).alias("errors"),
-            F.coalesce(
-                F.sum(F.when(F.size(F.col(ERRORS_COL)) > 0, 1).otherwise(0)), F.lit(0)
-            ).alias("error_rows"),
-        ).collect()[0]
-        kept, error_count, error_rows = agg["kept"], int(agg["errors"]), int(agg["error_rows"])
-        total = int(obs.get["total"])
+        projected.write.format("noop").mode("overwrite").save()
+        counts = counts_obs.get
+        kept, error_count = counts["kept"], int(counts["errors"])
+        error_rows = int(counts["error_rows"])
+        total = int(total_obs.get["total"])
         result.input_count = total
 
         if not mapping.field_mappings:
@@ -184,14 +190,20 @@ def transform(
         result.error_row_count = error_rows
 
         line = [LINE_COL] if LINE_COL in projected.columns else []
-        errors_df = projected.select(*line, F.explode(F.col(ERRORS_COL)).alias("error")).select(
+        errors_df = projected.select(
+            *line, F.posexplode(F.col(ERRORS_COL)).alias("_pos", "error")
+        ).select(
             *line,
+            "_pos",
             F.col("error.field").alias("field"),
             F.col("error.message").alias("message"),
             F.col("error.source_value").alias("source_value"),
         )
-        result.errors = errors_df
+        result.errors = errors_df.drop("_pos")
         if error_sample > 0 and error_count > 0:
+            # the first errors in file order; a top-n over the cache is one
+            # job, where limit() would scan the partitions a few at a time
+            first = errors_df.orderBy(LINE_COL, "_pos") if line else errors_df
             result.error_sample = [
                 {
                     "line": r[LINE_COL] if line else None,
@@ -199,7 +211,7 @@ def transform(
                     "message": r["message"],
                     "value": r["source_value"] or "",
                 }
-                for r in errors_df.limit(error_sample).collect()
+                for r in first.limit(error_sample).collect()
             ]
         output_df = projected.drop(ERRORS_COL, LINE_COL)
         result.output = output_df

@@ -14,10 +14,11 @@ reference's own typed path + UI treat them as real.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -96,29 +97,89 @@ def read_spec_csv(
     return reader.csv(path)
 
 
-def with_line_numbers(df: DataFrame) -> DataFrame:
-    """S10: per-file physical line numbers, data starting at 2 (header = 1),
-    matching ``enumerate(reader, start=2)`` (``dynamic.py:302``).
-
-    Implemented as row_number per input file ordered by
-    ``monotonically_increasing_id`` — within one CSV file Spark assigns
-    splits to partitions in file order and mono-ids are ascending per
-    partition, so the ordering reconstructs physical order.  This is a
-    per-file shuffle: it exists for error-report/preview parity, NOT for the
-    hot path — at 100 TB you process without line provenance (the mapping
-    plan itself never needs it).
-
-    ``_line`` is a reserved name: a frame that already has a column of that
-    name, in any case (Spark resolves names case-insensitively by default),
-    raises ``ValueError`` instead of losing the user's values to the line
-    numbers."""
-    clash = [c for c in df.columns if c.lower() == LINE_COL]
+def check_line_column(columns: list[str]) -> None:
+    """``_line`` is a reserved name: raise ``ValueError`` when ``columns``
+    has a column of that name, in any case (Spark resolves names
+    case-insensitively by default), instead of losing the user's values to
+    the line numbers."""
+    clash = [c for c in columns if c.lower() == LINE_COL]
     if clash:
         raise ValueError(
             f"column {clash[0]!r} uses the name {LINE_COL!r}, which is reserved for line numbers"
         )
-    w = Window.partitionBy(F.input_file_name()).orderBy(F.monotonically_increasing_id())
-    return df.withColumn(LINE_COL, F.row_number().over(w) + F.lit(1))
+
+
+def planned_partitions(df: DataFrame) -> int:
+    """The number of partitions Spark plans for ``df``.  Planning builds
+    the RDD without running a job for a plan with no shuffle, such as a
+    CSV scan and projections over it."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def with_line_numbers(df: DataFrame) -> DataFrame:
+    """S10: per-file physical line numbers, data starting at 2 (header = 1),
+    matching ``enumerate(reader, start=2)`` (``dynamic.py:302``).  ``df``
+    must be a CSV scan (``read_spec_csv``), with nothing applied to it.
+
+    ``monotonically_increasing_id`` numbers each partition's rows in read
+    order from ``partition << 33``, and a partition reads its splits (file
+    chunks) one after another, so within a split the id minus the split's
+    first id is the row's index in the split.  ``_line`` adds the rows of
+    the file's earlier splits and 2.  Those per-split offsets come from one
+    small aggregate (count and first id per file and split), the
+    ``zipWithIndex`` technique; a scan that Spark plans as one file in one
+    partition (read off the planned partitions, no job) needs none, and
+    its ``_line`` is the id plus 2.  No shuffle and no sort: the line
+    numbers ride on the scan's own split-parallel pass.
+
+    Each row finds its split's offset in a hash table that is one literal
+    in the plan (``array<map<string,bigint>>``, bucket = Spark's ``hash``
+    of the split key), so the expression has the same size for one split
+    or thousands and a row costs one bucket probe.  The offsets aggregate
+    keeps the scan parallel: partial counts per partition, one row per
+    split shuffled (two jobs under AQE); a one-partition scan is one task
+    either way and aggregates in place, in one job.  Line provenance
+    serves error reports and previews; the mapping plan itself never
+    needs it.
+
+    Raises ``ValueError`` when the CSV already has a ``_line`` column (see
+    ``check_line_column``)."""
+    check_line_column(df.columns)
+    n_parts = planned_partitions(df)
+    if n_parts == 1 and len(df.inputFiles()) == 1:
+        return df.withColumn(LINE_COL, (F.monotonically_increasing_id() + 2).cast("int"))
+    # the id gets its own projection: the offsets aggregate and the line
+    # numbers must see the same ids, and a nondeterministic expression is
+    # evaluated once per row
+    ids = df.withColumn(LINE_COL, F.monotonically_increasing_id())
+    split = F.concat_ws("@", F.input_file_name(), F.input_file_block_start().cast("string"))
+    stats = ids.select(
+        F.input_file_name().alias("file"),
+        F.input_file_block_start().alias("start"),
+        split.alias("split"),
+        F.hash(split).alias("hash"),
+        F.col(LINE_COL).alias("id"),
+    )
+    if n_parts == 1:
+        stats = stats.coalesce(1)  # the one partition aggregates without a shuffle
+    splits = (
+        stats.groupBy("file", "start", "split", "hash")
+        .agg(F.count(F.lit(1)).alias("rows"), F.min("id").alias("first_id"))
+        .collect()
+    )
+    # each split's ids are one run starting at first_id; its offset maps
+    # the run onto the file's line numbers
+    buckets: list[dict[str, int]] = [{} for _ in range(max(len(splits), 1))]
+    file, before = None, 0
+    for s in sorted(splits, key=lambda s: (s["file"], s["start"])):
+        if s["file"] != file:
+            file, before = s["file"], 0
+        buckets[s["hash"] % len(buckets)][s["split"]] = before + 2 - s["first_id"]
+        before += s["rows"]
+    table = F.from_json(F.lit(json.dumps(buckets)), "array<map<string,bigint>>")
+    bucket = F.element_at(table, F.pmod(F.hash(split), F.lit(len(buckets))) + 1)
+    offset = F.element_at(bucket, split)
+    return ids.withColumn(LINE_COL, (F.col(LINE_COL) + offset).cast("int"))
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -11,6 +11,7 @@ import json
 import pytest
 
 from csv_etl_spark.api import create_app
+from csv_etl_spark.sources.csv_source import read_spec_csv
 from csv_etl_spark.specs import SpecStore
 from tests.conftest import newest_job_id
 
@@ -183,6 +184,21 @@ def test_process_bulk(env):
     # fail_on_error gates a.csv, b.csv converts
     assert not (tmp_path / "out" / "d1" / "a_dst1.csv").exists()
     assert (tmp_path / "out" / "d1" / "b_dst1.csv").exists()
+
+
+def test_process_checks_every_header_first(env):
+    """A bulk run is all-or-nothing on headers: a later file with a
+    reserved ``_line`` column fails the request with a 400 naming that
+    file before any earlier file is converted."""
+    client, tmp_path, _ = env
+    (tmp_path / "in" / "s1" / "a.csv").write_text("Date,Ticker,Type\n2024-01-15,AAPL,BUY\n")
+    (tmp_path / "in" / "s1" / "l.csv").write_text("Date,_line,Ticker\n2024-01-15,x,AAPL\n")
+    r = client.post("/api/process/src1", json={"mapping_id": "m1"})
+    assert r.status_code == 400
+    error = r.get_json()["error"]
+    assert "l.csv" in error and "'_line'" in error
+    out = tmp_path / "out"
+    assert not out.exists() or not any(p.is_file() for p in out.rglob("*"))
 
 
 def test_mapping_save_preserves_filter_rules(env):
@@ -473,25 +489,27 @@ def test_saved_mapping_recompiles_between_previews(env):
     assert body["errors_by_line"] == {}
 
 
-def test_request_job_budget(spark, env):
-    """Spark jobs per dashboard request, read from the status store (UI
-    off).  A per-request header job, a separate preview count(), an error
-    rescan or a sampling sort for the single-file write would break a pin.
+def _request_jobs(spark, client) -> list[list[str]]:
+    """The call sites of the Spark jobs each dashboard request launches,
+    read from the status store (UI off): preview, process, edit, convert.
     Each status is pinned too, so every count is of a request that did
     the full work: the edit leaves line 3's bad date in place, so the
     convert runs its gate and reports that one error."""
-    client, _, _ = env
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
 
     def jobs(call, status: int):
         before = newest_job_id(spark)
         r = call()
         assert r.status_code == status, r.get_data(as_text=True)[:300]
-        return newest_job_id(spark) - before, r.get_json()
+        after = newest_job_id(spark)
+        return [store.job(i).name() for i in range(before + 1, after + 1)], r.get_json()
 
     preview, body = jobs(lambda: client.get("/api/preview/src1/a.csv?mapping_id=m1"), 200)
     assert body["validation"]["error_count"] == 1 and body["total"] == 3
+    assert list(body["errors_by_line"]) == ["3"]
     process, body = jobs(lambda: client.post("/api/process/src1", json={"mapping_id": "m1"}), 200)
-    assert body["error_count"] == 1 and len(body["errors"]) == 1
+    assert body["error_count"] == 1 and [e["line"] for e in body["errors"]] == [3]
     edit, _ = jobs(lambda: client.post(
         "/api/preview/src1/a.csv/update", json={"line": 2, "row": {"Date": "2024-01-14"}}
     ), 200)
@@ -500,5 +518,40 @@ def test_request_job_budget(spark, env):
     )
     assert body["message"] == "Conversion failed with 1 errors"
     assert [e["line"] for e in body["errors"]] == [3]
-    counts = (preview, process, edit, convert)
-    assert all(n <= cap for n, cap in zip(counts, (6, 4, 3, 4))), counts
+    return [preview, process, edit, convert]
+
+
+def _assert_within(counts: list[list[str]], caps: tuple[int, ...]) -> None:
+    over = {
+        name: sites
+        for name, sites, cap in zip(("preview", "process", "edit", "convert"), counts, caps)
+        if len(sites) > cap
+    }
+    assert not over, f"over the job budget {caps}: {over}"
+
+
+def test_request_job_budget(spark, env):
+    """Spark jobs per dashboard request on a file Spark reads as one
+    split.  A per-request header job, a separate preview count(), a
+    counter aggregate after the persist, an error rescan, a line-number
+    shuffle or a sampling sort for the single-file write would break a
+    pin; the failure lists each request's job call sites."""
+    client, _, _ = env
+    _assert_within(_request_jobs(spark, client), (3, 2, 2, 2))
+
+
+def test_request_job_budget_split_file(spark, env):
+    """The same requests on a file Spark splits into several partitions.
+    Each request may add the line-number offsets aggregate, which is two
+    jobs under AQE (partial counts per partition, one row per split
+    shuffled, so the scan stays parallel); the edit's single-file write
+    may add the shuffle that gathers the partitions into one."""
+    client, tmp_path, _ = env
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
+    try:
+        scan = read_spec_csv(spark, str(tmp_path / "in" / "s1" / "a.csv"))
+        assert scan.rdd.getNumPartitions() >= 3
+        counts = _request_jobs(spark, client)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    _assert_within(counts, (5, 4, 4, 4))
