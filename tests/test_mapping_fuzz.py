@@ -3,24 +3,26 @@ transform types, all 7 filter operators, random configs) and random rows,
 runs both the reference interpreter and the compiled Spark plan, and
 asserts identical (skip, value, error-fields) behavior row for row.  The
 strategies, and what they exclude by construction, are in
-``tests/mapping_strategies.py``.
+``tests/mapping_strategies.py``.  Skips where the reference checkout
+(``tests/reference.py``) is absent.
 """
 
 from __future__ import annotations
 
 import math
-import sys
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/reference/src")
+from csv_etl_spark.compiler import ERRORS_COL, compile_mapping
+from tests.mapping_strategies import COLS, mapping_st, row
+from tests.reference import AVAILABLE, requires_reference
 
-from converter.transformers.dynamic import DynamicTransformer  # noqa: E402
+if AVAILABLE:
+    from converter.transformers.dynamic import DynamicTransformer
 
-from csv_etl_spark.compiler import ERRORS_COL, compile_mapping  # noqa: E402
+pytestmark = requires_reference  # every test here runs the reference interpreter
 
-from tests.mapping_strategies import COLS, mapping_st, row  # noqa: E402
 
 def _agree(ref_val, spark_val) -> bool:
     if ref_val is None or spark_val is None:

@@ -2,8 +2,9 @@
 hypothesis generates adversarial inputs (valid dates in every supported
 format, money with random symbols/commas/whitespace, junk), and each value
 runs through BOTH the reference's pure-Python parser (imported read-only
-from /root/reference) and our compiled Column expression — results must
-agree value-for-value.
+from the reference checkout, see ``tests/reference.py``; the tests skip where
+it is absent) and our compiled Column expression — results must agree
+value-for-value.
 
 Each hypothesis example is a BATCH of strings (one Spark job per example,
 not per string) to keep runtime sane."""
@@ -11,20 +12,13 @@ not per string) to keep runtime sane."""
 from __future__ import annotations
 
 import math
-import sys
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-sys.path.insert(0, "/root/reference/src")
-
-from converter.transformers.revolut_crypto import RevolutCryptoTransformer  # noqa: E402
-from converter.transformers.revolut_stocks import RevolutStocksTransformer  # noqa: E402
-
-from csv_etl_spark.functions.parsing import (  # noqa: E402
+from csv_etl_spark.functions.parsing import (
     CRYPTO_DATE_FORMATS,
     STOCKS_DATE_FORMATS,
     detect_currency,
@@ -33,6 +27,13 @@ from csv_etl_spark.functions.parsing import (  # noqa: E402
     parse_money,
     parse_price,
 )
+from tests.reference import AVAILABLE, requires_reference
+
+if AVAILABLE:
+    from converter.transformers.revolut_crypto import RevolutCryptoTransformer
+    from converter.transformers.revolut_stocks import RevolutStocksTransformer
+
+pytestmark = requires_reference  # every test here runs the reference's parsers
 
 SETTINGS = dict(
     max_examples=8,
