@@ -13,10 +13,17 @@ stays out of scope (SURVEY §7); everything a dashboard client calls is here:
 | POST /api/upload/<source_id>          | app.py:104-129 file upload | filesystem (containment-checked) |
 | GET  /api/download/<path>             | app.py:131-138 download | send_file from output root |
 | POST /api/delete/<type>/<path>        | app.py:140-155 delete | filesystem (containment-checked) |
-| GET  /api/preview/<src>/<file>        | app.py:515-575 | read_spec_csv + validate |
+| GET  /api/preview/<src>/<file>        | app.py:515-575 | read_spec_csv + orchestrate.measure (dry run) |
 | POST /api/preview/<src>/<file>/update | app.py:577-623 | sources.edits.update_csv_row |
 | POST /api/preview/<src>/<file>/convert| app.py:625-677 | orchestrate.convert_file (gated) |
 | POST /api/process/<source_id>         | app.py:161-231 | orchestrate.process_source (convert_file per file) |
+
+Preview, convert and process measure each file through the upload memo
+(``orchestrate.measure``): a request that writes nothing, on a file and
+mapping measured unchanged before, is answered from the stored counts and
+first errors without a Spark job.  The engine result behind such an
+answer has ``output`` and ``errors`` set to None; the response bodies are
+the same either way.
 
 Documented divergence (intentional, like the compiler's): the reference's
 visual-editor save always persists ``filter_rules: []`` — a recorded bug
@@ -31,9 +38,8 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.orchestrate import convert_file, process_source
-from csv_etl_spark.plans import validate
-from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
+from csv_etl_spark.orchestrate import Upload, convert_file, measure, process_source
+from csv_etl_spark.sources.csv_source import LINE_COL
 from csv_etl_spark.sources.edits import update_csv_row
 from csv_etl_spark.sources.sinks import write_template_csv
 from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
@@ -297,8 +303,9 @@ def create_app(
         row_cap = request.args.get("limit", type=int) or DEFAULT_PREVIEW_ROWS
         if row_cap < 0:
             return jsonify({"error": "limit must not be negative"}), 400
+        upload = Upload(spark, path, source)
         try:
-            df = with_line_numbers(read_spec_csv(spark, str(path), source))
+            df = upload.lined()
         except ValueError as exc:  # a header column named like the reserved _line
             return jsonify({"error": str(exc)}), 400
         columns = [c for c in df.columns if c != LINE_COL]
@@ -312,8 +319,10 @@ def create_app(
         mapping_id = request.args.get("mapping_id")
         mapping = store.get_mapping(mapping_id) if mapping_id else None
         if mapping:
-            # the validation pass counts the input rows on its way
-            result = validate(df, mapping, error_sample=DEFAULT_ERROR_CAP)
+            # the validation pass counts the input rows on its way; the
+            # upload memo answers it when this file and mapping were
+            # measured unchanged before (result.output/errors are then None)
+            result = measure(upload, mapping, DEFAULT_ERROR_CAP, dry_run=True)
             total = result.input_count
             validation = {
                 "success_count": result.success_count,
@@ -380,9 +389,10 @@ def create_app(
             return jsonify({"error": "Destination not found"}), 404
 
         try:
+            # a gated convert of a file measured unchanged before is answered
+            # from the upload memo, with result.output/errors None
             result, out_file = convert_file(
-                read_spec_csv(spark, str(path), source),
-                path, mapping, destination, out_root, CONVERT_ERROR_CAP,
+                Upload(spark, path, source), mapping, destination, out_root, CONVERT_ERROR_CAP,
             )
         except ValueError as exc:  # a header column named like the reserved _line
             return jsonify({"error": str(exc)}), 400

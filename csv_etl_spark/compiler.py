@@ -455,20 +455,25 @@ class CompiledMapping:
 _COMPILE_MEMO = BoundedDriverMemo(max_entries=32)
 
 
-def _memo_key(mapping: ETLMapping, source_columns: list[str]) -> tuple | None:
-    """(applicationId, canonical mapping JSON, source columns), or None
-    when the mapping does not survive a JSON round trip unchanged (non-str
-    dict keys, tuples, objects): two such mappings could share a text
-    while compiling differently, so they are not memoized."""
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return None
+def mapping_json(mapping: ETLMapping) -> str | None:
+    """The canonical JSON text of ``mapping``, or None when the mapping
+    does not survive a JSON round trip unchanged (non-str dict keys,
+    tuples, objects): two such mappings could share a text while
+    compiling differently, so no memo keys on them."""
     d = mapping.to_dict()
     try:
         text = json.dumps(d, sort_keys=True)
     except (TypeError, ValueError):
         return None
-    if json.loads(text) != d:
+    return text if json.loads(text) == d else None
+
+
+def _memo_key(mapping: ETLMapping, source_columns: list[str]) -> tuple | None:
+    """(applicationId, canonical mapping JSON, source columns), or None
+    when there is no session or no canonical text (``mapping_json``)."""
+    sc = SparkContext._active_spark_context
+    text = mapping_json(mapping)
+    if sc is None or text is None:
         return None
     return (sc.applicationId, text, tuple(source_columns))
 

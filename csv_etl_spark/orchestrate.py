@@ -10,6 +10,19 @@ mapping M over every CSV in its source directory, gate on errors, account
 totals" — the dashboard's POST /process (app.py:161-231) and the
 scheduler both call that.
 
+The upload memo: ``measure`` is the one validation pass of a file under
+a mapping (the dashboard preview's, and ``convert_file``'s), and it
+remembers what the pass measured — the counts and the first errors, no
+rows.  A later request on the unchanged file that will write nothing (a
+dry run, a gated write, no kept rows, a mapping without fields) is
+answered from that with no scan and no Spark job; every request that
+writes runs the full pass, so the gate and the write read the same rows.
+The key holds the session, the file's realpath and stat (device, inode,
+size, mtime and ctime, taken before the scan is built), the source spec,
+the mapping and the session's SQL conf, so any write to the file, any
+saved spec or mapping and any conf change is a miss; nothing invalidates
+entries by hand.
+
 ``Scheduler`` is deliberately clock-injected and poll-driven: jobs carry
 a monotonic next-run deadline, ``run_pending()`` executes due jobs and
 advances deadlines, and ``start()`` merely polls run_pending on a daemon
@@ -20,6 +33,9 @@ cron and call the same ``process_source``.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
 import threading
 import time
 from dataclasses import dataclass, field
@@ -28,37 +44,174 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from csv_etl_spark.plans import TransformResult, transform
+from csv_etl_spark.compiler import mapping_json
+from csv_etl_spark.driver_memo import BoundedDriverMemo
+from csv_etl_spark.plans.pipeline import PassCounts, TransformResult, settle, transform, writes
 from csv_etl_spark.sources.csv_source import check_line_column, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
 from csv_etl_spark.specs import ETLMapping, FileSpec, SpecStore
 
 
+class Upload:
+    """One input file as one request finds it.  Constructing it stats the
+    file, before anything builds a scan of it: Spark's file index fixes
+    the file's length when the scan is built, so a stat taken first sees
+    every change the scan can see.  The scan and its line numbers are
+    built on first use, which a request the upload memo serves never
+    makes."""
+
+    def __init__(self, spark: SparkSession, path: str | Path, source: FileSpec) -> None:
+        self.spark, self.path, self.source = spark, Path(path), source
+        self.state = _upload_state(spark, self.path, source)
+        self._scan: DataFrame | None = None
+        self._lined: DataFrame | None = None
+
+    def scan(self) -> DataFrame:
+        """The file's ``read_spec_csv`` frame."""
+        if self._scan is None:
+            self._scan = read_spec_csv(self.spark, str(self.path), self.source)
+        return self._scan
+
+    def lined(self) -> DataFrame:
+        """The scan with its line numbers (``with_line_numbers``)."""
+        if self._lined is None:
+            self._lined = with_line_numbers(self.scan())
+        return self._lined
+
+
+def _upload_state(spark: SparkSession, path: Path, source: FileSpec) -> tuple | None:
+    """(applicationId, realpath, st_dev, st_ino, st_size, st_mtime_ns,
+    st_ctime_ns, source spec JSON, SQL conf fingerprint), or None when the
+    file cannot be stat'ed.  ctime is in it because ``os.utime`` can
+    restore a rewritten file's mtime but not its ctime.  The conf matters
+    because ANSI mode, the session time zone and the parser policy change
+    what a pass measures; the fingerprint is every conf set in the session
+    (printed from an immutable map, whose order follows its contents)."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return None
+    conf = spark.conf._jconf.getAllAsJava().toString()
+    return (
+        spark.sparkContext.applicationId,
+        real, st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns,
+        json.dumps(source.to_dict(), sort_keys=True),
+        hashlib.sha256(conf.encode()).hexdigest(),
+    )
+
+
+@dataclass(frozen=True)
+class _Measured:
+    """What one validation pass of a file measured: plain values only."""
+
+    counts: PassCounts
+    errors: tuple[dict, ...]  # the first errors, in file order
+    cap: int  # the error sample size they were collected under
+
+    def covers(self, error_sample: int) -> bool:
+        """Whether the first ``error_sample`` errors are all stored."""
+        return error_sample <= self.cap or len(self.errors) == self.counts.errors
+
+
+# The measured outcome of each upload's validation pass (module
+# docstring).  An entry is a few hundred bytes of key (path, spec and
+# mapping JSON) plus four counts and at most the request's error cap of
+# error dicts (50 on the dashboard's routes).
+_UPLOAD_MEMO = BoundedDriverMemo(max_entries=32)
+
+
+def _memo_key(upload: Upload, mapping: ETLMapping) -> tuple | None:
+    # The compile memo keys on the mapping and the source columns; the
+    # columns are the file's header read under the source spec, both of
+    # which the upload's state already fixes.
+    text = mapping_json(mapping)
+    if upload.state is None or text is None:
+        return None
+    return (*upload.state, text)
+
+
+def _served(
+    key: tuple | None, mapping: ETLMapping, error_sample: int, dry_run: bool, fail_on_error: bool
+) -> _Measured | None:
+    """The stored measurement that answers this request, or None: a
+    request that writes runs its pass."""
+    stored = _UPLOAD_MEMO.get(key)
+    if stored is None or not stored.covers(error_sample):
+        return None
+    if writes(mapping, stored.counts, dry_run, fail_on_error):
+        return None
+    return stored
+
+
+def _no_write() -> None:
+    raise RuntimeError("a result served from the upload memo writes nothing")
+
+
+def measure(
+    upload: Upload,
+    mapping: ETLMapping,
+    error_sample: int,
+    dry_run: bool = False,
+    fail_on_error: bool = True,
+    write: Callable[[DataFrame], None] | None = None,
+) -> TransformResult:
+    """``transform`` of the upload's line-numbered scan through the upload
+    memo (module docstring); the arguments are ``transform``'s.  A
+    request the memo answers gets the same counts, error sample and log
+    lines as its pass would give, with ``output`` and ``errors`` set to
+    None.  A pass fills the memo only when the file's stat and the
+    session's conf after it equal those the upload took before its scan
+    was built."""
+    key = _memo_key(upload, mapping)
+    stored = _served(key, mapping, error_sample, dry_run, fail_on_error)
+    if stored is not None:
+        # the gate holds, so settle only logs it
+        result = settle(
+            mapping, stored.counts, dry_run, fail_on_error,
+            write=_no_write if write is not None else None,
+        )
+        result.error_sample = [dict(e) for e in stored.errors[:error_sample]]
+        return result
+    result = transform(
+        upload.lined(), mapping, fail_on_error=fail_on_error, dry_run=dry_run,
+        write=write, error_sample=error_sample,
+    )
+    if key is not None and _upload_state(upload.spark, upload.path, upload.source) == upload.state:
+        counts = PassCounts(
+            total=result.input_count,
+            # a mapping without fields counts every row skipped, and then
+            # neither the counts nor the gate read kept
+            kept=result.input_count - result.skipped_count,
+            errors=result.error_count,
+            error_rows=result.error_row_count,
+        )
+        errors = tuple(dict(e) for e in result.error_sample)
+        _UPLOAD_MEMO.put(key, _Measured(counts, errors, error_sample))
+    return result
+
+
 def convert_file(
-    scan: DataFrame,
-    csv_file: Path,
+    upload: Upload,
     mapping: ETLMapping,
     destination: FileSpec,
     output_root: str | Path,
     error_sample: int,
     fail_on_error: bool = True,
 ) -> tuple[TransformResult, Path]:
-    """One input file, read as ``scan`` (its ``read_spec_csv`` frame),
-    through the gated mapping into the single CSV
+    """One input file through the gated mapping into the single CSV
     ``<output_root>/<destination dir>/<stem>_<destination id>.csv``
-    (reference app.py:194-212, 644-660).  Returns the result, whose
-    ``error_sample`` holds the first ``error_sample`` errors, and the
-    output path (written only when the gate passed)."""
+    (reference app.py:194-212, 644-660), by ``measure``.  Returns the
+    result, whose ``error_sample`` holds the first ``error_sample``
+    errors, and the output path (written only when the gate passed).  A
+    gated request on an unchanged file the upload memo holds is answered
+    from it, with ``result.output`` and ``result.errors`` None."""
     out_file = (
-        Path(output_root) / destination.default_directory / f"{csv_file.stem}_{destination.id}.csv"
+        Path(output_root) / destination.default_directory / f"{upload.path.stem}_{destination.id}.csv"
     )
-    df = with_line_numbers(scan)
-    result = transform(
-        df,
-        mapping,
-        fail_on_error=fail_on_error,
+    result = measure(
+        upload, mapping, error_sample, fail_on_error=fail_on_error,
         write=lambda out: write_single_csv_file(out, str(out_file)),
-        error_sample=error_sample,
     )
     return result, out_file
 
@@ -78,10 +231,14 @@ def process_source(
 
     Returns the reference's accounting shape: success/skipped/error
     totals, first ``error_cap`` errors with file context, last-100 logs.
+    Each file goes through ``convert_file``: a file the upload memo
+    answers runs no Spark job (its per-file result has ``output`` and
+    ``errors`` None; this summary is the same either way).
 
     Every file's header is checked before the first file converts, so a
     file with a reserved ``_line`` column fails the run (a ``ValueError``
-    naming the file) before any output is written.
+    naming the file) before any output is written.  A file the memo
+    holds an entry for passed that check in the pass that filled it.
     """
     mapping = store.get_mapping(mapping_id)
     if not mapping:
@@ -96,24 +253,23 @@ def process_source(
     all_errors: list[dict] = []
     all_logs: list[str] = []
 
-    scans = {}
-    for csv_file in sorted(input_path.glob("*.csv")):
-        scans[csv_file] = read_spec_csv(spark, str(csv_file), source)
-        try:
-            check_line_column(scans[csv_file].columns)
-        except ValueError as exc:
-            raise ValueError(f"{csv_file.name}: {exc}") from None
+    uploads = [Upload(spark, f, source) for f in sorted(input_path.glob("*.csv"))]
+    for up in uploads:
+        if _UPLOAD_MEMO.get(_memo_key(up, mapping)) is None:
+            try:
+                check_line_column(up.scan().columns)
+            except ValueError as exc:
+                raise ValueError(f"{up.path.name}: {exc}") from None
 
-    for csv_file, scan in scans.items():
+    for up in uploads:
         result, _ = convert_file(
-            scan, csv_file, mapping, destination, output_root,
-            error_cap - len(all_errors), fail_on_error,
+            up, mapping, destination, output_root, error_cap - len(all_errors), fail_on_error,
         )
         totals["success_count"] += result.success_count
         totals["skipped_count"] += result.skipped_count
         totals["error_count"] += result.error_count
-        all_errors += ({"file": csv_file.name, **e} for e in result.error_sample)
-        all_logs.extend(f"[{csv_file.name}] {m}" for m in result.log_messages)
+        all_errors += ({"file": up.path.name, **e} for e in result.error_sample)
+        all_logs.extend(f"[{up.path.name}] {m}" for m in result.log_messages)
 
     return {
         "mapping_name": mapping.name,

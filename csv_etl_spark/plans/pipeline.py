@@ -26,6 +26,8 @@ carries it onto every output and error row.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -113,6 +115,78 @@ def chain_mappings(
     return cur
 
 
+@dataclass(frozen=True)
+class PassCounts:
+    """What one pass of a mapping over its input counts."""
+
+    total: int  # input rows, before the skip rules
+    kept: int  # rows past the skip rules
+    errors: int  # field errors
+    error_rows: int  # kept rows with at least one error
+
+
+def writes(mapping: ETLMapping, counts: PassCounts, dry_run: bool, fail_on_error: bool) -> bool:
+    """V5/S6, the write gate (dynamic.py:333-343): a pass that has a sink
+    writes only when it is not a dry run, the mapping has fields, rows
+    were kept, and either there are no errors or ``fail_on_error`` is
+    off."""
+    return (
+        not dry_run
+        and bool(mapping.field_mappings)
+        and counts.kept > 0
+        and not (counts.errors > 0 and fail_on_error)
+    )
+
+
+def settle(
+    mapping: ETLMapping,
+    counts: PassCounts,
+    dry_run: bool = False,
+    fail_on_error: bool = True,
+    write: Callable[[], None] | None = None,
+    target: str | None = None,
+) -> TransformResult:
+    """The result of a pass that counted ``counts``: the reference's
+    counts, the gate and the log lines.  ``write`` is the pass's sink, a
+    callable ``() -> None`` (None: the pass has no sink); it is called
+    only when ``writes`` holds.  ``target`` names the sink in the log.
+    ``transform`` calls this after its pass, and so does a caller that
+    already knows the counts, so both give the same result."""
+    result = TransformResult(
+        input_count=counts.total,
+        error_count=counts.errors,
+        error_row_count=counts.error_rows,
+    )
+    mode = "Validating" if dry_run else "Transforming"
+    result.add_log(f"{mode} with mapping: {mapping.name}")
+    result.add_log(
+        f"Field mappings: {len(mapping.field_mappings)}, Filter rules: {len(mapping.filter_rules)}"
+    )
+    if not mapping.field_mappings:
+        # `{}` is falsy: every row counts as skipped, nothing is written
+        result.skipped_count = counts.total
+    else:
+        result.skipped_count = counts.total - counts.kept
+        result.success_count = counts.kept - counts.error_rows
+
+    if write is not None and writes(mapping, counts, dry_run, fail_on_error):
+        write()
+        result.output_written = True
+        result.add_log(f"Output written to {target or 'custom sink'}")
+    elif write is not None and writes(mapping, counts, dry_run, False):
+        # rows to write, but fail_on_error holds them back
+        result.add_log(
+            f"OUTPUT SKIPPED: {counts.errors} errors found. Fix errors before converting."
+        )
+
+    status = "Validation" if dry_run else "Transformation"
+    result.add_log(
+        f"{status} complete: {result.success_count} valid, "
+        f"{result.skipped_count} skipped, {result.error_count} errors"
+    )
+    return result
+
+
 def transform(
     df: DataFrame,
     mapping: ETLMapping | dict,
@@ -133,7 +207,7 @@ def transform(
     cache.  ``write`` is an optional callable ``(DataFrame) -> None`` that
     replaces the default CSV write (``sinks.write_spec_csv`` to
     ``output_path``) — lets callers target parquet/Delta without changing
-    gate semantics.
+    gate semantics.  Counts, gate and log lines are ``settle``'s.
 
     ``error_sample`` > 0 collects that many first errors into
     ``result.error_sample`` from the persisted pass, and only when there
@@ -142,16 +216,9 @@ def transform(
     """
     from pyspark.sql import Observation
 
-    result = TransformResult()
     if isinstance(mapping, dict):
         mapping = ETLMapping.from_dict(mapping)
     compiled = _compile(df, mapping)
-
-    mode = "Validating" if dry_run else "Transforming"
-    result.add_log(f"{mode} with mapping: {mapping.name}")
-    result.add_log(
-        f"Field mappings: {len(mapping.field_mappings)}, Filter rules: {len(mapping.filter_rules)}"
-    )
 
     # The input total is observed UPSTREAM of the mapping's skip-filter,
     # so it sees every input row (it cannot be optimized away: the filter
@@ -173,21 +240,13 @@ def transform(
     projected = projected.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         projected.write.format("noop").mode("overwrite").save()
-        counts = counts_obs.get
-        kept, error_count = counts["kept"], int(counts["errors"])
-        error_rows = int(counts["error_rows"])
-        total = int(total_obs.get["total"])
-        result.input_count = total
-
-        if not mapping.field_mappings:
-            # `{}` is falsy: every row counts as skipped, nothing is written
-            result.skipped_count = total
-            result.success_count = 0
-        else:
-            result.skipped_count = total - kept
-            result.success_count = kept - error_rows
-        result.error_count = error_count
-        result.error_row_count = error_rows
+        observed = counts_obs.get
+        counts = PassCounts(
+            total=int(total_obs.get["total"]),
+            kept=int(observed["kept"]),
+            errors=int(observed["errors"]),
+            error_rows=int(observed["error_rows"]),
+        )
 
         line = [LINE_COL] if LINE_COL in projected.columns else []
         errors_df = projected.select(
@@ -199,12 +258,12 @@ def transform(
             F.col("error.message").alias("message"),
             F.col("error.source_value").alias("source_value"),
         )
-        result.errors = errors_df.drop("_pos")
-        if error_sample > 0 and error_count > 0:
+        sample = []
+        if error_sample > 0 and counts.errors > 0:
             # the first errors in file order; a top-n over the cache is one
             # job, where limit() would scan the partitions a few at a time
             first = errors_df.orderBy(LINE_COL, "_pos") if line else errors_df
-            result.error_sample = [
+            sample = [
                 {
                     "line": r[LINE_COL] if line else None,
                     "field": r["field"],
@@ -214,28 +273,17 @@ def transform(
                 for r in first.limit(error_sample).collect()
             ]
         output_df = projected.drop(ERRORS_COL, LINE_COL)
-        result.output = output_df
-
-        # V5/S6: gate — write only when not dry-run, rows exist, and either
-        # error-free or fail_on_error=False (dynamic.py:333-343)
-        if not dry_run and (output_path or write) and mapping.field_mappings and kept > 0:
-            if error_count > 0 and fail_on_error:
-                result.add_log(
-                    f"OUTPUT SKIPPED: {error_count} errors found. Fix errors before converting."
-                )
-            else:
-                if write is not None:
-                    write(output_df)
-                else:
-                    write_spec_csv(output_df, output_path)
-                result.output_written = True
-                result.add_log(f"Output written to {output_path or 'custom sink'}")
-
-        status = "Validation" if dry_run else "Transformation"
-        result.add_log(
-            f"{status} complete: {result.success_count} valid, "
-            f"{result.skipped_count} skipped, {result.error_count} errors"
+        sink = None
+        if write is not None:
+            sink = partial(write, output_df)
+        elif output_path:
+            sink = partial(write_spec_csv, output_df, output_path)
+        result = settle(
+            mapping, counts, dry_run, fail_on_error, write=sink, target=output_path
         )
+        result.errors = errors_df.drop("_pos")
+        result.error_sample = sample
+        result.output = output_df
         return result
     finally:
         # Unpersist before returning: counters, the error sample and the

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv_etl_spark.local import ident_col
-from csv_etl_spark.sources.csv_source import LINE_COL, read_spec_csv, with_line_numbers
-from csv_etl_spark.sources.sinks import write_single_csv_file
+from csv_etl_spark.sources.csv_source import LINE_COL, line_numbered, read_spec_csv
+from csv_etl_spark.sources.sinks import one_sorted_partition, write_single_csv_file
 from csv_etl_spark.specs import FileSpec
 
 
@@ -33,7 +33,7 @@ def update_csv_row(
     """Replace the row at physical ``line_number`` (data starts at 2, like
     the reference's preview numbering) with ``new_values`` (column → new
     cell; unspecified columns keep their value)."""
-    df = with_line_numbers(read_spec_csv(spark, file_path, spec))
+    df, partitions = line_numbered(read_spec_csv(spark, file_path, spec))
     unknown = set(new_values) - set(df.columns)
     if unknown:
         raise ValueError(f"unknown columns in update: {sorted(unknown)}")
@@ -49,7 +49,8 @@ def update_csv_row(
         ],
         F.col(LINE_COL),
     )
-    write_single_csv_file(updated, file_path, order_by=LINE_COL)
+    # a projection of the scan: the scan's partitions, planned once
+    write_single_csv_file(one_sorted_partition(updated, LINE_COL, partitions), file_path)
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

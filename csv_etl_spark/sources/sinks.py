@@ -15,7 +15,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from csv_etl_spark.local import ident_col
-from csv_etl_spark.sources.csv_source import planned_partitions
 from csv_etl_spark.specs import ColumnType, FileSpec
 
 # FIXTURES §5 / reference app.py:730-740 template dummy values
@@ -51,21 +50,24 @@ def write_spec_csv(
     ).csv(path)
 
 
-def write_single_csv_file(df: DataFrame, file_path: str, order_by: str | None = None) -> None:
+def one_sorted_partition(df: DataFrame, order_by: str, partitions: int) -> DataFrame:
+    """``df`` in one partition sorted by ``order_by``, which is then
+    dropped.  ``partitions`` is the number Spark plans for ``df``: a
+    one-partition frame is sorted in place (``coalesce(1)``: no shuffle,
+    one job); a wider one is scanned in parallel and shuffled into one
+    partition first.  Either way the one partition is sorted locally,
+    since a global ``orderBy`` would add a sampling job for range bounds
+    that one partition does not need."""
+    one = df.coalesce(1) if partitions == 1 else df.repartition(1)
+    return one.sortWithinPartitions(order_by).drop(order_by)
+
+
+def write_single_csv_file(df: DataFrame, file_path: str) -> None:
     """Write exactly one CSV file at ``file_path`` (reference emits one
     output file per input file).  Spark writes a directory; we promote the
-    part file.  Golden-parity path only.  ``order_by`` (e.g. the line
-    column) restores input order, matching the reference's stable
-    pass-through ordering.  A frame planned as one partition is sorted in
-    place (``coalesce(1)``: no shuffle, one job); a wider one is scanned
-    in parallel and shuffled into one partition first.  Either way the
-    one partition is sorted locally, since a global ``orderBy`` would add
-    a sampling job for range bounds that one partition does not need.  An
-    ``order_by`` frame is a line-numbered scan, so its partitions are
-    read off the plan (``planned_partitions``) without a job."""
-    if order_by and order_by in df.columns:
-        one = df.coalesce(1) if planned_partitions(df) == 1 else df.repartition(1)
-        df = one.sortWithinPartitions(order_by).drop(order_by)
+    part file.  Golden-parity path only.  A caller that must keep input
+    order hands in ``one_sorted_partition(df, LINE_COL, ...)``, matching
+    the reference's stable pass-through ordering."""
     tmp = file_path + ".spark-tmp"
     write_spec_csv(df, tmp, single_file=True)
     part = next(Path(tmp).glob("part-*.csv"))

@@ -7,6 +7,7 @@ Reference semantics at converter_dashboard/app.py:161-231, 424-448,
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -537,7 +538,7 @@ def test_request_job_budget(spark, env):
     shuffle or a sampling sort for the single-file write would break a
     pin; the failure lists each request's job call sites."""
     client, _, _ = env
-    _assert_within(_request_jobs(spark, client), (3, 2, 2, 2))
+    _assert_within(_request_jobs(spark, client), (3, 0, 1, 2))
 
 
 def test_request_job_budget_split_file(spark, env):
@@ -554,4 +555,161 @@ def test_request_job_budget_split_file(spark, env):
         counts = _request_jobs(spark, client)
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    _assert_within(counts, (5, 4, 4, 4))
+    _assert_within(counts, (5, 0, 4, 4))
+
+
+# -- the upload memo (orchestrate.measure) ------------------------------------
+# Each test below fails on a version of the memo whose key or hit rule
+# ignores the part it names: a request the memo answers runs no Spark job
+# and reports the stored counts.
+
+
+def _jobs_and_body(spark, call, status: int = 200):
+    before = newest_job_id(spark)
+    r = call()
+    assert r.status_code == status, r.get_data(as_text=True)[:300]
+    return newest_job_id(spark) - before, r.get_json()
+
+
+def _process(client):
+    return lambda: client.post("/api/process/src1", json={"mapping_id": "m1"})
+
+
+def _rewrite_keeping_mtime(path, edit) -> None:
+    """Run ``edit`` (which must keep the byte size), then put the old
+    mtime back, as a quick check on size and mtime alone would miss."""
+    st = path.stat()
+    edit()
+    assert path.stat().st_size == st.st_size
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert path.stat().st_mtime_ns == st.st_mtime_ns
+
+
+def test_upload_memo_serves_the_same_bodies(spark, env):
+    """Preview → process → convert, with the memo and with every memo
+    cleared before each request: identical JSON bodies, logs and
+    ``has_more_errors`` included.  Preview stores 50 of b.csv's 60 errors;
+    the process (cap 49 after a.csv's one) and the convert (cap 20) are
+    answered from them without a job."""
+    from csv_etl_spark import driver_memo
+
+    client, tmp_path, _ = env
+    (tmp_path / "in" / "s1" / "b.csv").write_text(
+        "Date,Ticker,Type\n" + "".join(f"bad{i},T{i},BUY\n" for i in range(60))
+    )
+    requests = [
+        (lambda: client.get("/api/preview/src1/a.csv?mapping_id=m1"), 200),
+        (lambda: client.get("/api/preview/src1/b.csv?mapping_id=m1"), 200),
+        (_process(client), 200),
+        (lambda: client.post("/api/preview/src1/b.csv/convert", json={"mapping_id": "m1"}), 400),
+    ]
+
+    def run(clear: bool):
+        bodies, jobs = [], []
+        for call, status in requests:
+            if clear:
+                driver_memo.clear_all()
+            n, body = _jobs_and_body(spark, call, status)
+            bodies.append(body)
+            jobs.append(n)
+        return bodies, jobs
+
+    cold, cold_jobs = run(clear=True)
+    warm, warm_jobs = run(clear=False)
+    assert warm == cold
+    assert cold[2]["has_more_errors"] is True and len(cold[2]["errors"]) == 50
+    assert len(cold[3]["errors"]) == 20
+    assert min(cold_jobs) > 0 and warm_jobs[2:] == [0, 0]
+
+
+def test_upload_memo_misses_after_same_size_api_edit(spark, env):
+    """An edit through the API to the same byte size, with the old mtime
+    put back, is a miss: the rename gives a new inode and ctime."""
+    client, tmp_path, _ = env
+    f = tmp_path / "in" / "s1" / "a.csv"
+    client.get("/api/preview/src1/a.csv?mapping_id=m1")
+    _rewrite_keeping_mtime(f, lambda: client.post(
+        "/api/preview/src1/a.csv/update", json={"line": 2, "row": {"Date": "bad-date-1"}}
+    ))
+    jobs, body = _jobs_and_body(spark, _process(client))
+    assert jobs > 0
+    assert (body["success_count"], body["error_count"]) == (0, 2)
+
+
+def test_upload_memo_misses_after_external_rewrite(spark, env):
+    """A rewrite in place from outside the API, same size, old mtime put
+    back: same inode, new ctime, so a miss."""
+    client, tmp_path, _ = env
+    f = tmp_path / "in" / "s1" / "a.csv"
+    client.get("/api/preview/src1/a.csv?mapping_id=m1")
+
+    def rewrite():
+        with open(f, "r+b") as fh:
+            data = fh.read()
+            fh.seek(0)
+            fh.write(data.replace(b"2024-01-15", b"bad-date-1"))
+
+    _rewrite_keeping_mtime(f, rewrite)
+    jobs, body = _jobs_and_body(spark, _process(client))
+    assert jobs > 0
+    assert (body["success_count"], body["error_count"]) == (0, 2)
+
+
+def test_upload_memo_misses_after_mapping_save(spark, env):
+    """A saved mapping (here one more skip rule) is a miss."""
+    client, _, cfg = env
+    client.get("/api/preview/src1/a.csv?mapping_id=m1")
+    m = SpecStore(str(cfg)).get_mapping("m1").to_dict()
+    rules = m["filter_rules"] + [{"field": "Ticker", "operator": "equals", "value": "AAPL"}]
+    r = client.post("/api/mappings/m1/save",
+                    json={"field_mappings": m["field_mappings"], "filter_rules": rules})
+    assert r.status_code == 200
+    jobs, body = _jobs_and_body(spark, _process(client))
+    assert jobs > 0
+    assert (body["success_count"], body["skipped_count"], body["error_count"]) == (0, 2, 1)
+
+
+def test_upload_memo_misses_after_conf_change(spark, env):
+    """The legacy time parser reads ``2024-01-05x`` under ``%Y-%m-%d`` (it
+    ignores trailing text), the default parser does not: a changed SQL
+    conf is a miss."""
+    client, tmp_path, _ = env
+    with open(tmp_path / "in" / "s1" / "a.csv", "a") as fh:
+        fh.write("2024-01-05x,IBM,BUY\n")
+    body = client.get("/api/preview/src1/a.csv?mapping_id=m1").get_json()
+    assert body["validation"]["error_count"] == 2
+    spark.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
+    try:
+        jobs, body = _jobs_and_body(spark, _process(client))
+    finally:
+        spark.conf.unset("spark.sql.legacy.timeParserPolicy")
+    assert jobs > 0
+    assert (body["success_count"], body["error_count"]) == (2, 1)
+
+
+def test_upload_memo_never_answers_a_write(spark, env):
+    """A clean file previewed and then converted still writes its output."""
+    client, tmp_path, _ = env
+    (tmp_path / "in" / "s1" / "a.csv").write_text("Date,Ticker,Type\n2024-01-15,AAPL,BUY\n")
+    client.get("/api/preview/src1/a.csv?mapping_id=m1")
+    r = client.post("/api/preview/src1/a.csv/convert", json={"mapping_id": "m1"})
+    assert r.status_code == 200, r.get_json()
+    out = (tmp_path / "out" / "d1" / "a_dst1.csv").read_text().splitlines()
+    assert out == ["date,symbol", "15.01.2024,AAPL"]
+
+
+def test_upload_memo_misses_when_the_cap_is_larger(spark, env, monkeypatch):
+    """A preview that stored one error of three cannot answer a process
+    that asks for up to 50."""
+    import csv_etl_spark.api as api_mod
+
+    client, tmp_path, _ = env
+    (tmp_path / "in" / "s1" / "a.csv").write_text(
+        "Date,Ticker,Type\nbad1,A,BUY\nbad2,B,BUY\nbad3,C,BUY\n"
+    )
+    monkeypatch.setattr(api_mod, "DEFAULT_ERROR_CAP", 1)
+    body = client.get("/api/preview/src1/a.csv?mapping_id=m1").get_json()
+    assert len(body["errors_by_line"]) == 1
+    jobs, body = _jobs_and_body(spark, _process(client))
+    assert jobs > 0
+    assert [e["line"] for e in body["errors"]] == [2, 3, 4]

@@ -76,7 +76,8 @@ def test_single_file_line_ordered_write_is_byte_identical(spark, tmp_path):
     global orderBy + coalesce(1); the file must not change by a byte."""
     from pathlib import Path
 
-    from csv_etl_spark.sources.sinks import write_single_csv_file
+    from csv_etl_spark.sources.csv_source import planned_partitions
+    from csv_etl_spark.sources.sinks import one_sorted_partition, write_single_csv_file
 
     df = (
         spark.range(500)
@@ -89,7 +90,7 @@ def test_single_file_line_ordered_write_is_byte_identical(spark, tmp_path):
     )
     assert df.rdd.getNumPartitions() == 6
     new_file = str(tmp_path / "new.csv")
-    write_single_csv_file(df, new_file, order_by=LINE_COL)
+    write_single_csv_file(one_sorted_partition(df, LINE_COL, planned_partitions(df)), new_file)
     old_dir = str(tmp_path / "old")
     df.orderBy(LINE_COL).drop(LINE_COL).coalesce(1).write.option("header", "true").csv(old_dir)
     old_file = next(Path(old_dir).glob("part-*.csv"))

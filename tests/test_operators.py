@@ -5058,9 +5058,10 @@ def test_kmeans_codebook_table_matches_literal_fit(spark):
 
 
 def test_every_cache_instance_is_registered():
-    """Every BoundedPersistCache/BoundedDriverMemo in the operator modules
-    and the compiler registers itself on construction, so clear_all
-    reaches each one without a hand-kept list."""
+    """Every BoundedPersistCache/BoundedDriverMemo in the operator modules,
+    the compiler and the ETL orchestration registers itself on
+    construction, so clear_all reaches each one without a hand-kept list
+    (an unregistered memo would make a benchmark time a cache hit)."""
     import importlib
     import pkgutil
 
@@ -5073,6 +5074,7 @@ def test_every_cache_instance_is_registered():
         for info in pkgutil.iter_modules(ops.__path__)
     ]
     mods.append(importlib.import_module("csv_etl_spark.compiler"))
+    mods.append(importlib.import_module("csv_etl_spark.orchestrate"))
     found = {
         id(v): v
         for mod in mods
