@@ -1300,12 +1300,7 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on normalized text, keyed by the normalized text itself
     (engine-agnostic, unlike hash keys)."""
     d = _t(spark, sf_dir, "documents")
-    norm = dedup.normalize_text(F.col("text"))
-    return (
-        d.groupBy(norm.alias("norm_text"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
-        .select("keep_id", "n_dups")
-    )
+    return dedup.exact_dedup_normalized(d).select("keep_id", "n_dups")
 
 
 _ORACLE_DEDUP_NORM = """

@@ -38,18 +38,23 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from csv_etl_spark.orchestrate import Upload, convert_file, measure, process_source
+from csv_etl_spark.orchestrate import (
+    DEFAULT_ERROR_CAP,
+    Upload,
+    convert_file,
+    measure,
+    process_source,
+)
 from csv_etl_spark.sources.csv_source import LINE_COL
 from csv_etl_spark.sources.edits import update_csv_row
 from csv_etl_spark.sources.sinks import write_template_csv
 from csv_etl_spark.specs import FieldMapping, FileSpec, SpecStore, TransformType
 
 
-# Collect caps: the reference UI shows at most 50 errors (app.py:221) and
-# pages its previews (app.py:667), so unbounded collects buy nothing and are
-# a driver-OOM hazard on big files.  ``cap=None`` means these defaults, NOT
-# unbounded.
-DEFAULT_ERROR_CAP = 50
+# Collect caps: the reference UI shows at most 50 errors (app.py:221,
+# ``orchestrate.DEFAULT_ERROR_CAP``) and pages its previews (app.py:667),
+# so unbounded collects buy nothing and are a driver-OOM hazard on big
+# files.  ``cap=None`` means these defaults, NOT unbounded.
 DEFAULT_PREVIEW_ROWS = 500
 CONVERT_ERROR_CAP = 20  # errors a failed convert reports
 
@@ -323,7 +328,7 @@ def create_app(
             # upload memo answers it when this file and mapping were
             # measured unchanged before (result.output/errors are then None)
             result = measure(upload, mapping, DEFAULT_ERROR_CAP, dry_run=True)
-            total = result.input_count
+            total = result.counts.total
             validation = {
                 "success_count": result.success_count,
                 "skipped_count": result.skipped_count,

@@ -31,15 +31,15 @@ CRYPTO_DATE_FORMATS = [
 ]
 
 
-def parse_date_chain(col: Column, formats: list[str], output_fmt: str = "%Y-%m-%d") -> Column:
-    """C1/C2 — try formats in order; first success wins; unparseable or empty
-    input passes the original value through unchanged (reference
-    ``revolut_stocks.py:86-102`` returns ``value`` on total failure, ``""``
-    on empty)."""
+def parse_date_chain(col: Column, formats: list[str]) -> Column:
+    """C1/C2 — try formats in order; first success wins, formatted
+    ``%Y-%m-%d``; unparseable or empty input passes the original value
+    through unchanged (reference ``revolut_stocks.py:86-102`` returns
+    ``value`` on total failure, ``""`` on empty)."""
     parsed = F.coalesce(
         *[F.try_to_timestamp(col, F.lit(strptime_to_java(fmt, mode="parse"))) for fmt in formats]
     )
-    out = F.date_format(parsed, strptime_to_java(output_fmt, mode="format"))
+    out = F.date_format(parsed, "yyyy-MM-dd")
     return F.when(col.isNull() | (col == ""), col).otherwise(F.coalesce(out, col))
 
 

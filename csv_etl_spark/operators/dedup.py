@@ -5,7 +5,8 @@ Strategies (each a standalone function over a DataFrame):
 * exact_dedup_by_key      — hash-groupBy; one shuffle on the key.
 * exact_dedup_normalized  — exact dedup on normalized text (casefold,
                             punct-strip, whitespace-collapse): catches
-                            trivially re-formatted copies.
+                            trivially re-formatted copies.  Keyed on the
+                            text itself, so two texts never merge by hash.
 * ngram_jaccard_pairs     — EXACT n-gram Jaccard similarity pairs via an
                             inverted-index join (token-ngram → posting
                             list), NOT an O(n²) cross join: candidate pairs
@@ -57,22 +58,13 @@ def normalize_text(col: Column) -> Column:
 
 
 def exact_dedup_normalized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    norm = normalize_text(F.col(text_col))
-    return (
-        df.select(F.col(id_col), F.xxhash64(norm).alias("norm_hash"))
-        .groupBy("norm_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+    """min(id) and the group size per normalized text.  The group key is
+    the normalized text, not a hash of it: a 64-bit hash merges two
+    different texts with probability ~n²/2⁶⁵ (≈3% at 10⁹ documents), and
+    this is the exact operator."""
+    return df.groupBy(normalize_text(F.col(text_col)).alias("norm_text")).agg(
+        F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups")
     )
-
-
-def token_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined). Defined via transform
-    over token indices — pure built-ins."""
-    toks = ws_tokens(col)
-    k = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(k - n, F.lit(-1)))
-    shingles = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return F.array_distinct(F.when(k >= n, shingles).otherwise(F.array().cast("array<string>")))
 
 
 # ---------------------------------------------------------------------------
@@ -692,8 +684,7 @@ def dedup_paragraphs(
     shuffle once as payload (it rebuilds the doc), but an 8-byte key
     instead of a second copy of the string halves the shuffle bytes;
     64-bit collisions (a paragraph silently deduped against a different
-    one) are ~n²/2⁶⁵ — negligible at any real corpus size, same trade as
-    ``exact_dedup_normalized``.  Paragraph-key cardinality ~ corpus size,
+    one) are ~n²/2⁶⁵ — negligible at any real corpus size.  Paragraph-key cardinality ~ corpus size,
     so no reducer hot-spots; a frequent-paragraph skew (the same banner
     10^9 times) lands on ONE reducer only for the agg's final merge of
     already map-combined partials — bounded.
@@ -792,7 +783,7 @@ def incremental_dedup(
     distinct over corpus keys, one left_anti shuffle join.  Both sides
     key on ``xxhash64`` of the normalized text — 8-byte keys instead of
     full document strings in the shuffle (64-bit collision odds are
-    negligible; same trade as ``exact_dedup_normalized``), and the corpus
+    ~n²/2⁶⁵), and the corpus
     side projects to the key column only, so its shuffle payload is 8
     bytes/doc.  For corpora whose key set is still too large to shuffle
     per increment, pre-compute the corpus key table once and reuse it

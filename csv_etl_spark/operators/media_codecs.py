@@ -132,21 +132,6 @@ def decode_wav(content: bytes) -> tuple[np.ndarray, int]:
     return x.reshape(-1, nch), rate
 
 
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
-    """float samples in [-1, 1] shaped (n,) or (n, channels) → 16-bit PCM."""
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    pcm = np.clip(samples, -1.0, 1.0)
-    ints = (pcm * 32767.0).astype("<i2")
-    buf = BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(samples.shape[1])
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(ints.tobytes())
-    return buf.getvalue()
-
-
 # ---------------------------------------------------------------------------
 # Kernels for the multimodal injection seams
 # ---------------------------------------------------------------------------

@@ -2,7 +2,7 @@
 metadata (SURVEY §2.9 / BASELINE north star).
 
 Design: media rows are ``(id, kind, content: binary, meta: map<string,string>)``.
-Heavy per-item work (decode, resize, frame-sample, feature-extract) runs as
+Heavy per-item work (decode, resize, feature-extract) runs as
 Arrow-batched ``mapInPandas`` with kernels taken by injection.  REAL
 kernels exist for every format stdlib can decode — BMP/PPM images and PCM
 WAV audio (``operators/media_codecs.real_decoder``/``real_resizer``, no
@@ -154,54 +154,6 @@ def resize_media(
             )
 
     return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame", T.BinaryType(), True),
-    ]
-)
-
-
-def stub_frame_sampler(kind: str, content: bytes, n_frames: int) -> list[bytes]:
-    """Deterministic fake frame sampling: n_frames equal byte slices.  A
-    real kernel (ffmpeg/pyav keyframe extraction) plugs in via
-    ``sampler=``."""
-    if kind != "video":
-        raise NotImplementedError(f"frame sampling not defined for kind {kind!r}")
-    if not content:
-        return []
-    step = max(len(content) // n_frames, 1)
-    return [content[i * step : (i + 1) * step] for i in range(min(n_frames, len(content)))]
-
-
-def sample_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    sampler: Callable[[str, bytes, int], list[bytes]] = stub_frame_sampler,
-) -> DataFrame:
-    """Explode each video into ≤ n_frames frame rows — the 1→N fan-out
-    shape (media row → frame rows) that downstream per-frame feature
-    pipelines consume.  Fan-out happens inside the Arrow batch, so a
-    1000-frame video never materializes as one driver-side list."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            idxs: list = []
-            frames: list = []
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if content is None:
-                    continue
-                for i, fr in enumerate(sampler(kind, bytes(content), n_frames)):
-                    ids.append(mid)
-                    idxs.append(i)
-                    frames.append(fr)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
 DHASH_SCHEMA = T.StructType(

@@ -281,17 +281,6 @@ def token_budget_select(
     )
 
 
-def split_train_holdout(
-    df: DataFrame, key_col: str, holdout_fraction: float = 0.1
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, deterministic train/holdout split on the key hash — the
-    same key lands on the same side in every run, on every engine, which
-    is what makes a holdout set trustworthy."""
-    t = F.lit(fraction_threshold_hex(holdout_fraction))
-    bucket = hash_bucket_hex(F.col(key_col))
-    return df.filter(bucket >= t), df.filter(bucket < t)
-
-
 def temperature_resample(
     df: DataFrame, group_col: str, key_col: str, alpha: float = 0.3
 ) -> DataFrame:

@@ -111,7 +111,7 @@ def _codebook_arrays(
 
 def _fold_sims(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, m) cosine matrix with the EXACT fold op order of
-    ``cosine(vec, cent)``: dot accumulated sequentially over dimension j
+    ``cosine_with_norms(vec, cent, l2_norm(vec), l2_norm(cent))``: dot accumulated sequentially over dimension j
     (``acc[:, k] += V[:, j] * C[k, j]`` via one outer-product accumulate
     per j), norms accumulated in the same j order, denom = vnorm*cnorm,
     guarded division — every IEEE double op matches the Catalyst/DuckDB
@@ -202,17 +202,13 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
 def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``cosine(a, b)`` with both L2 norms HOISTED to precomputed
-    columns — arithmetically identical (same dot fold, same norm values,
-    same ``denom > 0`` guard, so results are bit-identical and every SQL
-    oracle replays unchanged), but each norm is computed once per ROW
-    instead of once per PAIR.  Pair scoring dominates every embedding
+    """Cosine ``dot(a, b) / (|a|·|b|)``, 0.0 when a norm is 0, with both
+    L2 norms HOISTED to precomputed columns (``na``, ``nb`` from
+    ``l2_norm``) — arithmetically identical to folding the norms per pair
+    (same dot fold, same norm values, same ``denom > 0`` guard, so
+    results are bit-identical and every SQL oracle replays unchanged),
+    but each norm is computed once per ROW instead of once per PAIR.  Pair scoring dominates every embedding
     operator, and the measured cost split is ~3:1 norms:dot (two extra
     64-element interpreted HOF folds per pair), so hoisting cuts the
     hot path ~3x.  Callers compute ``l2_norm`` per side BEFORE the

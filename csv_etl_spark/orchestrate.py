@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from csv_etl_spark.compiler import mapping_json
 from csv_etl_spark.driver_memo import BoundedDriverMemo
-from csv_etl_spark.plans.pipeline import PassCounts, TransformResult, settle, transform, writes
+from csv_etl_spark.plans.pipeline import PassCounts, TransformResult, settle, transform
 from csv_etl_spark.sources.csv_source import check_line_column, read_spec_csv, with_line_numbers
 from csv_etl_spark.sources.sinks import write_single_csv_file
 from csv_etl_spark.specs import ETLMapping, FileSpec, SpecStore
@@ -114,10 +114,14 @@ class _Measured:
         return error_sample <= self.cap or len(self.errors) == self.counts.errors
 
 
+# Errors a result reports at most: the reference UI shows at most 50
+# (app.py:221), so collecting more buys nothing and risks the driver.
+DEFAULT_ERROR_CAP = 50
+
 # The measured outcome of each upload's validation pass (module
 # docstring).  An entry is a few hundred bytes of key (path, spec and
 # mapping JSON) plus four counts and at most the request's error cap of
-# error dicts (50 on the dashboard's routes).
+# error dicts (``DEFAULT_ERROR_CAP`` on the dashboard's routes).
 _UPLOAD_MEMO = BoundedDriverMemo(max_entries=32)
 
 
@@ -129,23 +133,6 @@ def _memo_key(upload: Upload, mapping: ETLMapping) -> tuple | None:
     if upload.state is None or text is None:
         return None
     return (*upload.state, text)
-
-
-def _served(
-    key: tuple | None, mapping: ETLMapping, error_sample: int, dry_run: bool, fail_on_error: bool
-) -> _Measured | None:
-    """The stored measurement that answers this request, or None: a
-    request that writes runs its pass."""
-    stored = _UPLOAD_MEMO.get(key)
-    if stored is None or not stored.covers(error_sample):
-        return None
-    if writes(mapping, stored.counts, dry_run, fail_on_error):
-        return None
-    return stored
-
-
-def _no_write() -> None:
-    raise RuntimeError("a result served from the upload memo writes nothing")
 
 
 def measure(
@@ -160,34 +147,24 @@ def measure(
     memo (module docstring); the arguments are ``transform``'s.  A
     request the memo answers gets the same counts, error sample and log
     lines as its pass would give, with ``output`` and ``errors`` set to
-    None.  A pass fills the memo only when the file's stat and the
-    session's conf after it equal those the upload took before its scan
-    was built."""
+    None; a request that writes runs its pass.  A pass fills the memo
+    only when the file's stat and the session's conf after it equal
+    those the upload took before its scan was built."""
     key = _memo_key(upload, mapping)
-    stored = _served(key, mapping, error_sample, dry_run, fail_on_error)
-    if stored is not None:
-        # the gate holds, so settle only logs it
-        result = settle(
-            mapping, stored.counts, dry_run, fail_on_error,
-            write=_no_write if write is not None else None,
-        )
-        result.error_sample = [dict(e) for e in stored.errors[:error_sample]]
-        return result
+    stored = _UPLOAD_MEMO.get(key)
+    if stored is not None and stored.covers(error_sample):
+        sink = "custom sink" if write is not None else None
+        result = settle(mapping, stored.counts, dry_run, fail_on_error, sink=sink)
+        if not result.output_written:
+            result.error_sample = [dict(e) for e in stored.errors[:error_sample]]
+            return result
     result = transform(
         upload.lined(), mapping, fail_on_error=fail_on_error, dry_run=dry_run,
         write=write, error_sample=error_sample,
     )
     if key is not None and _upload_state(upload.spark, upload.path, upload.source) == upload.state:
-        counts = PassCounts(
-            total=result.input_count,
-            # a mapping without fields counts every row skipped, and then
-            # neither the counts nor the gate read kept
-            kept=result.input_count - result.skipped_count,
-            errors=result.error_count,
-            error_rows=result.error_row_count,
-        )
         errors = tuple(dict(e) for e in result.error_sample)
-        _UPLOAD_MEMO.put(key, _Measured(counts, errors, error_sample))
+        _UPLOAD_MEMO.put(key, _Measured(result.counts, errors, error_sample))
     return result
 
 
@@ -223,14 +200,14 @@ def process_source(
     input_root: str,
     output_root: str,
     fail_on_error: bool = True,
-    error_cap: int = 50,
 ) -> dict:
     """Process every ``*.csv`` of the mapping's source directory through
     the compiled mapping; per-file gated single-CSV outputs named
     ``<stem>_<destination_id>.csv`` (reference app.py:194-212 semantics).
 
     Returns the reference's accounting shape: success/skipped/error
-    totals, first ``error_cap`` errors with file context, last-100 logs.
+    totals, the first ``DEFAULT_ERROR_CAP`` errors with file context,
+    last-100 logs.
     Each file goes through ``convert_file``: a file the upload memo
     answers runs no Spark job (its per-file result has ``output`` and
     ``errors`` None; this summary is the same either way).
@@ -263,7 +240,8 @@ def process_source(
 
     for up in uploads:
         result, _ = convert_file(
-            up, mapping, destination, output_root, error_cap - len(all_errors), fail_on_error,
+            up, mapping, destination, output_root, DEFAULT_ERROR_CAP - len(all_errors),
+            fail_on_error,
         )
         totals["success_count"] += result.success_count
         totals["skipped_count"] += result.skipped_count
@@ -274,7 +252,7 @@ def process_source(
     return {
         "mapping_name": mapping.name,
         **totals,
-        "errors": all_errors[:error_cap],
+        "errors": all_errors[:DEFAULT_ERROR_CAP],
         "logs": all_logs[-100:],
         "has_more_errors": totals["error_count"] > len(all_errors),
     }

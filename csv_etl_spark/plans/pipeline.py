@@ -25,9 +25,9 @@ carries it onto every output and error row.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from functools import partial
-from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -47,11 +47,10 @@ class TransformResult:
     (all rows when the mapping has no field_mappings — `{}` is falsy in the
     interpreter, dynamic.py:309)."""
 
+    counts: PassCounts  # what the pass counted
     success_count: int = 0
     skipped_count: int = 0
     error_count: int = 0
-    error_row_count: int = 0
-    input_count: int = 0  # rows read, before the skip rules
     output: DataFrame | None = None  # destination fields only
     errors: DataFrame | None = None  # field, message, source_value [, _line]
     # first errors as {line, field, message, value} (the reference's
@@ -143,20 +142,16 @@ def settle(
     counts: PassCounts,
     dry_run: bool = False,
     fail_on_error: bool = True,
-    write: Callable[[], None] | None = None,
-    target: str | None = None,
+    sink: str | None = None,
 ) -> TransformResult:
     """The result of a pass that counted ``counts``: the reference's
-    counts, the gate and the log lines.  ``write`` is the pass's sink, a
-    callable ``() -> None`` (None: the pass has no sink); it is called
-    only when ``writes`` holds.  ``target`` names the sink in the log.
-    ``transform`` calls this after its pass, and so does a caller that
-    already knows the counts, so both give the same result."""
-    result = TransformResult(
-        input_count=counts.total,
-        error_count=counts.errors,
-        error_row_count=counts.error_rows,
-    )
+    counts, the gate and the log lines.  ``sink`` names the pass's sink in
+    the log (None: the pass has no sink).  The gate is decided here, once,
+    and nothing is written: ``output_written`` says the pass's output is
+    to be written, and ``transform`` writes it.  ``transform`` calls this
+    after its pass, and so does a caller that already knows the counts,
+    so both give the same result."""
+    result = TransformResult(counts=counts, error_count=counts.errors)
     mode = "Validating" if dry_run else "Transforming"
     result.add_log(f"{mode} with mapping: {mapping.name}")
     result.add_log(
@@ -169,12 +164,12 @@ def settle(
         result.skipped_count = counts.total - counts.kept
         result.success_count = counts.kept - counts.error_rows
 
-    if write is not None and writes(mapping, counts, dry_run, fail_on_error):
-        write()
+    if sink is not None and writes(mapping, counts, dry_run, fail_on_error):
         result.output_written = True
-        result.add_log(f"Output written to {target or 'custom sink'}")
-    elif write is not None and writes(mapping, counts, dry_run, False):
-        # rows to write, but fail_on_error holds them back
+        result.add_log(f"Output written to {sink}")
+    elif sink is not None and not dry_run and fail_on_error and counts.errors > 0:
+        # rows to write, but fail_on_error holds them back (errors arise
+        # only on kept rows of a mapping with fields)
         result.add_log(
             f"OUTPUT SKIPPED: {counts.errors} errors found. Fix errors before converting."
         )
@@ -187,38 +182,16 @@ def settle(
     return result
 
 
-def transform(
-    df: DataFrame,
-    mapping: ETLMapping | dict,
-    output_path: str | None = None,
-    fail_on_error: bool = True,
-    dry_run: bool = False,
-    write=None,
-    error_sample: int = 0,
-) -> TransformResult:
-    """Reference ``transform_file``/``validate_file`` semantics
-    (``dynamic.py:267-348``) over a DataFrame.
-
-    ONE scan computes everything: one noop write materializes the
-    persisted transform output, and the input-row total (observed on the
-    source) and the kept/error counters (observed on the output) ride
-    along on that job as ``observe`` metrics — no separate count or
-    aggregate pass.  The error sample and the gated write then read the
-    cache.  ``write`` is an optional callable ``(DataFrame) -> None`` that
-    replaces the default CSV write (``sinks.write_spec_csv`` to
-    ``output_path``) — lets callers target parquet/Delta without changing
-    gate semantics.  Counts, gate and log lines are ``settle``'s.
-
-    ``error_sample`` > 0 collects that many first errors into
-    ``result.error_sample`` from the persisted pass, and only when there
-    are errors.  ``result.errors`` and ``result.output`` stay lazy: read
-    after return, they recompute from the source.
-    """
+@contextmanager
+def counted_pass(df: DataFrame, compiled: CompiledMapping) -> Iterator[tuple[DataFrame, PassCounts]]:
+    """``compiled`` applied to ``df`` (errors on, ``_line`` carried),
+    persisted, and its ``PassCounts``, both from ONE job: a noop write
+    materializes the persisted frame, and the input-row total (observed
+    on the source) and the kept/error counters (observed on the output)
+    ride along on it as ``observe`` metrics — no separate count or
+    aggregate pass.  Whatever runs in the ``with`` block reads the cache;
+    the frame is unpersisted on exit."""
     from pyspark.sql import Observation
-
-    if isinstance(mapping, dict):
-        mapping = ETLMapping.from_dict(mapping)
-    compiled = _compile(df, mapping)
 
     # The input total is observed UPSTREAM of the mapping's skip-filter,
     # so it sees every input row (it cannot be optimized away: the filter
@@ -241,13 +214,53 @@ def transform(
     try:
         projected.write.format("noop").mode("overwrite").save()
         observed = counts_obs.get
-        counts = PassCounts(
+        yield projected, PassCounts(
             total=int(total_obs.get["total"]),
             kept=int(observed["kept"]),
             errors=int(observed["errors"]),
             error_rows=int(observed["error_rows"]),
         )
+    finally:
+        # Unpersist before returning: counters, the error sample and the
+        # gated write all ran against the cached data.  Leaving it cached
+        # poisons later reads — CacheManager matches on the PLAN, so
+        # re-reading a file that was edited in between (the preview →
+        # fix-row → convert loop) would silently serve the stale pre-edit
+        # rows.  A result's error sample already holds the errors a UI
+        # shows; its errors / output frames stay valid and recompute from
+        # source on access, so callers wanting more than the sample pay a
+        # rescan.
+        projected.unpersist()
 
+
+def transform(
+    df: DataFrame,
+    mapping: ETLMapping | dict,
+    output_path: str | None = None,
+    fail_on_error: bool = True,
+    dry_run: bool = False,
+    write=None,
+    error_sample: int = 0,
+) -> TransformResult:
+    """Reference ``transform_file``/``validate_file`` semantics
+    (``dynamic.py:267-348``) over a DataFrame.
+
+    ONE scan computes everything (``counted_pass``); the error sample and
+    the gated write then read the cache.  ``write`` is an optional
+    callable ``(DataFrame) -> None`` that replaces the default CSV write
+    (``sinks.write_spec_csv`` to ``output_path``) — lets callers target
+    parquet/Delta without changing gate semantics.  Counts, gate and log
+    lines are ``settle``'s; the output is written when its result says
+    so.
+
+    ``error_sample`` > 0 collects that many first errors into
+    ``result.error_sample`` from the persisted pass, and only when there
+    are errors.  ``result.errors`` and ``result.output`` stay lazy: read
+    after return, they recompute from the source.
+    """
+    if isinstance(mapping, dict):
+        mapping = ETLMapping.from_dict(mapping)
+    with counted_pass(df, _compile(df, mapping)) as (projected, counts):
         line = [LINE_COL] if LINE_COL in projected.columns else []
         errors_df = projected.select(
             *line, F.posexplode(F.col(ERRORS_COL)).alias("_pos", "error")
@@ -273,29 +286,17 @@ def transform(
                 for r in first.limit(error_sample).collect()
             ]
         output_df = projected.drop(ERRORS_COL, LINE_COL)
-        sink = None
-        if write is not None:
-            sink = partial(write, output_df)
-        elif output_path:
-            sink = partial(write_spec_csv, output_df, output_path)
-        result = settle(
-            mapping, counts, dry_run, fail_on_error, write=sink, target=output_path
-        )
+        sink = output_path or ("custom sink" if write is not None else None)
+        result = settle(mapping, counts, dry_run, fail_on_error, sink=sink)
+        if result.output_written:
+            if write is not None:
+                write(output_df)
+            else:
+                write_spec_csv(output_df, output_path)
         result.errors = errors_df.drop("_pos")
         result.error_sample = sample
         result.output = output_df
         return result
-    finally:
-        # Unpersist before returning: counters, the error sample and the
-        # gated write all ran against the cached data above.  Leaving it
-        # cached poisons later reads — CacheManager matches on the PLAN, so
-        # re-reading a file that was edited in between (the preview →
-        # fix-row → convert loop) would silently serve the stale pre-edit
-        # rows.  result.error_sample already holds the errors a UI shows;
-        # result.errors / result.output stay valid and recompute from
-        # source on access, so callers wanting more than the sample pay a
-        # rescan.
-        projected.unpersist()
 
 
 def validate(

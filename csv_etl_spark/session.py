@@ -20,10 +20,9 @@ def get_spark(app_name: str = "csv-etl-spark", shuffle_partitions: int | None = 
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     ``shuffle_partitions`` defaults to 32 on any host, whatever its core
-    count; AQE starts every exchange 8× wider (256 by default,
-    ``SPARK_GRAFT_INITIAL_PARTITIONS`` overrides) and coalesces the excess
-    at runtime.  At cluster scale it would be set from input size / target
-    partition bytes.
+    count; AQE starts every exchange 8× wider (256 by default) and
+    coalesces the excess at runtime.  At cluster scale it would be set
+    from input size / target partition bytes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -48,7 +47,7 @@ def get_spark(app_name: str = "csv-etl-spark", shuffle_partitions: int | None = 
         # per-query gate isn't worth the config surface.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(shuffle_partitions * 8)),
+            str(shuffle_partitions * 8),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # r16 (guide §2.4): let AQE re-plan CACHED plans' output
@@ -69,10 +68,7 @@ def get_spark(app_name: str = "csv-etl-spark", shuffle_partitions: int | None = 
         # acceptable here because every consumer of the cached frames
         # re-shuffles by its own keys (joins/aggs) or is explicitly
         # repartitioned (ensure_parallelism).
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_PLAN_AQE", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

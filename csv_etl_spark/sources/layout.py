@@ -111,26 +111,3 @@ def write_zordered(
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-def file_key_ranges(path: str, column: str) -> list[tuple]:
-    """(min, max) of ``column`` per parquet file — reads footers only.
-    Lets tests PROVE clustering produced skippable files."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        meta = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            for ci in range(meta.num_columns):
-                col = meta.row_group(rg).column(ci)
-                if col.path_in_schema == column and col.statistics is not None:
-                    mins.append(col.statistics.min)
-                    maxs.append(col.statistics.max)
-        if mins:
-            ranges.append((min(mins), max(maxs)))
-    return ranges

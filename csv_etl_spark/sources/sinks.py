@@ -14,7 +14,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from csv_etl_spark.local import ident_col
 from csv_etl_spark.specs import ColumnType, FileSpec
 
 # FIXTURES §5 / reference app.py:730-740 template dummy values
@@ -29,22 +28,12 @@ _TEMPLATE_VALUES = {
 }
 
 
-def write_spec_csv(
-    df: DataFrame,
-    path: str,
-    spec: FileSpec | None = None,
-    single_file: bool = False,
-) -> None:
+def write_spec_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S5: write CSV with header.  Column order comes from the DataFrame
     (mapping order — reference uses the first result row's key order, which
     is mapping order).  Header names and cells keep their surrounding
     spaces, as the reference's ``csv`` writer does (Spark trims them)."""
-    out = df
-    if spec is not None:
-        ordered = [c for c in spec.column_names() if c in df.columns]
-        ordered += [c for c in df.columns if c not in ordered]
-        out = df.select(*map(ident_col, ordered))
-    writer = out.coalesce(1) if single_file else out
+    writer = df.coalesce(1) if single_file else df
     writer.write.mode("overwrite").options(
         header="true", ignoreLeadingWhiteSpace="false", ignoreTrailingWhiteSpace="false"
     ).csv(path)

@@ -14,6 +14,8 @@ an ``all_string`` mode (scan-time parity) and a typed mode (for typed sinks).
 from __future__ import annotations
 
 import json
+import os
+import threading
 from dataclasses import dataclass, field
 from enum import Enum
 from pathlib import Path
@@ -277,9 +279,20 @@ class SpecStore:
         return data
 
     def _save(self, filename: str, data: dict) -> None:
+        """Write ``data`` to a temp file beside ``filename``, then rename it
+        over the file: a reader sees the old file or the new one, never a
+        half-written one, and a save that fails leaves the old file."""
         path = self.config_dir / filename
         path.parent.mkdir(parents=True, exist_ok=True)
-        path.write_text(json.dumps(data, indent=2, ensure_ascii=False), encoding="utf-8")
+        # one temp name per process and thread, so concurrent saves never
+        # share one; created under the umask, like the file it replaces
+        tmp = path.with_name(f".{filename}.{os.getpid()}.{threading.get_ident()}.tmp")
+        try:
+            tmp.write_text(json.dumps(data, indent=2, ensure_ascii=False), encoding="utf-8")
+            os.replace(tmp, path)
+        except BaseException:
+            tmp.unlink(missing_ok=True)
+            raise
         self._cache.pop(filename, None)
 
     # -- sources ------------------------------------------------------------

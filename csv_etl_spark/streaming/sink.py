@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from csv_etl_spark.compiler import ERRORS_COL, compile_mapping
+from csv_etl_spark.plans.pipeline import counted_pass, writes
 from csv_etl_spark.specs import ETLMapping
 
 
@@ -26,10 +27,14 @@ def gated_stream_writer(
     fail_on_error: bool = True,
 ):
     """Start a stream that applies ``mapping`` per micro-batch and writes
-    clean output to ``output_dir`` (parquet, append); rows with field
-    errors go to ``errors_dir``.  With ``fail_on_error`` the WHOLE batch
-    is withheld when any row errored (reference S6 semantics, per batch —
-    at stream granularity a batch is the unit of atomicity).
+    its output to ``output_dir`` (parquet) when the batch passes the
+    batch path's write gate (``pipeline.writes``): the mapping has fields,
+    the batch kept rows, and no row errored or ``fail_on_error`` is off.
+    With ``fail_on_error`` the WHOLE batch is withheld when any row
+    errored (reference S6 semantics, per batch — at stream granularity a
+    batch is the unit of atomicity).  Rows with field errors go to
+    ``errors_dir``, with the destination fields (a stream has no line
+    numbers) and ``_errors`` as JSON.
 
     Returns the StreamingQuery; caller awaits/stops it."""
     if isinstance(mapping, dict):
@@ -43,26 +48,18 @@ def gated_stream_writer(
         # retry overwrites its own partition instead of appending
         # duplicates.  Readers of the parent directory see batch_id as a
         # partition column.
-        out = compiled.apply(batch_df, with_errors=True)
-        out = out.persist()
-        try:
-            errs = out.filter(F.size(F.col(ERRORS_COL)) > 0)
-            n_err = errs.count()
-            if n_err:
+        with counted_pass(batch_df, compiled) as (out, counts):
+            if counts.errors:
                 (
-                    errs.withColumn(ERRORS_COL, F.to_json(F.col(ERRORS_COL)))
+                    out.filter(F.size(F.col(ERRORS_COL)) > 0)
+                    .withColumn(ERRORS_COL, F.to_json(F.col(ERRORS_COL)))
                     .write.mode("overwrite")
                     .parquet(f"{errors_dir}/batch_id={batch_id}")
                 )
-            # S6 per batch: any error + fail_on_error → withhold the WHOLE
-            # batch; otherwise write every row (errored rows included, like
-            # the reference's fail_on_error=False path)
-            if n_err == 0 or not fail_on_error:
+            if writes(mapping, counts, dry_run=False, fail_on_error=fail_on_error):
                 out.drop(ERRORS_COL).write.mode("overwrite").parquet(
                     f"{output_dir}/batch_id={batch_id}"
                 )
-        finally:
-            out.unpersist()
 
     return (
         stream.writeStream.foreachBatch(write_batch)

@@ -166,3 +166,34 @@ def test_gated_stream_writer_withholds_on_error(spark, tmp_path):
     q.awaitTermination(120)
     assert not os.path.exists(out_dir)  # batch withheld
     assert spark.read.parquet(err_dir).count() == 1
+
+
+
+_NO_FIELDS = {"id": "m", "name": "m", "filter_rules": [], "field_mappings": []}
+_ALL_SKIPPED = {
+    "id": "m", "name": "m",
+    "filter_rules": [{"field": "event_id", "operator": "in", "values": ["1", "2"]}],
+    "field_mappings": [
+        {"destination_field": "event_id", "source_field": "event_id",
+         "transform_type": "direct", "transform_config": {}},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "mapping", [_NO_FIELDS, _ALL_SKIPPED], ids=["mapping_without_fields", "all_rows_skipped"]
+)
+def test_gated_stream_writer_gate_is_the_batch_gate(spark, tmp_path, mapping):
+    """A batch the batch path's gate (``pipeline.writes``) writes nothing
+    for — a mapping with no field mappings, or every row skipped — writes
+    no ``batch_id=`` partition, and the stream ends cleanly instead of
+    failing on an empty-schema write."""
+    src_dir = tmp_path / "stream_in3"
+    spark.createDataFrame([("1", "2024-01-15"), ("2", "2024-01-16")], ["event_id", "ts"]) \
+        .write.parquet(str(src_dir))
+    stream = spark.readStream.schema("event_id string, ts string").parquet(str(src_dir))
+    out_dir, err_dir, ckpt = (str(tmp_path / d) for d in ("out3", "errs3", "ckpt3"))
+    q = gated_stream_writer(stream, mapping, out_dir, err_dir, ckpt)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert not os.path.exists(out_dir) and not os.path.exists(err_dir)

@@ -9,14 +9,32 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from csv_etl_spark.sources.layout import (
-    file_key_ranges,
-    write_clustered,
-    write_partitioned,
-)
+from csv_etl_spark.sources.layout import write_clustered, write_partitioned
 from csv_etl_spark.sources.tables import load_events
 
 SF = "/root/testdata/sf0.001"
+
+
+def file_key_ranges(path: str, column: str) -> list[tuple]:
+    """(min, max) of ``column`` per parquet file, from the footers only:
+    what lets a test prove a layout produced skippable files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        meta = pq.ParquetFile(f).metadata
+        mins, maxs = [], []
+        for rg in range(meta.num_row_groups):
+            for ci in range(meta.num_columns):
+                col = meta.row_group(rg).column(ci)
+                if col.path_in_schema == column and col.statistics is not None:
+                    mins.append(col.statistics.min)
+                    maxs.append(col.statistics.max)
+        if mins:
+            ranges.append((min(mins), max(maxs)))
+    return ranges
 
 
 def test_write_partitioned_prunes_directories(spark, tmp_path):

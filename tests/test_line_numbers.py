@@ -138,4 +138,4 @@ def test_split_file_errors_by_line(spark, tmp_path, confs):
                for r in errors_by_line(result.errors).collect()}
     assert grouped == {32: ["date"]}
     assert [e["line"] for e in result.error_sample] == [32]
-    assert (result.input_count, result.success_count, result.error_count) == (41, 40, 1)
+    assert (result.counts.total, result.success_count, result.error_count) == (41, 40, 1)

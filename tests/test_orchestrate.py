@@ -5,6 +5,9 @@ tests drive an injected fake clock — no sleeps."""
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -13,7 +16,7 @@ from csv_etl_spark.orchestrate import (
     process_source,
     schedule_source_processing,
 )
-from csv_etl_spark.specs import SpecStore
+from csv_etl_spark.specs import ColumnSpec, FileSpec, SpecStore
 
 
 class FakeClock:
@@ -127,3 +130,29 @@ def test_scheduled_processing_picks_up_new_files(spark, etl_env):
     assert job.runs == 2
     assert job.last_result["success_count"] == 3  # reprocessed a + new b
     assert (tmp_path / "out" / "out1" / "b_d.csv").exists()
+
+
+def test_spec_store_save_failing_mid_write_keeps_the_old_file(tmp_path):
+    """A save that fails part way through its write (here: a child
+    process with a 244-byte file-size limit) leaves the stored specs as
+    they were and no temp file behind: the store writes a temp file and
+    renames it over the old one."""
+    SpecStore(str(tmp_path)).save_source(
+        FileSpec(id="kept", name="kept", columns=[ColumnSpec("a")])
+    )
+    before = (tmp_path / "sources.json").read_text()
+    repo = str(Path(__file__).resolve().parents[1])
+    script = f"""
+import resource, signal, sys
+sys.path.insert(0, {repo!r})
+from csv_etl_spark.specs import ColumnSpec, FileSpec, SpecStore
+store = SpecStore({str(tmp_path)!r})
+signal.signal(signal.SIGXFSZ, signal.SIG_IGN)
+resource.setrlimit(resource.RLIMIT_FSIZE, (244, 244))
+store.save_source(FileSpec(id="big", name="x" * 10000, columns=[ColumnSpec("a")]))
+"""
+    proc = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True)
+    assert proc.returncode != 0 and "File too large" in proc.stderr, proc.stderr
+    assert (tmp_path / "sources.json").read_text() == before
+    assert [p.name for p in tmp_path.iterdir()] == ["sources.json"]
+    assert SpecStore(str(tmp_path)).get_source("kept").name == "kept"

@@ -1,5 +1,5 @@
 """Deterministic portable sampling: reproducibility, fraction accuracy,
-split disjointness, threshold edge cases."""
+threshold edge cases."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from csv_etl_spark.operators.sampling import (
     fraction_threshold_hex,
     hash_sample,
-    split_train_holdout,
     stratified_hash_sample,
 )
 
@@ -42,15 +41,6 @@ def test_hash_sample_nested_fractions(spark):
     small = set(r["k"] for r in hash_sample(df, "k", 0.1).collect())
     big = set(r["k"] for r in hash_sample(df, "k", 0.2).collect())
     assert small <= big
-
-
-def test_split_train_holdout_partitions_everything(spark):
-    df = spark.range(0, 10000).select(F.col("id").cast("string").alias("k"))
-    train, hold = split_train_holdout(df, "k", 0.1)
-    nt, nh = train.count(), hold.count()
-    assert nt + nh == 10000
-    assert abs(nh / 10000 - 0.1) < 0.02
-    assert train.join(hold, "k", "inner").count() == 0
 
 
 def test_stratified_full_and_zero(spark):
