@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from csv_etl_spark.operators._cache import BoundedPersistCache
 from csv_etl_spark.operators.text import ws_tokens
@@ -541,6 +542,65 @@ def simhash(
     return sig
 
 
+# Largest symmetric edge list (2 rows per input pair) that
+# resolve_duplicate_clusters resolves with one driver-side union-find
+# instead of label-propagation rounds.  Sized in SCALE.md: on a 4-core
+# host the small tier is no slower up to 1M edge rows, but the bound stays
+# below the 16k-edge capped LSH graph at 5M docs, so every measured
+# scale-tier graph keeps the distributed rounds.
+SMALL_GRAPH_EDGES = 10_000
+
+
+def _component_labels(edges: DataFrame) -> DataFrame:
+    """Small tier of ``resolve_duplicate_clusters``: (id, min id of its
+    component) for every vertex of the symmetric edge list ``(u, v)``,
+    computed on the driver from one Arrow collect.
+
+    Ids are ranked in sorted order (Arrow sorts strings bytewise, as Spark
+    compares them), so the minimum rank is the minimum id.  Components come
+    from vectorized passes in numpy: every root hooks onto the smallest
+    root across its edges, then pointers jump until each names its root.
+    Pointers only ever go down, and a pass whose edges still disagree
+    removes at least one root, so any diameter converges."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = edges.toArrow()
+    u, v = t.column("u"), t.column("v")
+    ids = pc.unique(u)  # symmetric: every endpoint is some row's u
+    has_null = ids.null_count > 0
+    ids = pc.drop_null(ids)
+    ids = ids.take(pc.sort_indices(ids))
+    both = pc.and_(pc.is_valid(u), pc.is_valid(v))
+    ui = pc.index_in(pc.filter(u, both), value_set=ids).to_numpy()
+    vi = pc.index_in(pc.filter(v, both), value_set=ids).to_numpy()
+
+    root = np.arange(len(ids))
+    while True:
+        ru, rv = root[ui], root[vi]
+        if np.array_equal(ru, rv):
+            break
+        low = np.minimum(ru, rv)
+        np.minimum.at(root, ru, low)
+        np.minimum.at(root, rv, low)
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+
+    labels = ids.take(pa.array(root))
+    if has_null:
+        ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+        labels = pa.concat_arrays([labels, pa.nulls(1, ids.type)])
+    dtype = edges.schema["u"].dataType
+    return edges.sparkSession.createDataFrame(
+        pa.table({"id": ids, "cluster_id": labels}),
+        StructType([StructField("id", dtype), StructField("cluster_id", dtype)]),
+    )
+
+
 def resolve_duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -552,41 +612,48 @@ def resolve_duplicate_clusters(
     generator (jaccard/LSH/embedding): pairs say "these two match", but
     dedup needs CLUSTERS (keep one doc per component, drop the rest).
 
-    Iterative min-label propagation, one eager ``localCheckpoint`` per
-    round; converges in O(component diameter) rounds — near-dup
-    components are shallow (dup clusters are cliques or short chains), so
-    a handful of rounds in practice.
+    Two tiers, chosen by the edge count round 1 observes:
 
     * Round 1 (seed) needs no labels frame and no join: every vertex
       starts labelled with its own id, so it is one ``groupBy(u)`` over
-      the symmetric edge list, ``label = least(u, min(v))``.
-    * Later rounds are ONE union-aggregate: neighbour offers
-      (``edges ⋈ labels`` on v) unioned with each vertex's own label,
-      grouped by id → the new label (min) and the old one.  No join back
-      onto the previous labels.
-    * The edge list is not deduplicated: min-propagation is idempotent
-      under duplicate edges, so a ``distinct`` would only add a shuffle.
+      the symmetric edge list, ``label = least(u, min(v))``.  Its
+      ``localCheckpoint`` job also persists the edge list and observes
+      the changed-label count and ``sum(degree)``.
+    * Small tier: at most ``SMALL_GRAPH_EDGES`` edge rows (integer or
+      string ids) are collected as one Arrow table and union-found on the
+      driver (``_component_labels``): one more job, no rounds, any
+      diameter.
+    * Rounds tier (larger graphs, other id types): iterative min-label
+      propagation, one eager ``localCheckpoint`` per round; converges in
+      O(component diameter) rounds — near-dup components are shallow
+      (dup clusters are cliques or short chains).  Each round is ONE
+      union-aggregate: neighbour offers (``edges ⋈ labels`` on v) unioned
+      with each vertex's own label, grouped by id → the new label (min)
+      and the old one.  No join back onto the previous labels.
+    * The edge list is not deduplicated: min-propagation and union-find
+      are idempotent under duplicate edges, so a ``distinct`` would only
+      add a shuffle.
     * The change count rides on the checkpoint job itself (an
       ``Observation``), so convergence costs no probe job.
 
     A NULL id stays one ``(NULL, NULL)`` row and takes no part in the
     propagation: its partner is labelled as if the pair were absent.
 
-    Raises ``RuntimeError`` if labels still change in round
-    ``max_iterations``: a component whose diameter exceeds the cap would
-    otherwise come back split across several cluster_ids.
+    Raises ``RuntimeError`` if the rounds tier's labels still change in
+    round ``max_iterations``: a component whose diameter exceeds the cap
+    would otherwise come back split across several cluster_ids.
     """
     from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
 
-    def checkpoint(frame: DataFrame) -> tuple[DataFrame, int]:
+    def checkpoint(frame: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
         # localCheckpoint, not persist: it truncates the lineage, which
         # would otherwise GROW each round until plan analysis overflows
         # the JVM stack on long chains.  The Observation is filled by the
         # same job, so the changed-label count costs nothing extra.
         obs = Observation()
-        ck = frame.observe(obs, F.count_if("_ch").alias("changed")).localCheckpoint(eager=True)
-        return ck.select("id", "label"), obs.get["changed"]
+        ck = frame.observe(obs, F.count_if("_ch").alias("changed"), *metrics).localCheckpoint(eager=True)
+        return ck.select("id", "label"), obs.get
 
     # one-pass symmetric edge build: explode [(a,b),(b,a)] per pair row.
     # The previous union-of-two-selects spelling scanned `pairs` TWICE
@@ -610,13 +677,18 @@ def resolve_duplicate_clusters(
     try:
         # min() skips NULL partners; least() would skip a NULL u, so the
         # NULL vertex's label is kept NULL explicitly
-        labels, changed = checkpoint(
-            edges.groupBy("u").agg(F.min("v").alias("nmin")).select(
+        labels, seen = checkpoint(
+            edges.groupBy("u").agg(F.min("v").alias("nmin"), F.count("*").alias("_deg")).select(
                 F.col("u").alias("id"),
                 F.when(F.col("u").isNotNull(), F.least("u", "nmin")).alias("label"),
                 (F.col("nmin") < F.col("u")).alias("_ch"),
-            )
+                "_deg",
+            ),
+            F.sum("_deg").alias("edges"),
         )
+        changed = seen["changed"]
+        if changed and seen["edges"] <= SMALL_GRAPH_EDGES and _driver_sortable(edges.schema["u"].dataType):
+            return _component_labels(edges)
         for _ in range(max_iterations - 1):
             if not changed:
                 break
@@ -624,7 +696,7 @@ def resolve_duplicate_clusters(
                 F.col("u").alias("id"), "label", F.lit(None).alias("old")
             )
             own = labels.select("id", "label", F.col("label").alias("old"))
-            labels, changed = checkpoint(
+            labels, seen = checkpoint(
                 offers.unionByName(own)
                 .groupBy("id")
                 .agg(F.min("label").alias("nmin"), F.max("old").alias("old"))
@@ -636,6 +708,7 @@ def resolve_duplicate_clusters(
                     (F.col("nmin") < F.col("old")).alias("_ch"),
                 )
             )
+            changed = seen["changed"]
         if changed:
             raise RuntimeError(
                 f"resolve_duplicate_clusters: label propagation did not converge "
@@ -646,6 +719,14 @@ def resolve_duplicate_clusters(
         return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
     finally:
         edges.unpersist()
+
+
+def _driver_sortable(dtype) -> bool:
+    """Id types whose Arrow sort order is Spark's: integers, and strings
+    under the default bytewise collation."""
+    if isinstance(dtype, StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return isinstance(dtype, IntegralType)
 
 
 # ---------------------------------------------------------------------------

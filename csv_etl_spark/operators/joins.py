@@ -253,21 +253,23 @@ def fuzzy_string_join(
     joins): every left string splits into ``max_dist + 1`` balanced
     contiguous segments; d edits can touch at most d of them, so any
     right string within distance d must contain at least one segment
-    VERBATIM, at a position shifted by at most d.  The right side
-    enumerates substrings of exactly the DISTINCT segment lengths in
-    play (a tiny length table joined broadcast — no driver collect),
-    candidates come from a pure EQUIJOIN on (segment text, segment
-    length) — never a cross join — pruned by the position window
-    |pos − start| ≤ d and the length window |len_l − len_r| ≤ d, deduped
-    per (left, right) pair, and verified with the exact JVM
-    ``levenshtein``.  Left strings shorter than ``max_dist + 1`` chars
-    (degenerate segments) route through a keyed length-bucket equijoin
-    instead — each emits its 2d + 1 admissible right lengths as join
-    keys — still no cross join.  NULL keys on either side match nothing.
+    VERBATIM, at a position shifted by at most d.  Candidates come from
+    ONE equijoin on ``(left length, segment index, text)``: the left side
+    emits its d + 1 segments; the right side emits, for every admissible
+    left length ``ll ∈ [rl − d, rl + d]`` and segment index ``i``, its
+    substrings of length ``slen_i(ll)`` at the positions within d of
+    ``start_i(ll)`` — the length and position windows are the key, not a
+    filter after the join.  That is at most (2d + 1)²(d + 1) rows per
+    right string, independent of its length.  Candidate pairs are deduped
+    and verified with the exact JVM ``levenshtein``.  A left string
+    shorter than ``d + 1`` chars has an empty segment, which matches the
+    ``""`` substring of every right string of admissible length, so short
+    strings need no second path.  Never a cross join, no broadcast, and
+    each input is scanned once.  NULL keys on either side match nothing.
 
-    Scale notes: segments + substrings feed one shuffle — linear in
-    total string length for high-entropy keys (names, phones, hashes),
-    where candidates ≈ true matches.  The documented worst case is a
+    Scale notes: segments + substrings feed one shuffle — linear in the
+    row count for high-entropy keys (names, phones, hashes), where
+    candidates ≈ true matches.  The documented worst case is a
     corpus-wide shared template (every key starting with the same
     (d+1)-th of its text, e.g. ``Customer#…``): that segment becomes one
     hot join key and candidates degrade toward all-pairs — fuzzy-join
@@ -280,72 +282,54 @@ def fuzzy_string_join(
     d = int(max_dist)
     n_seg = d + 1
 
-    ls = left.select(
-        F.col(left_id).alias("_lid"),
-        F.col(left_on).alias("_lval"),
-        F.length(left_on).alias("_ll"),
-    )
-    rs = right.select(
-        F.col(right_id).alias("_rid"),
-        F.col(right_on).alias("_rval"),
-        F.length(right_on).alias("_rl"),
+    # (start, length) of segment `_i` of a left string of length `_ll`:
+    # the same expressions on both sides, so the keys line up
+    i, ll = F.col("_i"), F.col("_ll")
+    start = F.floor(i * ll / F.lit(n_seg)).cast("int")
+    slen = F.floor((i + 1) * ll / F.lit(n_seg)).cast("int") - start
+
+    segs = (
+        left.filter(F.col(left_on).isNotNull())
+        .select(
+            F.col(left_id).alias("_lid"),
+            F.col(left_on).alias("_lval"),
+            F.length(left_on).alias("_ll"),
+            F.explode(F.sequence(F.lit(0), F.lit(d))).alias("_i"),
+        )
+        .select("_lid", "_lval", "_ll", "_i", F.col("_lval").substr(start + 1, slen).alias("_key"))
     )
 
-    # --- main path: left strings with >= n_seg chars (non-empty segments)
-    exploded = ls.filter(F.col("_ll") >= n_seg).select(
-        "_lid", "_lval", "_ll",
-        F.explode(F.sequence(F.lit(0), F.lit(d))).alias("_i"),
-    )
-    start = F.floor(F.col("_i") * F.col("_ll") / F.lit(n_seg)).cast("int")
-    nxt = F.floor((F.col("_i") + 1) * F.col("_ll") / F.lit(n_seg)).cast("int")
-    segs = exploded.select(
-        "_lid", "_lval", "_ll",
-        start.alias("_start"),
-        (nxt - start).alias("_slen"),
-        F.col("_lval").substr(start + F.lit(1), nxt - start).alias("_seg"),
-    )
-    # distinct segment lengths: bounded by the distinct key lengths — a
-    # broadcast-sized table by construction (string keys, not documents)
-    seg_lens = segs.select("_slen").distinct()
+    rl = F.length(right_on)
     subs = (
-        rs.join(F.broadcast(seg_lens), F.col("_rl") >= F.col("_slen"))
+        right.filter(F.col(right_on).isNotNull())
         .select(
-            "_rid", "_rval", "_rl",
-            F.col("_slen").alias("_sublen"),
-            F.explode(
-                F.sequence(F.lit(1), F.col("_rl") - F.col("_slen") + 1)
-            ).alias("_pos"),
+            F.col(right_id).alias("_rid"),
+            F.col(right_on).alias("_rval"),
+            rl.alias("_rl"),
+            F.explode(F.sequence(F.greatest(rl - d, F.lit(0)), rl + d)).alias("_ll"),
         )
-        .select(
-            "_rid", "_rval", "_rl", "_sublen", "_pos",
-            F.col("_rval").substr(F.col("_pos"), F.col("_sublen")).alias("_sub"),
-        )
+        .select("*", F.explode(F.sequence(F.lit(0), F.lit(d))).alias("_i"))
     )
-    cand_main = (
-        segs.join(
-            subs,
-            (F.col("_seg") == F.col("_sub"))
-            & (F.col("_slen") == F.col("_sublen")),
+    lo = F.greatest(start - d, F.lit(0))
+    hi = F.least(start + d, F.col("_rl") - slen)
+    subs = (
+        subs.select(
+            "_rid", "_rval", "_ll", "_i", slen.alias("_slen"),
+            # sequence(lo, hi) counts DOWN when lo > hi: an empty window
+            # must emit nothing (explode of NULL is no rows)
+            F.explode(F.when(lo <= hi, F.sequence(lo, hi))).alias("_p"),
         )
-        .filter(F.abs(F.col("_pos") - 1 - F.col("_start")) <= d)
-        .filter(F.abs(F.col("_ll") - F.col("_rl")) <= d)
-        .select("_lid", "_lval", "_rid", "_rval")
-    )
-
-    # --- short path: left strings with < n_seg chars — length-keyed
-    cand_short = (
-        ls.filter(F.col("_ll") < n_seg)
         .select(
-            "_lid", "_lval",
-            F.explode(
-                F.sequence(F.greatest(F.col("_ll") - d, F.lit(0)), F.col("_ll") + d)
-            ).alias("_lenkey"),
+            "_rid", "_rval", "_ll", "_i",
+            F.col("_rval").substr(F.col("_p") + 1, F.col("_slen")).alias("_key"),
         )
-        .join(rs, F.col("_rl") == F.col("_lenkey"))
-        .select("_lid", "_lval", "_rid", "_rval")
     )
 
-    pairs = cand_main.unionByName(cand_short).distinct()
+    pairs = (
+        segs.join(subs, ["_ll", "_i", "_key"])
+        .select("_lid", "_lval", "_rid", "_rval")
+        .distinct()
+    )
     dist = F.levenshtein("_lval", "_rval")
     return (
         pairs.filter(dist <= d)

@@ -13,6 +13,7 @@ an ``all_string`` mode (scan-time parity) and a typed mode (for typed sinks).
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
 import threading
@@ -283,7 +284,6 @@ class SpecStore:
         over the file: a reader sees the old file or the new one, never a
         half-written one, and a save that fails leaves the old file."""
         path = self.config_dir / filename
-        path.parent.mkdir(parents=True, exist_ok=True)
         # one temp name per process and thread, so concurrent saves never
         # share one; created under the umask, like the file it replaces
         tmp = path.with_name(f".{filename}.{os.getpid()}.{threading.get_ident()}.tmp")
@@ -295,6 +295,31 @@ class SpecStore:
             raise
         self._cache.pop(filename, None)
 
+    def _update(self, filename: str, key: str, value: dict | None) -> bool:
+        """Set ``key`` to ``value`` in ``filename`` (delete it when
+        ``value`` is None).  The whole read-modify-write runs under an
+        exclusive ``flock`` on the config directory and re-reads the file
+        under the lock, not from the mtime cache, so concurrent saves from
+        threads or processes keep each other's updates.  The directory is
+        the lock, so the store adds no file beside its three JSON files.
+        Returns False when a deleted key was not there."""
+        self.config_dir.mkdir(parents=True, exist_ok=True)
+        lock = os.open(self.config_dir, os.O_RDONLY)
+        try:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            path = self.config_dir / filename
+            data = json.loads(path.read_text(encoding="utf-8")) if path.exists() else {}
+            if value is not None:
+                data[key] = value
+            elif key in data:
+                del data[key]
+            else:
+                return False
+            self._save(filename, data)
+            return True
+        finally:
+            os.close(lock)
+
     # -- sources ------------------------------------------------------------
     def sources(self) -> dict[str, FileSpec]:
         return {k: FileSpec.from_dict(v) for k, v in self._load("sources.json").items()}
@@ -304,9 +329,7 @@ class SpecStore:
         return FileSpec.from_dict(d) if d else None
 
     def save_source(self, spec: FileSpec) -> None:
-        data = self._load("sources.json").copy()
-        data[spec.id] = spec.to_dict()
-        self._save("sources.json", data)
+        self._update("sources.json", spec.id, spec.to_dict())
 
     # -- destinations ---------------------------------------------------------
     def destinations(self) -> dict[str, FileSpec]:
@@ -317,9 +340,7 @@ class SpecStore:
         return FileSpec.from_dict(d) if d else None
 
     def save_destination(self, spec: FileSpec) -> None:
-        data = self._load("destinations.json").copy()
-        data[spec.id] = spec.to_dict()
-        self._save("destinations.json", data)
+        self._update("destinations.json", spec.id, spec.to_dict())
 
     # -- mappings -------------------------------------------------------------
     def mappings(self) -> dict[str, ETLMapping]:
@@ -333,24 +354,14 @@ class SpecStore:
         """Unlike the reference's visual editor (which silently wipes
         ``filter_rules``, reference ``templates/mappings/visual.html:551`` —
         a recorded bug we do NOT replicate), this persists the full mapping."""
-        data = self._load("mappings.json").copy()
-        data[mapping.id] = mapping.to_dict()
-        self._save("mappings.json", data)
+        self._update("mappings.json", mapping.id, mapping.to_dict())
 
     # -- deletion (reference models.py delete_* / app.py delete routes) -----
-    def _delete(self, filename: str, key: str) -> bool:
-        data = self._load(filename).copy()
-        if key not in data:
-            return False
-        del data[key]
-        self._save(filename, data)
-        return True
-
     def delete_source(self, spec_id: str) -> bool:
-        return self._delete("sources.json", spec_id)
+        return self._update("sources.json", spec_id, None)
 
     def delete_destination(self, spec_id: str) -> bool:
-        return self._delete("destinations.json", spec_id)
+        return self._update("destinations.json", spec_id, None)
 
     def delete_mapping(self, mapping_id: str) -> bool:
-        return self._delete("mappings.json", mapping_id)
+        return self._update("mappings.json", mapping_id, None)

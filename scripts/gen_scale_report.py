@@ -69,8 +69,12 @@ def main() -> None:
     history: dict[str, list[tuple[str, dict, dict]]] = {}
     big_history: dict[str, tuple[str, dict, dict]] = {}
     local_files, scale_files = [], []
+    tier_bound: tuple[str, dict] | None = None
     for f in sorted(RECORDS.glob("BENCHNOTES_*.json"), key=record_order):
         d = json.loads(f.read_text())
+        if "bound_edge_rows" in d:  # the CC resolver's small-tier bound
+            tier_bound = (f.name, d)
+            continue
         # r13: deep decades on the real-vocabulary big corpora
         # (gen_scale_docs_big.py) — a separate family, own section
         for q, med in d.get("median_sec_big", {}).items():
@@ -204,6 +208,30 @@ def main() -> None:
             lines.append(
                 f"| {q} | " + " | ".join(cells) + f" | {alpha} | {fname} |"
             )
+
+    if tier_bound:
+        fname, d = tier_bound
+        sizes = d["edge_rows"]
+        lines += [
+            "",
+            "## Connected-components resolver: small-tier bound",
+            "",
+            "`dedup.resolve_duplicate_clusters` union-finds a pair graph of at",
+            f"most `SMALL_GRAPH_EDGES` = {d['bound_edge_rows']:,} symmetric edge rows (2 per",
+            "pair, the `sum(degree)` its round-1 checkpoint observes) on the",
+            "driver from one Arrow collect; larger graphs take the distributed",
+            "min-label rounds.  Seconds per tier (median of 3, 4-core host):",
+            "",
+            "| graph | " + " | ".join(f"{n:,} small | {n:,} rounds" for n in sizes) + " |",
+            "|---|" + "---|---|" * len(sizes),
+        ]
+        for kind in ("chain", "clique"):
+            cells = [
+                f"{d['median_sec_tier'][f'{kind}_{n}'][tier]:.2f}"
+                for n in sizes for tier in ("small", "rounds")
+            ]
+            lines.append(f"| {kind} | " + " | ".join(cells) + " |")
+        lines += ["", d["decision"] + f" ({fname})"]
 
     if local_files:
         lines += [

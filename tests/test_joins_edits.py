@@ -3,6 +3,7 @@ errors-by-line (V4)."""
 
 from __future__ import annotations
 
+import re
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -149,22 +150,25 @@ def _lev(a, b):
 
 
 def _naive_fuzzy(lrows, rrows, d):
+    """Cross join with a levenshtein check; a NULL key matches nothing."""
     return {
         (li, ri, lv, rv, _lev(lv, rv))
         for li, lv in lrows
         for ri, rv in rrows
-        if _lev(lv, rv) <= d
+        if lv is not None and rv is not None and _lev(lv, rv) <= d
     }
 
 
 def test_fuzzy_string_join_matches_naive(spark):
     """Blocking must be SOUND: every pair the naive cross-join-with-
-    levenshtein finds must come out, nothing else."""
+    levenshtein finds must come out, nothing else — NULL keys on both
+    sides, non-ASCII keys (lengths and edits count characters), and
+    budgets from exact match to d = 3."""
     from csv_etl_spark.operators.joins import fuzzy_string_join
 
     lrows = [
         (1, "abcdef"), (2, "zzzzzz"), (3, "abcdeg"), (4, "kitten"),
-        (5, "a"), (6, ""), (7, "ab"),
+        (5, "a"), (6, ""), (7, "ab"), (8, None), (9, "naïve"), (10, "日本語"),
     ]
     rrows = [
         (10, "abcdef"),   # exact
@@ -174,10 +178,11 @@ def test_fuzzy_string_join_matches_naive(spark):
         (14, "sitten"),   # kitten d=1
         (15, "b"), (16, ""), (17, "abc"),
         (18, "totally-different"),
+        (19, None), (20, "naive"), (21, "日本"), (22, "日本語です"),
     ]
-    left = spark.createDataFrame(lrows, ["lid", "s"])
-    right = spark.createDataFrame(rrows, ["rid", "t"])
-    for d in (0, 1, 2):
+    left = spark.createDataFrame(lrows, "lid long, s string")
+    right = spark.createDataFrame(rrows, "rid long, t string")
+    for d in (0, 1, 2, 3):
         got = {
             (r["lid"], r["rid"], r["left_val"], r["right_val"], r["dist"])
             for r in fuzzy_string_join(
@@ -213,25 +218,24 @@ def test_fuzzy_string_join_shared_template_worst_case(spark):
 
 
 def test_fuzzy_string_join_fuzz(spark):
-    """Random corpora across alphabets/lengths vs the naive reference."""
+    """Random corpora across alphabets (one non-ASCII), lengths, NULL keys
+    and budgets d = 0..3 vs the naive reference."""
     import random
 
     from csv_etl_spark.operators.joins import fuzzy_string_join
 
     rng = random.Random(8)
-    for trial in range(3):
-        alpha = "ab" if trial == 0 else "abcde"
-        lrows = [
-            (i, "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 9))))
-            for i in range(25)
-        ]
-        rrows = [
-            (i, "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 9))))
-            for i in range(25)
-        ]
-        d = rng.choice([1, 2])
-        left = spark.createDataFrame(lrows, ["lid", "s"])
-        right = spark.createDataFrame(rrows, ["rid", "t"])
+
+    def key(alpha):
+        if rng.random() < 0.1:
+            return None
+        return "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 9)))
+
+    for trial, (alpha, d) in enumerate([("ab", 1), ("abcde", 2), ("aéß日", 0), ("abcde", 3)]):
+        lrows = [(i, key(alpha)) for i in range(25)]
+        rrows = [(i, key(alpha)) for i in range(25)]
+        left = spark.createDataFrame(lrows, "lid long, s string")
+        right = spark.createDataFrame(rrows, "rid long, t string")
         got = {
             (r["lid"], r["rid"], r["left_val"], r["right_val"], r["dist"])
             for r in fuzzy_string_join(
@@ -239,3 +243,20 @@ def test_fuzzy_string_join_fuzz(spark):
             ).collect()
         }
         assert got == _naive_fuzzy(lrows, rrows, d), (trial, d)
+
+
+def test_fuzzy_string_join_plan_is_one_equijoin(spark):
+    """Candidates come from ONE equijoin, with each input scanned once:
+    no broadcast length table (a BroadcastNestedLoopJoin), no cross join,
+    no second short-string path."""
+    from csv_etl_spark.operators.joins import fuzzy_string_join
+
+    left = spark.createDataFrame([(1, "abcdef"), (2, "a")], "lid long, s string")
+    right = spark.createDataFrame([(10, "abcdxf"), (11, "")], "rid long, t string")
+    qe = fuzzy_string_join(left, right, "s", "t", "lid", "rid", max_dist=2)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    executed = qe.executedPlan().toString()
+    assert len(re.findall(r"\bJoin\b", optimized)) == 1, optimized
+    assert "Union" not in optimized, optimized
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+        assert node not in executed, executed

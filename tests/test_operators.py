@@ -505,29 +505,44 @@ def _union_find_clusters(pairs):
 
 
 _cc_id = st.one_of(st.integers(0, 15), st.none())
+_cc_str = st.one_of(st.sampled_from(["a", "b", "ab", "B", "é", "z", "ß", "日"]), st.none())
+
+# SMALL_GRAPH_EDGES values that force one tier of the resolver: every
+# test graph fits under the first, none under the second
+_CC_TIERS = {"small": 10**9, "rounds": -1}
 
 
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-@given(st.lists(st.tuples(_cc_id, _cc_id), max_size=14))
+@given(st.one_of(st.lists(st.tuples(_cc_id, _cc_id), max_size=14),
+                 st.lists(st.tuples(_cc_str, _cc_str), max_size=14)))
 @example([])
 @example([(1, 2), (2, 1), (1, 2), (3, 3), (4, None), (None, 5), (None, None)])
-def test_resolve_clusters_matches_union_find(spark, pairs):
-    """Random small pair graphs — self-pairs, duplicate and reversed pairs,
-    NULL ids, the empty frame — against a Python union-find."""
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = sorted(
-        ((r["id"], r["cluster_id"])
-         for r in dedup.resolve_duplicate_clusters(df).collect()),
-        key=lambda t: (t[0] is None, t),
-    )
-    assert got == _union_find_clusters(pairs)
+@example([("b", "a"), ("é", "z"), ("z", "é"), ("ß", "ß"), ("日", None), (None, None)])
+def test_resolve_clusters_matches_union_find(spark, monkeypatch, pairs):
+    """Random small pair graphs — integer and string ids, self-pairs,
+    duplicate and reversed pairs, NULL ids, the empty frame — against a
+    Python union-find, on both resolver tiers.  Python orders strings by
+    code point, which is Spark's bytewise UTF-8 order."""
+    kind = "string" if any(isinstance(x, str) for pair in pairs for x in pair) else "long"
+    df = spark.createDataFrame(pairs, f"id_a {kind}, id_b {kind}")
+    want = _union_find_clusters(pairs)
+    sql_type = "bigint" if kind == "long" else kind
+    for tier, bound in _CC_TIERS.items():
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", bound)
+        out = dedup.resolve_duplicate_clusters(df)
+        assert out.schema.simpleString() == f"struct<id:{sql_type},cluster_id:{sql_type}>"
+        got = sorted(((r["id"], r["cluster_id"]) for r in out.collect()),
+                     key=lambda t: (t[0] is None, t))
+        assert got == want, tier
 
 
-def test_resolve_clusters_raises_when_not_converged(spark):
-    """A 25-hop chain needs 26 rounds: a cap of 20 raises instead of
-    returning the chain split across cluster_ids; a cap of 30 converges."""
+def test_resolve_clusters_raises_when_not_converged(spark, monkeypatch):
+    """On the rounds tier a 25-hop chain needs 26 rounds: a cap of 20
+    raises instead of returning the chain split across cluster_ids; a cap
+    of 30 converges."""
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", _CC_TIERS["rounds"])
     pairs = spark.createDataFrame([(i, i + 1) for i in range(25)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="max_iterations=20.*diameter"):
         dedup.resolve_duplicate_clusters(pairs, max_iterations=20)
@@ -535,18 +550,36 @@ def test_resolve_clusters_raises_when_not_converged(spark):
     assert sorted((r["id"], r["cluster_id"]) for r in out) == [(i, 0) for i in range(26)]
 
 
-def test_resolve_clusters_job_budget(spark):
-    """Eager Spark jobs the resolver launches on the 4-pair fixture (three
-    rounds, three jobs each): a per-round probe job or a ``distinct`` on
-    the edge list would push it past the pin.  Read from the status
-    store, which works with the UI off."""
+def test_resolve_clusters_small_tier_any_diameter(spark, monkeypatch):
+    """The small tier has no rounds: the 25-hop chain that raises at
+    ``max_iterations=20`` on the rounds tier resolves in one pass, and so
+    does a 200-node path with its ids shuffled along it."""
+    monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", _CC_TIERS["small"])
+    import random
+
+    shuffled = list(range(200))
+    random.Random(3).shuffle(shuffled)
+    for path in (list(range(26)), shuffled):
+        pairs = spark.createDataFrame(list(zip(path, path[1:])), "id_a long, id_b long")
+        out = dedup.resolve_duplicate_clusters(pairs, max_iterations=20).collect()
+        assert sorted((r["id"], r["cluster_id"]) for r in out) == [(i, 0) for i in range(len(path))]
+
+
+def test_resolve_clusters_job_budget(spark, monkeypatch):
+    """Eager Spark jobs the resolver launches on the 4-pair fixture.  The
+    small tier runs round 1's checkpoint and one Arrow collect; the
+    rounds tier three rounds of three jobs each, where a per-round probe
+    job or a ``distinct`` on the edge list would push it past the pin.
+    Read from the status store, which works with the UI off."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], ["id_a", "id_b"]
     )
     pairs.collect()
-    before = newest_job_id(spark)
-    dedup.resolve_duplicate_clusters(pairs)
-    assert newest_job_id(spark) - before <= 9
+    for tier, budget in (("small", 4), ("rounds", 9)):
+        monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", _CC_TIERS[tier])
+        before = newest_job_id(spark)
+        dedup.resolve_duplicate_clusters(pairs)
+        assert newest_job_id(spark) - before <= budget, tier
 
 
 def test_corpus_curation_composition(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -156,3 +157,23 @@ store.save_source(FileSpec(id="big", name="x" * 10000, columns=[ColumnSpec("a")]
     assert (tmp_path / "sources.json").read_text() == before
     assert [p.name for p in tmp_path.iterdir()] == ["sources.json"]
     assert SpecStore(str(tmp_path)).get_source("kept").name == "kept"
+
+
+def test_spec_store_concurrent_saves_keep_every_update(tmp_path):
+    """16 threads each save a different source into one store at once:
+    every save re-reads the file under the store's lock, so all 16 are
+    stored (an unlocked read-modify-write kept 2 of 16)."""
+    store = SpecStore(str(tmp_path))
+    start = threading.Barrier(16)
+
+    def save(i):
+        start.wait()
+        store.save_source(FileSpec(id=f"s{i}", name=f"s{i}", columns=[ColumnSpec("a")]))
+
+    threads = [threading.Thread(target=save, args=(i,)) for i in range(16)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sorted(SpecStore(str(tmp_path)).sources()) == sorted(f"s{i}" for i in range(16))
+    assert [p.name for p in tmp_path.iterdir()] == ["sources.json"]
