@@ -1453,7 +1453,7 @@ def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.cluster_representatives(labels, scores)
 
 
-# formatted with sw=_SW at oracle_sql() time (_SW is defined further down)
+# formatted with sw=_SW in the registry (_SW is defined further down)
 _ORACLE_DEDUP_REPRESENTATIVES = """
     WITH RECURSIVE sh AS (
       SELECT doc_id,
@@ -6223,367 +6223,10 @@ def _leakage_split_lsh_oracle_sql() -> str:
 # Registry
 # ---------------------------------------------------------------------------
 
-
-# The COMPLETE driver schedule under the age-based round-robin policy
-# (see queries() docstring): position IS the schedule — the driver
-# checks the first 50, and next round's window is 'shift the list'.
-# Regenerate by sorting on (last driver-green round, registry order);
-# never-checked entries first, the 2 rows-only entries pinned last.
-_R14_ORDER = [
-    # ==== r15 driver window (50): never-driver-checked first
-    # (lang_id_model + assign_sharded_flat, new this round), then the
-    # 48 oldest-evidence entries (green r12/r13 — the r14 window, now the NEWEST
-    # evidence, rotates to the back).  distinct_users_approx stays
-    # LAST (rows-only by design: an HLL estimate driver row carries
-    # no value-hash signal). ====
-    "lang_id_model",
-    "assign_sharded_flat",
-    "dedup_incremental_bloom",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_lsh",
-    "dedup_paragraphs",
-    "dedup_representatives",
-    "etl_aggregate_mapping",
-    "etl_dynamic_mapping",
-    "etl_lookup_table",
-    "events_rolling_time",
-    "gopher_quality",
-    "image_dhash",
-    "image_dhash_pairs",
-    "join_full_outer",
-    "join_revenue_by_nation",
-    "knn_graph_sharded",
-    "leakage_safe_split_lsh",
-    "length_outliers",
-    "mixture_resample",
-    "pack_sequences",
-    "range_join_buckets",
-    "retention_cohorts",
-    "salted_agg_events",
-    "sample_by_quality",
-    "scd2_history",
-    "semantic_dedup",
-    "spec_validation",
-    "stats_moments",
-    "stream_hourly_counts",
-    "stream_sessionize",
-    "text_metrics",
-    "text_strip_html",
-    "text_top_bigrams",
-    "text_top_tokens",
-    "tfidf_terms",
-    "tokens_to_ids",
-    "training_mix",
-    "typed_stocks_pipeline",
-    "web_curation",
-    "window_funcs_orders",
-    "ann_ivf_exact",
-    "ann_recall_curve",
-    "apply_merges",
-    "asof_join_forward",
-    "bigram_logprob",
-    "bm25_terms",
-    "boilerplate_lines",
-    "bpe_merges",
-    "contamination_report",
-    "copurchase_capped",
-    # ==== below: r14-green (newest driver evidence) ====
-    "copurchase_pairs",
-    "corpus_report",
-    "corr_lineitem",
-    "cube_orders",
-    "dedup_jaccard_capped",
-    "dedup_lsh_capped",
-    "dedup_normalized",
-    "dsir_selection",
-    "duplicate_spans",
-    "events_anomalies",
-    "events_drift",
-    "events_winsorized",
-    "f1_equals",
-    "f2_not_equals",
-    "f3_in",
-    "f6_is_not_empty",
-    "f7_contains",
-    "funnel_steps",
-    "fuzzy_join",
-    "grouping_sets_orders",
-    "image_dup_clusters",
-    "interval_overlap",
-    "key_skew_events",
-    "knn_graph_auto",
-    "mad_outliers",
-    "pct_rank_events",
-    "perplexity_buckets",
-    "profile_events",
-    "quality_classifier",
-    "record_clusters",
-    "remove_dup_spans",
-    "sample_stratified",
-    "sample_weighted",
-    "semi_join_parts",
-    "snapshot_diff",
-    "source_cap",
-    "token_budget_mix",
-    "union_distinct_nations",
-    "url_dedup",
-    "value_histogram",
-    "ann_ivf_two_level",
-    "anti_join_customers",
-    "asof_join_purchase_click",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_simhash",
-    "distinct_users",
-    "doc_length_histogram",
-    "embedding_standardize",
-    "etl_chained_mappings",
-    "events_rolling",
-    "f4_not_in",
-    "f5_is_empty",
-    "join_left_outer",
-    "json_extract_props",
-    "knn_graph",
-    "leakage_safe_split",
-    "merge_upsert_orders",
-    "multimodal_features",
-    "part_pagerank",
-    "pivot_orders",
-    "rollup_orders",
-    "salted_join_customers",
-    "sample_deterministic",
-    "sessionize_events",
-    "t3_date_format",
-    "t4_lookup",
-    "t7_formula",
-    "temperature_mix",
-    "text_filter_lines",
-    "text_pii_scrub",
-    "text_repetition",
-    "topk_revenue_orders",
-    "typed_crypto_pipeline",
-    "unigram_logprob",
-    "unpivot_customer",
-    "url_registered_domain",
-    "value_percentiles",
-    "window_top_orders",
-    "agg_pricing_summary",
-    "ann_bruteforce",
-    "ann_ivf_approx",
-    "ann_quantized",
-    "chunk_documents",
-    "corpus_curation",
-    "corpus_decontaminate",
-    "corpus_shuffle",
-    "dedup_clusters",
-    "dedup_doc_lines",
-    "dedup_embedding",
-    "distinct_users_approx",
-]
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ROTATION POLICY (round 8, explicit — the round-7 verdict flagged
-    # that 114+ queries no longer fit the old "driver row at most two
-    # rounds old" discipline through a 50-slot window; 2 x 50 < 114).
-    # Adopted: AGE-BASED ROUND-ROBIN.  Each round the window holds the 50
-    # registry entries whose last driver-green CORRECTNESS row is OLDEST,
-    # with never-checked queries (including operators new this round)
-    # first.  With N oracle-checkable entries this bounds every query's
-    # driver-evidence age to ceil(N/50) rounds in steady state — 3 rounds
-    # at the current N=141 (142 registered minus distinct_users_approx,
-    # the one remaining rows-only-by-design entry, which yields its slot
-    # permanently: an HLL estimate's driver row carries no value-hash
-    # signal; it is pytest-verified instead).  ALL entries additionally stay locally
-    # oracle-verified every round via scripts/check_oracle.py regardless
-    # of window position.
-    #
-    # Since round 9 the schedule is MATERIALIZED as _R14_ORDER (above):
-    # the dict literal below keeps its historical grouping for diff
-    # hygiene, and the return reorders it through the list, asserting
-    # set-equality so nothing falls out of rotation.  Round-14 window:
-    # the 39 r11-green entries (the oldest driver evidence left in the
-    # registry) plus the 11 alphabetically-first r12-green entries to
-    # fill the 50.  After this round no oracle-checkable entry's driver
-    # evidence is older than r12 and the steady-state ≤3-round age
-    # bound holds.
-    # Counts: 142 registered / 141 oracle-checkable — update whenever
-    # the registry changes.
-    base = {
-        # ---- never driver-checked: new in r9 ----
-        "ann_ivf_two_level": q_ann_ivf_two_level,
-        "url_registered_domain": q_url_registered_domain,
-        # ---- window 1-13: never driver-checked (2 late-r7 + 11 new-r8) ----
-        "dsir_selection": q_dsir_selection,
-        "corpus_report": q_corpus_report,
-        "apply_merges": q_apply_merges,
-        "quality_classifier": q_quality_classifier,
-        "lang_id_model": q_lang_id_model,
-        "assign_sharded_flat": q_assign_sharded_flat,
-        "fuzzy_join": q_fuzzy_join,
-        "pct_rank_events": q_pct_rank_events,
-        "corr_lineitem": q_corr_lineitem,
-        "mad_outliers": q_mad_outliers,
-        "copurchase_pairs": q_copurchase_pairs,
-        "copurchase_capped": q_copurchase_capped,
-        "sessionize_events": q_sessionize_events,
-        "knn_graph": q_knn_graph,
-        "knn_graph_auto": q_knn_graph_auto,
-        "knn_graph_sharded": q_knn_graph_sharded,
-        "part_pagerank": q_part_pagerank,
-        "salted_join_customers": q_salted_join_customers,
-        "temperature_mix": q_temperature_mix,
-        "embedding_standardize": q_embedding_standardize,
-        "leakage_safe_split": q_leakage_safe_split,
-        "leakage_safe_split_lsh": q_leakage_safe_split_lsh,
-        "record_clusters": q_record_clusters,
-        "url_dedup": q_url_dedup,
-        "events_drift": q_events_drift,
-        "key_skew_events": q_key_skew_events,
-        # ---- window: last driver row r2 ----
-        "f1_equals": _filter_query([{"field": "event_type", "operator": "equals", "value": "error"}]),
-        "f2_not_equals": _filter_query([{"field": "event_type", "operator": "not_equals", "value": "error"}]),
-        "f3_in": _filter_query([{"field": "event_type", "operator": "in", "values": ["click", "view"]}]),
-        "f6_is_not_empty": q_f6_is_not_empty,
-        "f7_contains": _filter_query([{"field": "event_type", "operator": "contains", "value": "ick"}]),
-        "cube_orders": q_cube_orders,
-        "grouping_sets_orders": q_grouping_sets,
-        "dedup_jaccard_capped": q_dedup_jaccard_capped,
-        "ann_ivf_exact": q_ann_ivf_exact,
-        # ---- window 14-15: last driver row r3 ----
-        "sample_stratified": q_sample_stratified,
-        "dedup_normalized": q_dedup_normalized,
-        # ---- window 16-17: last driver row r4 ----
-        "semi_join_parts": q_semi_join_parts,
-        "union_distinct_nations": q_union_distinct,
-        # ---- window 18-42: last driver row r5 ----
-        "etl_chained_mappings": q_etl_chained_mappings,
-        "merge_upsert_orders": q_merge_upsert_orders,
-        "t7_formula": q_t7_formula,
-        "typed_crypto_pipeline": q_typed_crypto_pipeline,
-        "window_top_orders": q_window_top_orders,
-        "rollup_orders": q_rollup_orders,
-        "anti_join_customers": q_anti_join_customers,
-        "sample_deterministic": q_sample_deterministic,
-        "json_extract_props": q_json_extract_props,
-        "value_percentiles": q_value_percentiles,
-        "dedup_exact": q_dedup_exact,
-        "dedup_simhash": q_dedup_simhash,
-        "multimodal_features": q_multimodal_features,
-        "f4_not_in": _filter_query([{"field": "event_type", "operator": "not_in", "values": ["click", "view"]}]),
-        "f5_is_empty": q_f5_is_empty,
-        "t3_date_format": q_t3_date_format_errors,
-        "t4_lookup": q_t4_lookup_errors,
-        "join_left_outer": q_join_left_outer,
-        "topk_revenue_orders": q_topk_revenue_orders,
-        "pivot_orders": q_pivot_orders,
-        "unpivot_customer": q_unpivot_customer,
-        "distinct_users": q_distinct_users,
-        "text_repetition": q_text_repetition,
-        "text_pii_scrub": q_text_pii_scrub,
-        "text_filter_lines": q_text_filter_lines,
-        # ---- window 43-50: r6-green returners, 8 of 22 (list order) ----
-        "events_rolling": q_events_rolling,
-        "dedup_incremental": q_dedup_incremental,
-        "asof_join_purchase_click": q_asof_join,
-        "doc_length_histogram": q_doc_length_histogram,
-        "unigram_logprob": q_unigram_logprob,
-        # ==== past the 50-query window from here ====
-        # ---- r6-green returners 6-22: OLDEST remaining evidence — these
-        # 17 lead the r9 window ----
-        "text_strip_html": q_text_strip_html,
-        "gopher_quality": q_gopher_quality,
-        "mixture_resample": q_mixture_resample,
-        "image_dhash_pairs": q_image_dhash_pairs,
-        "window_funcs_orders": q_window_funcs_orders,
-        "dedup_doc_lines": q_dedup_doc_lines,
-        "join_full_outer": q_join_full_outer,
-        "tokens_to_ids": q_tokens_to_ids,
-        "corpus_shuffle": q_corpus_shuffle,
-        "dedup_representatives": q_dedup_representatives,
-        "text_top_bigrams": q_text_top_bigrams,
-        "length_outliers": q_length_outliers,
-        "ann_quantized": q_ann_quantized,
-        "image_dhash": q_image_dhash,
-        "tfidf_terms": q_tfidf_terms,
-        "corpus_decontaminate": q_corpus_decontaminate,
-        "sample_by_quality": q_sample_by_quality,
-        # ---- r7-green (CORRECTNESS_r07, 50/50): due again by r10; the
-        # oldest ~36 of these fill the rest of the r9 window ----
-        "etl_dynamic_mapping": q_etl_dynamic_mapping,
-        "etl_lookup_table": q_etl_lookup_table,
-        "etl_aggregate_mapping": q_etl_aggregate_mapping,
-        "spec_validation": q_spec_validation,
-        "typed_stocks_pipeline": q_typed_stocks_pipeline,
-        "agg_pricing_summary": q_agg_pricing_summary,
-        "join_revenue_by_nation": q_join_revenue_by_nation,
-        "dedup_paragraphs": q_dedup_paragraphs,
-        "range_join_buckets": q_range_join,
-        "pack_sequences": q_pack_sequences,
-        "semantic_dedup": q_semantic_dedup,
-        "dedup_jaccard_pairs": q_dedup_jaccard_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_lsh_capped": q_dedup_lsh_capped,
-        "dedup_embedding": q_dedup_embedding,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_ivf_approx": q_ann_ivf_approx,
-        "ann_recall_curve": q_ann_recall_curve,
-        "text_metrics": q_text_metrics,
-        "text_top_tokens": q_text_top_tokens,
-        "corpus_curation": q_corpus_curation,
-        "stream_hourly_counts": q_stream_hourly_counts,
-        "stream_sessionize": q_stream_sessionize,
-        "dedup_incremental_bloom": q_dedup_incremental_bloom,
-        "chunk_documents": q_chunk_documents,
-        "salted_agg_events": q_salted_agg_events,
-        "web_curation": q_web_curation,
-        "events_rolling_time": q_events_rolling_time,
-        "stats_moments": q_stats_moments,
-        "training_mix": q_training_mix,
-        "scd2_history": q_scd2_history,
-        "retention_cohorts": q_retention_cohorts,
-        "bigram_logprob": q_bigram_logprob,
-        "snapshot_diff": q_snapshot_diff,
-        "funnel_steps": q_funnel_steps,
-        "image_dup_clusters": q_image_dup_clusters,
-        "profile_events": q_profile_events,
-        "asof_join_forward": q_asof_join_forward,
-        "value_histogram": q_value_histogram,
-        "events_anomalies": q_events_anomalies,
-        "sample_weighted": q_sample_weighted,
-        "bm25_terms": q_bm25_terms,
-        "perplexity_buckets": q_perplexity_buckets,
-        "boilerplate_lines": q_boilerplate_lines,
-        "token_budget_mix": q_token_budget_mix,
-        "duplicate_spans": q_duplicate_spans,
-        "contamination_report": q_contamination_report,
-        "source_cap": q_source_cap,
-        "events_winsorized": q_events_winsorized,
-        "interval_overlap": q_interval_overlap,
-        "remove_dup_spans": q_remove_dup_spans,
-        # ---- rows-only by design (HLL estimate is engine-specific /
-        # iterative loop is not single-pass SQL): their driver rows carry
-        # no hash signal, so they yield their window slots to
-        # oracle-checkable queries permanently; both are
-        # serial-reference/pytest verified ----
-        "distinct_users_approx": q_distinct_users_approx,
-        "bpe_merges": q_bpe_merges,
-    }
-    # dict-literal order above is historical grouping; the SCHEDULE is
-    # _R14_ORDER (asserted complete so a new query cannot be silently
-    # left out of the rotation)
-    assert set(base) == set(_R14_ORDER), sorted(set(base) ^ set(_R14_ORDER))
-    return {k: base[k] for k in _R14_ORDER}
-
-
-# ---------------------------------------------------------------------------
-# Registry tier tags (r11 verdict ask #3): machine-readable marking of
-# which queries() entries are RECOMMENDED 100-TB paths and which exist
-# to verify them.  A user discovering the registry programmatically can
-# now filter on this instead of reading docstrings.
-# ---------------------------------------------------------------------------
-
+# Tier tags: machine-readable marking of which queries() entries are
+# RECOMMENDED 100-TB paths and which exist to verify them.  A user
+# discovering the registry programmatically can filter on tiers()
+# instead of reading docstrings.
 TIER_SCALE = "scale-path"            # the recommended production spelling
 TIER_SCALE_BOUNDED = "scale-path-bounded"  # recommended UP TO a measured
 #   size bound, past which a named successor takes over; the bound and
@@ -6595,13 +6238,12 @@ TIER_TWIN = "verification-twin"      # exact/oracle sibling of a scale path:
 TIER_ROWS_ONLY = "rows-only"         # estimate-valued; driver row carries
 #   no value-hash signal, verified by pytest against the exact twin
 
-# Size bounds for the bounded scale paths (r12 verdict ask #3): the flat
-# √N-cell kNN graph's total work is N^1.5 BY DESIGN (routing N·√N +
-# scanning N·nprobe·√N — measured α 1.17 at the 2M decade,
-# BENCHNOTES_r11_knn2.json), so past ~16M vectors the bounded-cell
-# ``knn_join(m_super=4)`` tier (linear scan term, ~N^1.25 routing,
-# SCALE.md-measured α 0.99) is the plan a 100-TB user needs.  The
-# registry previously carried this switch only in docstrings.
+# Size bounds for the bounded scale paths: the flat √N-cell kNN graph's
+# total work is N^1.5 BY DESIGN (routing N·√N + scanning N·nprobe·√N —
+# measured α 1.17 at the 2M decade, BENCHNOTES_r11_knn2.json), so past
+# ~16M vectors the bounded-cell ``knn_join(m_super=4)`` tier (linear scan
+# term, ~N^1.25 routing, SCALE.md-measured α 0.99) is the plan a 100-TB
+# user needs.
 _TIER_BOUNDS = {
     "knn_graph": {
         "recommended_max_n": 16_000_000,   # vectors on the corpus side
@@ -6615,6 +6257,230 @@ _TIER_BOUNDS = {
 }
 
 
+# One row per driver query: (name, query, DuckDB oracle SQL or None[, tier]).
+# queries(), oracle_sql() and tiers() are all read off this table, so a
+# new query is registered by adding its row here.
+#
+# Row order IS the driver schedule: the driver checks the first 50 rows.
+# The policy is age-based round-robin: the window holds the 50 entries
+# whose last driver-green CORRECTNESS row is OLDEST, never-checked
+# entries first.  With N oracle-checkable entries this bounds every
+# query's driver-evidence age to ceil(N/50) rounds (3 at N = 141).  To
+# rotate, re-sort the rows on (last driver-green round, current position).
+# Every entry is still oracle-checked locally each round by
+# scripts/check_oracle.py, whatever its position.
+#
+# A row with no oracle is rows-only: an estimate whose driver row carries
+# no value-hash signal, verified by pytest against its exact twin instead.
+# It yields its window slot permanently, so it stays last.  The optional
+# fourth field overrides the default TIER_SCALE tag; the _TIER_BOUNDS
+# entries are TIER_SCALE_BOUNDED.
+_REGISTRY = (
+    # ---- r15 window: never driver-checked first, then the oldest evidence
+    ("lang_id_model", q_lang_id_model, _ORACLE_LANG_ID_MODEL),
+    ("assign_sharded_flat", q_assign_sharded_flat, _ORACLE_ASSIGN_SHARDED),
+    # bloom pre-filter is exact-result-preserving: same oracle verbatim
+    ("dedup_incremental_bloom", q_dedup_incremental_bloom,
+     _ORACLE_DEDUP_INCREMENTAL),
+    # quadratic exact n-gram Jaccard — scale sibling: dedup_jaccard_capped
+    ("dedup_jaccard_pairs", q_dedup_jaccard_pairs, _ORACLE_JACCARD_PAIRS,
+     TIER_TWIN),
+    # portable-hash mode: full-pipeline SQL replication (see the query)
+    ("dedup_minhash_lsh", q_dedup_minhash_lsh, _ORACLE_MINHASH_LSH),
+    ("dedup_paragraphs", q_dedup_paragraphs, _ORACLE_DEDUP_PARAGRAPHS),
+    ("dedup_representatives", q_dedup_representatives,
+     _ORACLE_DEDUP_REPRESENTATIVES.format(sw=_SW)),
+    ("etl_aggregate_mapping", q_etl_aggregate_mapping, _ORACLE_ETL_AGGREGATE),
+    ("etl_dynamic_mapping", q_etl_dynamic_mapping, _ORACLE_ETL_DYNAMIC),
+    ("etl_lookup_table", q_etl_lookup_table, _ORACLE_ETL_LOOKUP_TABLE),
+    ("events_rolling_time", q_events_rolling_time, _ORACLE_EVENTS_ROLLING_TIME),
+    ("gopher_quality", q_gopher_quality, _ORACLE_GOPHER),
+    ("image_dhash", q_image_dhash, _ORACLE_IMAGE_DHASH),
+    ("image_dhash_pairs", q_image_dhash_pairs, _ORACLE_IMAGE_DHASH_PAIRS),
+    ("join_full_outer", q_join_full_outer, _ORACLE_JOIN_FULL_OUTER),
+    ("join_revenue_by_nation", q_join_revenue_by_nation, _ORACLE_JOIN_REVENUE),
+    # m_super=None flat routing over the bounded codebook (N·C flops) —
+    # scale sibling: knn_join(m_super=4), recall/ladder-measured in
+    # RECALL.md / SCALE.md.  Oracle: the same full-pipeline replay as
+    # knn_graph; only the codebook-size formula differs
+    ("knn_graph_sharded", q_knn_graph_sharded,
+     _knn_graph_oracle_sql(cells_sql=_KNN_SHARDED_CELLS_SQL), TIER_TWIN),
+    ("leakage_safe_split_lsh", q_leakage_safe_split_lsh,
+     _leakage_split_lsh_oracle_sql()),
+    ("length_outliers", q_length_outliers, _ORACLE_LENGTH_OUTLIERS),
+    ("mixture_resample", q_mixture_resample, _ORACLE_MIXTURE),
+    ("pack_sequences", q_pack_sequences, _ORACLE_PACK_SEQUENCES),
+    ("range_join_buckets", q_range_join, _ORACLE_RANGE_JOIN),
+    ("retention_cohorts", q_retention_cohorts, _ORACLE_RETENTION),
+    ("salted_agg_events", q_salted_agg_events, _ORACLE_SALTED_AGG),
+    ("sample_by_quality", q_sample_by_quality, _ORACLE_SAMPLE_QUALITY),
+    ("scd2_history", q_scd2_history, _ORACLE_SCD2),
+    ("semantic_dedup", q_semantic_dedup, _semdedup_oracle_sql()),
+    ("spec_validation", q_spec_validation, _ORACLE_SPEC_VALIDATION),
+    ("stats_moments", q_stats_moments, _ORACLE_STATS_MOMENTS),
+    ("stream_hourly_counts", q_stream_hourly_counts, _ORACLE_STREAM_HOURLY),
+    ("stream_sessionize", q_stream_sessionize, _ORACLE_SESSIONIZE),
+    ("text_metrics", q_text_metrics, _ORACLE_TEXT_METRICS),
+    ("text_strip_html", q_text_strip_html, _oracle_strip_html()),
+    ("text_top_bigrams", q_text_top_bigrams, _ORACLE_TOP_BIGRAMS),
+    ("text_top_tokens", q_text_top_tokens, _ORACLE_TOP_TOKENS),
+    ("tfidf_terms", q_tfidf_terms, _ORACLE_TFIDF),
+    ("tokens_to_ids", q_tokens_to_ids, _ORACLE_TOKENS_TO_IDS),
+    ("training_mix", q_training_mix, _ORACLE_TRAINING_MIX),
+    ("typed_stocks_pipeline", q_typed_stocks_pipeline, _ORACLE_TYPED_STOCKS),
+    ("web_curation", q_web_curation, _oracle_web_curation()),
+    ("window_funcs_orders", q_window_funcs_orders, _ORACLE_WINDOW_FUNCS),
+    # route-every-cell IVF (= brute force by construction) — scale
+    # sibling: ann_ivf_approx.  nprobe=all ⇒ exact ⇒ same oracle
+    ("ann_ivf_exact", q_ann_ivf_exact, _ORACLE_ANN_BRUTE, TIER_TWIN),
+    # full curve replayed in SQL
+    ("ann_recall_curve", q_ann_recall_curve, _recall_curve_oracle_sql()),
+    ("apply_merges", q_apply_merges, _apply_merges_oracle_sql()),
+    ("asof_join_forward", q_asof_join_forward, _ORACLE_ASOF_FORWARD),
+    ("bigram_logprob", q_bigram_logprob, _ORACLE_BIGRAM_LP),
+    ("bm25_terms", q_bm25_terms, _ORACLE_BM25),
+    ("boilerplate_lines", q_boilerplate_lines, _ORACLE_BOILERPLATE_LINES),
+    ("bpe_merges", q_bpe_merges, _bpe_merges_oracle_sql()),
+    ("contamination_report", q_contamination_report,
+     _ORACLE_CONTAMINATION_REPORT),
+    ("copurchase_capped", q_copurchase_capped, _ORACLE_COPURCHASE_CAPPED),
+    # ---- past the 50-row window: r14-green (newest driver evidence) ----
+    ("copurchase_pairs", q_copurchase_pairs, _ORACLE_COPURCHASE_PAIRS),
+    ("corpus_report", q_corpus_report, _ORACLE_CORPUS_REPORT),
+    ("corr_lineitem", q_corr_lineitem, _corr_lineitem_oracle_sql()),
+    ("cube_orders", q_cube_orders, _ORACLE_CUBE),
+    ("dedup_jaccard_capped", q_dedup_jaccard_capped, _ORACLE_JACCARD_CAPPED),
+    ("dedup_lsh_capped", q_dedup_lsh_capped, _ORACLE_LSH_CAPPED),
+    ("dedup_normalized", q_dedup_normalized, _ORACLE_DEDUP_NORM),
+    ("dsir_selection", q_dsir_selection, _ORACLE_DSIR_SELECTION),
+    ("duplicate_spans", q_duplicate_spans, _ORACLE_DUPLICATE_SPANS),
+    ("events_anomalies", q_events_anomalies, _ORACLE_EVENTS_ANOMALIES),
+    ("events_drift", q_events_drift, _ORACLE_EVENTS_DRIFT),
+    ("events_winsorized", q_events_winsorized, _ORACLE_EVENTS_WINSORIZED),
+    ("f1_equals",
+     _filter_query([{"field": "event_type", "operator": "equals", "value": "error"}]),
+     _filter_oracle("NOT (event_type = 'error')")),
+    ("f2_not_equals",
+     _filter_query([{"field": "event_type", "operator": "not_equals", "value": "error"}]),
+     _filter_oracle("NOT (event_type <> 'error')")),
+    ("f3_in",
+     _filter_query([{"field": "event_type", "operator": "in", "values": ["click", "view"]}]),
+     _filter_oracle("event_type NOT IN ('click', 'view')")),
+    ("f6_is_not_empty", q_f6_is_not_empty, _ORACLE_F6),
+    ("f7_contains",
+     _filter_query([{"field": "event_type", "operator": "contains", "value": "ick"}]),
+     _filter_oracle("NOT contains(event_type, 'ick')")),
+    ("funnel_steps", q_funnel_steps, _ORACLE_FUNNEL),
+    ("fuzzy_join", q_fuzzy_join, _ORACLE_FUZZY_JOIN),
+    ("grouping_sets_orders", q_grouping_sets, _ORACLE_GROUPING_SETS),
+    ("image_dup_clusters", q_image_dup_clusters, _ORACLE_IMAGE_DUP_CLUSTERS),
+    ("interval_overlap", q_interval_overlap, _ORACLE_INTERVAL_OVERLAP),
+    ("key_skew_events", q_key_skew_events, _ORACLE_KEY_SKEW),
+    # auto dispatcher: below the 16M bound it IS the flat tier with
+    # the identical codebook formula, so the same replay applies
+    ("knn_graph_auto", q_knn_graph_auto, _knn_graph_oracle_sql()),
+    ("mad_outliers", q_mad_outliers, _ORACLE_MAD_OUTLIERS),
+    ("pct_rank_events", q_pct_rank_events, _ORACLE_PCT_RANK),
+    ("perplexity_buckets", q_perplexity_buckets, _ORACLE_PERPLEXITY_BUCKETS),
+    ("profile_events", q_profile_events, _ORACLE_PROFILE_EVENTS),
+    ("quality_classifier", q_quality_classifier, _ORACLE_QUALITY_CLASSIFIER),
+    ("record_clusters", q_record_clusters, _ORACLE_RECORD_CLUSTERS),
+    ("remove_dup_spans", q_remove_dup_spans, _ORACLE_REMOVE_DUP_SPANS),
+    ("sample_stratified", q_sample_stratified, _ORACLE_SAMPLE_STRAT.format(
+        t100=_sampling.fraction_threshold_hex(1.0),
+        t20=_sampling.fraction_threshold_hex(0.2),
+        t5=_sampling.fraction_threshold_hex(0.05),
+        t0=_sampling.fraction_threshold_hex(0.0),
+    )),
+    ("sample_weighted", q_sample_weighted, _ORACLE_SAMPLE_WEIGHTED),
+    ("semi_join_parts", q_semi_join_parts, _ORACLE_SEMI_JOIN),
+    ("snapshot_diff", q_snapshot_diff, _ORACLE_SNAPSHOT_DIFF),
+    ("source_cap", q_source_cap, _ORACLE_SOURCE_CAP),
+    ("token_budget_mix", q_token_budget_mix, _ORACLE_TOKEN_BUDGET_MIX),
+    ("union_distinct_nations", q_union_distinct, _ORACLE_UNION),
+    ("url_dedup", q_url_dedup, _url_dedup_oracle()),
+    ("value_histogram", q_value_histogram, _ORACLE_VALUE_HISTOGRAM),
+    # nprobe=None route-every-cell IVF (= brute force) — scale sibling:
+    # ivf_two_level_sharded at a finite nprobe.  Exhaustive routing ⇒
+    # brute-force oracle
+    ("ann_ivf_two_level", q_ann_ivf_two_level, _ORACLE_ANN_BRUTE, TIER_TWIN),
+    ("anti_join_customers", q_anti_join_customers, _ORACLE_ANTI_JOIN),
+    ("asof_join_purchase_click", q_asof_join, _ORACLE_ASOF),
+    ("dedup_exact", q_dedup_exact, _ORACLE_DEDUP_EXACT),
+    ("dedup_incremental", q_dedup_incremental, _ORACLE_DEDUP_INCREMENTAL),
+    ("dedup_simhash", q_dedup_simhash, _ORACLE_SIMHASH),
+    ("distinct_users", q_distinct_users, _ORACLE_DISTINCT_USERS),
+    ("doc_length_histogram", q_doc_length_histogram,
+     _ORACLE_DOC_LENGTH_HISTOGRAM),
+    ("embedding_standardize", q_embedding_standardize,
+     _ORACLE_EMBEDDING_STANDARDIZE),
+    ("etl_chained_mappings", q_etl_chained_mappings, _ORACLE_ETL_CHAINED),
+    ("events_rolling", q_events_rolling, _ORACLE_EVENTS_ROLLING),
+    ("f4_not_in",
+     _filter_query([{"field": "event_type", "operator": "not_in", "values": ["click", "view"]}]),
+     _filter_oracle("event_type IN ('click', 'view')")),
+    ("f5_is_empty", q_f5_is_empty, _ORACLE_F5),
+    ("join_left_outer", q_join_left_outer, _ORACLE_LEFT_OUTER),
+    ("json_extract_props", q_json_extract_props, _ORACLE_JSON_EXTRACT),
+    # full routing replicated in SQL
+    ("knn_graph", q_knn_graph, _knn_graph_oracle_sql()),
+    # exact-jaccard cluster feeder — scale sibling: leakage_safe_split_lsh
+    ("leakage_safe_split", q_leakage_safe_split, _leakage_split_oracle_sql(),
+     TIER_TWIN),
+    ("merge_upsert_orders", q_merge_upsert_orders, _ORACLE_MERGE_UPSERT),
+    ("multimodal_features", q_multimodal_features, _ORACLE_MULTIMODAL),
+    ("part_pagerank", q_part_pagerank, _ORACLE_PART_PAGERANK),
+    ("pivot_orders", q_pivot_orders, _ORACLE_PIVOT),
+    ("rollup_orders", q_rollup_orders, _ORACLE_ROLLUP),
+    ("salted_join_customers", q_salted_join_customers, _ORACLE_SALTED_JOIN),
+    ("sample_deterministic", q_sample_deterministic,
+     _ORACLE_SAMPLE.format(thr=_sampling.fraction_threshold_hex(0.10))),
+    ("sessionize_events", q_sessionize_events, _ORACLE_SESSIONIZE_BATCH),
+    ("t3_date_format", q_t3_date_format_errors, _ORACLE_T3),
+    ("t4_lookup", q_t4_lookup_errors, _ORACLE_T4),
+    ("t7_formula", q_t7_formula, _ORACLE_T7),
+    ("temperature_mix", q_temperature_mix, _ORACLE_TEMPERATURE_MIX),
+    ("text_filter_lines", q_text_filter_lines, _ORACLE_FILTER_LINES),
+    ("text_pii_scrub", q_text_pii_scrub, _oracle_pii_scrub()),
+    ("text_repetition", q_text_repetition, _ORACLE_TEXT_REPETITION),
+    ("topk_revenue_orders", q_topk_revenue_orders, _ORACLE_TOPK_REVENUE),
+    ("typed_crypto_pipeline", q_typed_crypto_pipeline, _ORACLE_TYPED_CRYPTO),
+    ("unigram_logprob", q_unigram_logprob, _ORACLE_UNIGRAM_LOGPROB),
+    ("unpivot_customer", q_unpivot_customer, _ORACLE_UNPIVOT),
+    ("url_registered_domain", q_url_registered_domain,
+     _url_registered_domain_oracle()),
+    ("value_percentiles", q_value_percentiles, _ORACLE_PERCENTILES),
+    ("window_top_orders", q_window_top_orders, _ORACLE_WINDOW_TOP),
+    ("agg_pricing_summary", q_agg_pricing_summary, _ORACLE_AGG_PRICING),
+    ("ann_bruteforce", q_ann_bruteforce, _ORACLE_ANN_BRUTE),
+    # deterministic IVF replicated in SQL
+    ("ann_ivf_approx", q_ann_ivf_approx, _ivf_oracle_sql()),
+    ("ann_quantized", q_ann_quantized, _ORACLE_ANN_QUANTIZED),
+    ("chunk_documents", q_chunk_documents, _ORACLE_CHUNK_DOCUMENTS),
+    ("corpus_curation", q_corpus_curation,
+     _ORACLE_CORPUS_CURATION.format(thr=_sampling.fraction_threshold_hex(0.1))),
+    ("corpus_decontaminate", q_corpus_decontaminate, _ORACLE_DECONTAMINATE),
+    ("corpus_shuffle", q_corpus_shuffle, _ORACLE_CORPUS_SHUFFLE),
+    ("dedup_clusters", q_dedup_clusters, _ORACLE_DEDUP_CLUSTERS),
+    ("dedup_doc_lines", q_dedup_doc_lines, _ORACLE_DOC_LINES),
+    ("dedup_embedding", q_dedup_embedding,
+     _ORACLE_DEDUP_EMBEDDING.format(cos=_cos_sql("a.emb", "b.emb"))),
+    # HLL++ estimate (engine-specific, so no SQL twin) — exact twin:
+    # distinct_users
+    ("distinct_users_approx", q_distinct_users_approx, None),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query by name, in driver-schedule order."""
+    return {row[0]: row[1] for row in _REGISTRY}
+
+
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB twin of every query that has one (all but rows-only)."""
+    return {row[0]: row[2] for row in _REGISTRY if row[2] is not None}
+
+
 def tier_bounds() -> dict[str, dict]:
     """Machine-readable validity bounds for every ``scale-path-bounded``
     registry entry: ``recommended_max_n`` (input size past which the
@@ -6624,199 +6490,15 @@ def tier_bounds() -> dict[str, dict]:
     return {k: dict(v) for k, v in _TIER_BOUNDS.items()}
 
 
-_NON_SCALE_TIERS = {
-    # quadratic exact n-gram Jaccard — scale sibling: dedup_jaccard_capped
-    "dedup_jaccard_pairs": TIER_TWIN,
-    # exact-jaccard cluster feeder — scale sibling: leakage_safe_split_lsh
-    "leakage_safe_split": TIER_TWIN,
-    # route-every-cell IVF (= brute force by construction) — scale
-    # sibling: ann_ivf_approx
-    "ann_ivf_exact": TIER_TWIN,
-    # m_super=None flat routing over the bounded codebook (N·C flops) —
-    # scale sibling: knn_join(m_super=4), recall/ladder-measured in
-    # RECALL.md / SCALE.md
-    "knn_graph_sharded": TIER_TWIN,
-    # nprobe=None route-every-cell IVF (= brute force) — scale sibling:
-    # ivf_two_level_sharded at a finite nprobe
-    "ann_ivf_two_level": TIER_TWIN,
-    # HLL++ estimate — exact twin: distinct_users
-    "distinct_users_approx": TIER_ROWS_ONLY,
-}
-
-
 def tiers() -> dict[str, str]:
-    """Tier tag for every ``queries()`` entry (complete by construction:
-    keys are the same ``_R14_ORDER`` set the registry asserts).
-    ``scale-path-bounded`` entries carry their size bound + successor in
-    ``tier_bounds()``."""
+    """Tier tag for every ``queries()`` entry.  ``scale-path-bounded``
+    entries carry their size bound + successor in ``tier_bounds()``."""
     out = {}
-    for k in _R14_ORDER:
-        if k in _TIER_BOUNDS:
-            out[k] = TIER_SCALE_BOUNDED
+    for name, _query, oracle, *override in _REGISTRY:
+        if oracle is None:
+            out[name] = TIER_ROWS_ONLY
+        elif name in _TIER_BOUNDS:
+            out[name] = TIER_SCALE_BOUNDED
         else:
-            out[k] = _NON_SCALE_TIERS.get(k, TIER_SCALE)
+            out[name] = override[0] if override else TIER_SCALE
     return out
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "etl_dynamic_mapping": _ORACLE_ETL_DYNAMIC,
-        "etl_lookup_table": _ORACLE_ETL_LOOKUP_TABLE,
-        "etl_aggregate_mapping": _ORACLE_ETL_AGGREGATE,
-        "etl_chained_mappings": _ORACLE_ETL_CHAINED,
-        "spec_validation": _ORACLE_SPEC_VALIDATION,
-        "merge_upsert_orders": _ORACLE_MERGE_UPSERT,
-        "f1_equals": _filter_oracle("NOT (event_type = 'error')"),
-        "f2_not_equals": _filter_oracle("NOT (event_type <> 'error')"),
-        "f3_in": _filter_oracle("event_type NOT IN ('click', 'view')"),
-        "f4_not_in": _filter_oracle("event_type IN ('click', 'view')"),
-        "f5_is_empty": _ORACLE_F5,
-        "f6_is_not_empty": _ORACLE_F6,
-        "f7_contains": _filter_oracle("NOT contains(event_type, 'ick')"),
-        "t3_date_format": _ORACLE_T3,
-        "t4_lookup": _ORACLE_T4,
-        "t7_formula": _ORACLE_T7,
-        "typed_stocks_pipeline": _ORACLE_TYPED_STOCKS,
-        "typed_crypto_pipeline": _ORACLE_TYPED_CRYPTO,
-        "agg_pricing_summary": _ORACLE_AGG_PRICING,
-        "join_revenue_by_nation": _ORACLE_JOIN_REVENUE,
-        "window_top_orders": _ORACLE_WINDOW_TOP,
-        "rollup_orders": _ORACLE_ROLLUP,
-        "cube_orders": _ORACLE_CUBE,
-        "anti_join_customers": _ORACLE_ANTI_JOIN,
-        "semi_join_parts": _ORACLE_SEMI_JOIN,
-        "union_distinct_nations": _ORACLE_UNION,
-        "asof_join_purchase_click": _ORACLE_ASOF,
-        "range_join_buckets": _ORACLE_RANGE_JOIN,
-        "join_left_outer": _ORACLE_LEFT_OUTER,
-        "grouping_sets_orders": _ORACLE_GROUPING_SETS,
-        "topk_revenue_orders": _ORACLE_TOPK_REVENUE,
-        "sample_deterministic": _ORACLE_SAMPLE.format(
-            thr=_sampling.fraction_threshold_hex(0.10)
-        ),
-        "json_extract_props": _ORACLE_JSON_EXTRACT,
-        "pivot_orders": _ORACLE_PIVOT,
-        "unpivot_customer": _ORACLE_UNPIVOT,
-        "value_percentiles": _ORACLE_PERCENTILES,
-        "distinct_users": _ORACLE_DISTINCT_USERS,
-        # distinct_users_approx: rows-only (sketch estimate is engine-specific)
-        "sample_stratified": _ORACLE_SAMPLE_STRAT.format(
-            t100=_sampling.fraction_threshold_hex(1.0),
-            t20=_sampling.fraction_threshold_hex(0.2),
-            t5=_sampling.fraction_threshold_hex(0.05),
-            t0=_sampling.fraction_threshold_hex(0.0),
-        ),
-        "dedup_exact": _ORACLE_DEDUP_EXACT,
-        "dedup_normalized": _ORACLE_DEDUP_NORM,
-        "dedup_jaccard_pairs": _ORACLE_JACCARD_PAIRS,
-        "dedup_jaccard_capped": _ORACLE_JACCARD_CAPPED,
-        "dedup_clusters": _ORACLE_DEDUP_CLUSTERS,
-        # portable-hash mode: full-pipeline SQL replication (see queries)
-        "dedup_minhash_lsh": _ORACLE_MINHASH_LSH,
-        "dedup_lsh_capped": _ORACLE_LSH_CAPPED,
-        "dedup_simhash": _ORACLE_SIMHASH,
-        "dedup_embedding": _ORACLE_DEDUP_EMBEDDING.format(cos=_cos_sql("a.emb", "b.emb")),
-        "semantic_dedup": _semdedup_oracle_sql(),
-        "ann_bruteforce": _ORACLE_ANN_BRUTE,
-        "ann_ivf_exact": _ORACLE_ANN_BRUTE,  # nprobe=all ⇒ exact ⇒ same oracle
-        "ann_ivf_two_level": _ORACLE_ANN_BRUTE,  # exhaustive routing ⇒ brute force
-        "url_registered_domain": _url_registered_domain_oracle(),
-        "ann_ivf_approx": _ivf_oracle_sql(),  # deterministic IVF replicated in SQL
-        "ann_recall_curve": _recall_curve_oracle_sql(),  # full curve replayed in SQL
-        "text_metrics": _ORACLE_TEXT_METRICS,
-        "text_top_tokens": _ORACLE_TOP_TOKENS,
-        "text_repetition": _ORACLE_TEXT_REPETITION,
-        "text_pii_scrub": _oracle_pii_scrub(),
-        "text_filter_lines": _ORACLE_FILTER_LINES,
-        "corpus_decontaminate": _ORACLE_DECONTAMINATE,
-        "corpus_curation": _ORACLE_CORPUS_CURATION.format(
-            thr=_sampling.fraction_threshold_hex(0.1)
-        ),
-        "pack_sequences": _ORACLE_PACK_SEQUENCES,
-        "dedup_paragraphs": _ORACLE_DEDUP_PARAGRAPHS,
-        "dedup_incremental": _ORACLE_DEDUP_INCREMENTAL,
-        "bm25_terms": _ORACLE_BM25,
-        "perplexity_buckets": _ORACLE_PERPLEXITY_BUCKETS,
-        "boilerplate_lines": _ORACLE_BOILERPLATE_LINES,
-        "token_budget_mix": _ORACLE_TOKEN_BUDGET_MIX,
-        "duplicate_spans": _ORACLE_DUPLICATE_SPANS,
-        "events_winsorized": _ORACLE_EVENTS_WINSORIZED,
-        "interval_overlap": _ORACLE_INTERVAL_OVERLAP,
-        "remove_dup_spans": _ORACLE_REMOVE_DUP_SPANS,
-        "dsir_selection": _ORACLE_DSIR_SELECTION,
-        "corpus_report": _ORACLE_CORPUS_REPORT,
-        "apply_merges": _apply_merges_oracle_sql(),
-        "bpe_merges": _bpe_merges_oracle_sql(),
-        "quality_classifier": _ORACLE_QUALITY_CLASSIFIER,
-        "lang_id_model": _ORACLE_LANG_ID_MODEL,
-        "assign_sharded_flat": _ORACLE_ASSIGN_SHARDED,
-        "fuzzy_join": _ORACLE_FUZZY_JOIN,
-        "pct_rank_events": _ORACLE_PCT_RANK,
-        "corr_lineitem": _corr_lineitem_oracle_sql(),
-        "mad_outliers": _ORACLE_MAD_OUTLIERS,
-        "copurchase_pairs": _ORACLE_COPURCHASE_PAIRS,
-        "copurchase_capped": _ORACLE_COPURCHASE_CAPPED,
-        "sessionize_events": _ORACLE_SESSIONIZE_BATCH,
-        "knn_graph": _knn_graph_oracle_sql(),  # full routing replicated in SQL
-        # auto dispatcher: below the 16M bound it IS the flat tier with
-        # the identical codebook formula, so the same replay applies
-        "knn_graph_auto": _knn_graph_oracle_sql(),
-        # bounded-cell tier, m_super=None spelling: same full-pipeline
-        # replay, only the codebook-size formula differs
-        "knn_graph_sharded": _knn_graph_oracle_sql(
-            cells_sql=_KNN_SHARDED_CELLS_SQL
-        ),
-        "part_pagerank": _ORACLE_PART_PAGERANK,
-        "salted_join_customers": _ORACLE_SALTED_JOIN,
-        "temperature_mix": _ORACLE_TEMPERATURE_MIX,
-        "embedding_standardize": _ORACLE_EMBEDDING_STANDARDIZE,
-        "leakage_safe_split": _leakage_split_oracle_sql(),
-        "leakage_safe_split_lsh": _leakage_split_lsh_oracle_sql(),
-        "record_clusters": _ORACLE_RECORD_CLUSTERS,
-        "url_dedup": _url_dedup_oracle(),
-        "events_drift": _ORACLE_EVENTS_DRIFT,
-        "key_skew_events": _ORACLE_KEY_SKEW,
-        "contamination_report": _ORACLE_CONTAMINATION_REPORT,
-        "source_cap": _ORACLE_SOURCE_CAP,
-        # bloom pre-filter is exact-result-preserving: same oracle verbatim
-        "dedup_incremental_bloom": _ORACLE_DEDUP_INCREMENTAL,
-        "events_rolling": _ORACLE_EVENTS_ROLLING,
-        "doc_length_histogram": _ORACLE_DOC_LENGTH_HISTOGRAM,
-        "chunk_documents": _ORACLE_CHUNK_DOCUMENTS,
-        "salted_agg_events": _ORACLE_SALTED_AGG,
-        "tokens_to_ids": _ORACLE_TOKENS_TO_IDS,
-        "unigram_logprob": _ORACLE_UNIGRAM_LOGPROB,
-        "corpus_shuffle": _ORACLE_CORPUS_SHUFFLE,
-        "dedup_representatives": _ORACLE_DEDUP_REPRESENTATIVES.format(sw=_SW),
-        "text_strip_html": _oracle_strip_html(),
-        "web_curation": _oracle_web_curation(),
-        "events_rolling_time": _ORACLE_EVENTS_ROLLING_TIME,
-        "length_outliers": _ORACLE_LENGTH_OUTLIERS,
-        "stream_hourly_counts": _ORACLE_STREAM_HOURLY,
-        "stream_sessionize": _ORACLE_SESSIONIZE,
-        "multimodal_features": _ORACLE_MULTIMODAL,
-        "gopher_quality": _ORACLE_GOPHER,
-        "mixture_resample": _ORACLE_MIXTURE,
-        "ann_quantized": _ORACLE_ANN_QUANTIZED,
-        "image_dhash": _ORACLE_IMAGE_DHASH,
-        "image_dhash_pairs": _ORACLE_IMAGE_DHASH_PAIRS,
-        "stats_moments": _ORACLE_STATS_MOMENTS,
-        "window_funcs_orders": _ORACLE_WINDOW_FUNCS,
-        "training_mix": _ORACLE_TRAINING_MIX,
-        "text_top_bigrams": _ORACLE_TOP_BIGRAMS,
-        "dedup_doc_lines": _ORACLE_DOC_LINES,
-        "sample_by_quality": _ORACLE_SAMPLE_QUALITY,
-        "tfidf_terms": _ORACLE_TFIDF,
-        "join_full_outer": _ORACLE_JOIN_FULL_OUTER,
-        "scd2_history": _ORACLE_SCD2,
-        "retention_cohorts": _ORACLE_RETENTION,
-        "bigram_logprob": _ORACLE_BIGRAM_LP,
-        "snapshot_diff": _ORACLE_SNAPSHOT_DIFF,
-        "funnel_steps": _ORACLE_FUNNEL,
-        "image_dup_clusters": _ORACLE_IMAGE_DUP_CLUSTERS,
-        "profile_events": _ORACLE_PROFILE_EVENTS,
-        "asof_join_forward": _ORACLE_ASOF_FORWARD,
-        "value_histogram": _ORACLE_VALUE_HISTOGRAM,
-        "events_anomalies": _ORACLE_EVENTS_ANOMALIES,
-        "sample_weighted": _ORACLE_SAMPLE_WEIGHTED,
-    }

@@ -30,6 +30,12 @@ visual-editor save always persists ``filter_rules: []`` — a recorded bug
 (``templates/mappings/visual.html:551``) that silently wipes filters.
 This facade persists the filter_rules present in the payload and leaves
 existing ones untouched when the key is absent.
+
+Possible divergence, not checked against the reference: an inline edit
+of a line the file has no data row at (the header, line 1, or a line past
+the last row) answers a JSON 400 that names the line and leaves the file
+as it was.  The reference source was not available to check what its
+``app.py:577-623`` answers for such a line.
 """
 
 from __future__ import annotations
@@ -371,7 +377,7 @@ def create_app(
             return jsonify({"error": "Row data must be an object"}), 400
         try:
             update_csv_row(spark, str(path), line, row, spec=source)
-        except ValueError as exc:  # unknown column names, a reserved _line column
+        except ValueError as exc:  # unknown columns, a reserved _line column, no such line
             return jsonify({"error": str(exc)}), 400
         return jsonify({"success": True, "message": f"Row {line} updated"})
 

@@ -27,8 +27,9 @@ Scale shape (100 TB corpus, bounded model):
   no skew);
 * the (doc, feature) pair table feeds BOTH the count agg and the
   scoring join — multi-consumer, so it rides the shared persist cache
-  (``_FEAT_CACHE``; registered in bench.py's clear list like every
-  other BoundedPersistCache).
+  (``_FEAT_CACHE``; like every BoundedPersistCache it registers itself
+  through ``driver_memo.register`` when constructed, so
+  ``driver_memo.clear_all`` empties it).
 
 Engine-parity discipline: per-feature weights are ln-ratios ROUNDED to 6
 decimals before any sum, then summed as exact decimal micro-units (the

@@ -14,7 +14,9 @@ whole-row updates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from csv_etl_spark.local import ident_col
@@ -32,7 +34,12 @@ def update_csv_row(
 ) -> None:
     """Replace the row at physical ``line_number`` (data starts at 2, like
     the reference's preview numbering) with ``new_values`` (column → new
-    cell; unspecified columns keep their value)."""
+    cell; unspecified columns keep their value).  A line the file has no
+    row at raises ``ValueError`` and leaves the file as it was: the
+    rewrite goes to a staged file, and the rows it matched are counted on
+    the same job, so the check launches none."""
+    if line_number < 2:
+        raise ValueError(f"line {line_number} is not a data row: data starts at line 2")
     df, partitions = line_numbered(read_spec_csv(spark, file_path, spec))
     unknown = set(new_values) - set(df.columns)
     if unknown:
@@ -49,8 +56,15 @@ def update_csv_row(
         ],
         F.col(LINE_COL),
     )
+    matched = Observation()
+    updated = updated.observe(matched, F.count_if(F.col(LINE_COL) == line_number).alias("n"))
+    staged = file_path + ".edit"
     # a projection of the scan: the scan's partitions, planned once
-    write_single_csv_file(one_sorted_partition(updated, LINE_COL, partitions), file_path)
+    write_single_csv_file(one_sorted_partition(updated, LINE_COL, partitions), staged)
+    if not matched.get["n"]:
+        os.remove(staged)
+        raise ValueError(f"line {line_number} is past the last row of the file")
+    os.replace(staged, file_path)
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:

@@ -57,12 +57,18 @@ def axis_of(q: str) -> str:
     return "documents"
 
 
-def record_order(path: Path) -> tuple[int, float]:
-    """(round, file mtime): mtime breaks ties within a round so a
-    mid-round re-measure (e.g. the r8 image-banding fix) supersedes the
-    earlier matrix it corrects."""
+def record_order(path: Path) -> tuple[int, bool, str]:
+    """(round, not the round's base matrix, file name), a total order
+    that does not depend on file mtimes.  A round's ``_sf1`` matrix is
+    its first measurement, so a mid-round re-measure supersedes the
+    matrix it corrects (r8_image_fix over r8_sf1, the image-banding
+    fix; r9_copurchase_prefix over r9_sf1).  Past that the name decides:
+    r15_semdedup_prerewrite, the full 2M + 20M ladder that
+    r15_semdedup's 2M-only re-run overwrote (its ``_provenance``),
+    stays the current tablefit row."""
     m = re.search(r"_r(\d+)", path.name)
-    return (int(m.group(1)) if m else 0, path.stat().st_mtime)
+    rnd = int(m.group(1)) if m else 0
+    return (rnd, path.stem != f"BENCHNOTES_r{rnd}_sf1", path.name)
 
 
 def main() -> None:
@@ -111,7 +117,7 @@ def main() -> None:
     ]
     superseded_rows = []
     for q in sorted(history):
-        rows = history[q]  # already in (round, mtime) order
+        rows = history[q]  # already in record_order
         fname, med, exps = rows[-1]
         ax = axis_of(q)
 

@@ -471,7 +471,11 @@ def test_bad_client_input_is_400(env):
     assert r.status_code == 400 and "error" in r.get_json()
     r = client.post("/api/preview/src1/a.csv/update", json={"line": 3, "row": {"Nope": "d"}})
     assert r.status_code == 400 and "Nope" in r.get_json()["error"]
+    for line in (1, 99):  # the header, and a line past the last row
+        r = client.post("/api/preview/src1/a.csv/update", json={"line": line, "row": {"Date": "d"}})
+        assert r.status_code == 400 and f"line {line} " in r.get_json()["error"]
     assert (tmp_path / "in" / "s1" / "a.csv").read_text() == before
+    assert sorted(p.name for p in (tmp_path / "in" / "s1").iterdir()) == ["a.csv"]
 
 
 def test_saved_mapping_recompiles_between_previews(env):

@@ -118,3 +118,31 @@ def test_env_stamp_and_diff_surfacing():
     # stamp-less legacy snapshots: no note, nulls surface
     d2 = bench_diff.diff({"queries": {}}, {"queries": {}}, 0.3)
     assert d2["env_note"] is None
+
+
+def test_scale_report_does_not_depend_on_file_mtimes(tmp_path, monkeypatch):
+    """scripts/gen_scale_report.py renders the committed SCALE.md from
+    bench_records/ whatever mtimes a checkout gives the records: two
+    copies stamped in opposite orders give the same bytes."""
+    import os
+    import shutil
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo / "scripts"))
+    import gen_scale_report
+
+    outputs = []
+    for direction in (1, -1):
+        records = tmp_path / f"records{direction}"
+        shutil.copytree(repo / "bench_records", records)
+        for i, f in enumerate(sorted(records.iterdir(), reverse=direction < 0)):
+            os.utime(f, (1_000_000 + i, 1_000_000 + i))
+        out = tmp_path / f"SCALE{direction}.md"
+        monkeypatch.setattr(gen_scale_report, "RECORDS", records)
+        monkeypatch.setattr(gen_scale_report, "OUT", out)
+        gen_scale_report.main()
+        outputs.append(out.read_text())
+    assert outputs[0] == outputs[1]
+    assert outputs[0] == (repo / "SCALE.md").read_text()

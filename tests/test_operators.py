@@ -422,21 +422,35 @@ def test_approx_distinct_within_tolerance(spark):
 
 
 def test_registry_tier_tags_complete():
-    """tiers() (r11 verdict ask #3): every registry entry carries a
-    machine-readable tier tag, the tag table covers the registry exactly
-    (same set-equality discipline as the _R14_ORDER assert), and the
+    """The registry table is the one list of driver queries: names are
+    unique, every entry carries a machine-readable tier tag, an entry has
+    no oracle exactly when it is rows-only, every name kept outside the
+    table (tier bounds, bench.py's headline) is registered, and the
     documented verification-only spellings can no longer be mistaken for
     recommended paths programmatically."""
     import __spark_entry__ as E
+    import bench
 
+    names = [row[0] for row in E._REGISTRY]
+    # a duplicate row would silently replace its twin in every dict
+    assert len(names) == len(set(names)), sorted(
+        n for n in set(names) if names.count(n) > 1)
+    assert list(E.queries()) == names
     t = E.tiers()
-    assert set(t) == set(E._R14_ORDER)
+    assert list(t) == names
     valid = {E.TIER_SCALE, E.TIER_SCALE_BOUNDED, E.TIER_TWIN, E.TIER_ROWS_ONLY}
     assert set(t.values()) <= valid
-    # every override key must be a real registry entry (a typo'd key
-    # would silently tag nothing)
-    assert set(E._NON_SCALE_TIERS) <= set(t)
+    # the one override a row carries; rows-only and bounded are derived
+    for row in E._REGISTRY:
+        assert len(row) == 3 or (len(row) == 4 and row[3] == E.TIER_TWIN), row
+    oracles = E.oracle_sql()
+    assert {n for n in names if n not in oracles} == {
+        n for n, tier in t.items() if tier == E.TIER_ROWS_ONLY}
+    assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
+    # every name spelled outside the table must be a registry entry (a
+    # typo'd key would silently tag or time nothing)
     assert set(E._TIER_BOUNDS) <= set(t)
+    assert set(bench.HEADLINE) <= set(t), sorted(set(bench.HEADLINE) - set(t))
     # the spellings r10/r11 verdicts called out
     assert t["dedup_jaccard_pairs"] == E.TIER_TWIN
     assert t["leakage_safe_split"] == E.TIER_TWIN
