@@ -1,25 +1,32 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, same output contract (probe_id, neighbor_id, cosine, rank):
+Entry points, each with its plan (top-k ones return probe_id, neighbor_id,
+cosine, rank; cosine rounded to 6 places, ties to the lowest neighbor id):
 
-* brute_force_topk — exact: broadcast the (small) probe set against every
-  vector; per-row dot products via zip_with/aggregate (JVM-side, no UDF),
-  then a top-k window per probe.  The correctness baseline; at 100 TB this
-  is a full scan but embarrassingly parallel (no shuffle until the final
-  per-probe top-k, which is tiny).
+* brute_force_topk — exact: the collected probe set scores ONE Arrow pass
+  of the corpus (≤ 1024 probes), else a broadcast-probe crossJoin.
+* quantized_topk — brute_force_topk over int8-quantized vectors.
+* ivf_topk — IVF: corpus rows to their nearest cell, broadcast probes to
+  their ``nprobe`` nearest, scored within routed cells only.
+* ivf_two_level_sharded — ivf_topk over an auto-sized first-n codebook
+  with a volume-equalizing nprobe raise.
+* nprobe_recall_curve / calibrate_nprobe — ivf_topk's candidates built
+  once at max(grid) routes, re-ranked per grid value against brute force.
+* knn_join — kNN join of two large tables: both sides routed, one
+  shuffle on the cell key into a cell-grouped Arrow scorer.
+* knn_join_auto — knn_join over a first-n codebook sized from N, flat or
+  hierarchical (m_super) by ``KNN_FLAT_MAX_N``.
+* semantic_dedup — k-means cells, then a per-cell self-join drops every
+  vector with a lower-id τ-neighbor.
+* embedding_dup_pairs — random-hyperplane bucket equijoin, cosine-checked.
+* assign_to_centroids — map-only nearest-centroid assignment (Arrow
+  router, or the pure-Column reference spelling).
 
-* ivf_topk — IVF-style approximate: centroids from ``kmeans_centroids``
-  (sampled Lloyd iterations, engine-portable) or a deterministic first-n
-  fallback; assigns every vector to its nearest centroid (map-only,
-  broadcast centroids) and probes only the ``nprobe`` closest centroid
-  partitions per query.  With nprobe == n_centroids it degrades to exact
-  (used by the tests); with nprobe « n_centroids the scan cost drops
-  ~nprobe/n_centroids — the 100 TB path, where the cluster assignment is
-  precomputed once and stored as a partition column.
-
-* random_hyperplane_buckets — SimHash-for-vectors: sign pattern against
-  ``n_planes`` fixed pseudo-random hyperplanes → integer bucket; used for
-  embedding near-dup joins (bucket-equijoin instead of cross join).
+Every Arrow kernel stacks a batch with ``_stack`` (a NULL vector is the
+zero vector, which the Catalyst spellings score cosine 0.0) and folds
+norms and dots per dimension (``_fold_norms``, ``_fold_dots``,
+``_fold_sims``) in the Catalyst fold's IEEE op order, so emitted cosines
+are bit-identical to ``cosine_with_norms`` and the SQL oracles.
 """
 
 from __future__ import annotations
@@ -56,23 +63,62 @@ def dot_arrow(a: Column, b: Column) -> Column:
     this) and every SQL oracle replays unchanged.  ~40x on the pair-
     scoring hot path at sf10.
 
-    Requires fixed-dimension non-null vectors (every embedding table
-    here); the surrounding norm division/guard stays JVM-side."""
-    import pandas as pd  # noqa: F811 (module import is for type hints)
+    Requires fixed-dimension vectors (every embedding table here); a
+    NULL side gives NULL, as ``dot`` does.  The surrounding norm
+    division/guard stays JVM-side."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("double")
     def _fold(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if not len(xs):
-            return pd.Series([], dtype="float64")
-        A = np.vstack(xs.to_numpy()).astype("float64")
-        B = np.vstack(ys.to_numpy()).astype("float64")
-        acc = np.zeros(len(A), dtype="float64")
-        for j in range(A.shape[1]):
-            acc += A[:, j] * B[:, j]
-        return pd.Series(acc)
+        A = _stack(xs)
+        acc = _fold_dots(A, _stack(ys, A.shape[1]))
+        # NaN leaves the Arrow batch as NULL
+        return pd.Series(np.where(xs.isna() | ys.isna(), np.nan, acc))
 
     return _fold(a, b)
+
+
+def _stack(batch: pd.Series, dim: int = 0) -> np.ndarray:
+    """The float64 matrix of a batch of vectors, one row per vector — the
+    module's one batch-to-matrix site.  A NULL vector is the zero row:
+    the answer the Catalyst spellings give it (cosine 0.0 through the
+    ``denom > 0`` guard, the lowest centroid id in assignment).  ``dim``
+    is the width of a batch whose vectors are all NULL."""
+    vals = batch.to_numpy()
+    null = batch.isna().to_numpy()
+    if len(vals) and not null.any():
+        return np.stack(vals).astype(np.float64)
+    present = vals[~null]
+    out = np.zeros((len(vals), len(present[0]) if len(present) else dim))
+    if len(present):
+        out[~null] = np.stack(present)
+    return out
+
+
+def _fold_norms(V: np.ndarray) -> np.ndarray:
+    """Row L2 norms in ``l2_norm``'s op order: squares accumulated
+    sequentially over dimension j in IEEE doubles, then sqrt."""
+    acc = np.zeros(len(V))
+    for j in range(V.shape[1]):
+        acc += V[:, j] * V[:, j]
+    return np.sqrt(acc)
+
+
+def _fold_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-paired dots ``A[i] · B[i]`` in ``dot``'s op order (products
+    accumulated sequentially over dimension j), so each is bit-identical
+    to the Catalyst fold."""
+    acc = np.zeros(len(A))
+    for j in range(A.shape[1]):
+        acc += A[:, j] * B[:, j]
+    return acc
+
+
+def _cosine(num: np.ndarray, denom: np.ndarray) -> np.ndarray:
+    """``num / denom``, 0.0 where ``denom > 0`` fails — the guard of
+    ``cosine_with_norms``."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, num / np.where(denom == 0, 1.0, denom), 0.0)
 
 
 # driver-collect cap for a routing codebook: 2^18 cells × 64 dims × 8 B
@@ -103,53 +149,64 @@ def _codebook_arrays(
         )
     rows.sort(key=lambda r: int(r["centroid_id"]))
     ids = np.array([int(r["centroid_id"]) for r in rows], dtype="int64")
-    mat = np.array(
-        [[float(x) for x in r["centroid_vec"]] for r in rows], dtype="float64"
-    )
+    mat = _stack(pd.Series([r["centroid_vec"] for r in rows], dtype=object))
     return ids, mat
 
 
 def _fold_sims(V: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """(n, m) cosine matrix with the EXACT fold op order of
-    ``cosine_with_norms(vec, cent, l2_norm(vec), l2_norm(cent))``: dot accumulated sequentially over dimension j
-    (``acc[:, k] += V[:, j] * C[k, j]`` via one outer-product accumulate
-    per j), norms accumulated in the same j order, denom = vnorm*cnorm,
-    guarded division — every IEEE double op matches the Catalyst/DuckDB
-    fold, so argmax/ordering decisions are bit-faithful."""
-    n, d = V.shape
-    m = C.shape[0]
-    acc = np.zeros((n, m), dtype="float64")
-    vn = np.zeros(n, dtype="float64")
-    cn = np.zeros(m, dtype="float64")
-    for j in range(d):
+    """(n, m) cosine matrix, the matrix form of ``_fold_dots``: the dot
+    accumulated sequentially over dimension j (``acc[:, k] += V[:, j] *
+    C[k, j]`` via one outer-product accumulate per j), ``_fold_norms``
+    per side, denom = vnorm*cnorm, guarded division — every IEEE double
+    op matches ``cosine_with_norms(vec, cent, l2_norm(vec),
+    l2_norm(cent))`` and the DuckDB fold, so emitted values and
+    argmax/ordering decisions are bit-faithful."""
+    acc = np.zeros((V.shape[0], C.shape[0]))
+    for j in range(V.shape[1]):
         acc += V[:, j : j + 1] * C[:, j][None, :]
-        vn += V[:, j] * V[:, j]
-        cn += C[:, j] * C[:, j]
-    denom = np.sqrt(vn)[:, None] * np.sqrt(cn)[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        sims = np.where(denom > 0, acc / np.where(denom == 0, 1.0, denom), 0.0)
-    return sims
+    return _cosine(acc, _fold_norms(V)[:, None] * _fold_norms(C)[None, :])
 
 
 def _sims_matmul(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Fast cosine matrix via one BLAS matmul — used for SELECTION only
     (argmax / top-k candidate picking), never for emitted values.  BLAS
     pairwise summation differs from the fold order by ≤ ~1e-13 on unit-
-    scale vectors; every selection made on it carries a margin ≥ 1e-9
-    and falls back to ``_fold_sims`` when the decision gap is inside
-    the margin, so selections are provably identical to fold-exact."""
-    num = V @ C.T
+    scale vectors; every selection made on it carries a margin (the
+    re-decision gap ``_SELECT_MARGIN``, or ``_TOPK_SLACK``), so
+    selections are provably identical to fold-exact."""
     vn = np.sqrt((V * V).sum(axis=1))
     cn = np.sqrt((C * C).sum(axis=1))
-    denom = vn[:, None] * cn[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(denom > 0, num / np.where(denom == 0, 1.0, denom), 0.0)
+    return _cosine(V @ C.T, vn[:, None] * cn[None, :])
 
 
 # decision-gap margin for matmul-based selection: BLAS-vs-fold error is
 # ≤ ~2e-13 on cosine-scale values; any ordering decision with a gap
 # below this margin is re-decided on the exact fold
 _SELECT_MARGIN = 1e-9
+
+
+# per-probe shortlist slack: the JVM top-k orders by round(cosine, 6),
+# and rounding moves a value by ≤ 5e-7, so any pair that can place in
+# the rounded top-k has exact cosine ≥ kth_best_exact − 1e-6;
+# matmul-vs-fold error adds ≤ ~2e-13.  Keeping everything ≥ kth_best −
+# 2e-6 therefore provably contains the exact rounded top-k.
+_TOPK_SLACK = 2e-6
+
+
+def _shortlist(sims: np.ndarray, k: int, exclude: np.ndarray) -> np.ndarray:
+    """Mask of the (candidate, probe) pairs of ``sims`` (candidates ×
+    probes) that can reach a probe's rounded top-k: per probe column,
+    everything within ``_TOPK_SLACK`` of its k-th best, with the pairs
+    in ``exclude`` (self-matches) masked out first.  Prune locally here,
+    merge globally in ``topk_per_probe``: the shortlist shrinks the rows
+    returned to the JVM from candidates × probes to ~k per probe."""
+    s = np.where(exclude, -np.inf, sims)
+    n = s.shape[0]
+    if n > k:
+        thr = np.partition(s, n - k, axis=0)[n - k]
+    else:
+        thr = np.full(s.shape[1], -np.inf)
+    return (s >= thr[None, :] - _TOPK_SLACK) & ~exclude
 
 
 def _ranked_cells(V: np.ndarray, mat: np.ndarray, n_take: int) -> np.ndarray:
@@ -268,19 +325,16 @@ def brute_force_topk(
     Scale path (r14): when the probe set fits ``_BRUTE_BLAS_MAX_PROBES``
     it is collected and closed over, and scoring is ONE ``mapInPandas``
     pass of the corpus — each corpus row crosses Arrow once, and each
-    batch emits only its per-probe top-(k+1) shortlist.  The previous
-    crossJoin spelling shipped N × m pair rows (each carrying BOTH
-    full vectors) through the Python runner: ~500 GB of Arrow traffic
-    at 20M × 50 — measured stalling the 20M-hard recall protocol
-    (BENCHNOTES_r14 driver-stall finding).  The kernel reproduces the
-    Catalyst fold exactly (per-dimension double accumulate for norms
-    and dots, same ``denom > 0`` guard), so cosines are bit-identical
-    to the crossJoin spelling and every SQL oracle replays unchanged;
-    per-batch selection keeps a 2×10⁻⁶ value margin so no row that
-    could enter the global top-k under ROUNDED ordering is dropped by
-    an unrounded shortlist.  Probe sets above the bound (rare: probes-
-    as-corpus belongs to ``knn_join``) take the old broadcast-crossJoin
-    path unchanged.
+    batch emits only its per-probe shortlist (``_shortlist``).  The
+    previous crossJoin spelling shipped N × m pair rows (each carrying
+    BOTH full vectors) through the Python runner: ~500 GB of Arrow
+    traffic at 20M × 50 — measured stalling the 20M-hard recall protocol
+    (BENCHNOTES_r14 driver-stall finding).  The kernel is ``_fold_sims``,
+    so cosines are bit-identical to the crossJoin spelling and every SQL
+    oracle replays unchanged.  Probe sets above the bound (rare: probes-
+    as-corpus belongs to ``knn_join``) take the broadcast-crossJoin
+    path, and so do an empty probe set and one whose vectors are all
+    NULL (no width to stack them to).
 
     EAGER: sizing the probe set runs a bounded Spark action
     (``limit(1025).collect()`` on ``probes``) AT CALL TIME — unlike
@@ -293,19 +347,9 @@ def brute_force_topk(
         .limit(_BRUTE_BLAS_MAX_PROBES + 1)
         .collect()
     )
-    if not probe_rows:
-        # empty probe set: the pre-r14 crossJoin spelling returned an
-        # empty frame gracefully; preserve that contract (r14 ADVICE —
-        # the BLAS kernel would raise unpacking a 0-row matrix).  Empty
-        # scored rows through the normal top-k keep the schema identical.
-        scored = (
-            probes.limit(0)
-            .select(probe_id_col)
-            .crossJoin(vectors.limit(0).select(F.col(id_col).alias("neighbor_id")))
-            .withColumn("cosine", F.round(F.lit(0.0).cast("double"), 6))
-        )
-        return topk_per_probe(scored, k, probe_id_col)
-    if len(probe_rows) <= _BRUTE_BLAS_MAX_PROBES:
+    if len(probe_rows) <= _BRUTE_BLAS_MAX_PROBES and any(
+        r[1] is not None for r in probe_rows
+    ):
         scored = _brute_scored_blas(
             vectors, probe_rows, k, id_col, vec_col, probe_id_col, probes
         )
@@ -342,64 +386,28 @@ def _brute_scored_blas(
     probes: DataFrame,
 ) -> DataFrame:
     """(probe_id, neighbor_id, cosine) shortlist rows for the collected
-    probe set — one Arrow pass of the corpus, per-batch top-(k+1) with a
-    2e-6 raw-cosine margin (see brute_force_topk), cosine rounded
-    JVM-side with the same F.round the crossJoin spelling uses."""
-    pids = [r[0] for r in probe_rows]
-    pmat = np.array([list(r[1]) for r in probe_rows], dtype=np.float64)
-    m, dim = pmat.shape
-    # probe norms: same per-dimension double fold as l2_norm
-    pn = np.zeros(m)
-    for j in range(dim):
-        pn += pmat[:, j] * pmat[:, j]
-    pn = np.sqrt(pn)
-    pid_arr = np.asarray(pids)
+    probe set — one Arrow pass of the corpus, each row block scored by
+    ``_fold_sims`` and cut by ``_shortlist``, cosine rounded JVM-side
+    with the same F.round the crossJoin spelling uses."""
+    pid_arr = np.asarray([r[0] for r in probe_rows])
+    pmat = _stack(pd.Series([r[1] for r in probe_rows], dtype=object))
     # row-block so the per-block cosine matrix stays ~32 MB
-    block = max(256, 4_000_000 // max(1, m))
-    margin = 2e-6
-    keep_n = k + 1  # +1 absorbs the (single possible) self-match
+    block = max(256, 4_000_000 // len(pid_arr))
 
     def gen(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids_all = pdf[id_col].to_numpy()
-            vecs = pdf[vec_col].to_numpy()
-            out_p, out_n, out_c = [], [], []
             for lo in range(0, len(pdf), block):
-                hi = min(lo + block, len(pdf))
-                V = np.stack(vecs[lo:hi]).astype(np.float64)
-                b = V.shape[0]
-                ids = ids_all[lo:hi]
-                vn = np.zeros(b)
-                dots = np.zeros((b, m))
-                for j in range(dim):
-                    col = V[:, j]
-                    vn += col * col
-                    dots += col[:, None] * pmat[None, :, j]
-                vn = np.sqrt(vn)
-                denom = vn[:, None] * pn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(denom > 0, dots / denom, 0.0)
-                for p in range(m):
-                    c = cos[:, p]
-                    if b > keep_n:
-                        thr = np.partition(c, b - keep_n)[b - keep_n]
-                        sel = np.flatnonzero(c >= thr - margin)
-                    else:
-                        sel = np.arange(b)
-                    sel = sel[ids[sel] != pid_arr[p]]
-                    if len(sel) == 0:
-                        continue
-                    out_p.append(np.full(len(sel), pid_arr[p]))
-                    out_n.append(ids[sel])
-                    out_c.append(c[sel])
-            if out_p:
+                part = pdf.iloc[lo : lo + block]
+                ids = part[id_col].to_numpy()
+                cos = _fold_sims(_stack(part[vec_col], pmat.shape[1]), pmat)
+                ni, pi = np.nonzero(
+                    _shortlist(cos, k, ids[:, None] == pid_arr[None, :])
+                )
                 yield pd.DataFrame(
                     {
-                        probe_id_col: np.concatenate(out_p),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
+                        probe_id_col: pid_arr[pi],
+                        "neighbor_id": ids[ni],
+                        "cosine": cos[ni, pi],
                     }
                 )
 
@@ -512,6 +520,22 @@ def make_probes(
     )
 
 
+def _lloyd_means(assigned: DataFrame, vec_col: str, round_digits: int) -> DataFrame:
+    """(cluster, vec): the Lloyd update shared by both k-means fitters
+    (and mirrored by ``__spark_entry__._kmeans_iter_sql``) — each
+    cluster's element-wise mean of its members, one (cluster, pos)
+    aggregation, ROUNDED to ``round_digits`` so Spark's distributed avg
+    and a sequential engine derive bit-identical centroids."""
+    return (
+        assigned.select("cluster", F.posexplode(vec_col).alias("pos", "val"))
+        .groupBy("cluster", "pos")
+        .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("val"))
+        .groupBy("cluster")
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "val"))).alias("pv"))
+        .select("cluster", F.transform("pv", lambda s: s.getField("val")).alias("vec"))
+    )
+
+
 def kmeans_centroids(
     vectors: DataFrame,
     n_centroids: int = 8,
@@ -571,8 +595,8 @@ def kmeans_centroids(
     ]
 
     for _ in range(iters):
-        # centroid norms as Python-side literals: IEEE double left-fold
-        # + sqrt, the same op sequence as l2_norm's Catalyst fold, so
+        # centroid norms as Python-side literals (``_fold_norms``: the
+        # same op sequence as l2_norm's Catalyst fold), so
         # the similarity values are bit-identical to the unhoisted
         # spelling while each centroid's norm is computed once per
         # ITERATION instead of once per (row, centroid)
@@ -581,7 +605,9 @@ def kmeans_centroids(
                 F.struct(
                     F.lit(cid).alias("centroid_id"),
                     F.array(*[F.lit(v) for v in vec]).alias("centroid_vec"),
-                    F.lit(math.sqrt(sum(v * v for v in vec))).alias("centroid_norm"),
+                    F.lit(float(_fold_norms(np.array([vec]))[0])).alias(
+                        "centroid_norm"
+                    ),
                 )
                 for cid, vec in cents
             ]
@@ -605,16 +631,8 @@ def kmeans_centroids(
                 .alias("cluster"),
                 F.col(vec_col),
             )
-            .select("cluster", F.posexplode(vec_col).alias("pos", "val"))
         )
-        means = (
-            assigned.groupBy("cluster", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("val"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "val"))).alias("pv"))
-            .select("cluster", F.transform("pv", lambda s: s.getField("val")).alias("vec"))
-            .collect()
-        )
+        means = _lloyd_means(assigned, vec_col, round_digits).collect()
         refined = {int(r["cluster"]): [float(x) for x in r["vec"]] for r in means}
         cents = [(cid, refined.get(cid, vec)) for cid, vec in cents]
 
@@ -637,17 +655,6 @@ def kmeans_centroids(
 # 3907 cells projects to hours).  Larger codebooks are fitted by the
 # global table-Lloyd (kmeans_codebook_table).
 _KMEANS_LITERAL_MAX = 256
-
-
-def codebook_table_cells_bound(n_centroids: int) -> int:
-    """UPPER bound on the cell count ``kmeans_codebook_table`` can emit
-    for a requested ``n_centroids`` — exactly ``n_centroids`` since r15
-    (init is the first n rows by id and Lloyd never adds cells; a corpus
-    smaller than n yields fewer).  Kept as a function so the dispatch
-    sites stay decoupled from the fitter's internals: callers pick the
-    assignment tier from the request without counting the fitted table —
-    a count would re-run the whole fit pipeline."""
-    return n_centroids
 
 
 def kmeans_codebook_table(
@@ -732,16 +739,8 @@ def kmeans_codebook_table(
         assigned = assign_to_centroids(
             sample, codebook, id_col=id_col, vec_col=vec_col, m_super=m_super
         )
-        means = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("val"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "val"))).alias("pv"))
-            .select(
-                F.col("cluster").alias("centroid_id"),
-                F.transform("pv", lambda s: s.getField("val")).alias("new_vec"),
-            )
+        means = _lloyd_means(assigned, vec_col, round_digits).select(
+            F.col("cluster").alias("centroid_id"), F.col("vec").alias("new_vec")
         )
         # empty clusters keep their previous centroid (same rule as the
         # literal fitter); one small broadcast join, codebook-sized.
@@ -762,7 +761,7 @@ def kmeans_codebook_table(
         # scoped: only the broadcasts THIS iteration's router shipped —
         # broadcasts backing still-live frames from unrelated earlier
         # routing calls stay persisted (ADVICE r15)
-        release_sharded_broadcasts_since(_bc_mark)
+        release_sharded_broadcasts(since=_bc_mark)
 
     return codebook
 
@@ -772,11 +771,15 @@ def kmeans_codebook_table(
 _SHARDED_BROADCASTS: list = []
 
 
-def release_sharded_broadcasts(blocking: bool = True, destroy: bool = False) -> int:
-    """Release every codebook broadcast shipped by prior routing calls
+def release_sharded_broadcasts(since: int = 0, destroy: bool = False) -> int:
+    """Release the codebook broadcasts shipped by prior routing calls
     (ADVICE r12: each call torrent-broadcasts up to ~128 MB and
     bench/recall loops would otherwise accumulate them for the session
-    lifetime).
+    lifetime) — every one, or with ``since`` only those registered after
+    that mark (a prior ``len(_SHARDED_BROADCASTS)`` snapshot): the
+    scoped spelling for a loop that spawns router broadcasts
+    (``kmeans_codebook_table``'s Lloyd iterations) without touching the
+    ones backing still-live frames of unrelated earlier calls.
 
     ``unpersist`` drops executor-side copies (a later re-execution of a
     returned frame refetches from the driver, so it is always safe);
@@ -784,36 +787,16 @@ def release_sharded_broadcasts(blocking: bool = True, destroy: bool = False) -> 
     any still-unconsumed returned DataFrame unusable — bench's
     clear_operator_caches uses it between passes where nothing is live.
     Returns the number of broadcasts released."""
-    n = len(_SHARDED_BROADCASTS)
-    for bc in _SHARDED_BROADCASTS:
+    released = _SHARDED_BROADCASTS[since:]
+    for bc in released:
         try:
             if destroy:
                 bc.destroy()
             else:
-                bc.unpersist(blocking=blocking)
+                bc.unpersist(blocking=True)
         except Exception:
             pass  # session already stopped — nothing to free
-    _SHARDED_BROADCASTS.clear()
-    return n
-
-
-def release_sharded_broadcasts_since(mark: int, blocking: bool = True) -> int:
-    """Release ONLY the codebook broadcasts registered after ``mark`` (a
-    prior ``len(_SHARDED_BROADCASTS)`` snapshot) — the scoped spelling
-    for callers that spawn router broadcasts inside a loop
-    (``kmeans_codebook_table``'s Lloyd iterations) without touching
-    broadcasts backing still-live frames from unrelated earlier routing
-    calls (ADVICE r15: the global release inside the fit loop silently
-    degraded concurrent consumers — safe, since executors refetch from
-    the driver, but a surprising side effect).  Returns the number
-    released."""
-    released = _SHARDED_BROADCASTS[mark:]
-    for bc in released:
-        try:
-            bc.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session already stopped — nothing to free
-    del _SHARDED_BROADCASTS[mark:]
+    del _SHARDED_BROADCASTS[since:]
     return len(released)
 
 
@@ -835,7 +818,7 @@ def _sharded_router_factory(
     ``mk_router(n_take)`` is a pandas UDF mapping a vector column to
     ``struct<cells: array<centroid_id>, norm: double>`` — the row's
     ``n_take`` nearest cells, best first (position j is route rank
-    j + 1), and its L2 norm folded per dimension in ``l2_norm``'s order,
+    j + 1), and its L2 norm (``_fold_norms``, ``l2_norm``'s op order),
     so the two are bit-identical.  Members route with ``n_take=1``.
 
     ``m_super=None``: EXACT flat routing — every row ranks all C
@@ -911,15 +894,13 @@ def _sharded_router_factory(
                 )
             cb = bc.value
             _ids, _mat = cb["ids"], cb["mat"]
-            V = np.vstack(vs.to_numpy()).astype("float64")
-            vn = np.zeros(len(V), dtype="float64")
-            for j in range(V.shape[1]):
-                vn += V[:, j] * V[:, j]
+            V = _stack(vs, _mat.shape[1])
+            vn = _fold_norms(V)
             if m_val is None:
                 cells = [
                     _ids[row].tolist() for row in _ranked_cells(V, _mat, n_take)
                 ]
-                return pd.DataFrame({"cells": cells, "norm": np.sqrt(vn)})
+                return pd.DataFrame({"cells": cells, "norm": vn})
             # stage 1: the m_val nearest supers.  Stage 2 ranks the
             # centroids of those supers GROUPED BY SUPER-COMBINATION: rows
             # sharing a super set share one candidate list, so each group
@@ -942,7 +923,7 @@ def _sharded_router_factory(
                 picked = cands[_ranked_cells(V[rows_idx], _mat[cands], n_take)]
                 for j, i in enumerate(rows_idx):
                     cells[i] = _ids[picked[j]].tolist()
-            return pd.DataFrame({"cells": cells, "norm": np.sqrt(vn)})
+            return pd.DataFrame({"cells": cells, "norm": vn})
 
         return _route
 
@@ -1105,9 +1086,10 @@ def semantic_dedup(
                 sample_fraction=sample_fraction,
             )
             # past _FLAT_ROUTE_MAX_CELLS, assignment takes hierarchical
-            # routing.  The bound is the fitter's structural maximum, so
-            # the decision costs nothing — no count of the fitted table.
-            if codebook_table_cells_bound(n_centroids) > _FLAT_ROUTE_MAX_CELLS:
+            # routing.  The fit emits at most n_centroids cells (first-n
+            # init; Lloyd never adds one), so the decision costs nothing —
+            # no count of the fitted table.
+            if n_centroids > _FLAT_ROUTE_MAX_CELLS:
                 m_super = 4
         else:
             centroids = kmeans_centroids(
@@ -1143,19 +1125,7 @@ def semantic_dedup(
     # (ADVICE round 4).  Same bounded-cache pattern as the LSH bucket
     # projection above — entries are session-scoped and unpersisted on
     # eviction.
-    key = _BPC.key_for(assigned, "semantic_dedup")
-    cached = _ASSIGNED_CACHE.get(key)
-    if cached is not None:
-        assigned = cached
-    elif key is not None:
-        from pyspark import StorageLevel
-
-        assigned = assigned.persist(StorageLevel.MEMORY_AND_DISK)
-        _ASSIGNED_CACHE.put(key, assigned)
-    # key is None → no cache slot will track this frame: per the
-    # key_for contract, skip persisting too (an untracked persist
-    # would leak for the session's lifetime); the ~3x recompute is
-    # the documented fallback price
+    assigned = _ASSIGNED_CACHE.get_or_persist(assigned, "semantic_dedup")
 
     pairable = assigned
     if max_cluster_size is not None:
@@ -1251,33 +1221,52 @@ def ivf_topk(
     _check_k_nprobe("ivf_topk", k, nprobe)
     if centroids is None:
         centroids = _first_n_codebook(vectors, n_centroids, id_col, vec_col)
-    route, n_cells = _sharded_router_factory(centroids, caller="ivf_topk")
+    cand = _ivf_candidates(
+        vectors, probes, centroids, nprobe, id_col, vec_col, "ivf_topk"
+    )
+    return topk_per_probe(cand.drop("_route_rk"), k, "probe_id")
+
+
+def _ivf_candidates(
+    vectors: DataFrame,
+    probes: DataFrame,
+    centroids: DataFrame,
+    nprobe: int | None,
+    id_col: str,
+    vec_col: str,
+    caller: str,
+) -> DataFrame:
+    """IVF candidate rows ``(probe_id, neighbor_id, cosine, _route_rk)``:
+    corpus rows assigned to their nearest cell, joined map-side with the
+    BROADCAST probes routed to their ``nprobe`` nearest cells (``None`` =
+    every cell) by one codebook router, self-matches excluded, cosine
+    rounded as the crossJoin spelling rounds it.  ``_route_rk`` is the
+    cell's rank among the probe's routes (the router's cell lists are
+    ordered, so posexplode position + 1)."""
+    route, n_cells = _sharded_router_factory(centroids, caller=caller)
     assigned = _assign_cells(vectors, route(1), id_col, vec_col, keep_norm=True)
     take = n_cells if nprobe is None else int(nprobe)
-    probe_routes = probes.withColumn(
-        "_r", route(take)(F.col("probe_vec"))
-    ).select(
+    routes = probes.withColumn("_r", route(take)(F.col("probe_vec"))).select(
         "probe_id",
         "probe_vec",
         F.col("_r.norm").alias("_pnorm"),
-        F.explode(F.col("_r.cells")).alias("cluster"),
+        F.posexplode(F.col("_r.cells")).alias("_pos", "cluster"),
     )
-
-    # scan only the routed clusters
-    joined = assigned.join(F.broadcast(probe_routes), "cluster").filter(
-        F.col(id_col) != F.col("probe_id")
+    return (
+        assigned.join(F.broadcast(routes), "cluster")
+        .filter(F.col(id_col) != F.col("probe_id"))
+        .select(
+            "probe_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(
+                cosine_with_norms_arrow(
+                    F.col(vec_col), F.col("probe_vec"), F.col("_vnorm"), F.col("_pnorm")
+                ),
+                6,
+            ).alias("cosine"),
+            (F.col("_pos") + 1).alias("_route_rk"),
+        )
     )
-    scored = joined.select(
-        "probe_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_with_norms_arrow(
-                F.col(vec_col), F.col("probe_vec"), F.col("_vnorm"), F.col("_pnorm")
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    return topk_per_probe(scored, k, "probe_id")
 
 
 def knn_join(
@@ -1375,20 +1364,11 @@ def knn_join(
     kk = int(k)
 
     def _score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        mem = pdf[pdf["_side"] == 0]
-        prb = pdf[pdf["_side"] == 1]
-        if not len(mem) or not len(prb):
-            return pd.DataFrame(
-                {
-                    "probe_id": pd.Series([], dtype="int64"),
-                    "neighbor_id": pd.Series([], dtype="int64"),
-                    "cosine": pd.Series([], dtype="float64"),
-                }
-            )
-        Vm = np.vstack(mem["_v"].to_numpy()).astype("float64")
-        Vp = np.vstack(prb["_v"].to_numpy()).astype("float64")
-        mid = mem["_rid"].to_numpy()
-        pid = prb["_rid"].to_numpy()
+        V = _stack(pdf["_v"])
+        mem = pdf["_side"].to_numpy() == 0
+        Vm, Vp = V[mem], V[~mem]
+        mid = pdf["_rid"].to_numpy()[mem]
+        pid = pdf["_rid"].to_numpy()[~mem]
         # matmul sims for CANDIDATE SELECTION only (never emitted)
         sims = _sims_matmul(Vm, Vp)  # (n_members, n_probes)
         exclmask = (
@@ -1396,36 +1376,13 @@ def knn_join(
             if excl
             else np.zeros(sims.shape, dtype=bool)
         )
-        # EXACT per-(probe, cell) pre-prune: the JVM top-k orders by
-        # round(cosine, 6) and rounding moves a value by ≤ 5e-7, so any
-        # pair that can place in the rounded top-k has exact cosine ≥
-        # kth_best_exact − 1e-6; matmul-vs-fold error adds ≤ ~2e-13.
-        # Keeping everything ≥ kth_best_matmul − 2e-6 therefore provably
-        # contains the exact rounded top-k while shrinking rows returned
-        # to the JVM from |members| × |probes| to ~k per (probe, cell).
-        s = np.where(exclmask, -np.inf, sims)
-        n_m = s.shape[0]
-        if n_m > kk:
-            thr = np.partition(s, n_m - kk, axis=0)[n_m - kk]
-        else:
-            thr = np.full(s.shape[1], -np.inf)
-        keepmat = (s >= thr[None, :] - 2e-6) & ~exclmask
-        mi, pi = np.nonzero(keepmat)
+        mi, pi = np.nonzero(_shortlist(sims, kk, exclmask))
         # emitted values are FOLD-EXACT: re-score only the kept pairs
         # with the same per-dimension left fold as the builtin cosine
-        A, B = Vm[mi], Vp[pi]
-        acc = np.zeros(len(mi), dtype="float64")
-        nm = np.zeros(n_m, dtype="float64")
-        npn = np.zeros(len(pid), dtype="float64")
-        for j in range(Vm.shape[1]):
-            acc += A[:, j] * B[:, j]
-            nm += Vm[:, j] * Vm[:, j]
-            npn += Vp[:, j] * Vp[:, j]
-        denom = np.sqrt(nm)[mi] * np.sqrt(npn)[pi]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(
-                denom > 0, acc / np.where(denom == 0, 1.0, denom), 0.0
-            )
+        cos = _cosine(
+            _fold_dots(Vm[mi], Vp[pi]),
+            _fold_norms(Vm)[mi] * _fold_norms(Vp)[pi],
+        )
         return pd.DataFrame(
             {"probe_id": pid[pi], "neighbor_id": mid[mi], "cosine": cos}
         )
@@ -1553,14 +1510,7 @@ def knn_join_auto(
         cells = max(8, min(4096, math.isqrt(n)))
     else:
         cells = max(8, math.isqrt(n), -(-n // 512))
-    cents = (
-        right.orderBy(right_id_col)
-        .limit(cells)
-        .select(
-            F.col(right_id_col).cast("int").alias("centroid_id"),
-            F.col(right_vec_col).alias("centroid_vec"),
-        )
-    )
+    cents = _first_n_codebook(right, cells, right_id_col, right_vec_col)
     common = dict(
         k=k,
         nprobe=nprobe,
@@ -1678,41 +1628,8 @@ def nprobe_recall_curve(
         vectors, probes, k=k, id_col=id_col, vec_col=vec_col
     ).select("probe_id", "neighbor_id")
 
-    route, _ = _sharded_router_factory(centroids, caller="nprobe_recall_curve")
-    assigned = _assign_cells(vectors, route(1), id_col, vec_col, keep_norm=True)
-    # the router's cell lists are ordered (position = route rank), so
-    # posexplode gives each candidate cell its rank
-    routes = probes.withColumn(
-        "_r", route(max_np)(F.col("probe_vec"))
-    ).select(
-        "probe_id",
-        "probe_vec",
-        F.col("_r.norm").alias("_pnorm"),
-        F.posexplode(F.col("_r.cells")).alias("_pos", "cluster"),
-    ).select(
-        "probe_id",
-        "probe_vec",
-        "_pnorm",
-        "cluster",
-        (F.col("_pos") + 1).alias("_route_rk"),
-    )
-    cand = (
-        assigned.join(F.broadcast(routes), "cluster")
-        .filter(F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                cosine_with_norms_arrow(
-                    F.col(vec_col),
-                    F.col("probe_vec"),
-                    F.col("_vnorm"),
-                    F.col("_pnorm"),
-                ),
-                6,
-            ).alias("cosine"),
-            "_route_rk",
-        )
+    cand = _ivf_candidates(
+        vectors, probes, centroids, max_np, id_col, vec_col, "nprobe_recall_curve"
     )
     # one candidate row fans out to every grid value it qualifies for;
     # |grid| × candidates rows total — calibration runs on samples, and
@@ -1864,7 +1781,7 @@ def random_hyperplane_buckets(
 
     @pandas_udf("long")
     def bucket_of(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)  # batch × dim
+        mat = _stack(vecs, expect_dim or 0)  # batch × dim
         if expect_dim is not None and mat.shape[1] != expect_dim:
             raise ValueError(f"expected dim {expect_dim}, got {mat.shape[1]}")
         planes_t = _hyperplanes_cached(mat.shape[1], n_planes)

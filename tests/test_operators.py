@@ -1190,20 +1190,6 @@ def test_semantic_dedup_explicit_codebook_above_cap(spark):
             assert not out[pid]["kept"], f"planted copy {pid} must be dropped"
 
 
-def test_codebook_table_cells_bound_matches_fitter_shape(spark):
-    """The dispatch bound must track the fitter: since the r15 global
-    table-Lloyd rewrite the fit emits at most exactly n_centroids cells
-    (first-n init, Lloyd never adds cells), and the bound decides when
-    semantic_dedup must take the sharded assignment (e.g. the
-    SemDeDup-scale 100k-cell request)."""
-    from csv_etl_spark.operators import similarity
-
-    for n in (12, 256, 300, 4096, 5000, 100_000):
-        assert similarity.codebook_table_cells_bound(n) == n
-    assert similarity.codebook_table_cells_bound(100_000) > 4096
-    assert similarity.codebook_table_cells_bound(256) <= 4096
-
-
 def test_brute_force_topk_empty_probes(spark):
     """r15 (r14 ADVICE low): an empty probe frame returns an empty
     result with the contract schema — the BLAS scale path used to crash
@@ -4369,6 +4355,97 @@ def test_knn_join_exact_equals_bruteforce(spark):
     assert gs == ws and len(gs) == 60 * 3
 
 
+def test_ann_paths_score_a_null_vector_as_zero(spark, monkeypatch):
+    """A NULL embedding is the zero vector on every Arrow path — cosine
+    0.0, as the Catalyst ``cosine_with_norms`` guard gives it, and the
+    lowest centroid id in assignment — on the corpus side, the probe
+    side and inside the first-n codebook (row 3 is all three)."""
+    import random as _random
+
+    rng = _random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(40)]
+    rows[3] = (3, None)
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    probes = (
+        e.filter(F.col("vec_id") < 5)
+        .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec"))
+        .unionByName(spark.createDataFrame(
+            [(100, None)], "probe_id long, probe_vec array<float>"))
+    )
+    cents = similarity._first_n_codebook(e, 8, "vec_id", "embedding")
+    ref = similarity.topk_per_probe(
+        e.withColumn("_vn", similarity.l2_norm(F.col("embedding")))
+        .crossJoin(probes.withColumn("_pn", similarity.l2_norm(F.col("probe_vec"))))
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.round(similarity.cosine_with_norms(
+                F.col("embedding"), F.col("probe_vec"), F.col("_vn"), F.col("_pn")
+            ), 6).alias("cosine"),
+        ),
+        3,
+    )
+
+    def rows_of(df):
+        return sorted(
+            (r["probe_id"], r["neighbor_id"], r["cosine"], r["rank"])
+            for r in df.collect()
+        )
+
+    want = rows_of(ref)
+    assert len(want) == 6 * 3
+    assert [r[1:3] for r in want if r[0] == 100] == [(0, 0.0), (1, 0.0), (2, 0.0)]
+    assert rows_of(similarity.brute_force_topk(e, probes, k=3)) == want
+    # a probe set with no vector to take the width from: crossJoin spelling
+    null_only = probes.filter(F.col("probe_id") == 100)
+    assert rows_of(similarity.brute_force_topk(e, null_only, k=3)) == [
+        r for r in want if r[0] == 100
+    ]
+    assert rows_of(similarity.ivf_topk(e, probes, k=3, nprobe=None)) == want
+    assert rows_of(similarity.knn_join(
+        probes, e, cents, k=3, nprobe=None, exclude_same_id=True)) == want
+    monkeypatch.setattr(similarity, "_BRUTE_BLAS_MAX_PROBES", 0)
+    assert rows_of(similarity.brute_force_topk(e, probes, k=3)) == want
+
+    arrow, builtin = (
+        {r["vec_id"]: r["cluster"] for r in similarity.assign_to_centroids(
+            e, cents, kernel=kernel).collect()}
+        for kernel in ("arrow", "builtin")
+    )
+    assert arrow == builtin and arrow[3] == 0
+    similarity.release_sharded_broadcasts(destroy=True)
+
+
+def test_knn_join_auto_bigint_ids(spark):
+    """Ids from 2^31 up: knn_join_auto's first-n codebook keeps the id
+    type (a cast to int overflows under ANSI), and the result equals
+    knn_join over the same codebook."""
+    import random as _random
+
+    rng = _random.Random(5)
+    base = 1 << 31
+    e = spark.createDataFrame(
+        [(base + i, [rng.uniform(-1, 1) for _ in range(4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    probes = e.select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+
+    def keyed(df):
+        return {(r["probe_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+                for r in df.collect()}
+
+    got = keyed(similarity.knn_join_auto(
+        probes, e, k=3, nprobe=None, exclude_same_id=True))
+    cents = similarity._first_n_codebook(e, 8, "vec_id", "embedding")
+    want = keyed(similarity.knn_join(
+        probes, e, cents, k=3, nprobe=None, exclude_same_id=True))
+    assert got == want and len(got) == 40 * 3
+    similarity.release_sharded_broadcasts(destroy=True)
+
+
 def test_knn_join_nprobe_plan_and_recall(spark):
     """nprobe=2 routes only 2 cells per probe: results are a subset of
     the scored universe with full k per probe on clustered data, and the
@@ -4630,10 +4707,16 @@ def test_sharded_broadcast_registry_release(spark):
     )
     before = len(similarity._SHARDED_BROADCASTS)
     similarity.knn_join(probes, e, cents, k=1, nprobe=1).collect()
+    mark = len(similarity._SHARDED_BROADCASTS)
+    kept = list(similarity._SHARDED_BROADCASTS)
     similarity.knn_join(probes, e, cents, k=1, nprobe=1, m_super=1).collect()
-    assert len(similarity._SHARDED_BROADCASTS) == before + 2
+    similarity.knn_join(probes, e, cents, k=1, nprobe=1).collect()
+    assert len(similarity._SHARDED_BROADCASTS) == before + 3
+    # since=mark: only the broadcasts registered after the mark go
+    assert similarity.release_sharded_broadcasts(since=mark) == 2
+    assert similarity._SHARDED_BROADCASTS == kept
     released = similarity.release_sharded_broadcasts(destroy=True)
-    assert released == before + 2
+    assert released == before + 1
     assert similarity._SHARDED_BROADCASTS == []
 
 
@@ -5006,6 +5089,8 @@ def test_arrow_kernel_bit_parity(spark):
         a = [rnd.uniform(-1, 1) * scale for _ in range(dim)]
         b = [rnd.uniform(-1, 1) / scale for _ in range(dim)]
         rows.append((i, a, b))
+    # a NULL side: NULL from both spellings
+    rows += [(300, None, rows[0][2]), (301, rows[0][1], None)]
     df = spark.createDataFrame(
         rows, "id long, a array<float>, b array<float>"
     )
@@ -5014,9 +5099,10 @@ def test_arrow_kernel_bit_parity(spark):
         similarity.dot(F.col("a"), F.col("b")).alias("hof"),
         similarity.dot_arrow(F.col("a"), F.col("b")).alias("arrow"),
     ).collect()
-    assert len(got) == 300
+    assert len(got) == 302
     for r in got:
         assert r["hof"] == r["arrow"], (r["id"], r["hof"], r["arrow"])
+    assert {r["id"] for r in got if r["arrow"] is None} == {300, 301}
 
 
 def test_arrow_cosine_matches_builtin_on_real_shapes(spark):
