@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from csv_etl_spark.operators._cache import BoundedPersistCache
-from csv_etl_spark.operators.text import ws_tokens
+from csv_etl_spark.operators.text import normalize_text, ws_tokens
 from csv_etl_spark.sources.tables import ensure_parallelism
 
 # Cap on how many docs may share one shingle before we drop it as a
@@ -49,13 +49,6 @@ def exact_dedup_by_key(df: DataFrame, keys: list[str], id_col: str) -> DataFrame
     return df.groupBy(*keys).agg(
         F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups")
     )
-
-
-def normalize_text(col: Column) -> Column:
-    """casefold → strip punctuation → collapse whitespace."""
-    lowered = F.lower(col)
-    no_punct = F.regexp_replace(lowered, r"[^\w\s]", "")
-    return F.trim(F.regexp_replace(no_punct, r"\s+", " "))
 
 
 def exact_dedup_normalized(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -589,9 +589,13 @@ def kmeans_centroids(
     if sample_fraction is not None:
         sample = hash_sample(sample, id_col, sample_fraction)
 
+    # a NULL init vector stays a NULL centroid with norm 0.0: the guard
+    # scores it cosine 0.0 against every vector, as the table fitter's
+    # router (``_stack``'s zero row) does
     first = vectors.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-    cents: list[tuple[int, list[float]]] = [
-        (i, [float(x) for x in row[vec_col]]) for i, row in enumerate(first)
+    cents: list[tuple[int, list[float] | None]] = [
+        (i, None if row[vec_col] is None else [float(x) for x in row[vec_col]])
+        for i, row in enumerate(first)
     ]
 
     for _ in range(iters):
@@ -604,10 +608,14 @@ def kmeans_centroids(
             *[
                 F.struct(
                     F.lit(cid).alias("centroid_id"),
-                    F.array(*[F.lit(v) for v in vec]).alias("centroid_vec"),
-                    F.lit(float(_fold_norms(np.array([vec]))[0])).alias(
-                        "centroid_norm"
-                    ),
+                    (
+                        F.lit(None).cast("array<double>")
+                        if vec is None
+                        else F.array(*[F.lit(v) for v in vec])
+                    ).alias("centroid_vec"),
+                    F.lit(
+                        0.0 if vec is None else float(_fold_norms(np.array([vec]))[0])
+                    ).alias("centroid_norm"),
                 )
                 for cid, vec in cents
             ]
@@ -643,7 +651,7 @@ def kmeans_centroids(
 
     return local_values_frame(
         vectors.sparkSession,
-        [(cid, [float(x) for x in vec]) for cid, vec in cents],
+        cents,
         "centroid_id int, centroid_vec array<double>",
     )
 

@@ -1,10 +1,40 @@
 """Text analysis operators for training-data pipelines (SURVEY §2.9 /
 BASELINE north star): tokenization, quality scoring, language ID, document
-fingerprinting.
+fingerprinting, corpus statistics and word-level tokenizer training.
 
-All pure built-in expressions (split/filter/aggregate/transform over
-arrays) — JVM-side, no UDFs, no shuffle: these are per-row map operations
-that scale linearly with input splits at 100 TB.
+The column functions (``ws_tokens``, ``quality_score``, ``lang_id``,
+``fingerprint``, ``normalize_text``, ...) are per-row built-in
+expressions.  The frame operators, each with its plan:
+
+* ``text_metrics``, ``repetition_metrics``, ``gopher_quality``: one
+  map-only projection;
+* ``length_histogram``: one groupBy on the bin id;
+* ``length_outliers``: two scalar percentile aggregates broadcast back,
+  then a map-only flag;
+* ``top_tokens``, ``top_token_pairs``: explode, count groupBy,
+  TakeOrdered top-k;
+* ``tokens_to_ids``: the ``top_tokens`` vocabulary broadcast-joined to
+  the exploded stream, one doc-keyed groupBy;
+* ``unigram_logprob``, ``bigram_logprob``: token- or pair-keyed count
+  groupBys joined back to the stream, one doc-keyed mean;
+* ``tfidf_top_terms``, ``bm25_top_terms``: the persisted (doc, token) tf
+  table, a token-keyed df join, a per-document window;
+* ``lm_score_buckets``: ``unigram_logprob`` plus one per-group tercile
+  aggregate broadcast back;
+* ``dsir_importance``: corpus and target token counts, a broadcast
+  per-token log-ratio table, one doc-keyed sum;
+* ``phrase_merges``: k localCheckpoint rounds of pair count, one driver
+  row and one literal merge;
+* ``apply_phrase_merges``: k chained literal replaces, map-only;
+* ``corpus_report``: one map-only projection and one groupBy.
+
+Shared helpers, one per decision: ``_lower_tokens`` (the lowered token
+stream), ``_adjacent_pairs`` (the pair build), ``_every_doc`` (the
+restore of zero-token documents), ``_top_k`` and ``_doc_top_k`` (the
+corpus and per-document rank rules), ``_doc_term_stats`` (the tf table),
+``_merge_stream`` and ``_merge`` (the merge pass).  Every ``text_col``,
+``id_col`` and ``by`` is read through ``local.ident_col``: a column name
+is one literal identifier, whatever its characters.
 """
 
 from __future__ import annotations
@@ -12,10 +42,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv_etl_spark.local import ident_col, local_values_frame
 from csv_etl_spark.operators._cache import BoundedDriverMemo as _BDM
 from csv_etl_spark.operators._cache import BoundedPersistCache as _TF_BPC
 
-# persisted (doc, token) tf table reused by tfidf_top_terms' df-agg + join
+# persisted (doc, token) tf table shared by tfidf_top_terms and
+# bm25_top_terms, plus the lm_score_buckets / dsir_importance stages
 _TF_CACHE = _TF_BPC(max_entries=4)
 
 # r17: learned BPE merge tables, keyed by (tokenized-input plan,
@@ -48,6 +80,31 @@ def ws_tokens(col: Column) -> Column:
     )
 
 
+def _lower_tokens(col: Column) -> Column:
+    """Whitespace tokens of the lowercased text — the module's one lowered
+    token stream.  ``lower()`` runs on the raw string: case mapping never
+    turns whitespace into non-whitespace or back, so tokenizing after it
+    gives the arrays of ``transform(ws_tokens(col), lower)`` without that
+    higher-order lambda, which is CodegenFallback and interpreted per
+    token (equality pinned by a property test)."""
+    return ws_tokens(F.lower(col))
+
+
+def _adjacent_pairs(toks: Column) -> Column:
+    """Adjacent pairs of a token array, as structs with fields ``0`` (the
+    earlier token) and ``1`` — the module's one pair build.
+
+    ``arrays_zip`` over two slices is whole-stage codegen and mentions
+    ``toks`` a constant number of times per row.  A ``zip_with`` lambda is
+    interpreted per pair, and ``element_at(toks, i)`` inside a sequence
+    lambda re-tokenizes the document for every i (a column referenced in
+    a lambda is inlined per element: O(len²), measured 36 s at 500k docs
+    against 4 s linear).  ``greatest(n − 1, 0)`` gives a document of
+    fewer than 2 tokens zero pairs; so does NULL text."""
+    m = F.greatest(F.size(toks) - 1, F.lit(0))
+    return F.arrays_zip(F.slice(toks, 1, m), F.slice(toks, 2, m))
+
+
 def token_count(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(ws_tokens(col))
@@ -56,6 +113,13 @@ def token_count(col: Column) -> Column:
 def bpe_token_count(col: Column) -> Column:
     """Regex-BPE-ish token count (letters / digits / symbol singles)."""
     return F.size(F.regexp_extract_all(col, F.lit(BPE_TOKEN_RE), 0))
+
+
+def normalize_text(col: Column) -> Column:
+    """casefold → strip punctuation → collapse whitespace."""
+    lowered = F.lower(col)
+    no_punct = F.regexp_replace(lowered, r"[^\w\s]", "")
+    return F.trim(F.regexp_replace(no_punct, r"\s+", " "))
 
 
 def _token_hits(col: Column, words: list[str]) -> Column:
@@ -133,7 +197,7 @@ def lang_id(col: Column) -> Column:
     )
 
 
-def fingerprint(col: Column, mod: int = 2147483647) -> Column:
+def fingerprint(col: Column) -> Column:
     """Order-sensitive document fingerprint: a rolling polynomial hash over
     whitespace tokens —
 
@@ -141,20 +205,22 @@ def fingerprint(col: Column, mod: int = 2147483647) -> Column:
 
     Deterministic and engine-agnostic (same formula runs in the DuckDB
     oracle), unlike xxhash64 which is Spark-specific.  Cheap enough to be a
-    pre-filter for dedup at 100 TB (map-only, no shuffle)."""
+    pre-filter for dedup at 100 TB (map-only, no shuffle).  The modulus
+    is ``dedup.POLY_MOD``, spelled here because dedup imports this module."""
     toks = ws_tokens(col)
     indexed = F.transform(
         toks, lambda t, i: (i + F.lit(1)).cast("bigint") * (F.lit(131) * F.length(t) + F.ascii(t))
     )
-    total = F.aggregate(indexed, F.lit(0).cast("bigint"), lambda acc, x: (acc + x) % F.lit(mod))
-    return total
+    return F.aggregate(
+        indexed, F.lit(0).cast("bigint"), lambda acc, x: (acc + x) % F.lit(2147483647)
+    )
 
 
 def text_metrics(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One-pass per-document metric projection."""
-    c = F.col(text_col)
+    c = ident_col(text_col)
     return df.select(
-        F.col(id_col),
+        ident_col(id_col),
         token_count(c).alias("n_tokens"),
         bpe_token_count(c).alias("n_bpe_tokens"),
         F.round(stopword_ratio(c), 6).alias("stopword_ratio"),
@@ -176,7 +242,7 @@ def repetition_metrics(
     row, no shuffle — linear at 100 TB like the rest of the metric pass."""
     from csv_etl_spark.operators.cleaning import string_shingles
 
-    c = F.col(text_col)
+    c = ident_col(text_col)
 
     def dup_frac(n: int) -> Column:
         grams = string_shingles(c, n)
@@ -185,34 +251,70 @@ def repetition_metrics(
         return F.when(total > 0, F.round(dups / total, 6)).otherwise(F.lit(0.0))
 
     return df.select(
-        F.col(id_col),
+        ident_col(id_col),
         F.size(ws_tokens(c)).alias("n_tokens"),
         dup_frac(2).alias("dup_2gram_frac"),
         dup_frac(3).alias("dup_3gram_frac"),
     )
 
 
-def top_tokens(
-    df: DataFrame, k: int = 100, text_col: str = "text", lowercase: bool = True
+def _top_k(counts: DataFrame, key: str, k: int) -> DataFrame:
+    """``(rank, key, n)``: the ``k`` rows of ``counts`` ``(key, n)`` with
+    the highest n, ties broken key-asc — the corpus rank rule.
+    ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject: each
+    partition keeps its local top-k and the driver merges k rows per
+    partition, so the full vocabulary (billions of distinct tokens on a
+    web corpus) never funnels through one task.  ``rank`` is taken AFTER
+    the limit, so the only window in the plan runs over exactly k rows."""
+    order = (F.col("n").desc(), F.col(key).asc())
+    return (
+        counts.orderBy(*order)
+        .limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+        .select("rank", key, "n")
+    )
+
+
+def _doc_top_k(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``scored`` ``(id_col, token, ..., score)`` cut to each document's
+    ``k`` best terms by (score desc, token asc), with their ``rank`` —
+    the per-document rank rule.  The window partitions on the
+    high-cardinality doc id."""
+    w = Window.partitionBy(ident_col(id_col)).orderBy(
+        F.col("score").desc(), F.col("token").asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _every_doc(
+    df: DataFrame, id_col: str, agg: DataFrame, zeros: dict[str, Column]
 ) -> DataFrame:
-    """Corpus-level top-k token frequencies — the vocabulary/stopword-
-    discovery pass of a training-data pipeline.
+    """``(id_col, *zeros)`` for EVERY document of ``df``: ``agg`` holds the
+    per-document aggregates of the exploded token stream, so a document
+    with no tokens has no row there.  The left join onto ``df``'s ids
+    brings it back, and each column in ``zeros`` (name → its zero, in
+    output order) is coalesced to that zero."""
+    return (
+        df.select(ident_col(id_col))
+        .join(agg, id_col, "left")
+        .select(
+            ident_col(id_col),
+            *[F.coalesce(F.col(c), z).alias(c) for c, z in zeros.items()],
+        )
+    )
+
+
+def top_tokens(df: DataFrame, k: int = 100, text_col: str = "text") -> DataFrame:
+    """Corpus-level top-k lowercased token frequencies — the vocabulary/
+    stopword-discovery pass of a training-data pipeline.  Returns
+    ``(rank, token, n)``.
 
     explode → groupBy(token) count (map-side partial aggregation soaks up
     Zipf skew: the hot token's partials merge, its rows never colocate) →
-    global top-k via orderBy(...).limit(k), which Catalyst compiles to
-    TakeOrderedAndProject: each partition keeps its local top-k and the
-    driver merges k rows per partition — the full vocabulary (billions of
-    distinct tokens on a web corpus) never funnels through one task.
-    `rank` is derived AFTER the limit, so the only window in the plan runs
-    over exactly k rows.  Deterministic (count desc, token asc) tie-break."""
-    toks = df.select(F.explode(ws_tokens(F.col(text_col))).alias("token"))
-    if lowercase:
-        toks = toks.select(F.lower(F.col("token")).alias("token"))
+    the TakeOrdered top-k of ``_top_k`` (count desc, token asc)."""
+    toks = df.select(F.explode(_lower_tokens(ident_col(text_col))).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    topk = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(k)
-    w = Window.orderBy(F.col("n").desc(), F.col("token").asc())
-    return topk.withColumn("rank", F.row_number().over(w)).select("rank", "token", "n")
+    return _top_k(counts, "token", k)
 
 
 def length_histogram(
@@ -229,7 +331,7 @@ def length_histogram(
     Low-cardinality GROUPING is fine at scale (unlike low-cardinality
     window PARTITIONING): partials shrink the shuffle to one row per
     (mapper, bin)."""
-    n = token_count(F.col(text_col))
+    n = token_count(ident_col(text_col))
     b = F.floor(n / F.lit(bin_width)).cast("bigint")
     return (
         df.select(n.alias("_n"), b.alias("_bin"))
@@ -252,7 +354,6 @@ def tokens_to_ids(
     vocab_size: int = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     max_tokens: int | None = 1 << 20,
 ) -> DataFrame:
     """Encode each document as integer token ids from a frequency-ranked
@@ -279,58 +380,49 @@ def tokens_to_ids(
     truncated — the C4-style recipe (giant docs are boilerplate/garbage
     dumps; dropping their tail loses nothing a training pipeline wants).
     Inert for any normal corpus; pass ``None`` to disable."""
-    vocab = top_tokens(df, k=vocab_size, text_col=text_col, lowercase=lowercase)
-    toks = ws_tokens(F.col(text_col))
+    vocab = top_tokens(df, k=vocab_size, text_col=text_col)
+    toks = _lower_tokens(ident_col(text_col))
     if max_tokens is not None:
         toks = F.slice(toks, 1, max_tokens)
     exploded = df.select(
-        F.col(id_col),
+        ident_col(id_col),
         F.posexplode(toks).alias("_pos", "_tok"),
     )
-    if lowercase:
-        exploded = exploded.withColumn("_tok", F.lower(F.col("_tok")))
     joined = exploded.join(
         F.broadcast(vocab.select(F.col("token").alias("_tok"), F.col("rank"))),
         "_tok",
         "left",
     ).select(
-        F.col(id_col),
+        ident_col(id_col),
         "_pos",
         F.coalesce(F.col("rank"), F.lit(0)).cast("bigint").alias("_id"),
     )
-    encoded = joined.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_pos", "_id"))),
-            lambda s: s.getField("_id"),
-        ).alias("token_ids"),
+    encoded = joined.groupBy(ident_col(id_col)).agg(
+        # (pos, id) structs sorted by pos, then the id field of each;
+        # sort_array, not array_sort, whose default comparator is a lambda
+        F.sort_array(F.collect_list(F.struct("_pos", "_id")))
+        .getField("_id")
+        .alias("token_ids"),
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.sum(F.when(F.col("_id") == 0, 1).otherwise(0)).cast("bigint").alias("n_oov"),
     )
-    # zero-token docs produce no exploded rows — restore them with empty arrays
-    totals = df.select(F.col(id_col))
-    return (
-        totals.join(encoded, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("token_ids"), F.array().cast("array<bigint>")).alias(
-                "token_ids"
-            ),
-            F.coalesce(F.col("n_tokens"), F.lit(0).cast("bigint")).alias("n_tokens"),
-            F.coalesce(F.col("n_oov"), F.lit(0).cast("bigint")).alias("n_oov"),
-        )
-    )
+    return _every_doc(df, id_col, encoded, {
+        "token_ids": F.array().cast("array<bigint>"),
+        "n_tokens": F.lit(0).cast("bigint"),
+        "n_oov": F.lit(0).cast("bigint"),
+    })
 
 
 def unigram_logprob(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", lowercase: bool = True
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Language-model quality proxy (the CCNet/perplexity-filter shape,
     with a unigram model estimated from the corpus itself): each doc is
-    scored by the mean natural-log probability of its tokens under the
-    corpus unigram distribution.  Gibberish and rare-token soup score
-    far below typical prose; filtering on a score quantile is the classic
-    LM quality gate.  Returns ``(id_col, n_tokens, avg_logprob)`` —
-    higher (less negative) = more typical; empty docs score 0.0.
+    scored by the mean natural-log probability of its lowercased tokens
+    under the corpus unigram distribution.  Gibberish and rare-token soup
+    score far below typical prose; filtering on a score quantile is the
+    classic LM quality gate.  Returns ``(id_col, n_tokens, avg_logprob)``
+    — higher (less negative) = more typical; empty docs score 0.0.
 
     Scale shape: one token groupBy (map-side partials soak the Zipf head),
     a single-row total aggregated then broadcast (one-row nested-loop —
@@ -343,33 +435,26 @@ def unigram_logprob(
     Zipf head on single reducers — the skew anti-pattern.  The mean is
     rounded to 6 decimals so libm ulp differences and addition order
     cannot leak into the result."""
-    toks = ws_tokens(F.col(text_col))
-    exploded = df.select(F.col(id_col), F.explode(toks).alias("_tok"))
-    if lowercase:
-        exploded = exploded.withColumn("_tok", F.lower(F.col("_tok")))
+    exploded = df.select(
+        ident_col(id_col), F.explode(_lower_tokens(ident_col(text_col))).alias("_tok")
+    )
     counts = exploded.groupBy("_tok").agg(F.count(F.lit(1)).alias("_n"))
     total = counts.agg(F.sum("_n").cast("double").alias("_total"))
     scored = (
         exploded.join(counts, "_tok")
         .crossJoin(F.broadcast(total))
         .select(
-            F.col(id_col),
+            ident_col(id_col),
             F.log(F.col("_n") / F.col("_total")).alias("_lp"),
         )
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy(ident_col(id_col)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
         F.round(F.avg("_lp"), 6).alias("avg_logprob"),
     )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_tokens"), F.lit(0).cast("bigint")).alias("n_tokens"),
-            F.coalesce(F.col("avg_logprob"), F.lit(0.0)).alias("avg_logprob"),
-        )
-    )
+    return _every_doc(df, id_col, agg, {
+        "n_tokens": F.lit(0).cast("bigint"), "avg_logprob": F.lit(0.0)
+    })
 
 
 def bigram_logprob(
@@ -377,7 +462,6 @@ def bigram_logprob(
     k_smooth: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
 ) -> DataFrame:
     """Bigram-LM quality score — the next rung above ``unigram_logprob``
     on the CCNet/perplexity-filter ladder: each document is scored by the
@@ -398,23 +482,10 @@ def bigram_logprob(
     count tables (AQE skew-splits the hot pairs).  The corpus is
     deliberately re-scanned per consumer rather than persisting the
     exploded transition stream (~10x source bytes) — the same documented
-    trade as the unigram scorer.  The pair build is the linear
-    zip_with-over-slices spelling (plan discipline #5)."""
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    n = F.size(toks)
-    pairs = F.when(
-        n < 2, F.array().cast("array<struct<prev:string,word:string>>")
-    ).otherwise(
-        F.zip_with(
-            F.slice(toks, F.lit(1), n - 1),
-            F.slice(toks, F.lit(2), n - 1),
-            lambda a, b: F.struct(a.alias("prev"), b.alias("word")),
-        )
-    )
-    trans = df.select(F.col(id_col), F.explode(pairs).alias("_pr")).select(
-        F.col(id_col), F.col("_pr.prev").alias("prev"), F.col("_pr.word").alias("word")
+    trade as the unigram scorer.  The pairs are ``_adjacent_pairs``."""
+    pairs = _adjacent_pairs(_lower_tokens(ident_col(text_col)))
+    trans = df.select(ident_col(id_col), F.explode(pairs).alias("_pr")).select(
+        ident_col(id_col), F.col("_pr")["0"].alias("prev"), F.col("_pr")["1"].alias("word")
     )
     big = trans.groupBy("prev", "word").agg(F.count(F.lit(1)).alias("_nb"))
     uni = trans.groupBy("prev").agg(F.count(F.lit(1)).alias("_np"))
@@ -425,65 +496,62 @@ def bigram_logprob(
         .join(uni, "prev")
         .crossJoin(F.broadcast(vocab))
         .select(
-            F.col(id_col),
+            ident_col(id_col),
             F.log((F.col("_nb") + k) / (F.col("_np") + k * F.col("_v"))).alias("_lp"),
         )
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy(ident_col(id_col)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_transitions"),
         F.round(F.avg("_lp"), 6).alias("avg_logprob"),
     )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_transitions"), F.lit(0).cast("bigint")).alias(
-                "n_transitions"
-            ),
-            F.coalesce(F.col("avg_logprob"), F.lit(0.0)).alias("avg_logprob"),
-        )
-    )
+    return _every_doc(df, id_col, agg, {
+        "n_transitions": F.lit(0).cast("bigint"), "avg_logprob": F.lit(0.0)
+    })
 
 
-def top_token_pairs(
-    df: DataFrame, k: int = 100, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """Corpus top-k ADJACENT token-pair frequencies — the first merge-step
-    statistic of BPE-style vocabulary induction (count all adjacent pairs,
-    merge the most frequent), and the bigram layer of n-gram LM estimation.
-    Returns ``(rank, pair, n)`` like ``top_tokens``.
+def top_token_pairs(df: DataFrame, k: int = 100, text_col: str = "text") -> DataFrame:
+    """Corpus top-k ADJACENT lowercased token-pair frequencies — the first
+    merge-step statistic of BPE-style vocabulary induction (count all
+    adjacent pairs, merge the most frequent), and the bigram layer of
+    n-gram LM estimation.  Returns ``(rank, pair, n)`` like
+    ``top_tokens``, with ``pair`` the two tokens joined by one space.
 
-    Same scale shape as ``top_tokens``: the pair build is map-only (one
-    array transform per row — no self-join), the count groupBy does its
-    work map-side (Zipf head merges in partials), and the top-k compiles
-    to TakeOrderedAndProject so the full pair vocabulary never funnels
-    through one task; ``rank`` windows over exactly k rows."""
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    # zip_with over two slices, NOT element_at over a sequence lambda: a
-    # column expression referenced inside a HOF lambda is INLINED per
-    # element, so element_at(toks, i) re-tokenizes the doc for every i —
-    # O(len²) per doc (measured 36s at 500k docs; this spelling is 4s).
-    # The slice spelling mentions toks a constant 3x per row: linear.
-    n = F.size(toks)
-    # sequence(1, 0) is DESCENDING, not empty — short docs short-circuit
-    pairs = F.when(n < 2, F.array().cast("array<string>")).otherwise(
-        F.zip_with(
-            F.slice(toks, F.lit(1), n - 1),
-            F.slice(toks, F.lit(2), n - 1),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    )
+    Same scale shape as ``top_tokens``: the pair build
+    (``_adjacent_pairs``) is map-only and linear in the doc — no
+    self-join — the count groupBy does its work map-side (Zipf head
+    merges in partials), and the top-k is ``_top_k``'s TakeOrdered."""
+    pairs = _adjacent_pairs(_lower_tokens(ident_col(text_col)))
     counts = (
-        df.select(F.explode(pairs).alias("pair"))
+        df.select(F.explode(pairs).alias("_p"))
+        .select(F.concat(F.col("_p")["0"], F.lit(" "), F.col("_p")["1"]).alias("pair"))
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    topk = counts.orderBy(F.col("n").desc(), F.col("pair").asc()).limit(k)
-    w = Window.orderBy(F.col("n").desc(), F.col("pair").asc())
-    return topk.withColumn("rank", F.row_number().over(w)).select("rank", "pair", "n")
+    return _top_k(counts, "pair", k)
+
+
+def _doc_term_stats(
+    df: DataFrame, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(tf, dfreq, n)`` of the term-weighting operators: the (doc,
+    lowercased token) counts ``(id_col, token, tf)``, the document
+    frequencies ``(token, _df)`` and the one-row corpus document count
+    ``_n`` (every document, empty ones included).
+
+    tf feeds the df aggregation, the score join and (for BM25) the
+    document lengths; Catalyst does not reuse the aggregate across those
+    branches (no ReusedExchange in the measured plan), so without a
+    persist the tokenize+explode+groupBy would run once per consumer.
+    It is persisted under one tag for both operators: one frame serves
+    ``tfidf_top_terms`` and ``bm25_top_terms`` in a session."""
+    pairs = df.select(
+        ident_col(id_col), F.explode(_lower_tokens(ident_col(text_col))).alias("token")
+    )
+    tf = pairs.groupBy(ident_col(id_col), "token").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _TF_CACHE.get_or_persist(tf, "doc_token_tf")
+    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
+    n = df.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+    return tf, dfreq, n
 
 
 def tfidf_top_terms(
@@ -491,7 +559,6 @@ def tfidf_top_terms(
     k: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
 ) -> DataFrame:
     """Per-document top-k TF-IDF terms — the classic sparse document
     representation (keyword extraction, BM25-ish retrieval features,
@@ -499,34 +566,20 @@ def tfidf_top_terms(
     ln(N/df)`` with N = corpus doc count, df = docs containing the term.
     Returns ``(id_col, token, tf, score, rank)``.
 
-    Scale shape: one token-keyed groupBy for (doc, token) tf counts
-    (map-side partials soak the Zipf head), one token groupBy for df, a
+    Scale shape: the (doc, token) tf counts and the token df groupBy of
+    ``_doc_term_stats`` (map-side partials soak the Zipf head), a
     token-keyed join carrying idf back (AQE skew-splits the hot tokens —
-    same discipline as ``unigram_logprob``), and the top-k window
-    partitions on the HIGH-cardinality doc id.  N is a scalar agg
-    broadcast back.  Engine-portable: both engines evaluate ln on the
-    identical double, and ranking orders by the ROUNDED score with a
-    token tiebreak so round-boundary ties break identically."""
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("token"))
-    tf = pairs.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    # tf feeds BOTH the df aggregation and the idf join; Catalyst does not
-    # reuse the aggregate across those branches (no ReusedExchange in the
-    # measured plan), so without a persist the tokenize+explode+groupBy
-    # runs twice.  Same session-cache discipline as the shingle/LSH
-    # projections.
-    # shared tag: bm25_top_terms builds the IDENTICAL (doc, token) tf
-    # aggregate — one persisted frame serves both operators in a session
-    tf = _TF_CACHE.get_or_persist(tf, "doc_token_tf")
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
-    n = df.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+    same discipline as ``unigram_logprob``), and ``_doc_top_k``'s window
+    on the HIGH-cardinality doc id.  N is a scalar agg broadcast back.
+    Engine-portable: both engines evaluate ln on the identical double,
+    and ranking orders by the ROUNDED score with a token tiebreak so
+    round-boundary ties break identically."""
+    tf, dfreq, n = _doc_term_stats(df, text_col, id_col)
     scored = (
         tf.join(dfreq, "token")
         .crossJoin(F.broadcast(n))
         .select(
-            F.col(id_col),
+            ident_col(id_col),
             F.col("token"),
             F.col("tf").cast("bigint").alias("tf"),
             F.round(
@@ -534,11 +587,7 @@ def tfidf_top_terms(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("token").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _doc_top_k(scored, id_col, k)
 
 
 def bm25_top_terms(
@@ -548,7 +597,6 @@ def bm25_top_terms(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
 ) -> DataFrame:
     """Per-document top-k Okapi BM25 term weights — the retrieval-grade
     upgrade of ``tfidf_top_terms`` (same sparse representation, but with
@@ -567,21 +615,13 @@ def bm25_top_terms(
     comes from summing the (doc, token) tf partials (no re-tokenize), the
     (N, avgdl) pair is a single-row scalar agg broadcast back, and the
     top-k window partitions on the high-cardinality doc id.  The tf
-    aggregate is shared through the same session persist cache (it feeds
-    df, dl, and the score join).  Engine-portable: identical doubles into
-    ln/division on both engines, scores rounded to 6, token tiebreak."""
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("token"))
-    tf = pairs.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    tf = _TF_CACHE.get_or_persist(tf, "doc_token_tf")  # shared with tfidf
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").cast("double").alias("_dl"))
-    # N needs the raw frame (empty docs count toward avgdl's denominator)
-    # but only as a column-pruned count(1); total tokens is sum(tf) over
-    # the already-persisted tf — no second tokenize of the corpus
-    n_row = df.agg(F.count(F.lit(1)).cast("double").alias("_n"))
+    table is ``_doc_term_stats``' persisted one (it feeds df, dl, and the
+    score join).  Engine-portable: identical doubles into ln/division on
+    both engines, scores rounded to 6, token tiebreak."""
+    tf, dfreq, n_row = _doc_term_stats(df, text_col, id_col)
+    dl = tf.groupBy(ident_col(id_col)).agg(F.sum("tf").cast("double").alias("_dl"))
+    # total tokens is sum(tf) over the already-persisted tf — no second
+    # tokenize of the corpus
     tot_row = tf.agg(
         F.coalesce(F.sum("tf"), F.lit(0)).cast("double").alias("_total")
     )
@@ -601,14 +641,13 @@ def bm25_top_terms(
         .join(dl, id_col)
         .crossJoin(F.broadcast(scalars))
         .select(
-            F.col(id_col),
+            ident_col(id_col),
             F.col("token"),
             F.col("tf").cast("bigint").alias("tf"),
             F.round(idf * norm, 6).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("token").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _doc_top_k(scored, id_col, k)
 
 
 def lm_score_buckets(
@@ -616,9 +655,6 @@ def lm_score_buckets(
     by: str = "source",
     text_col: str = "text",
     id_col: str = "doc_id",
-    probs: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-    exact: bool = True,
-    labels: tuple[str, str, str] = ("tail", "middle", "head"),
 ) -> DataFrame:
     """CCNet-style LM-quality bucketing: score every document with the
     corpus unigram LM (``unigram_logprob``), then split each ``by`` group
@@ -630,15 +666,12 @@ def lm_score_buckets(
     Scale shape: the scorer's own shape (token partials + keyed join)
     plus ONE tiny boundary aggregate — n_groups rows, broadcast back for
     a map-only classify; no per-group window over the data (which would
-    single-reduce each group).  ``exact=True`` (default, oracle-checkable)
-    uses exact interpolated percentiles; at 100 TB flip ``exact=False``
-    for the one-pass t-digest ``approx_percentile`` — same plan shape,
-    sketch-sized state (same switch discipline as ``length_outliers``).
-    Boundaries and scores are pre-rounded to 6 decimals so bucket
-    membership compares identical doubles on every engine."""
-    p_lo, p_hi = float(probs[0]), float(probs[1])
+    single-reduce each group).  The terciles are exact interpolated
+    percentiles (the DuckDB oracle's ``quantile_cont``).  Boundaries and
+    scores are pre-rounded to 6 decimals so bucket membership compares
+    identical doubles on every engine."""
     scored = unigram_logprob(df, text_col=text_col, id_col=id_col).join(
-        df.select(F.col(id_col), F.col(by)), id_col
+        df.select(ident_col(id_col), ident_col(by)), id_col
     )
     # scored feeds BOTH the boundary aggregate and the classify join, and
     # each mention would re-run the whole unigram scorer (Catalyst does
@@ -646,27 +679,23 @@ def lm_score_buckets(
     # (id, group, score) frame, same session-cache discipline as the
     # tf/shingle projections.
     scored = _TF_CACHE.get_or_persist(scored, "lm_buckets_scored")
-    pct = (
-        F.percentile(F.col("avg_logprob"), F.array(F.lit(p_lo), F.lit(p_hi)))
-        if exact
-        else F.approx_percentile(
-            F.col("avg_logprob"), F.array(F.lit(p_lo), F.lit(p_hi)), F.lit(10_000)
-        )
+    pct = F.percentile(
+        F.col("avg_logprob"), F.array(F.lit(1.0 / 3.0), F.lit(2.0 / 3.0))
     )
-    bounds = scored.groupBy(by).agg(
+    bounds = scored.groupBy(ident_col(by)).agg(
         F.round(F.element_at(pct, 1), 6).alias("_b_lo"),
         F.round(F.element_at(pct, 2), 6).alias("_b_hi"),
     )
     bucket = (
-        F.when(F.col("avg_logprob") <= F.col("_b_lo"), F.lit(labels[0]))
-        .when(F.col("avg_logprob") <= F.col("_b_hi"), F.lit(labels[1]))
-        .otherwise(F.lit(labels[2]))
+        F.when(F.col("avg_logprob") <= F.col("_b_lo"), F.lit("tail"))
+        .when(F.col("avg_logprob") <= F.col("_b_hi"), F.lit("middle"))
+        .otherwise(F.lit("head"))
     )
     return (
         scored.join(F.broadcast(bounds), by)
         .select(
-            F.col(id_col),
-            F.col(by),
+            ident_col(id_col),
+            ident_col(by),
             F.col("avg_logprob"),
             bucket.alias("bucket"),
         )
@@ -710,17 +739,14 @@ def gopher_quality(
     all JVM-side, no shuffle, linear in input splits at 100 TB.  Every
     expression lives in the engine-portable subset (ratios compare on the
     RAW double in both engines; rounding is display-only)."""
-    c = F.col(text_col)
+    c = ident_col(text_col)
     toks = ws_tokens(c)
-    lowered = F.transform(toks, lambda t: F.lower(t))
-    # greatest(size, 0): NULL text yields NULL toks and size() = -1 — the
-    # gate must report 0 words (and fail min_words), not a -1 artifact
+    # greatest(size, 0): NULL text yields NULL toks, whose size() is NULL
+    # under ANSI (-1 with the legacy size-of-null) — the gate must report
+    # 0 words (and fail min_words) either way
     n_words = F.greatest(F.size(toks), F.lit(0))
     nw = F.when(n_words > 0, n_words.cast("double")).otherwise(F.lit(None))
-    mean_len = F.when(
-        n_words > 0,
-        F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)) / n_words,
-    ).otherwise(F.lit(0.0))
+    mean_len = mean_word_length(c)
     # non-overlapping scans in both Java regex and RE2: "...." counts one
     n_symbols = F.regexp_count(c, F.lit("#")) + F.regexp_count(
         c, F.lit(r"(\.\.\.|…)")
@@ -742,7 +768,9 @@ def gopher_quality(
     )
     sw_hits = F.greatest(
         F.size(
-            F.array_intersect(lowered, F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]))
+            F.array_intersect(
+                _lower_tokens(c), F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
+            )
         ),
         F.lit(0),
     )
@@ -758,7 +786,7 @@ def gopher_quality(
         & (sw_hits >= min_stopword_hits)
     )
     return df.select(
-        F.col(id_col),
+        ident_col(id_col),
         n_words.cast("bigint").alias("n_words"),
         F.round(mean_len, 6).alias("mean_word_len"),
         F.round(symbol_ratio, 6).alias("symbol_ratio"),
@@ -797,8 +825,8 @@ def length_outliers(
     quantile error moves no gate decision.  The default stays exact
     because the DuckDB oracle's ``quantile_cont`` matches only the exact
     spelling (a sketch is engine-specific by nature)."""
-    n = token_count(F.col(text_col))
-    d = df.select(F.col(id_col), n.alias("n_tokens"))
+    n = token_count(ident_col(text_col))
+    d = df.select(ident_col(id_col), n.alias("n_tokens"))
     pct = "percentile({}, 0.5)" if exact else "approx_percentile({}, 0.5, 10000)"
     med = d.agg(
         F.expr(pct.format("n_tokens")).cast("double").alias("_med")
@@ -813,7 +841,7 @@ def length_outliers(
     return (
         with_med.crossJoin(F.broadcast(mad))
         .select(
-            F.col(id_col),
+            ident_col(id_col),
             F.col("n_tokens").cast("bigint").alias("n_tokens"),
             F.round(dev, 6).alias("deviation"),
             (dev > k).alias("is_outlier"),
@@ -830,6 +858,32 @@ def length_outliers(
 # and any adversarial occurrence inside a token only mis-merges that one
 # pair, never crashes (documented input assumption).
 _MERGE_SEP = "\x1f"
+_MERGE_BND = _MERGE_SEP + _MERGE_SEP
+
+
+def _merge_stream(toks: Column) -> Column:
+    """The merge stream of a token array: tokens joined on DOUBLED
+    separators and wrapped in one extra separator pair per end, so every
+    token sits between two SEPs."""
+    return F.concat(F.lit(_MERGE_BND), F.concat_ws(_MERGE_BND, toks), F.lit(_MERGE_BND))
+
+
+def _merge(stream: Column, pair: str, joiner: str) -> Column:
+    """``stream`` with the learned merge ``pair`` (``"a b"``) applied —
+    the module's one merge pass, shared by the trainer's rounds, its
+    memo replay and ``apply_phrase_merges``.  One literal JVM
+    ``replace``: ``SEP a SEP·SEP b SEP → SEP a+joiner+b SEP`` consumes one
+    boundary SEP per side and restores it, which keeps the stream's
+    invariant for the next merge AND merges back-to-back occurrences
+    ("a b a b") in one left-to-right pass — the greedy non-overlapping
+    BPE order.  Plain (non-regex) replace: no token needs quoting, and
+    DuckDB's ``replace`` has the same semantics."""
+    a, b = pair.split(" ", 1)
+    return F.replace(
+        stream,
+        F.lit(_MERGE_SEP + a + _MERGE_BND + b + _MERGE_SEP),
+        F.lit(_MERGE_SEP + a + joiner + b + _MERGE_SEP),
+    )
 
 
 def phrase_merges(
@@ -837,21 +891,19 @@ def phrase_merges(
     k: int = 8,
     min_count: int = 2,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    lowercase: bool = True,
     joiner: str = "_",
 ):
     """Iterative BPE-style merge TRAINING at the word level (phrase/
     multiword-unit induction — the loop whose single first step is
-    ``top_token_pairs``): repeat k times {count adjacent token pairs →
-    take the most frequent (deterministic pair tiebreak) → merge every
-    non-overlapping occurrence left-to-right, greedily, corpus-wide}.
-    Each learned merge changes the statistics the next round sees, which
-    is what makes BPE BPE and puts this operator outside single-pass SQL
-    — it is pytest-verified against a serial reference implementation
-    instead of a DuckDB oracle (same weaker-check class as k-means).
-    Returns the learned merge table ``(rank, pair, n)``; stops early when
-    no pair reaches ``min_count``.
+    ``top_token_pairs``): repeat k times {count adjacent lowercased token
+    pairs → take the most frequent (deterministic pair tiebreak) → merge
+    every non-overlapping occurrence left-to-right, greedily,
+    corpus-wide}.  Each learned merge changes the statistics the next
+    round sees, which is what makes BPE BPE and puts this operator
+    outside single-pass SQL — it is pytest-verified against a serial
+    reference implementation instead of a DuckDB oracle (same
+    weaker-check class as k-means).  Returns the learned merge table
+    ``(rank, pair, n)``; stops early when no pair reaches ``min_count``.
 
     Scale shape per round: one map-only pair build, one count groupBy
     with map-side partials, ONE driver row (TakeOrdered limit 1), and a
@@ -860,43 +912,26 @@ def phrase_merges(
     alone would keep round k's plan containing rounds 1..k-1 until
     analysis overflows.  Driver traffic: k single rows.
 
-    Per-task spelling (r17, guide §1.2 step 2): the state rides as the
-    DOUBLED-separator stream ``apply_phrase_merges`` documents (every
-    token between two SEPs, ends wrapped), so each round's merge is one
-    literal JVM ``replace`` — ``SEP a SEP·SEP b SEP → SEP a+j+b SEP``
-    consumes one boundary SEP per side and restores it, which keeps the
-    invariant AND merges back-to-back occurrences ("a b a b") in one
-    left-to-right pass, exactly the greedy BPE order the old lookahead
-    regexp implemented (and pinned by the serial-reference test).  The
-    pair build is ``arrays_zip`` over two slices — whole-stage-codegen,
-    unlike the previous ``zip_with`` lambda, which is CodegenFallback
-    and was interpreted per token (profiled r17: 2–5.6 s task-time per
-    round over a 1.9 MB state; the HOF interpreter, not the data)."""
+    Per-task spelling: the state rides as the ``_merge_stream``, each
+    round's merge is one ``_merge`` literal replace, and the pair build
+    is ``_adjacent_pairs`` — all whole-stage codegen, no interpreted
+    lambda (an HOF lambda cost 2–5.6 s task-time per round over a 1.9 MB
+    state, profiled r17)."""
     spark = df.sparkSession
-    text = F.col(text_col)
-    if lowercase:
-        # lower() on the raw string — whitespace is untouched by case
-        # mapping, so tokenizing after equals the per-token transform
-        # lambda (which would cost an interpreted HOF pass)
-        text = F.lower(text)
-    toks = ws_tokens(text)
-    bnd = _MERGE_SEP + _MERGE_SEP
     # lazy checkpoints: materialization happens inside the round's count
     # job (first consumer) and is REUSED by the merge pass — one data pass
     # per round instead of two, same lineage truncation
-    state0 = df.select(
-        F.concat(F.lit(bnd), F.concat_ws(bnd, toks), F.lit(bnd)).alias("_s")
-    )
+    state0 = df.select(_merge_stream(_lower_tokens(ident_col(text_col))).alias("_s"))
 
     # r17: session-bounded merge-table memo (the _CUMSUM_CACHE /
     # _TF_CACHE discipline, invalidated between bench passes).  BPE is
     # prefix-stable — merge i depends only on merges 1..i-1 — so a
     # table trained at k'≥k over the same tokenized input answers any
     # smaller k verbatim, and a shorter cached table is a valid restart
-    # point: replay its merges as chained literal replaces (the exact
-    # per-round merge pass) and continue counting from rank len+1.
-    # Within one bench pass, bpe_merges (k=8) trains once and
-    # apply_merges' k=4 trainer re-uses the prefix with ZERO jobs.
+    # point: replay its merges (the exact per-round merge pass) and
+    # continue counting from rank len+1.  Within one bench pass,
+    # bpe_merges (k=8) trains once and apply_merges' k=4 trainer re-uses
+    # the prefix with ZERO jobs — while the key (state0's plan) is the same.
     key = _MERGE_MEMO.key_for(state0, int(min_count), joiner)
     cached = _MERGE_MEMO.get(key)
     merges: list[tuple[int, str, int]] = []
@@ -904,38 +939,24 @@ def phrase_merges(
     if cached is not None:
         mlist, exhausted = cached
         if exhausted or len(mlist) >= k:
-            from csv_etl_spark.local import local_values_frame
-
             return local_values_frame(
                 spark, list(mlist[:k]), "rank int, pair string, n bigint"
             )
         merges = list(mlist)
         start_rank = len(mlist) + 1
-        replay = state0
         for _, pair, _n in mlist:
-            a, b = pair.split(" ", 1)
-            replay = replay.select(
-                F.replace(
-                    F.col("_s"),
-                    F.lit(_MERGE_SEP + a + bnd + b + _MERGE_SEP),
-                    F.lit(_MERGE_SEP + a + joiner + b + _MERGE_SEP),
-                ).alias("_s")
-            )
-        state0 = replay
+            state0 = state0.select(_merge(F.col("_s"), pair, joiner).alias("_s"))
     state = state0.localCheckpoint(eager=False)
 
     exhausted = False
     for rank in range(start_rank, k + 1):
-        full = F.split(F.col("_s"), bnd)
+        full = F.split(F.col("_s"), _MERGE_BND)
         # wrapped stream splits to ['', t1..tn, '']; drop the boundary
         # empties.  Empty docs ("" between the wraps) reduce to one
         # empty-string pseudo-token → n = 1 → zero pairs, same as before.
         ts = F.slice(full, 2, F.size(full) - 2)
-        n = F.size(ts)
-        m = F.greatest(n - 1, F.lit(0))
-        pairs = F.arrays_zip(F.slice(ts, 1, m), F.slice(ts, 2, m))
         top = (
-            state.select(F.explode(pairs).alias("_p"))
+            state.select(F.explode(_adjacent_pairs(ts)).alias("_p"))
             .select(
                 F.concat(
                     F.col("_p")["0"], F.lit(" "), F.col("_p")["1"]
@@ -952,22 +973,12 @@ def phrase_merges(
             break
         pair, count = top[0]["pair"], int(top[0]["n"])
         merges.append((rank, pair, count))
-        a, b = pair.split(" ", 1)
         state = state.select(
-            F.replace(
-                F.col("_s"),
-                F.lit(_MERGE_SEP + a + bnd + b + _MERGE_SEP),
-                F.lit(_MERGE_SEP + a + joiner + b + _MERGE_SEP),
-            ).alias("_s")
+            _merge(F.col("_s"), pair, joiner).alias("_s")
         ).localCheckpoint(eager=False)
 
     _MERGE_MEMO.put(key, (tuple(merges), exhausted))
-
-    from csv_etl_spark.local import local_values_frame
-
-    return local_values_frame(
-        spark, merges or [], "rank int, pair string, n bigint"
-    )
+    return local_values_frame(spark, merges, "rank int, pair string, n bigint")
 
 
 def apply_phrase_merges(
@@ -975,15 +986,14 @@ def apply_phrase_merges(
     merges,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
     joiner: str = "_",
 ):
     """Apply a LEARNED merge table (the output of ``phrase_merges``) to a
     corpus — the other half of the tokenizer-training loop: train once,
-    then re-tokenize every document with the k merges in rank order, each
-    one a greedy left-to-right non-overlapping corpus-wide replacement
-    (identical semantics to the merge pass inside the trainer, pinned by
-    ``test_apply_phrase_merges_matches_serial``).
+    then re-tokenize every document (lowercased, as the trainer saw it)
+    with the k merges in rank order, each one a greedy left-to-right
+    non-overlapping corpus-wide replacement (the trainer's ``_merge``,
+    pinned by ``test_apply_phrase_merges_matches_serial``).
 
     ``merges`` is the trainer's DataFrame ``(rank, pair, n)`` or a plain
     rank-ordered list of ``"a b"`` pair strings.  A DataFrame is collected
@@ -993,43 +1003,26 @@ def apply_phrase_merges(
     Unlike the trainer, application of a FIXED merge table is one
     deterministic map-only pass — no iteration-dependent statistics — so
     this half CAN carry a DuckDB oracle (the ``apply_merges`` contract
-    query).  Plan: zero shuffles, k chained JVM literal ``replace`` calls
-    (non-regex — cheaper than the trainer's regexp, and engine-portable:
-    DuckDB's ``replace`` has the same left-to-right non-overlapping
-    semantics).  Boundary spelling: the token stream is joined on DOUBLED
-    separators and wrapped in one extra separator pair per end, so every
-    token sits between two SEPs; a merge consumes one SEP from each side
-    and restores it in the replacement, keeping the invariant for the
-    next merge AND letting back-to-back occurrences ("a b a b") merge in
-    one pass — the plain-replace equivalent of the trainer's lookahead
-    regex.  Returns ``(id_col, merged_text, n_tokens)``; empty /
-    whitespace-only docs → ("", 0)."""
+    query).  Plan: zero shuffles, k chained ``_merge`` literal replaces
+    over the ``_merge_stream``.  Returns ``(id_col, merged_text,
+    n_tokens)``; empty / whitespace-only docs → ("", 0)."""
     if isinstance(merges, DataFrame):
         merges = [
             r["pair"] for r in merges.orderBy("rank").collect()  # model-sized
         ]
-    sep = _MERGE_SEP
-    bnd = sep + sep
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
+    toks = _lower_tokens(ident_col(text_col))
     empty = F.size(toks) == 0
-    stream = F.concat(F.lit(bnd), F.concat_ws(bnd, toks), F.lit(bnd))
+    stream = _merge_stream(toks)
     for pair in merges:
-        a, b = pair.split(" ", 1)
-        stream = F.replace(
-            stream,
-            F.lit(sep + a + bnd + b + sep),
-            F.lit(sep + a + joiner + b + sep),
-        )
-    inner = F.regexp_replace(stream, f"^{sep}{sep}|{sep}{sep}$", "")
-    out_toks = F.split(inner, bnd)
+        stream = _merge(stream, pair, joiner)
+    inner = F.regexp_replace(stream, f"^{_MERGE_BND}|{_MERGE_BND}$", "")
+    out_toks = F.split(inner, _MERGE_BND)
     merged_text = F.when(empty, F.lit("")).otherwise(
         F.array_join(out_toks, " ")
     )
     n_tokens = F.when(empty, F.lit(0)).otherwise(F.size(out_toks))
     return df.select(
-        F.col(id_col),
+        ident_col(id_col),
         merged_text.alias("merged_text"),
         n_tokens.cast("bigint").alias("n_tokens"),
     )
@@ -1041,7 +1034,6 @@ def dsir_importance(
     k_smooth: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lowercase: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling" — the public recipe:
@@ -1064,15 +1056,9 @@ def dsir_importance(
     rounded to 6 decimals: libm ln() may differ in the last ulp between
     engines, and the ROUNDED per-token ratios are summed via exact
     decimal so partial-aggregation order cannot leak into the hash."""
-    toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        toks = F.transform(toks, lambda t: F.lower(t))
-    exploded = df.select(F.col(id_col), F.explode(toks).alias("_tok"))
-
-    t_toks = ws_tokens(F.col(text_col))
-    if lowercase:
-        t_toks = F.transform(t_toks, lambda t: F.lower(t))
-    t_exploded = target.select(F.explode(t_toks).alias("_tok"))
+    toks = _lower_tokens(ident_col(text_col))
+    exploded = df.select(ident_col(id_col), F.explode(toks).alias("_tok"))
+    t_exploded = target.select(F.explode(toks).alias("_tok"))
 
     c_counts = exploded.groupBy("_tok").agg(F.count(F.lit(1)).alias("_nc"))
     # c_counts feeds the scalar agg AND the scoring join (vocab-sized) —
@@ -1125,21 +1111,17 @@ def dsir_importance(
         )
     )
     scored = exploded.join(F.broadcast(vocab), "_tok").select(
-        F.col(id_col), "_r6"
+        ident_col(id_col), "_r6"
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy(ident_col(id_col)).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-        (F.sum("_r6").cast("double") / F.lit(1_000_000.0)).alias("_li"),
+        F.round(F.sum("_r6").cast("double") / F.lit(1_000_000.0), 6).alias(
+            "log_importance"
+        ),
     )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("n_tokens"), F.lit(0).cast("bigint")).alias("n_tokens"),
-            F.round(F.coalesce(F.col("_li"), F.lit(0.0)), 6).alias("log_importance"),
-        )
-    )
+    return _every_doc(df, id_col, agg, {
+        "n_tokens": F.lit(0).cast("bigint"), "log_importance": F.lit(0.0)
+    })
 
 
 def corpus_report(
@@ -1162,21 +1144,16 @@ def corpus_report(
     shuffles).  Distinct-per-group state is bounded by group size; for
     groups beyond memory comfort the same approx_count_distinct switch
     as profile_table applies."""
-    c = F.col(text_col)
-    # normalize_text's spelling (dedup.py), inlined: text.py is imported
-    # BY dedup/cleaning, so importing back would cycle
-    norm = F.trim(
-        F.regexp_replace(F.regexp_replace(F.lower(c), r"[^\w\s]", ""), r"\s+", " ")
-    )
+    c = ident_col(text_col)
     m = df.select(
-        F.col(by),
+        ident_col(by),
         token_count(c).alias("_nt"),
         quality_score(c).alias("_q"),
         (lang_id(c) == "en").cast("int").alias("_en"),
-        F.xxhash64(norm).alias("_nh"),
+        F.xxhash64(normalize_text(c)).alias("_nh"),
     )
     n = F.count(F.lit(1))
-    return m.groupBy(by).agg(
+    return m.groupBy(ident_col(by)).agg(
         n.cast("bigint").alias("n_docs"),
         F.sum("_nt").cast("bigint").alias("n_tokens"),
         F.round(F.avg("_q"), 6).alias("mean_quality"),

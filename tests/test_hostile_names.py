@@ -13,10 +13,12 @@ from __future__ import annotations
 import json
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from csv_etl_spark.compiler import compile_mapping
 from csv_etl_spark.local import local_values_frame
+from csv_etl_spark.operators import text
 from csv_etl_spark.operators.profile import profile_table
 from csv_etl_spark.operators.stats import pairwise_corr
 from csv_etl_spark.plans.validation import validate_against_spec
@@ -258,5 +260,55 @@ def test_local_values_frame_hostile_names(spark):
     def run(n):
         schema = ", ".join(f"{_ddl(c)} {t}" for c, t in zip(n, types))
         return local_values_frame(spark, rows, schema)
+
+    _assert_same(run)
+
+
+# documents for the text operators: repeated pairs (so phrase_merges
+# learns merges), an empty and a NULL text, tabs, newlines and bullets
+DOCS = [
+    (1, "The cat sat on the mat. The cat ran to the mat!", "src0"),
+    (2, "new york is big and new york is old", "src1"),
+    (3, "", "src0"),
+    (4, "the the cat\tsat\non the mat ...", "src1"),
+    (5, None, "src0"),
+    (6, "- a bullet of new york ...\n- the cat\n# the end", "src1"),
+]
+
+# each text.py frame operator, called with (frame, text_col, id_col, by)
+TEXT_OPS = {
+    "text_metrics": lambda d, t, i, b: text.text_metrics(d, text_col=t, id_col=i),
+    "repetition_metrics": lambda d, t, i, b: text.repetition_metrics(d, text_col=t, id_col=i),
+    "top_tokens": lambda d, t, i, b: text.top_tokens(d, k=8, text_col=t),
+    "length_histogram": lambda d, t, i, b: text.length_histogram(d, text_col=t, bin_width=4),
+    "tokens_to_ids": lambda d, t, i, b: text.tokens_to_ids(d, vocab_size=6, text_col=t, id_col=i),
+    "unigram_logprob": lambda d, t, i, b: text.unigram_logprob(d, text_col=t, id_col=i),
+    "bigram_logprob": lambda d, t, i, b: text.bigram_logprob(d, text_col=t, id_col=i),
+    "top_token_pairs": lambda d, t, i, b: text.top_token_pairs(d, k=8, text_col=t),
+    "tfidf_top_terms": lambda d, t, i, b: text.tfidf_top_terms(d, k=3, text_col=t, id_col=i),
+    "bm25_top_terms": lambda d, t, i, b: text.bm25_top_terms(d, k=3, text_col=t, id_col=i),
+    "lm_score_buckets": lambda d, t, i, b: text.lm_score_buckets(
+        d, by=b, text_col=t, id_col=i),
+    "gopher_quality": lambda d, t, i, b: text.gopher_quality(
+        d, min_words=3, min_stopword_hits=1, text_col=t, id_col=i),
+    "length_outliers": lambda d, t, i, b: text.length_outliers(d, text_col=t, id_col=i),
+    "phrase_merges": lambda d, t, i, b: text.phrase_merges(d, k=3, text_col=t),
+    "apply_phrase_merges": lambda d, t, i, b: text.apply_phrase_merges(
+        d, text.phrase_merges(d, k=3, text_col=t), text_col=t, id_col=i),
+    "dsir_importance": lambda d, t, i, b: text.dsir_importance(
+        d, d.filter(F.col(_ddl(b)) == "src0"), text_col=t, id_col=i),
+    "corpus_report": lambda d, t, i, b: text.corpus_report(d, by=b, text_col=t, id_col=i),
+}
+
+
+@pytest.mark.parametrize("op", sorted(TEXT_OPS))
+def test_text_operators_hostile_names(spark, op):
+    """A backticked text column, a dotted id column and a unicode group
+    column with a space."""
+    def run(n):
+        t, i, b = n[0], n[1], n[6]
+        d = spark.createDataFrame(
+            DOCS, f"{_ddl(i)} bigint, {_ddl(t)} string, {_ddl(b)} string")
+        return TEXT_OPS[op](d, t, i, b)
 
     _assert_same(run)

@@ -315,6 +315,81 @@ def test_fingerprint_order_sensitive(spark):
     assert rows[1] != rows[2]
 
 
+# whitespace that \s matches, plus unicode letters (cased, titlecase,
+# final-sigma and Turkish dotted-I contexts), marks, digits and spaces
+_TEXT_ALPHABET = st.one_of(
+    st.characters(categories=["L", "M", "N", "P", "Zs"]),
+    st.sampled_from(list(" \t\n\x0b\f\rΣσςİIiǅẞⅫ")),
+)
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@example(docs=["ΟΔΟΣ Σ ΣΑΣ", "İstanbul", "ǅ", "ẞ", "Ⅻ", "a\tB\nc\x0bD\fe\rF",
+               "", "  ", " \t\n ", None])
+@given(docs=st.lists(st.one_of(st.none(), st.text(_TEXT_ALPHABET, max_size=24)),
+                     min_size=1, max_size=8))
+def test_lower_tokens_and_mean_word_length_match_lambda_spellings(spark, docs):
+    """The premises of the shared text helpers: tokenizing the lowercased
+    text equals lowercasing each token (``lower`` never moves a
+    whitespace boundary, and the final-sigma context ends at
+    whitespace), and the regex-strip mean word length equals the
+    per-token length fold gopher_quality used to spell inline."""
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id int, text string")
+    c = F.col("text")
+    toks = text.ws_tokens(c)
+    n = F.greatest(F.size(toks), F.lit(0))
+    fold = F.when(
+        n > 0, F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)) / n
+    ).otherwise(F.lit(0.0))
+    rows = df.select(
+        "doc_id",
+        text._lower_tokens(c).alias("got"),
+        F.transform(toks, lambda t: F.lower(t)).alias("exp"),
+        text.mean_word_length(c).alias("mean"),
+        fold.alias("fold"),
+        F.round(fold, 6).alias("fold6"),
+    ).collect()
+    for r in rows:
+        assert r["got"] == r["exp"], (docs[r["doc_id"]], r["got"], r["exp"])
+        assert repr(r["mean"]) == repr(r["fold"]), docs[r["doc_id"]]
+    gopher = {
+        r["doc_id"]: r["mean_word_len"]
+        for r in text.gopher_quality(df).collect()
+    }
+    assert gopher == {r["doc_id"]: r["fold6"] for r in rows}
+
+
+def test_text_operator_plans_have_no_lambda(spark):
+    """The lowered stream, the pair build, the restore, the rank rules and
+    the merge pass are all lambda-free: no higher-order function (each
+    interpreted per element, outside whole-stage codegen) is left in the
+    optimized plans of the operators built on them."""
+    df = spark.createDataFrame(
+        [(1, "The cat sat on the mat", "src0"), (2, "the cat ran", "src1"),
+         (3, "", "src0")],
+        "doc_id bigint, text string, source string",
+    )
+    target = df.filter(F.col("source") == "src0").select("text")
+    ops = {
+        "top_tokens": lambda: text.top_tokens(df, k=5),
+        "tokens_to_ids": lambda: text.tokens_to_ids(df, vocab_size=5),
+        "unigram_logprob": lambda: text.unigram_logprob(df),
+        "bigram_logprob": lambda: text.bigram_logprob(df),
+        "top_token_pairs": lambda: text.top_token_pairs(df, k=5),
+        "tfidf_top_terms": lambda: text.tfidf_top_terms(df),
+        "bm25_top_terms": lambda: text.bm25_top_terms(df),
+        "dsir_importance": lambda: text.dsir_importance(df.select("doc_id", "text"), target),
+        "apply_phrase_merges": lambda: text.apply_phrase_merges(df, ["the cat", "cat sat"]),
+        "lm_score_buckets": lambda: text.lm_score_buckets(df, by="source"),
+    }
+    with_lambda = [
+        name for name, op in ops.items()
+        if "lambdafunction" in op()._jdf.queryExecution().optimizedPlan().toString().lower()
+    ]
+    assert with_lambda == []
+
+
 # ---------------------------------------------------------------------------
 # multimodal
 # ---------------------------------------------------------------------------
@@ -2499,8 +2574,7 @@ def test_phrase_merges_regex_metachar_tokens(spark):
     )
     got = [
         (r["rank"], r["pair"], r["n"])
-        for r in text.phrase_merges(df, k=4, lowercase=False)
-        .orderBy("rank").collect()
+        for r in text.phrase_merges(df, k=4).orderBy("rank").collect()
     ]
     assert got == serial(docs, 4)
 
@@ -2785,12 +2859,12 @@ def test_corpus_report_summary(spark):
 # ---------------------------------------------------------------------------
 
 
-def _serial_apply_merges(docs, merges, joiner="_", lowercase=True):
+def _serial_apply_merges(docs, merges, joiner="_"):
     """Greedy left-to-right non-overlapping application of a rank-ordered
     merge list — the exact semantics of the trainer's merge pass."""
     out = []
     for d in docs:
-        t = d.lower().split() if lowercase else d.split()
+        t = d.lower().split()
         for pair in merges:
             a, b = pair.split(" ", 1)
             nt, i = [], 0
@@ -2869,9 +2943,9 @@ def test_apply_phrase_merges_metachar_tokens(spark):
     )
     got = {
         r["doc_id"]: r["merged_text"]
-        for r in text.apply_phrase_merges(df, merges, lowercase=False).collect()
+        for r in text.apply_phrase_merges(df, merges).collect()
     }
-    exp = _serial_apply_merges(docs, merges, lowercase=False)
+    exp = _serial_apply_merges(docs, merges)
     assert got == {i: " ".join(t) for i, t in enumerate(exp)}
     assert got[0] == "$x_(y) $x_(y)"
     assert got[2] == "ax (y)"  # substring of a merge token: untouched
@@ -5173,19 +5247,31 @@ def test_kmeans_codebook_table_matches_literal_fit(spark):
     from csv_etl_spark.operators import similarity
 
     e = _toy_embeddings(spark, n=300)
-    lit = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in similarity.kmeans_centroids(e, n_centroids=10, iters=2).collect()
-    }
-    tab = {
-        r["centroid_id"]: r["centroid_vec"]
-        for r in similarity.kmeans_codebook_table(
-            e, n_centroids=10, kmeans_iters=2
-        ).collect()
-    }
-    assert set(lit) == set(tab)
-    for cid, vec in lit.items():
-        assert vec == pytest.approx(tab[cid], abs=1e-9), f"centroid {cid}"
+    # NULL vectors at ids 3 and 30: id 3 is a first-n init, so its cell
+    # starts (and, with no members, stays) a NULL centroid in both fitters
+    e_null = _toy_embeddings(spark, n=40).select(
+        "vec_id",
+        F.when(F.col("vec_id").isin(3, 30), F.lit(None)).otherwise(F.col("embedding"))
+        .alias("embedding"),
+    )
+    for frame, n, iters in ((e, 10, 2), (e_null, 10, 3), (e_null, 10, 0)):
+        lit = {
+            r["centroid_id"]: r["centroid_vec"]
+            for r in similarity.kmeans_centroids(frame, n_centroids=n, iters=iters).collect()
+        }
+        tab = {
+            r["centroid_id"]: r["centroid_vec"]
+            for r in similarity.kmeans_codebook_table(
+                frame, n_centroids=n, kmeans_iters=iters
+            ).collect()
+        }
+        assert set(lit) == set(tab)
+        for cid, vec in lit.items():
+            if vec is None or tab[cid] is None:
+                assert vec is None and tab[cid] is None, f"centroid {cid}"
+            else:
+                assert vec == pytest.approx(tab[cid], abs=1e-9), f"centroid {cid}"
+    assert lit[3] is None
 
 
 def test_every_cache_instance_is_registered():
