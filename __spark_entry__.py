@@ -5252,19 +5252,16 @@ def q_record_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ids are custkey*4 + generation — disjoint by construction at EVERY
     # scale factor (an additive +1M offset would collide with real
     # custkeys once the table passes 1M rows, silently fusing unrelated
-    # components while the oracle replays the same bug)
-    c = _t(spark, sf_dir, "customer", parallelize=True).select("c_custkey")
-    key12 = F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 12)
-    base = c.select((F.col("c_custkey") * 4).alias("id"), key12.alias("s"))
-    p1 = c.filter(F.col("c_custkey") % 10 == 0).select(
-        (F.col("c_custkey") * 4 + 1).alias("id"),
-        F.concat(F.lit("z"), F.substring(key12, 2, 11)).alias("s"),
+    # components while the oracle replays the same bug).  One scan: each
+    # customer row is exploded into its base key and the copies it plants
+    k = F.col("c_custkey")
+    key12 = F.substring(F.md5(k.cast("string")), 1, 12)
+    base = F.struct((k * 4).alias("id"), key12.alias("s"))
+    p1 = F.struct((k * 4 + 1).alias("id"), F.concat(F.lit("z"), F.substring(key12, 2, 11)).alias("s"))
+    p2 = F.struct((k * 4 + 2).alias("id"), F.concat(F.substring(key12, 1, 11), F.lit("z")).alias("s"))
+    ents = _t(spark, sf_dir, "customer").select(
+        F.inline(F.array_compact(F.array(base, F.when(k % 10 == 0, p1), F.when(k % 20 == 0, p2))))
     )
-    p2 = c.filter(F.col("c_custkey") % 20 == 0).select(
-        (F.col("c_custkey") * 4 + 2).alias("id"),
-        F.concat(F.substring(key12, 1, 11), F.lit("z")).alias("s"),
-    )
-    ents = base.unionByName(p1).unionByName(p2)
     pairs = fuzzy_string_join(
         ents.select(F.col("id").alias("lid"), "s"),
         ents.select(F.col("id").alias("rid"), F.col("s").alias("t")),

@@ -28,9 +28,9 @@ Strategies (each a standalone function over a DataFrame):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, StringType, StructField, StructType
+from pyspark.sql.types import DataType, IntegralType, StringType, StructField, StructType
 
 from csv_etl_spark.operators._cache import BoundedPersistCache
 from csv_etl_spark.operators.text import normalize_text, ws_tokens
@@ -544,10 +544,11 @@ def simhash(
 SMALL_GRAPH_EDGES = 10_000
 
 
-def _component_labels(edges: DataFrame) -> DataFrame:
+def _component_labels(t, spark: SparkSession, dtype: DataType) -> DataFrame:
     """Small tier of ``resolve_duplicate_clusters``: (id, min id of its
-    component) for every vertex of the symmetric edge list ``(u, v)``,
-    computed on the driver from one Arrow collect.
+    component) for every vertex of the symmetric edge list ``t``, an
+    Arrow table of ``(u, v)`` ids of Spark type ``dtype``, computed on the
+    driver.
 
     Ids are ranked in sorted order (Arrow sorts strings bytewise, as Spark
     compares them), so the minimum rank is the minimum id.  Components come
@@ -559,7 +560,6 @@ def _component_labels(edges: DataFrame) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    t = edges.toArrow()
     u, v = t.column("u"), t.column("v")
     ids = pc.unique(u)  # symmetric: every endpoint is some row's u
     has_null = ids.null_count > 0
@@ -587,8 +587,7 @@ def _component_labels(edges: DataFrame) -> DataFrame:
     if has_null:
         ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
         labels = pa.concat_arrays([labels, pa.nulls(1, ids.type)])
-    dtype = edges.schema["u"].dataType
-    return edges.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({"id": ids, "cluster_id": labels}),
         StructType([StructField("id", dtype), StructField("cluster_id", dtype)]),
     )
@@ -605,24 +604,23 @@ def resolve_duplicate_clusters(
     generator (jaccard/LSH/embedding): pairs say "these two match", but
     dedup needs CLUSTERS (keep one doc per component, drop the rest).
 
-    Two tiers, chosen by the edge count round 1 observes:
+    Two tiers, chosen from the persisted symmetric edge list:
 
-    * Round 1 (seed) needs no labels frame and no join: every vertex
-      starts labelled with its own id, so it is one ``groupBy(u)`` over
-      the symmetric edge list, ``label = least(u, min(v))``.  Its
-      ``localCheckpoint`` job also persists the edge list and observes
-      the changed-label count and ``sum(degree)``.
-    * Small tier: at most ``SMALL_GRAPH_EDGES`` edge rows (integer or
-      string ids) are collected as one Arrow table and union-found on the
-      driver (``_component_labels``): one more job, no rounds, any
-      diameter.
+    * Small tier, tried first for integer and string ids: one capped
+      Arrow collect, ``limit(SMALL_GRAPH_EDGES + 1)``.  At most
+      ``SMALL_GRAPH_EDGES`` rows means that table is the whole graph, and
+      it is union-found on the driver (``_component_labels``): one job,
+      no rounds, any diameter.
     * Rounds tier (larger graphs, other id types): iterative min-label
-      propagation, one eager ``localCheckpoint`` per round; converges in
-      O(component diameter) rounds — near-dup components are shallow
-      (dup clusters are cliques or short chains).  Each round is ONE
-      union-aggregate: neighbour offers (``edges ⋈ labels`` on v) unioned
-      with each vertex's own label, grouped by id → the new label (min)
-      and the old one.  No join back onto the previous labels.
+      propagation, one eager ``localCheckpoint`` per round, reading the
+      persisted edges; converges in O(component diameter) rounds —
+      near-dup components are shallow (dup clusters are cliques or short
+      chains).  Round 1 (seed) needs no labels frame and no join: every
+      vertex starts labelled with its own id, so it is one ``groupBy(u)``
+      over the edge list, ``label = least(u, min(v))``.  Each later round
+      is ONE union-aggregate: neighbour offers (``edges ⋈ labels`` on v)
+      unioned with each vertex's own label, grouped by id → the new label
+      (min) and the old one.  No join back onto the previous labels.
     * The edge list is not deduplicated: min-propagation and union-find
       are idempotent under duplicate edges, so a ``distinct`` would only
       add a shuffle.
@@ -639,14 +637,14 @@ def resolve_duplicate_clusters(
     from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
 
-    def checkpoint(frame: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    def checkpoint(frame: DataFrame) -> tuple[DataFrame, int]:
         # localCheckpoint, not persist: it truncates the lineage, which
         # would otherwise GROW each round until plan analysis overflows
         # the JVM stack on long chains.  The Observation is filled by the
         # same job, so the changed-label count costs nothing extra.
         obs = Observation()
-        ck = frame.observe(obs, F.count_if("_ch").alias("changed"), *metrics).localCheckpoint(eager=True)
-        return ck.select("id", "label"), obs.get
+        ck = frame.observe(obs, F.count_if("_ch").alias("changed")).localCheckpoint(eager=True)
+        return ck.select("id", "label"), obs.get["changed"]
 
     # one-pass symmetric edge build: explode [(a,b),(b,a)] per pair row.
     # The previous union-of-two-selects spelling scanned `pairs` TWICE
@@ -668,20 +666,22 @@ def resolve_duplicate_clusters(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
+        dtype = edges.schema["u"].dataType
+        if _driver_sortable(dtype):
+            # the collect that decides the tier is also the union-find's
+            # input; above the bound it has only filled the edge cache
+            t = edges.limit(SMALL_GRAPH_EDGES + 1).toArrow()
+            if t.num_rows <= SMALL_GRAPH_EDGES:
+                return _component_labels(t, edges.sparkSession, dtype)
         # min() skips NULL partners; least() would skip a NULL u, so the
         # NULL vertex's label is kept NULL explicitly
-        labels, seen = checkpoint(
-            edges.groupBy("u").agg(F.min("v").alias("nmin"), F.count("*").alias("_deg")).select(
+        labels, changed = checkpoint(
+            edges.groupBy("u").agg(F.min("v").alias("nmin")).select(
                 F.col("u").alias("id"),
                 F.when(F.col("u").isNotNull(), F.least("u", "nmin")).alias("label"),
                 (F.col("nmin") < F.col("u")).alias("_ch"),
-                "_deg",
-            ),
-            F.sum("_deg").alias("edges"),
+            )
         )
-        changed = seen["changed"]
-        if changed and seen["edges"] <= SMALL_GRAPH_EDGES and _driver_sortable(edges.schema["u"].dataType):
-            return _component_labels(edges)
         for _ in range(max_iterations - 1):
             if not changed:
                 break
@@ -689,7 +689,7 @@ def resolve_duplicate_clusters(
                 F.col("u").alias("id"), "label", F.lit(None).alias("old")
             )
             own = labels.select("id", "label", F.col("label").alias("old"))
-            labels, seen = checkpoint(
+            labels, changed = checkpoint(
                 offers.unionByName(own)
                 .groupBy("id")
                 .agg(F.min("label").alias("nmin"), F.max("old").alias("old"))
@@ -701,7 +701,6 @@ def resolve_duplicate_clusters(
                     (F.col("nmin") < F.col("old")).alias("_ch"),
                 )
             )
-            changed = seen["changed"]
         if changed:
             raise RuntimeError(
                 f"resolve_duplicate_clusters: label propagation did not converge "

@@ -531,8 +531,9 @@ def _lloyd_means(assigned: DataFrame, vec_col: str, round_digits: int) -> DataFr
         .groupBy("cluster", "pos")
         .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("val"))
         .groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "val"))).alias("pv"))
-        .select("cluster", F.transform("pv", lambda s: s.getField("val")).alias("vec"))
+        # (pos, val) structs sorted by pos, then the val field of each;
+        # sort_array, not array_sort, whose default comparator is a lambda
+        .agg(F.sort_array(F.collect_list(F.struct("pos", "val"))).getField("val").alias("vec"))
     )
 
 

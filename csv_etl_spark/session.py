@@ -70,6 +70,16 @@ def get_spark(app_name: str = "csv-etl-spark", shuffle_partitions: int | None = 
         # repartitioned (ensure_parallelism).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark 4.1 wraps every F.*/Column call to record its Python
+        # call site: an active-session lookup, a conf read, and a set and
+        # clear of the JVM's PySparkCurrentOrigin, all over py4j.  Off, a
+        # warm record_clusters rep made 628 py4j round trips instead of
+        # 1,598 (cProfile, 4 reps).  What is lost: an ANSI error's
+        # "== DataFrame ==" context names a JVM frame instead of the
+        # Python file:line; its error class and message are unchanged.
+        # PySpark reads the flag once per process, at the first Column
+        # call made under an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # many distinct queries per session → lots of generated classes; the

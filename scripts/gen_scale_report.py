@@ -224,8 +224,8 @@ def main() -> None:
             "",
             "`dedup.resolve_duplicate_clusters` union-finds a pair graph of at",
             f"most `SMALL_GRAPH_EDGES` = {d['bound_edge_rows']:,} symmetric edge rows (2 per",
-            "pair, the `sum(degree)` its round-1 checkpoint observes) on the",
-            "driver from one Arrow collect; larger graphs take the distributed",
+            "pair, counted by a capped Arrow collect that is also the",
+            "union-find's input) on the driver; larger graphs take the distributed",
             "min-label rounds.  Seconds per tier (median of 3, 4-core host):",
             "",
             "| graph | " + " | ".join(f"{n:,} small | {n:,} rounds" for n in sizes) + " |",

@@ -222,6 +222,21 @@ def test_ivf_kmeans_recall_beats_placeholder(spark):
     assert r_kmeans >= 0.6, f"kmeans IVF recall too low: {r_kmeans}"
 
 
+def test_lloyd_means_in_position_order_without_lambda(spark):
+    """The Lloyd update rebuilds each centroid's mean in element order,
+    and its optimized plan has no higher-order function (each one is
+    interpreted per element, outside whole-stage codegen)."""
+    vecs = {0: [[float(i) for i in range(12)], [float(i + 2) for i in range(12)]],
+            1: [[-0.25] * 12]}
+    assigned = spark.createDataFrame(
+        [(c, v) for c, vs in vecs.items() for v in vs], "cluster int, embedding array<double>"
+    )
+    means = similarity._lloyd_means(assigned, "embedding", 6)
+    assert "lambdafunction" not in means._jdf.queryExecution().optimizedPlan().toString().lower()
+    got = {r["cluster"]: list(r["vec"]) for r in means.collect()}
+    assert got == {0: [float(i + 1) for i in range(12)], 1: [-0.25] * 12}
+
+
 def test_ivf_approx_recall_reasonable(spark):
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     probes = similarity.make_probes(e, n=5)
@@ -656,19 +671,42 @@ def test_resolve_clusters_small_tier_any_diameter(spark, monkeypatch):
 
 def test_resolve_clusters_job_budget(spark, monkeypatch):
     """Eager Spark jobs the resolver launches on the 4-pair fixture.  The
-    small tier runs round 1's checkpoint and one Arrow collect; the
-    rounds tier three rounds of three jobs each, where a per-round probe
-    job or a ``distinct`` on the edge list would push it past the pin.
-    Read from the status store, which works with the UI off."""
+    small tier runs one capped Arrow collect and no round; the rounds tier
+    runs that collect, then three rounds of three jobs each, where a
+    per-round probe job or a ``distinct`` on the edge list would push it
+    past the pin.  Read from the status store, which works with the UI
+    off."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], ["id_a", "id_b"]
     )
     pairs.collect()
-    for tier, budget in (("small", 4), ("rounds", 9)):
+    for tier, budget in (("small", 1), ("rounds", 10)):
         monkeypatch.setattr(dedup, "SMALL_GRAPH_EDGES", _CC_TIERS[tier])
         before = newest_job_id(spark)
         dedup.resolve_duplicate_clusters(pairs)
         assert newest_job_id(spark) - before <= budget, tier
+
+
+def test_resolve_clusters_rounds_tier_reads_pairs_once(spark, tmp_path):
+    """Above the bound the capped collect has filled the persisted edge
+    list, and round 1 reads it: the pair plan runs once per partition,
+    not again for the rounds.  Counted in the pair plan itself."""
+    n = dedup.SMALL_GRAPH_EDGES  # 2n symmetric edge rows: the rounds tier
+    path = str(tmp_path / "pairs")
+    spark.range(0, n, numPartitions=4).select(
+        (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+    ).write.parquet(path)
+    produced = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            produced.add(b.num_rows)
+            yield b
+
+    pairs = spark.read.parquet(path).mapInArrow(count_rows, "id_a long, id_b long")
+    out = dedup.resolve_duplicate_clusters(pairs).filter(F.col("id") != F.col("cluster_id"))
+    assert out.count() == n
+    assert produced.value == n
 
 
 def test_corpus_curation_composition(spark):
@@ -3772,6 +3810,19 @@ def test_cooccurrence_arrow_kernel_chunked_yield_exact(spark, monkeypatch):
         ).collect()
     }
     assert got == dict(want)
+
+
+def test_record_clusters_job_budget(spark):
+    """One ``record_clusters`` call plus a noop write: the customer scan's
+    schema job, the capped collect that resolves the small pair graph
+    (one job per adaptive query stage) and the write.  A round-robin
+    repartition of the scan, or the resolver's round 1 on a small graph,
+    would push it past the pin.  Read from the status store."""
+    import __spark_entry__ as E
+
+    before = newest_job_id(spark)
+    E.q_record_clusters(spark, SF).write.format("noop").mode("overwrite").save()
+    assert newest_job_id(spark) - before <= 6
 
 
 def test_record_clusters_transitive_closure(spark):

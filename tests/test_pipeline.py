@@ -120,3 +120,17 @@ def test_compile_memo_keys_on_mapping_and_columns(spark):
     df = spark.createDataFrame([("2024-01-15T10:30:00", "AAPL", "BUY")], ["Date", "Ticker", "Type"])
     assert full.apply(df, with_errors=False).collect()[0]["type"] == "BUY"
     assert no_type.apply(df, with_errors=False).collect()[0]["type"] is None
+
+
+def test_session_skips_dataframe_call_site_capture(spark):
+    """``get_spark`` turns PySpark's per-Column-call call-site capture off
+    (a py4j set and clear of the JVM origin on every ``F.*`` call); an
+    ANSI error still carries its error class."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.col("id") / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
